@@ -267,13 +267,11 @@ object Bench {
       "q178_cross_shard_dup_coverage")
     val oracleResults = headline.filter(oracleTier).map { name =>
       if (shardedCutFamily.contains(name))
-        shardedCacheWarm(name) = graft.operators.SuffixArray
-          .isShardedCutCached(spark, sfDir, minLen = 40,
-            nShards = graft.queries.IndexQueries.Q174Shards)
+        shardedCacheWarm(name) = graft.operators.SuffixArray.isCached(spark,
+          graft.queries.IndexQueries.q174CutKey(sfDir))
       if (winnowFamily.contains(name))
-        winnowCacheWarm(name) = graft.operators.SuffixArray
-          .isWinnowSpanCached(spark, sfDir, minLen = 40,
-            winnowW = graft.queries.IndexQueries.Q176W)
+        winnowCacheWarm(name) = graft.operators.SuffixArray.isCached(spark,
+          graft.queries.IndexQueries.q176WinnowKey(sfDir))
       val r = timeOne(name)
       if (failed.contains(name)) (name, -1.0, -1L) else r
     }
@@ -474,14 +472,8 @@ object Bench {
         // sharded kernel is in NoBroadcastBase and its 1× base must be
         // measured under the same lcp path the child pins at every
         // tier (the only other adjacentLcp caller there is q138,
-        // handled here); cleared after the loop. Same for the shard-
-        // concurrency pin: the child runs q174's tiers with the
-        // sequential kernel (k = 1), so its 1× exponent base must be
-        // sequential too — the HEADLINE q174 measurement above stays
-        // auto-concurrent (the plan a real deployment with idle
-        // capacity runs).
+        // handled here); cleared after the loop.
         System.setProperty("graft.lcp.path", "hash")
-        System.setProperty("graft.shards.maxConcurrent", "1")
         // r18: the SA build's adaptive dispatch takes the single-task
         // path at sf0.1 while every rehearsal tier pins distributed —
         // re-measure q137's 1× base under the same pin (the q138
@@ -527,7 +519,6 @@ object Bench {
               }
             }.toMap
         System.clearProperty("graft.lcp.path")
-        System.clearProperty("graft.shards.maxConcurrent")
         System.clearProperty("graft.sa.path")
         // 1× bases for the child: headline min-of-3 secs + min bytes;
         // q138 overridden by the lcp-path pin, NoBroadcastBase queries
@@ -652,7 +643,6 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] scale rehearsal failed: ${e.getMessage}")
         System.clearProperty("graft.lcp.path")
-        System.clearProperty("graft.shards.maxConcurrent")
         System.clearProperty("graft.sa.path")
         ("null", "null", "null", "[]")
       }

@@ -290,7 +290,7 @@ object ScaleRehearsal {
   val SingleRunCutoffSecs = 180.0
 
   /** 10× tier query list. ORDER MATTERS within the SA family:
-    * buildCached means the FIRST SA consumer at each tier pays the
+    * the SA build cache means the FIRST SA consumer at each tier pays the
     * build, so the rehearsal must run q137 before q138 exactly as the
     * headline loop does — r11's first artifact had q138 at 1.3
     * "exponent" purely because the 10× build cost landed on it while
@@ -338,8 +338,8 @@ object ScaleRehearsal {
     *
     * The SA family runs in STAGE ORDER — q137 (build) → q138 (LCP
     * walk) → q126 (coverage agg) → q127 (cut agg) — for the same
-    * attribution reason the 10× list orders q137 first: buildCached /
-    * adjacentLcpCached mean the first consumer at a tier pays the
+    * attribution reason the 10× list orders q137 first: the SA and
+    * LCP cache entries mean the first consumer at a tier pays the
     * whole index stage. The 10× tier runs TWO passes, so each member's
     * min-bytes is its own stage's bytes (pass 2 rides every cache);
     * decade-2 runs ONCE, so only this ordering reproduces that
@@ -662,14 +662,6 @@ object ScaleRehearsal {
     // exponent compares the same algorithm (the 1× base in baseFile
     // was measured under the same pin).
     System.setProperty("graft.lcp.path", "hash")
-    // q174's derived shard concurrency would likewise change shape
-    // across tiers (k = 4 fits the budget at 10×, k = 1 at 100×): pin
-    // the sequential kernel at every tier — also keeps the autoShards
-    // probe's measured disk envelope the documented ONE-shard form.
-    // The headline/bench q174 number stays unpinned (auto), exactly
-    // like the NoBroadcastBase split: the 1× base for THIS exponent is
-    // re-measured under the same pin by Bench.
-    System.setProperty("graft.shards.maxConcurrent", "1")
     // the SA build's adaptive dispatch picks the single-task path below
     // ~64 M chars (sf0.1 and the 10× tier) and distributed doubling
     // above (100×): pin distributed at every tier — same reason as the

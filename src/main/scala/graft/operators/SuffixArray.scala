@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
+import scala.jdk.CollectionConverters._
+
 /** Distributed suffix array by prefix doubling with Larsson–Sadakane
   * group refinement — the exact-substring substrate behind
   * suffix-array dedup (Lee et al. 2022, "Deduplicating Training Data
@@ -306,8 +308,8 @@ object SuffixArray {
     * suffixes sort first) when the corpus is 8-bit-clean, skipping
     * ~3 rounds; rare wider-char corpora fall back to k0 = 1. The
     * result is checkpointed once (consumers probe it repeatedly;
-    * callers own the release — buildCached re-checkpoints and frees
-    * it, shardedDedupCut's batch release covers the per-shard case)
+    * callers own the release — [[cached]] re-checkpoints and frees
+    * it, shardedDedupCut's per-shard release covers the sharded case)
     * and repartitioned so downstream stages keep their parallelism.
     */
   private[operators] def buildBySingleTask(docs: DataFrame, docIdCol: String,
@@ -539,10 +541,9 @@ object SuffixArray {
       // per round): the new t carries the updated rank AND the active
       // flag, so next round's active set is a free filter of t. The
       // superseded round's checkpoint is released as soon as its rows
-      // are drained into the new one (direct RDD references, never a
-      // context-global id delta — concurrent shard walks share this
-      // SparkContext), so peak storage is two rounds' t, not the sum
-      // of all rounds — the q137 100×-build heap-debt class (r17
+      // are drained into the new one (direct RDD references to this
+      // build's own round — see [[checkpointRdds]]), so peak storage is
+      // two rounds' t, not the sum of all rounds — the q137 100×-build heap-debt class (r17
       // verdict #2) shrinks by rounds×.
       val tNew0 = t.join(hinted(upd), Seq("gid"), "left")
         .select(col("gid"), coalesce(col("nr"), col("r")).as("r"),
@@ -588,17 +589,76 @@ object SuffixArray {
   def load(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Session-scoped build cache: the SA over one corpus is an INDEX —
-    * every consumer in a session (q137's rank dump, q138's LCP walk, a
-    * substring-dedup pass) probes the same build instead of re-running
-    * the doubling rounds. Keyed by (session, caller key — the corpus
-    * path); the materialized frame is localCheckpointed so reuse costs
-    * a scan, not a recompute. Testdata dirs are immutable within a
-    * round; a mutated corpus needs a fresh key (the caller owns that
-    * contract, same as any persisted index).
+  /** Session-scoped result cache for the SA family's index artifacts:
+    * the SA build (q137 builds, q138/q143 probe), the LCP walk (q138
+    * walks, q143 cuts), the sharded cut table (q174 runs the kernel,
+    * q175/q176/q178 ride it) and the winnow-span table (q176 winnows,
+    * q178 rides) — reuse of prior results within a session, so each
+    * family pays for one kernel run. Keyed by (session, a key from the
+    * builders below: the corpus path plus the artifact's parameters);
+    * each value is a localCheckpoint plus the persistent-RDD ids that
+    * hold it, so reuse costs a scan and eviction frees its blocks.
+    * Testdata dirs are immutable within a run; a mutated corpus needs a
+    * fresh key (the caller owns that contract, same as any persisted
+    * index). The query that MEANS "compute the artifact" (q137, q138,
+    * q174, q176) [[invalidate]]s first so its timing is always a run,
+    * never a probe of a prior pass's cache.
     */
-  private val buildCache =
+  private val resultCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, String), (DataFrame, Set[Int])]()
+
+  /** Cache keys: the corpus path plus the artifact's parameters. */
+  def saKey(corpus: String): String = s"$corpus#sa"
+  def lcpKey(corpus: String): String = s"$corpus#lcp"
+  def shardedCutKey(corpus: String, minLen: Int, nShards: Int): String =
+    s"$corpus#cut#minLen=$minLen#shards=$nShards"
+  def winnowSpanKey(corpus: String, minLen: Int, winnowW: Int): String =
+    s"$corpus#winnow#minLen=$minLen#w=$winnowW"
+
+  private def cacheKey(spark: SparkSession, key: String) =
+    (System.identityHashCode(spark), key)
+
+  /** The cached frame for `key` in this session, or `make` run through
+    * [[checkpointReleasing]] and cached. `make` may itself read other
+    * entries (the LCP walk over the cached SA), so it runs OUTSIDE the
+    * map's atomic sections — `computeIfAbsent` forbids touching the
+    * map from its mapping function. Hit/miss is logged (r17 ADVICE):
+    * q174's invalidate-then-recompute makes the family's cost
+    * attribution order-dependent under query filters, and a run where
+    * q175 computes the whole kernel must be distinguishable from one
+    * that rode the cache.
+    */
+  def cached(spark: SparkSession, key: String)(make: => DataFrame): DataFrame = {
+    val k = cacheKey(spark, key)
+    val hit = resultCache.get(k)
+    System.err.println(
+      s"[suffixarray] cache ${if (hit != null) "HIT" else "MISS"}: key=$key")
+    if (hit != null) hit._1
+    else {
+      val entry = checkpointReleasing(spark)(make)
+      resultCache.put(k, entry)
+      entry._1
+    }
+  }
+
+  /** Is `key` cached for this session? Bench snapshots this before each
+    * sharded-family query so the artifact records which measurements
+    * rode the cache (r17 ADVICE — cost attribution under query filters).
+    */
+  def isCached(spark: SparkSession, key: String): Boolean =
+    resultCache.containsKey(cacheKey(spark, key))
+
+  /** Drop a cached entry and UNPERSIST its checkpoint: removing only the
+    * map entry leaks the localCheckpoint's storage blocks (round-11
+    * postmortem — each bench pass's q137 invalidate+rebuild stranded a
+    * full corpus-sized SA in executor storage; by the 10× scale
+    * rehearsal the accumulated orphans starved q110's broadcast-heavy
+    * plan, 36.9 → 194.5 s with unchanged operator code).
+    */
+  def invalidate(spark: SparkSession, key: String): Unit = {
+    val evicted = resultCache.remove(cacheKey(spark, key))
+    if (evicted != null) releaseRddIds(spark.sparkContext, evicted._2)
+  }
 
   /** Run `make` (a pipeline that localCheckpoints internally), then
     * eagerly localCheckpoint its result and RELEASE every intermediate
@@ -609,9 +669,11 @@ object SuffixArray {
     * stranded SA checkpoints degraded an unrelated 10× plan. Tracking
     * persistent-RDD-id deltas around the calls makes both the
     * intermediates and (via the returned ids) the final checkpoint
-    * deterministically evictable. Id-delta tracking assumes no
-    * concurrent persist activity on the same SparkContext during the
-    * build — the single-driver-loop usage every caller here has.
+    * deterministically evictable. Ids held by cache entries are never
+    * intermediates: a nested [[cached]] miss inside `make` leaves its
+    * entry's checkpoint live. Id-delta tracking assumes no other
+    * persist activity on the same SparkContext during the build — the
+    * single-driver-loop usage every caller here has.
     */
   private def checkpointReleasing(
       spark: SparkSession)(make: => DataFrame): (DataFrame, Set[Int]) = {
@@ -621,7 +683,8 @@ object SuffixArray {
     val mid = sc.getPersistentRDDs.keySet.toSet
     val df = built.localCheckpoint() // eager: final blocks exist after this
     val after = sc.getPersistentRDDs.keySet.toSet
-    releaseRddIds(sc, mid -- before) // intermediates are now unreachable
+    val held = resultCache.values.asScala.flatMap(_._2).toSet
+    releaseRddIds(sc, mid -- before -- held) // intermediates are now unreachable
     (df, after -- mid)
   }
 
@@ -632,67 +695,16 @@ object SuffixArray {
   /** The persisted RDDs behind an (eagerly) localCheckpoint'd frame —
     * the frame's analyzed plan is rooted at the LogicalRDD wrapping
     * the checkpointed internal RDD, so holding that reference lets a
-    * producer release EXACTLY its own checkpoint (r17 ADVICE: the
-    * hash-walk's old context-global getPersistentRDDs id-delta
-    * release captured a CONCURRENT walk's checkpoints into its own
-    * round delta and unpersisted them mid-read — localCheckpoint
-    * lineage is truncated, so that is an unrecoverable block-not-found
-    * failure in exactly the maxConcurrentShards > 1 regime).
+    * producer release EXACTLY its own checkpoint: a walk releases only
+    * its own superseded rounds, while the frames it reads (the SA, the
+    * hv table) stay live for their owners to release.
     */
-  private def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+  private[operators] def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
-  def buildCached(docs: DataFrame, key: String, docIdCol: String = "doc_id",
-                  textCol: String = "text", numPartitions: Int = 32): DataFrame =
-    buildCache.computeIfAbsent(
-      (System.identityHashCode(docs.sparkSession), key),
-      _ => checkpointReleasing(docs.sparkSession)(
-        build(docs, docIdCol, textCol, numPartitions)))._1
-
-  /** Drop a cached build (corpus mutated, or a BUILD-measuring caller
-    * wants a fresh run rather than a cache hit — q137 invalidates
-    * first so "build the index" always times a build, never a probe
-    * of a prior pass's cache; consumers like q138 still reuse it).
-    *
-    * UNPERSISTS the evicted checkpoint: removing only the map entry
-    * leaks the localCheckpoint's storage blocks (round-11 postmortem —
-    * each bench pass's q137 invalidate+rebuild stranded a full
-    * corpus-sized SA in executor storage; by the 10× scale rehearsal
-    * the accumulated orphans starved q110's broadcast-heavy plan,
-    * 36.9 → 194.5 s with unchanged operator code).
-    */
-  def invalidateCached(spark: SparkSession, key: String): Unit = {
-    val evicted = buildCache.remove((System.identityHashCode(spark), key))
-    if (evicted != null) releaseRddIds(spark.sparkContext, evicted._2)
-  }
-
-  /** Session-scoped LCP-array cache, the second tier of the SA
-    * lifecycle: the LCP walk over a given corpus is itself an index
-    * artifact (q138 ranks it, q143 unions its spans into cut lists),
-    * so consumers share ONE walk per (session, corpus) exactly as they
-    * share one build. q138 — the query that MEANS "compute the LCP
-    * array" — invalidates first so its timing is always a walk, never
-    * a cache probe; q143 rides whatever is cached.
-    */
-  private val lcpCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), (DataFrame, Set[Int])]()
-
-  def adjacentLcpCached(sa: DataFrame, docs: DataFrame, key: String,
-                        docIdCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame =
-    lcpCache.computeIfAbsent(
-      (System.identityHashCode(docs.sparkSession), key),
-      _ => checkpointReleasing(docs.sparkSession)(
-        adjacentLcp(sa, docs, docIdCol, textCol)))._1
-
-  def invalidateLcpCached(spark: SparkSession, key: String): Unit = {
-    val evicted = lcpCache.remove((System.identityHashCode(spark), key))
-    if (evicted != null) releaseRddIds(spark.sparkContext, evicted._2)
-  }
-
-  /** Evict and free EVERY cached SA/LCP checkpoint for a session — the
+  /** Evict and free EVERY cached checkpoint for a session — the
     * boundary call between workload phases (Bench runs it before the
     * 10× scale rehearsal) so index caches from one corpus tier can't
     * occupy executor storage while an unrelated memory-hungry plan
@@ -700,16 +712,8 @@ object SuffixArray {
     */
   def clearCaches(spark: SparkSession): Unit = {
     val sid = System.identityHashCode(spark)
-    Seq(buildCache, lcpCache, shardedCutCache, winnowSpanCache).foreach { cache =>
-      val it = cache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 == sid) {
-          releaseRddIds(spark.sparkContext, e.getValue._2)
-          it.remove()
-        }
-      }
-    }
+    resultCache.keySet.asScala.toList
+      .filter(_._1 == sid).foreach(k => invalidate(spark, k._2))
     // hash-walk done-sidecar dirs: any frame lazily reading one is a
     // pre-boundary frame and already invalid per this method's contract
     var d = doneSidecars.poll()
@@ -719,7 +723,7 @@ object SuffixArray {
   /** Parquet sidecar dirs holding hash-walk results (see
     * lcpByHashWalkNoAqe): freed at the same workload boundary as the
     * SA/LCP checkpoint caches ([[clearCaches]]) and, as a backstop,
-    * at JVM exit — a walk result that was adjacentLcpCached is eagerly
+    * at JVM exit — a walk result that was [[cached]] is eagerly
     * re-checkpointed by checkpointReleasing, so the sidecar's lifetime
     * only matters to direct adjacentLcp callers within a phase.
     */
@@ -762,9 +766,9 @@ object SuffixArray {
     * (doc_a, p_a) is the rank-r suffix and (doc_b, p_b) rank r+1.
     *
     * CONCURRENCY CONTRACT (applies to this method and every caller —
-    * [[dedupCut]], [[adjacentLcpCached]], [[longestDupSubstring]]): the
-    * hash-walk path temporarily disables AQE on the SHARED session conf
-    * for the duration of the walk (see [[lcpByHashWalk]] for why the
+    * [[dedupCut]] and [[cached]] LCP walks): the hash-walk path
+    * temporarily disables AQE on the SHARED session conf for the
+    * duration of the walk (see [[lcpByHashWalk]] for why the
     * localCheckpoint layout requires it). Do not run other queries on
     * the same SparkSession concurrently with an LCP walk — they would
     * silently plan without AQE. The bench and Verify harnesses run
@@ -919,7 +923,7 @@ object SuffixArray {
     dedupCutFromLcp(adjacentLcp(sa, docs, docIdCol, textCol), minLen, docIdCol)
 
   /** [[dedupCut]] over an already-computed LCP array (the cached-walk
-    * consumer path — see [[adjacentLcpCached]]).
+    * consumer path — see [[lcpKey]]).
     */
   def dedupCutFromLcp(lcp: DataFrame, minLen: Int,
                       docIdCol: String = "doc_id"): DataFrame = {
@@ -994,25 +998,6 @@ object SuffixArray {
     shards.toInt
   }
 
-  /** How many shards can run CONCURRENTLY inside `budgetBytes`:
-    * [[autoShards]]'s envelope arithmetic in reverse —
-    * clamp(1, min(nShards, 16), budget / one shard's
-    * [[walkWorkingSetBytes]]). When autoShards sized the shard count
-    * against this same budget (the 100 TB deployment), one shard
-    * fills it and this yields 1 — the sequential single-machine
-    * envelope; shards far below the budget overlap as independent
-    * jobs (guide-§2.6 back-fill), peak working set k·shard by
-    * construction. The 16 cap bounds driver-side shard threads.
-    */
-  def autoConcurrency(sumLen: Long, maxLen: Int, nShards: Int,
-                      budgetBytes: Long): Int = {
-    require(budgetBytes > 0, "autoConcurrency needs a positive budget")
-    val perShard =
-      math.max(1L, walkWorkingSetBytes(sumLen / math.max(1, nShards), maxLen))
-    math.max(1L, math.min(math.min(nShards, 16).toLong,
-      budgetBytes / perShard)).toInt
-  }
-
   /** Hard ceiling on shard counts: [[shardOfText]] decodes FOUR md5
     * hex digits, so it yields exactly 65536 distinct key values — a
     * larger `nShards` would silently leave shards ≥ 65536 empty and
@@ -1063,12 +1048,12 @@ object SuffixArray {
     * content-keyed shard ([[shardOfText]] % nShards) and materializes
     * the corpus as shard-partitioned parquet; each shard then runs the
     * UNCHANGED exact kernel — [[build]] → [[adjacentLcp]] →
-    * [[dedupCutFromLcp]] — reading only its own partition directory,
-    * with peak working set bounded by maxConcurrentShards × one
+    * [[dedupCutFromLcp]] — reading only its own partition directory.
+    * Shards run strictly one at a time, so peak working set is ONE
     * shard's ([[walkWorkingSetBytes]](sumLen/nShards, maxLen), the
     * envelope [[autoShards]] sizes against); per-shard cut spans land
-    * in a parquet sidecar and every checkpoint/walk-sidecar a batch
-    * created is released before the next batch starts. The union of
+    * in a parquet sidecar and every checkpoint/walk-sidecar a shard
+    * created is released before the next shard starts. The union of
     * per-shard cut lists is the result.
     *
     * Semantics vs the global kernel: within-shard duplicates
@@ -1080,110 +1065,15 @@ object SuffixArray {
     * corpus, with winnowing as the corpus-global complement
     * ([[crossShardDedupCut]] composes the two into one cut).
     * nShards = 1 is bit-for-bit the global kernel (spec-pinned).
-    *
-    * @param maxConcurrentShards upper bound on shards in flight at
-    *   once. 0 (default) DERIVES the bound from the data: k =
-    *   clamp(1, min(nShards, 16), workingSetBudget / one shard's
-    *   [[walkWorkingSetBytes]]) — the same envelope arithmetic
-    *   [[autoShards]] runs in reverse, costing one extra
-    *   length-column scan of the corpus. When autoShards sized the
-    *   shard count against the per-machine budget (the 100 TB
-    *   deployment), one shard FILLS the budget and the derivation
-    *   yields k = 1 — the strictly-sequential single-machine
-    *   envelope; when shards are far below the budget (a small corpus
-    *   over-sharded, or the fixed bench shard count at sf0.1), idle
-    *   capacity runs shards as overlapping jobs exactly as a cluster
-    *   would run them on separate machines (guide §2.6: overlap
-    *   independent jobs — actions are only sequential because the
-    *   driver calls them sequentially). The budget defaults to 1/4 of
-    *   the JVM heap; `-Dgraft.shards.concurrencyBudgetBytes` overrides
-    *   (a cluster deployment would set its per-machine allowance).
-    *   1 forces the sequential form — peak working set is ONE
-    *   shard's, the single-JVM rehearsal envelope, and SuffixArraySpec
-    *   pins it bit-for-bit unchanged. k > 1 runs each batch of k
-    *   shards as independent concurrent jobs on isolated
-    *   `newSession()`s (the per-session SQLConf keeps each build's and
-    *   hash-walk's AQE toggle private — see [[adjacentLcp]]'s
-    *   concurrency contract), sizing peak working set at k·shard.
-    *   Safe on BOTH LCP paths since r18: the hash walk releases its
-    *   per-round checkpoints via direct references to its own RDDs,
-    *   never a context-global id delta that could free a sibling
-    *   walk's blocks (r17 ADVICE; SuffixArraySpec pins k=2 ≡ k=1 with
-    *   `graft.lcp.path=hash` forced, and tools.ConcurrentShardsProbe
-    *   measures the k·shard storage envelope at the 10× tier).
-    *   Worker sessions INHERIT the parent session's modifiable
-    *   runtime conf at spawn (set-by-set copy): harness pins
-    *   (no-broadcast bases, partition-count overrides) bind the shard
-    *   jobs — the r17 "conf pins do not propagate" footgun is closed
-    *   in code, not by a comment.
     */
   def shardedDedupCut(docs: DataFrame, minLen: Int, nShards: Int,
                       docIdCol: String = "doc_id", textCol: String = "text",
-                      numPartitions: Int = 32,
-                      maxConcurrentShards: Int = 0): DataFrame = {
+                      numPartitions: Int = 32): DataFrame = {
     require(nShards >= 1 && nShards <= MaxShards,
       s"nShards must be in [1, $MaxShards], got $nShards " +
         "(the content key decodes four md5 hex digits - see MaxShards)")
-    require(maxConcurrentShards >= 0,
-      s"maxConcurrentShards must be >= 0 (0 = derive from the " +
-        s"working-set budget), got $maxConcurrentShards")
     val spark = docs.sparkSession
     val sc = spark.sparkContext
-    // -Dgraft.shards.maxConcurrent pins the derived concurrency for
-    // like-for-like tier measurements (the graft.lcp.path precedent):
-    // the scale rehearsal and the autoShards probe pin 1 so the wall
-    // exponents compare the sequential kernel at every tier and the
-    // probe's disk envelope stays the documented ONE-shard form —
-    // otherwise the 10× tier would overlap shards (k = 4 fits the
-    // heap/4 budget) while 100× cannot (k = 1), and the decade-2 wall
-    // exponent would compare two different execution shapes.
-    val pinned = Integer.getInteger("graft.shards.maxConcurrent", 0)
-    val concurrency: Int =
-      if (maxConcurrentShards > 0) maxConcurrentShards
-      else if (pinned > 0) pinned
-      else if (nShards == 1) 1
-      else {
-        val statsRow = docs
-          .agg(sum(length(col(textCol))), max(length(col(textCol)))).head
-        val sumLen = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
-        val docMax = if (statsRow.isNullAt(1)) 0 else statsRow.getInt(1)
-        val budget = java.lang.Long.getLong(
-          "graft.shards.concurrencyBudgetBytes",
-          Runtime.getRuntime.maxMemory() / 4)
-        // Overlap exists to back-fill cores the DISTRIBUTED kernel's
-        // many short stages leave idle (guide §2.6). A shard small
-        // enough for the single-task build ([[build]]'s dispatch) runs
-        // a kernel whose walk/cut stages already use the whole
-        // machine, and overlapping those was measured 14× slower PER
-        // SHARD at sf0.1 (4 concurrent walks: 57 s each vs 4 s
-        // sequential; q174 68 vs 26 s wall) — pure contention, no idle
-        // capacity to fill. Sequential is also exactly the 100 TB
-        // shape: autoShards sizes shards against this same budget, so
-        // one shard fills it and autoConcurrency yields 1 there too.
-        // ... and the "single-task shard" test follows the EFFECTIVE
-        // dispatch, graft.sa.path pin included (r18 ADVICE): a
-        // pinned-distributed session runs the many-short-stage kernel
-        // on every shard regardless of size, so the idle capacity the
-        // overlap exists to fill is back — only the size heuristic is
-        // bypassed, and the rehearsal's own explicit
-        // graft.shards.maxConcurrent=1 pin still wins above.
-        val singleTaskShards = System.getProperty("graft.sa.path", "auto") match {
-          case "local"       => true
-          case "distributed" => false
-          case _ => sumLen / math.max(1, nShards) <= localMaxChars
-        }
-        val k =
-          if (singleTaskShards) 1
-          else autoConcurrency(sumLen, docMax, nShards, budget)
-        System.err.println(s"[suffixarray] shardedDedupCut auto concurrency: " +
-          s"perShardWorkingSet=${walkWorkingSetBytes(
-            sumLen / nShards, docMax)}B budget=${budget}B -> k=$k " +
-          s"(nShards=$nShards" +
-          (if (k == 1) ", single-task-build shards run sequentially" else "") +
-          ")")
-        k
-      }
-    import scala.jdk.CollectionConverters._
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_sharded_cut").toFile
     doneSidecars.add(outDir) // freed at the same phase boundary as caches
@@ -1210,65 +1100,28 @@ object SuffixArray {
         else { deleteRecursively(d); None } // empty corpus: no partitions
       }
     try {
-      val shardDbg = sys.env.contains("GRAFT_SHARD_DEBUG")
-      val tKernel0 = System.nanoTime()
-      def dbgLog(msg: String): Unit = if (shardDbg)
-        System.err.println(
-          f"[sharddbg] ${(System.nanoTime() - tKernel0) / 1e9}%6.1f s $msg")
-      def runShard(s: Int, sess: SparkSession): Unit = {
-        val t0 = System.nanoTime()
-        val dshard = shardInputDir match {
-          case Some(d) => sess.read.parquet(d.getAbsolutePath)
-            .filter(col("__shard") === s).drop("__shard")
-          case None if nShards == 1 => docs
-          case None => // empty corpus (no materialized partitions):
-            // every shard is the empty slice of `docs`
-            docs.filter(lit(false))
-        }
-        val sa = build(dshard, docIdCol, textCol, numPartitions)
-        val t1 = System.nanoTime()
-        val cut = dedupCut(sa, dshard, minLen, docIdCol, textCol)
-        outSchema = cut.schema
-        cut.write.mode("overwrite").parquet(
-          new java.io.File(outDir, s"__cutshard=$s").getAbsolutePath)
-        dbgLog(f"shard $s done: build ${(t1 - t0) / 1e9}%.1f s, " +
-          f"walk+cut+write ${(System.nanoTime() - t1) / 1e9}%.1f s")
-      }
-      dbgLog("shard input materialized")
-      (0 until nShards).grouped(concurrency).foreach { batch =>
+      (0 until nShards).foreach { s =>
         val beforeIds = sc.getPersistentRDDs.keySet.toSet
         val beforeDirs = doneSidecars.asScala.toSet
         try {
-          if (batch.size == 1) runShard(batch.head, spark)
-          else {
-            val errs =
-              new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-            // snapshot once per batch: the parent's modifiable runtime
-            // conf (harness pins included) is copied onto each worker
-            // session, which otherwise starts from context defaults
-            val parentConf = spark.conf.getAll
-            val threads = batch.map { s =>
-              val sess = spark.newSession()
-              parentConf.foreach { case (ck, cv) =>
-                if (sess.conf.isModifiable(ck) &&
-                    !sess.conf.getOption(ck).contains(cv))
-                  try sess.conf.set(ck, cv)
-                  catch { case _: Exception => () }
-              }
-              val t = new Thread(
-                () => try runShard(s, sess)
-                      catch { case e: Throwable => errs.add(e) },
-                s"graft-shard-$s")
-              t.start(); t
-            }
-            threads.foreach(_.join())
-            if (!errs.isEmpty) throw errs.peek()
+          val dshard = shardInputDir match {
+            case Some(d) => spark.read.parquet(d.getAbsolutePath)
+              .filter(col("__shard") === s).drop("__shard")
+            case None if nShards == 1 => docs
+            case None => // empty corpus (no materialized partitions):
+              // every shard is the empty slice of `docs`
+              docs.filter(lit(false))
           }
+          val sa = build(dshard, docIdCol, textCol, numPartitions)
+          val cut = dedupCut(sa, dshard, minLen, docIdCol, textCol)
+          outSchema = cut.schema
+          cut.write.mode("overwrite").parquet(
+            new java.io.File(outDir, s"__cutshard=$s").getAbsolutePath)
         } finally {
-          // this batch's cut rows are durably in outDir: release every
-          // checkpoint the batch created (build intermediates, the
-          // walks' hv + final rounds) and delete its walk sidecars —
-          // peak storage stays batch-sized across the whole loop
+          // this shard's cut rows are durably in outDir: release every
+          // checkpoint it created (build intermediates, the walk's hv +
+          // final rounds) and delete its walk sidecars — peak storage
+          // stays one shard's across the whole loop
           releaseRddIds(sc, sc.getPersistentRDDs.keySet.toSet -- beforeIds)
           doneSidecars.asScala.toList
             .filterNot(beforeDirs).filterNot(_ == outDir)
@@ -1281,12 +1134,9 @@ object SuffixArray {
           // corpus-scale shuffle volume on disk at once (measured by
           // the r17 autoshards probe: ~all-shards bytes resident),
           // exactly the one-shard-at-a-time envelope this loop exists
-          // to keep. A per-batch GC makes the cleanup deterministic;
+          // to keep. A per-shard GC makes the cleanup deterministic;
           // its pause is noise next to a shard's kernel cost.
-          val tGc = System.nanoTime()
           System.gc()
-          dbgLog(f"batch ${batch.mkString("+")} released " +
-            f"(System.gc ${(System.nanoTime() - tGc) / 1e9}%.1f s)")
         }
       }
     } finally shardInputDir.foreach(deleteRecursively)
@@ -1295,109 +1145,6 @@ object SuffixArray {
     else // a clean corpus can yield zero spans in every shard, and an
          // all-empty write may leave no part files to infer schema from
       spark.createDataFrame(sc.emptyRDD[Row], outSchema)
-  }
-
-  /** Session-scoped sharded-cut cache — the third tier of the SA index
-    * lifecycle (r16 verdict #2: the q174/q175 report/action pair each
-    * re-ran the whole per-shard kernel, 2× the cost of the work).
-    * Keyed by (session, corpus key, minLen, nShards); the cut table is
-    * spans-sized (small), so the cached form is a localCheckpoint and
-    * the parquet sidecar stays on its normal phase-boundary lifecycle.
-    * q174 — the query that MEANS "run the sharded kernel" —
-    * invalidates first so its timing is always a kernel run (q137's
-    * rule); q175's coverage report and q176's cross-shard union ride
-    * whatever is cached.
-    */
-  private val shardedCutCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), (DataFrame, Set[Int])]()
-  private def shardedCutKey(key: String, minLen: Int, nShards: Int) =
-    s"$key#cut#minLen=$minLen#shards=$nShards"
-
-  def shardedDedupCutCached(docs: DataFrame, key: String, minLen: Int,
-                            nShards: Int, docIdCol: String = "doc_id",
-                            textCol: String = "text",
-                            numPartitions: Int = 32): DataFrame = {
-    val cacheKey = (System.identityHashCode(docs.sparkSession),
-      shardedCutKey(key, minLen, nShards))
-    // hit/miss is LOGGED (r17 ADVICE): q174's invalidate-then-recompute
-    // makes the family's cost attribution order-dependent under query
-    // filters — a filtered run where q175/q176/q178 computes the whole
-    // kernel must be distinguishable from one that rode the cache, or
-    // the recorded secs are uninterpretable across runs
-    val hit = shardedCutCache.containsKey(cacheKey)
-    System.err.println(s"[suffixarray] shardedDedupCutCached " +
-      s"${if (hit) "HIT" else "MISS (running per-shard kernel)"}: " +
-      s"key=$key minLen=$minLen nShards=$nShards")
-    shardedCutCache.computeIfAbsent(cacheKey,
-      _ => checkpointReleasing(docs.sparkSession)(
-        shardedDedupCut(docs, minLen, nShards, docIdCol, textCol,
-          numPartitions)))._1
-  }
-
-  /** Is the (key, minLen, nShards) cut table already cached for this
-    * session? Bench snapshots this before each sharded-family query so
-    * the artifact records which measurements rode the cache
-    * (r17 ADVICE — cost attribution under query filters).
-    */
-  def isShardedCutCached(spark: SparkSession, key: String, minLen: Int,
-                         nShards: Int): Boolean =
-    shardedCutCache.containsKey(
-      (System.identityHashCode(spark), shardedCutKey(key, minLen, nShards)))
-
-  def invalidateShardedCutCached(spark: SparkSession, key: String,
-                                 minLen: Int, nShards: Int): Unit = {
-    val evicted = shardedCutCache.remove(
-      (System.identityHashCode(spark), shardedCutKey(key, minLen, nShards)))
-    if (evicted != null) releaseRddIds(spark.sparkContext, evicted._2)
-  }
-
-  /** Session-scoped winnow-span cache — the fourth tier of the SA
-    * index lifecycle (r18 verdict item 5: q176 and q178 each ran a
-    * duplicate ~1.3 s corpus winnow pass — the [[Dedup.winnowedCharSpans]]
-    * fingerprint UDF + recurrence count — on top of the shared kernel
-    * cache). The span table is selection-sized (~2/(w+1) of gram
-    * positions), so the cached form is a localCheckpoint, exactly the
-    * sharded-cut tier's shape. q176 — the query that MEANS "run the
-    * cross-shard union" — invalidates first so its timing always
-    * includes one winnow pass (q174's invalidate-first rule); q178's
-    * coverage report rides whatever is cached. Derived from the corpus
-    * alone (independent of the sharded kernel), hence its own
-    * invalidation key; freed with the other tiers at [[clearCaches]].
-    */
-  private val winnowSpanCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), (DataFrame, Set[Int])]()
-  private def winnowSpanKey(key: String, minLen: Int, w: Int) =
-    s"$key#winnow#minLen=$minLen#w=$w"
-
-  def winnowedCharSpansCached(docs: DataFrame, key: String, minLen: Int,
-                              winnowW: Int, docIdCol: String = "doc_id",
-                              textCol: String = "text"): DataFrame = {
-    val cacheKey = (System.identityHashCode(docs.sparkSession),
-      winnowSpanKey(key, minLen, winnowW))
-    val hit = winnowSpanCache.containsKey(cacheKey)
-    System.err.println(s"[suffixarray] winnowedCharSpansCached " +
-      s"${if (hit) "HIT" else "MISS (running winnow pass)"}: " +
-      s"key=$key minLen=$minLen w=$winnowW")
-    winnowSpanCache.computeIfAbsent(cacheKey,
-      _ => checkpointReleasing(docs.sparkSession)(
-        Dedup.winnowedCharSpans(docs, docIdCol, textCol, minLen, winnowW)))._1
-  }
-
-  /** Is the (key, minLen, w) winnow-span table already cached for this
-    * session? Bench snapshots this before q176/q178 so the artifact
-    * records which measurement rode the cache (the
-    * `sharded_cut_cache_warm` rule, extended to the winnow tier).
-    */
-  def isWinnowSpanCached(spark: SparkSession, key: String, minLen: Int,
-                         winnowW: Int): Boolean =
-    winnowSpanCache.containsKey(
-      (System.identityHashCode(spark), winnowSpanKey(key, minLen, winnowW)))
-
-  def invalidateWinnowSpanCached(spark: SparkSession, key: String,
-                                 minLen: Int, winnowW: Int): Unit = {
-    val evicted = winnowSpanCache.remove(
-      (System.identityHashCode(spark), winnowSpanKey(key, minLen, winnowW)))
-    if (evicted != null) releaseRddIds(spark.sparkContext, evicted._2)
   }
 
   /** Cross-shard-complete dedup cut: the union of [[shardedDedupCut]]'s
@@ -1437,7 +1184,8 @@ object SuffixArray {
     val sharded = cuts.getOrElse(
       shardedDedupCut(docs, minLen, nShards, docIdCol, textCol, numPartitions))
     // `winnowSpans` lets the union/coverage family share ONE winnow
-    // pass via [[winnowedCharSpansCached]] (q176 computes, q178 rides)
+    // pass via the [[winnowSpanKey]] cache entry (q176 computes, q178
+    // rides)
     val winnow = winnowSpans.getOrElse(
       Dedup.winnowedCharSpans(docs, docIdCol, textCol, minLen, winnowW))
     mergeSpans(
@@ -1510,9 +1258,9 @@ object SuffixArray {
     // key is unset again, not re-materialized as "true" — conf
     // provenance matters to anyone diffing session state). The
     // concurrency contract lives on the public entry points
-    // ([[adjacentLcp]]/[[dedupCut]]/[[adjacentLcpCached]]): a cloned
-    // session can't help here because the incoming `sa`/`docs` frames
-    // are bound to their creating session.
+    // ([[adjacentLcp]]/[[dedupCut]]): a cloned session can't help here
+    // because the incoming `sa`/`docs` frames are bound to their
+    // creating session.
     val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try lcpByHashWalkNoAqe(sa, docs, docIdCol, textCol, numPartitions)
@@ -1588,13 +1336,10 @@ object SuffixArray {
     // the RDDs behind the round whose checkpoint `active` currently
     // filters — released once the NEXT round's checkpoint has drained
     // it. DIRECT references to this walk's own checkpoints (not a
-    // context-global id delta): several walks may run concurrently on
-    // one SparkContext (shardedDedupCut's maxConcurrentShards > 1),
-    // and a global delta would capture — and then unpersist — a
-    // sibling walk's live checkpoints (r17 ADVICE, high). hv's
-    // checkpoint is deliberately NOT released here: the returned
+    // context-global id delta): a walk releases only its own rounds.
+    // hv's checkpoint is deliberately NOT released here: the returned
     // sidecar frame is this walk's only product and the caller
-    // (checkpointReleasing / shardedDedupCut's batch finally) owns
+    // (checkpointReleasing / shardedDedupCut's per-shard finally) owns
     // the walk's terminal cleanup.
     var prevRoundRdds: Seq[org.apache.spark.rdd.RDD[_]] = checkpointRdds(active)
     if (sys.env.contains("GRAFT_LCP_DEBUG"))

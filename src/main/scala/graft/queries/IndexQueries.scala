@@ -24,14 +24,14 @@ object IndexQueries {
     */
   def q137(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    // buildCached: the SA is an index — q137 BUILDS it (invalidating
-    // any prior cache so a timed q137 run always measures the build,
-    // not a cache probe) and consumers (q138's LCP walk, q143's cut)
-    // reuse the session cache, the same build-once/probe-many story as
-    // the IVF/postings lifecycles (SuffixArray.save/load covers the
+    // the SA is an index — q137 BUILDS it (invalidating any prior
+    // cache so a timed q137 run always measures the build, not a cache
+    // probe) and consumers (q138's LCP walk, q143's cut) reuse the
+    // session cache, the same build-once/probe-many story as the
+    // IVF/postings lifecycles (SuffixArray.save/load covers the
     // cross-job case)
-    SuffixArray.invalidateCached(s, dir)
-    SuffixArray.buildCached(docs, dir)
+    SuffixArray.invalidate(s, SuffixArray.saKey(dir))
+    cachedSa(s, dir, docs)
       .select(col("sa_rank"), col("doc_id"), col("p").cast("long").as("p"))
       .orderBy("sa_rank")
   }
@@ -59,11 +59,10 @@ object IndexQueries {
     */
   def q138(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val sa = SuffixArray.buildCached(docs, dir)
     // q138 IS the LCP-array computation: invalidate so its timing is
     // always a walk (q137's rule); q143 then rides this walk's cache
-    SuffixArray.invalidateLcpCached(s, dir)
-    val top = SuffixArray.adjacentLcpCached(sa, docs, dir)
+    SuffixArray.invalidate(s, SuffixArray.lcpKey(dir))
+    val top = cachedLcp(s, dir, docs)
       .orderBy(desc("lcp"), col("doc_a"), col("p_a"), col("doc_b"), col("p_b"))
       .limit(10)
     top.join(docs.select(col("doc_id").as("doc_a"), col("text")), Seq("doc_a"))
@@ -215,9 +214,7 @@ object IndexQueries {
     */
   def q143(s: SparkSession, dir: String, minLen: Int = 40): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val sa = SuffixArray.buildCached(docs, dir)
-    SuffixArray.dedupCutFromLcp(
-      SuffixArray.adjacentLcpCached(sa, docs, dir), minLen)
+    SuffixArray.dedupCutFromLcp(cachedLcp(s, dir, docs), minLen)
       .orderBy("doc_id", "cut_start")
   }
 
@@ -294,6 +291,29 @@ object IndexQueries {
     * oracle alongside the shard modulus.
     */
   val Q176W = 8
+
+  /** Session-cache keys of the sharded family's two shared artifacts —
+    * Bench snapshots their warmth before each family member.
+    */
+  def q174CutKey(dir: String): String =
+    SuffixArray.shardedCutKey(dir, minLen = 40, nShards = Q174Shards)
+  def q176WinnowKey(dir: String): String =
+    SuffixArray.winnowSpanKey(dir, minLen = 40, winnowW = Q176W)
+
+  // the SA family's session-cached artifacts: the query that MEANS
+  // computing one invalidates its key first, every consumer rides it
+  private def cachedSa(s: SparkSession, dir: String, docs: DataFrame) =
+    SuffixArray.cached(s, SuffixArray.saKey(dir))(SuffixArray.build(docs))
+  private def cachedLcp(s: SparkSession, dir: String, docs: DataFrame) =
+    SuffixArray.cached(s, SuffixArray.lcpKey(dir))(
+      SuffixArray.adjacentLcp(cachedSa(s, dir, docs), docs))
+  private def cachedShardedCut(s: SparkSession, dir: String, docs: DataFrame) =
+    SuffixArray.cached(s, q174CutKey(dir))(
+      SuffixArray.shardedDedupCut(docs, minLen = 40, nShards = Q174Shards))
+  private def cachedWinnowSpans(s: SparkSession, dir: String, docs: DataFrame) =
+    SuffixArray.cached(s, q176WinnowKey(dir))(
+      graft.operators.Dedup.winnowedCharSpans(docs, "doc_id", "text",
+        minLen = 40, w = Q176W))
 
   /** One hex digit `n` of md5(text || ':shard'), decoded as
     * ascii − 48 − 39·[c ≥ 'a'] — the DuckDB replay of one digit of
@@ -385,31 +405,20 @@ object IndexQueries {
     * exact duplicates — the dominant class — are never missed; only
     * partial overlaps between non-identical texts can cross a
     * boundary (SuffixArraySpec measures that miss rate on a planted
-    * corpus; winnowing q82 is the corpus-global complement). Shard
-    * concurrency is DERIVED from the working-set budget
-    * (SuffixArray.autoConcurrency — autoShards' envelope arithmetic in
-    * reverse): when one shard fills the per-machine budget (the 100 TB
-    * deployment, where autoShards sized the count against that same
-    * budget) shards run strictly sequentially and peak working set is
-    * one shard's; when shards sit far below the budget (the fixed
-    * 4-shard bench corpus) they overlap as independent jobs, exactly
-    * as a cluster would run them on separate machines. The scale
-    * rehearsal pins k = 1 (-Dgraft.shards.maxConcurrent) so tier
-    * exponents compare the sequential kernel at every tier. The oracle
-    * replays the identical shard assignment and runs q143's per-shard
-    * suffix sort + coarse/fine LCP replay partitioned by shard —
-    * concurrency is an execution knob, never a semantics knob
-    * (spec-pinned bit-for-bit).
+    * corpus; winnowing q82 is the corpus-global complement). Shards
+    * run strictly one at a time, so peak working set is one shard's —
+    * the per-machine envelope autoShards sizes the count against. The
+    * oracle replays the identical shard assignment and runs q143's
+    * per-shard suffix sort + coarse/fine LCP replay partitioned by
+    * shard.
     */
   def q174(s: SparkSession, dir: String): DataFrame = {
     // the query that MEANS "run the sharded kernel": invalidate first
     // so a timed q174 always measures the per-shard builds + walks
     // (q137's rule); q175's report and q176's cross-shard union then
     // ride this run's cached cut table — the family costs ONE kernel
-    SuffixArray.invalidateShardedCutCached(s, dir, minLen = 40,
-      nShards = Q174Shards)
-    SuffixArray.shardedDedupCutCached(Tables.documents(s, dir), dir,
-        minLen = 40, nShards = Q174Shards)
+    SuffixArray.invalidate(s, q174CutKey(dir))
+    cachedShardedCut(s, dir, Tables.documents(s, dir))
       .orderBy("doc_id", "cut_start")
   }
 
@@ -436,8 +445,7 @@ object IndexQueries {
     // rides q174's cached kernel (computes it if this runs first) —
     // the report/action pair costs ONE per-shard SA/LCP pass (r16
     // verdict #2), exactly as q126/q127 share one gram pipeline
-    val cov = SuffixArray
-      .shardedDedupCutCached(docs, dir, minLen = 40, nShards = Q174Shards)
+    val cov = cachedShardedCut(s, dir, docs)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_spans"),
         sum(col("cut_end") - col("cut_start")).as("dup_chars"))
@@ -490,17 +498,14 @@ object IndexQueries {
     */
   def q176(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val cuts = SuffixArray.shardedDedupCutCached(docs, dir, minLen = 40,
-      nShards = Q174Shards)
+    val cuts = cachedShardedCut(s, dir, docs)
     // q176 is the query that MEANS "run the winnow tier": invalidate
     // first so its timing always includes one winnow pass (q174's
     // rule); q178's coverage report then rides this run's cached span
     // table — the union family costs ONE winnow pass on top of the one
     // shared kernel (r18 verdict item 5).
-    SuffixArray.invalidateWinnowSpanCached(s, dir, minLen = 40,
-      winnowW = Q176W)
-    val winnow = SuffixArray.winnowedCharSpansCached(docs, dir, minLen = 40,
-      winnowW = Q176W)
+    SuffixArray.invalidate(s, q176WinnowKey(dir))
+    val winnow = cachedWinnowSpans(s, dir, docs)
     SuffixArray.crossShardDedupCut(docs, minLen = 40, nShards = Q174Shards,
         winnowW = Q176W, cuts = Some(cuts), winnowSpans = Some(winnow))
       .orderBy("doc_id", "cut_start")
@@ -576,12 +581,10 @@ object IndexQueries {
     */
   def q178(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val cuts = SuffixArray.shardedDedupCutCached(docs, dir, minLen = 40,
-      nShards = Q174Shards)
+    val cuts = cachedShardedCut(s, dir, docs)
     // rides q176's cached winnow-span table (computes it if this runs
     // first) — the family's second ~1.3 s duplicate winnow pass is gone
-    val winnow = SuffixArray.winnowedCharSpansCached(docs, dir, minLen = 40,
-      winnowW = Q176W)
+    val winnow = cachedWinnowSpans(s, dir, docs)
     val union = SuffixArray.crossShardDedupCut(docs, minLen = 40,
       nShards = Q174Shards, winnowW = Q176W, cuts = Some(cuts),
       winnowSpans = Some(winnow))

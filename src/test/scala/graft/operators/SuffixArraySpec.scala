@@ -249,14 +249,16 @@ class SuffixArraySpec extends AnyFunSuite {
     assert(files == 1L, s"rank-range probe touched $files files")
   }
 
-  test("buildCached returns one shared materialization per (session, key)") {
+  test("cached SA build: one shared materialization per (session, key)") {
     import spark.implicits._
     val docs = Seq(0L -> "cache me once", 1L -> "cache me twice")
     val ddf = docs.toDF("doc_id", "text")
-    val a = SuffixArray.buildCached(ddf, "spec-corpus-A")
-    val b = SuffixArray.buildCached(ddf, "spec-corpus-A")
+    def cachedSa(corpus: String) = SuffixArray.cached(spark,
+      SuffixArray.saKey(corpus))(SuffixArray.build(ddf))
+    val a = cachedSa("spec-corpus-A")
+    val b = cachedSa("spec-corpus-A")
     assert(a eq b) // the second probe must NOT re-run the doubling build
-    val fresh = SuffixArray.buildCached(ddf, "spec-corpus-B")
+    val fresh = cachedSa("spec-corpus-B")
     assert(!(fresh eq a))
     val got = a.collect().map(r => (r.getLong(2), r.getLong(0), r.getInt(1).toLong))
       .sorted.toSeq
@@ -484,108 +486,32 @@ class SuffixArraySpec extends AnyFunSuite {
     assert(keys.distinct.length > 1000) // spread, not a handful of buckets
   }
 
-  test("maxConcurrentShards = 2 matches the sequential form bit for bit") {
-    // same corpus as the boundary-miss spec's shape, smaller: planted
-    // within/cross-shard pairs + clones; concurrency is an execution
-    // knob, never a semantics knob
+  test("sharded cut under graft.lcp.path=hash equals the auto path") {
+    // spec-sized shards dispatch the single-task LCP kernel; forcing
+    // graft.lcp.path=hash keeps the hash walk — its per-round
+    // checkpoint release and done-sidecar cleanup inside the per-shard
+    // loop — under a spec against the same rows
     val nPairs = 12
     def passage(i: Int) = f"$i%04dabcdefgh$i%04dijklmnop$i%04d"
     val docs = (0 until nPairs).flatMap { i =>
-      Seq((2L * i, f"lpad $i%04dA ${passage(i)}rpad $i%04dA"),
-        (2L * i + 1, f"lpad $i%04dB ${passage(i)}rpad $i%04dB"))
-    } ++ Seq(900L, 901L).map(_ -> "same whole doc duplicated verbatim")
+      Seq((2L * i, f"hlpad $i%04dA ${passage(i)}hrpad $i%04dA"),
+        (2L * i + 1, f"hlpad $i%04dB ${passage(i)}hrpad $i%04dB"))
+    } ++ Seq(910L, 911L).map(_ -> "hash path whole doc duplicated verbatim")
     import spark.implicits._
     val ddf = docs.toDF("doc_id", "text")
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val seq1 = canon(SuffixArray.shardedDedupCut(ddf, minLen = 20, nShards = 4,
-      maxConcurrentShards = 1))
-    val par2 = canon(SuffixArray.shardedDedupCut(ddf, minLen = 20, nShards = 4,
-      maxConcurrentShards = 2))
-    assert(par2 == seq1)
-    assert(seq1.nonEmpty)
-    // the default derives concurrency from the working-set budget
-    // (k = 4 on a spec-sized corpus) — same rows either way
     val auto = canon(SuffixArray.shardedDedupCut(ddf, minLen = 20, nShards = 4))
-    assert(auto == seq1)
-  }
-
-  test("auto concurrency derives from the working-set budget and " +
-      "collapses to sequential when one shard fills it") {
-    // derivation arithmetic: k = clamp(1, min(nShards, 16),
-    // budget / perShardWorkingSet) — autoShards in reverse, so when
-    // autoShards sized the shards to FILL the budget, k = 1
-    val sumLen = 1500000000L
-    val maxLen = 553
-    val budget = 64L << 30
-    val n = SuffixArray.autoShards(sumLen, maxLen, budget)
-    assert(SuffixArray.autoConcurrency(sumLen, maxLen, n, budget) == 1)
-    // shards an order of magnitude below the budget overlap
-    val per = SuffixArray.walkWorkingSetBytes(sumLen / 8, maxLen)
-    assert(SuffixArray.autoConcurrency(sumLen, maxLen, 8, per * 4) == 4)
-    assert(SuffixArray.autoConcurrency(sumLen, maxLen, 8, per * 100) == 8)
-    // caps: never above nShards, never above 16, never below 1
-    assert(SuffixArray.autoConcurrency(100L, 10, 65536, Long.MaxValue) == 16)
-    assert(SuffixArray.autoConcurrency(sumLen, maxLen, 8, 1L) == 1)
-    // end-to-end: tiny budget -> one shard's working set exceeds it ->
-    // k = 1; huge budget -> all shards in flight — same rows either way
-    val prev = System.getProperty("graft.shards.concurrencyBudgetBytes")
-    def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    import spark.implicits._
-    val docs = (0 until 8).map(i => (i.toLong,
-      s"budget probe text $i shared shared shared tail")).toDF("doc_id", "text")
-    try {
-      System.setProperty("graft.shards.concurrencyBudgetBytes", "1")
-      val seqForm = canon(SuffixArray.shardedDedupCut(docs, minLen = 20,
-        nShards = 4))
-      System.setProperty("graft.shards.concurrencyBudgetBytes",
-        (64L << 30).toString)
-      val parForm = canon(SuffixArray.shardedDedupCut(docs, minLen = 20,
-        nShards = 4))
-      assert(parForm == seqForm)
-    } finally {
-      if (prev == null)
-        System.clearProperty("graft.shards.concurrencyBudgetBytes")
-      else System.setProperty("graft.shards.concurrencyBudgetBytes", prev)
-    }
-  }
-
-  test("maxConcurrentShards = 2 under the FORCED hash-walk path matches " +
-      "the sequential form (r17 ADVICE: no cross-walk checkpoint release)") {
-    // The race regime the r17 ADVICE named: shards > 256 MB always
-    // dispatch the hash walk, and two concurrent walks on one
-    // SparkContext each release per-round checkpoints — the old
-    // context-global id-delta release could capture and unpersist the
-    // SIBLING walk's live localCheckpoints ('checkpoint block not
-    // found', unrecoverable: checkpoint lineage is truncated). Forcing
-    // graft.lcp.path=hash dispatches the walk regardless of corpus
-    // size, so this pins the concurrent regime the tiny-corpus k=2
-    // spec above never reached; the fix scopes each walk's release to
-    // direct references to its OWN checkpoint RDDs.
     val prev = System.getProperty("graft.lcp.path")
     System.setProperty("graft.lcp.path", "hash")
-    try {
-      val nPairs = 12
-      def passage(i: Int) = f"$i%04dabcdefgh$i%04dijklmnop$i%04d"
-      val docs = (0 until nPairs).flatMap { i =>
-        Seq((2L * i, f"hlpad $i%04dA ${passage(i)}hrpad $i%04dA"),
-          (2L * i + 1, f"hlpad $i%04dB ${passage(i)}hrpad $i%04dB"))
-      } ++ Seq(910L, 911L).map(_ -> "hash path whole doc duplicated verbatim")
-      import spark.implicits._
-      val ddf = docs.toDF("doc_id", "text")
-      def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      val seq1 = canon(SuffixArray.shardedDedupCut(ddf, minLen = 20, nShards = 4,
-        maxConcurrentShards = 1))
-      val par2 = canon(SuffixArray.shardedDedupCut(ddf, minLen = 20, nShards = 4,
-        maxConcurrentShards = 2))
-      assert(par2 == seq1)
-      assert(seq1.nonEmpty)
-    } finally {
-      if (prev == null) System.clearProperty("graft.lcp.path")
-      else System.setProperty("graft.lcp.path", prev)
-    }
+    val hash =
+      try canon(SuffixArray.shardedDedupCut(ddf, minLen = 20, nShards = 4))
+      finally {
+        if (prev == null) System.clearProperty("graft.lcp.path")
+        else System.setProperty("graft.lcp.path", prev)
+      }
+    assert(hash == auto)
+    assert(auto.nonEmpty)
   }
 
   test("cached sharded cut: consumers ride one kernel; invalidate refreshes") {
@@ -595,20 +521,23 @@ class SuffixArraySpec extends AnyFunSuite {
       2L -> "totally unique content")
     import spark.implicits._
     val ddf = docs.toDF("doc_id", "text")
-    SuffixArray.invalidateShardedCutCached(spark, "spec-corpus", 20, 4)
+    val key = SuffixArray.shardedCutKey("spec-corpus", minLen = 20, nShards = 4)
+    def cachedCut() = SuffixArray.cached(spark, key)(
+      SuffixArray.shardedDedupCut(ddf, minLen = 20, nShards = 4))
+    SuffixArray.invalidate(spark, key)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val first = SuffixArray.shardedDedupCutCached(ddf, "spec-corpus", 20, 4)
-    val second = SuffixArray.shardedDedupCutCached(ddf, "spec-corpus", 20, 4)
+    val first = cachedCut()
+    val second = cachedCut()
     // cache hit: the SAME materialized frame instance, not a re-run
     assert(first eq second)
     val firstRows = canon(first) // snapshot BEFORE invalidate frees its blocks
     assert(firstRows ==
       canon(SuffixArray.shardedDedupCut(ddf, minLen = 20, nShards = 4)))
-    SuffixArray.invalidateShardedCutCached(spark, "spec-corpus", 20, 4)
-    val third = SuffixArray.shardedDedupCutCached(ddf, "spec-corpus", 20, 4)
+    SuffixArray.invalidate(spark, key)
+    val third = cachedCut()
     assert(!(third eq first) && canon(third) == firstRows)
-    SuffixArray.invalidateShardedCutCached(spark, "spec-corpus", 20, 4)
+    SuffixArray.invalidate(spark, key)
   }
 
   test("cross-shard cut covers EVERY planted pair; sharded tier alone misses " +
@@ -840,19 +769,63 @@ class SuffixArraySpec extends AnyFunSuite {
       2L -> ("the quick brown fox jumps over the lazy dog near the river bank " * 2),
       3L -> "completely different text without any repeated fragments here")
       .toDF("doc_id", "text")
-    val key = "spec-winnow-cache"
-    SuffixArray.invalidateWinnowSpanCached(spark, key, minLen = 40, winnowW = 8)
-    assert(!SuffixArray.isWinnowSpanCached(spark, key, minLen = 40, winnowW = 8))
+    val key = SuffixArray.winnowSpanKey("spec-winnow-cache", minLen = 40, winnowW = 8)
+    def cachedSpans() = SuffixArray.cached(spark, key)(
+      Dedup.winnowedCharSpans(docs, "doc_id", "text", 40, 8))
+    SuffixArray.invalidate(spark, key)
+    assert(!SuffixArray.isCached(spark, key))
     val direct = Dedup.winnowedCharSpans(docs, "doc_id", "text", 40, 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val cached = SuffixArray.winnowedCharSpansCached(docs, key, 40, 8)
-    assert(SuffixArray.isWinnowSpanCached(spark, key, minLen = 40, winnowW = 8))
+    val cached = cachedSpans()
+    assert(SuffixArray.isCached(spark, key))
     val got = cached.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
     assert(got.toSeq == direct.toSeq)
     // second consumer returns the SAME materialized frame (one pass)
-    val again = SuffixArray.winnowedCharSpansCached(docs, key, 40, 8)
+    val again = cachedSpans()
     assert(again eq cached)
-    SuffixArray.invalidateWinnowSpanCached(spark, key, minLen = 40, winnowW = 8)
-    assert(!SuffixArray.isWinnowSpanCached(spark, key, minLen = 40, winnowW = 8))
+    SuffixArray.invalidate(spark, key)
+    assert(!SuffixArray.isCached(spark, key))
+  }
+
+  test("clearCaches frees every entry of its session and no other session's") {
+    import spark.implicits._
+    val docs = Seq(
+      0L -> "xx0123456789abcdefghij yy",
+      1L -> "zzz 0123456789abcdefghij www",
+      2L -> "totally unique content")
+    val ddf = docs.toDF("doc_id", "text")
+    val corpus = "spec-clear-caches"
+    val keys = Seq(SuffixArray.lcpKey(corpus), SuffixArray.saKey(corpus),
+      SuffixArray.shardedCutKey(corpus, minLen = 20, nShards = 4),
+      SuffixArray.winnowSpanKey(corpus, minLen = 20, winnowW = 8))
+    keys.foreach(SuffixArray.invalidate(spark, _))
+    def cachedSa() = SuffixArray.cached(spark, keys(1))(SuffixArray.build(ddf))
+    // the LCP entry's make reads the SA through the cache: the SA entry
+    // is created INSIDE another entry's make and must outlive it
+    val lcp = SuffixArray.cached(spark, keys(0))(
+      SuffixArray.adjacentLcp(cachedSa(), ddf))
+    val frames = Seq(lcp, cachedSa(),
+      SuffixArray.cached(spark, keys(2))(
+        SuffixArray.shardedDedupCut(ddf, minLen = 20, nShards = 4)),
+      SuffixArray.cached(spark, keys(3))(
+        Dedup.winnowedCharSpans(ddf, "doc_id", "text", 20, 8)))
+    keys.foreach(k => assert(SuffixArray.isCached(spark, k), k))
+    val sc = spark.sparkContext
+    val ids = frames.map(f => SuffixArray.checkpointRdds(f).map(_.id))
+    assert(ids.forall(_.nonEmpty))
+    assert(ids.flatten.forall(sc.getPersistentRDDs.contains))
+    assert(frames(1).count() == bruteSa(docs).size)
+    val other = spark.newSession()
+    val otherSa = SuffixArray.cached(other, keys(1))(
+      SuffixArray.build(other.createDataFrame(docs).toDF("doc_id", "text")))
+    val otherIds = SuffixArray.checkpointRdds(otherSa).map(_.id)
+    SuffixArray.clearCaches(spark)
+    keys.foreach(k => assert(!SuffixArray.isCached(spark, k), k))
+    assert(ids.flatten.forall(id => !sc.getPersistentRDDs.contains(id)))
+    assert(SuffixArray.isCached(other, keys(1)))
+    assert(otherIds.nonEmpty && otherIds.forall(sc.getPersistentRDDs.contains))
+    assert(otherSa.count() == bruteSa(docs).size)
+    SuffixArray.clearCaches(other)
+    assert(!SuffixArray.isCached(other, keys(1)))
   }
 }
