@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.NullNode
 
 /** Benchmark main (driver contract): runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
@@ -23,8 +26,10 @@ import org.apache.spark.sql.SparkSession
   *    spike hits one pass; the min is the engine's actual cost (r4's
   *    recorded q01 was 5.6 s across both of two passes under driver-side
   *    contention vs 1.3 s warm on a quiet machine).
-  *  - the JSON line is also written to `SPARK_GRAFT_BENCH_OUT` if set, so
-  *    the driver parses a file instead of scraping sbt-prefixed stdout.
+  *  - the full JSON artifact goes to `bench_out.json` (sf0.1 runs only,
+  *    so a local sf0.01 run cannot replace the round artifact) and to
+  *    `SPARK_GRAFT_BENCH_OUT` if set, so a caller parses a file
+  *    instead of scraping sbt-prefixed stdout.
   *  - per-query shuffle WRITE bytes via SparkListener: plan regressions
   *    (new exchanges) are visible even when wall-clock noise isn't, and
   *    shuffle volume is the metric that predicts 100 TB cost. Write-only
@@ -181,70 +186,28 @@ object Bench {
     def remaining: Double = totalBudget - elapsed
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle.partitions is FIXED (default 32 = the default run's value,
-    // so default-run numbers stay comparable across rounds), decoupled
-    // from SPARK_GRAFT_CPUS (r18 verdict item 2a): the driver varies
-    // CPUS to measure core scaling, and partitions-follow-cores cancels
-    // exactly the signal it is probing — fewer cores ⇒ fewer tasks ⇒
-    // flat ratios regardless of how the engine actually scales. With
-    // partitions held constant, only the core count varies between the
-    // 32- and 8-CPU runs. Env-overridable for deployments whose data
-    // needs a different granularity (AQE coalescing handles the
-    // small-partition side either way).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val shuffle = new ShuffleBytesListener
-    spark.sparkContext.addSparkListener(shuffle)
+    // the round artifacts belong to the sf0.1 benchmark run: a local
+    // sf0.01 iteration must not overwrite them
+    val atBenchSf = sfDir.endsWith("sf0.1")
+    val cpus = Harness.cpus
+    val spark = Harness.session()
 
-    // A failed query must NEVER look like a fast success (round 7: 13
-    // broken queries were recorded as ~0.06 s / 0-shuffle-byte wins with
-    // rc=0). runOne reports failure; timed passes record -1 for any query
-    // that failed in any pass, and the JSON carries an explicit errors key.
+    // A failed query must NEVER look like a fast success: Harness.run
+    // reports failure, timed passes record -1 for any query that failed
+    // in any pass, and the JSON carries an explicit errors key.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def runOne(name: String, dir: String): Boolean =
-      SparkEntry.queries.get(name) match {
-        case None =>
-          // an unregistered headline name must fail loudly, not record
-          // a ~0s/0-shuffle "success" (the round-7 artifact-lie mode)
-          System.err.println(s"[bench] $name is not in SparkEntry.queries")
-          false
-        case Some(fn) =>
-          try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-          // release query-transient persists (LSH shingle tables):
-          // without this, 173 queries x 3 passes accumulate dozens of
-          // un-evictable MEMORY_AND_DISK tables and the storage
-          // pressure makes later passes of unrelated queries spike
-          // (the r13 q112 variance — see TransientPersists)
-          finally graft.operators.TransientPersists.releaseAll()
-      }
 
     // Untimed warmup: run every headline plan once at the smallest SF so
     // the timed passes measure the engine, not JIT + codegen compilation
     // (measured: q25 21.7s cold vs 2.6s warm on identical data).
     val warmupDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmupDir).isDirectory && warmupDir != sfDir)
-      headline.foreach(runOne(_, warmupDir))
+      headline.foreach(Harness.run(spark, _, warmupDir))
 
     def timeOne(name: String): (String, Double, Long) = {
-      val b0 = shuffle.bytes.get()
-      val t0 = System.nanoTime()
-      val ok = runOne(name, sfDir)
-      if (!ok) failed += name
-      (name, (System.nanoTime() - t0) / 1e9, shuffle.bytes.get() - b0)
+      val r = Harness.run(spark, name, sfDir)
+      if (!r.ok) failed += name
+      (name, r.secs, r.writeBytes)
     }
     def timedPass(): Seq[(String, Double, Long)] =
       headline.filterNot(oracleTier).map(timeOne)
@@ -272,8 +235,7 @@ object Bench {
       if (winnowFamily.contains(name))
         winnowCacheWarm(name) = graft.operators.SuffixArray.isCached(spark,
           graft.queries.IndexQueries.q176WinnowKey(sfDir))
-      val r = timeOne(name)
-      if (failed.contains(name)) (name, -1.0, -1L) else r
+      timeOne(name)
     }
     val results = passResults ++ oracleResults
 
@@ -283,19 +245,12 @@ object Bench {
     // only ever REPLACES the artifact with a strictly richer one. A
     // driver kill at any point after this line can no longer produce
     // `parsed: null`.
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val sb = results.map { case (k, _, s) => "\"" + k + "\":" + s }
-      .mkString("{", ",", "}")
     val total = passResults.filter(_._2 >= 0).map(_._2).sum
     // reconciliation field (r16 verdict #6): the headline `total`
     // excludes the oracle tier by design, so an auditor summing the
     // queries map lands `oracle_tier_secs` above it — publish the
     // difference explicitly instead of making them read this file
     val oracleTierSecs = oracleResults.filter(_._2 >= 0).map(_._2).sum
-    val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val oracleList = headline.filter(oracleTier)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
     val round: Option[Int] = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt)
       .orElse {
         // explicit UTF-8: the forked JVM's default charset follows the
@@ -311,6 +266,8 @@ object Bench {
           None
         }
       }
+    val outPaths =
+      (if (atBenchSf) Seq("bench_out.json") else Nil) ++ sys.env.get("SPARK_GRAFT_BENCH_OUT")
     // stage → governor-elapsed at the stage's artifact write: the
     // budget-tuning evidence (how long each stage ACTUALLY costs in a
     // driver run) rides along in every artifact.
@@ -320,22 +277,24 @@ object Bench {
     // final artifact silently loses them (pinned_base_skipped /
     // nobroadcast_base_failed were written at the pinned stage and
     // dropped by the final rewrite)
-    val stickyExtra = scala.collection.mutable.LinkedHashMap[String, String]()
-    def writeArtifacts(stage: String, newExtra: Seq[(String, String)],
-                       rehearsalJson: String): String = {
+    val stickyExtra = scala.collection.mutable.LinkedHashMap[String, Any]()
+    def writeArtifacts(stage: String, newExtra: Seq[(String, Any)],
+                       rehearsal: JsonNode): Unit = {
       newExtra.foreach { case (k, v) => stickyExtra(k) = v }
-      val extra = stickyExtra.toSeq
       stageElapsed(stage) = elapsed
-      val stagesJson = stageElapsed.map { case (k, v) =>
-        "\"" + k + "\":" + f"$v%.1f" }.mkString("{", ",", "}")
-      val extraJson = extra.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString(",")
-      val sep = if (extra.isEmpty) "" else ","
-      val line = s"""{"metric":"total","value":$total,"unit":"sec","oracle_tier_secs":$oracleTierSecs,"stage":"$stage","budget":$totalBudget,"stage_elapsed":$stagesJson,"queries":$qs,"shuffle_bytes":$sb,"errors":$errs,"oracle_tier":$oracleList,${extraJson}${sep}"scale_rehearsal":$rehearsalJson,"sf":"$sfDir"}"""
-      val outPaths = Seq("bench_out.json") ++ sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      val line = Harness.obj(Seq(
+        "metric" -> "total", "value" -> total, "unit" -> "sec",
+        "oracle_tier_secs" -> oracleTierSecs, "stage" -> stage,
+        "budget" -> totalBudget,
+        "stage_elapsed" -> Harness.obj(stageElapsed.toSeq.map {
+          case (k, v) => k -> Harness.fixed(v, 1) }: _*),
+        "queries" -> Harness.obj(results.map(r => r._1 -> r._2): _*),
+        "shuffle_bytes" -> Harness.obj(results.map(r => r._1 -> r._3): _*),
+        "errors" -> failed.toSeq,
+        "oracle_tier" -> headline.filter(oracleTier)) ++ stickyExtra ++ Seq(
+        "scale_rehearsal" -> rehearsal, "sf" -> sfDir): _*)
       outPaths.foreach { path =>
-        try java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        try Harness.writeJson(path, line)
         catch { case e: Exception =>
           System.err.println(s"[bench] could not write $path: ${e.getMessage}")
         }
@@ -353,34 +312,29 @@ object Bench {
       // round artifact, leaving BENCH_r18.json holding the cpus:8 run
       // while PERF compared the 32-CPU one; the `_c8` suffix matches
       // the driver's own BENCH_r18_c8.json naming).
-      if (sfDir.endsWith("sf0.1")) round.foreach { n =>
-        val artifact =
-          s"""{"n": $n, "rc": null, "producer": "bench-self", "stage": "$stage", "cpus": $cpus, "sf": 0.1, "tail": "(written by Bench.scala)", "parsed": $line}"""
+      if (atBenchSf) round.foreach { n =>
         val suffix = if (cpus == "32") "" else s"_c$cpus"
-        try java.nio.file.Files.write(
-          java.nio.file.Paths.get(f"BENCH_r$n%02d$suffix%s.json"),
-          (artifact + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        try Harness.writeJson(f"BENCH_r$n%02d$suffix%s.json", Harness.obj(
+          "n" -> n, "rc" -> None, "producer" -> "bench-self", "stage" -> stage,
+          "cpus" -> cpus.toInt, "sf" -> 0.1, "tail" -> "(written by Bench.scala)",
+          "parsed" -> line))
         catch { case e: Exception =>
           System.err.println(s"[bench] could not write BENCH_r$n: ${e.getMessage}")
         }
       }
-      line
     }
     // per-query raw samples across the 3 passes (r15 verdict #4): min
     // is the reported number, but the SPREAD is what distinguishes a
     // real 10 % regression from a noisy box — contention inflates all
     // three samples uniformly; a plan regression moves the min.
-    val rawJson = passes.transpose.map { samples =>
-      "\"" + samples.head._1 + "\":" +
-        samples.map(s => f"${s._2}%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+    val rawJson = Harness.obj(passes.transpose.map { samples =>
+      samples.head._1 -> samples.map(s => Harness.fixed(s._2, 3))
+    }: _*)
     writeArtifacts("headline", Seq(
-      "loadavg_start" -> ("\"" + loadAvgStart + "\""),
-      "sharded_cut_cache_warm" -> shardedCacheWarm
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"),
-      "winnow_span_cache_warm" -> winnowCacheWarm
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"),
-      "queries_raw" -> rawJson), "null")
+      "loadavg_start" -> loadAvgStart,
+      "sharded_cut_cache_warm" -> Harness.obj(shardedCacheWarm.toSeq: _*),
+      "winnow_span_cache_warm" -> Harness.obj(winnowCacheWarm.toSeq: _*),
+      "queries_raw" -> rawJson), NullNode.instance)
 
     // ---- pinned 1× gate bases (budget-guarded) ------------------------
     // Scale rehearsal (VERDICT r8 #5, re-architected r13 per VERDICT
@@ -393,20 +347,39 @@ object Bench {
     // See ScaleRehearsal for the protocol. Opt out with
     // SPARK_GRAFT_SCALE_REHEARSAL=0.
     val rehearse = sys.env.getOrElse("SPARK_GRAFT_SCALE_REHEARSAL", "1") == "1" &&
-      sfDir.endsWith("sf0.1")
+      atBenchSf
     // Governor reserves: the fork needs at least this much to produce a
     // usable 10× tier; below it the rehearsal (and the pinned bases that
     // only exist to feed it) is skipped outright — explicitly recorded.
     val MinForkSecs = 500.0
     val FinalMargin = 90.0 // println + artifact write + spark.stop()
-    val compactFallback =
-      if (!rehearse) ("null", "null", "null", "[]")
+    val baseFile = "scale_rehearsal_base.tsv"
+    // The rehearsal child: a fresh JVM on the same classpath. 48g
+    // default heap (box: 128 GiB; the idle parent holds 32g): the 100×
+    // tier's SA build OOMed at 32g when identical 64-char start keys
+    // landed in ONE range partition. That ceiling is since fixed at the
+    // source (headRank range-partitions on (key, gid), so equal keys
+    // split — see SuffixArray.rangeByKeyGid); the headroom stays
+    // because the 100× tier's other sorts/joins are sized for it. The
+    // child's output goes to `logFile`: this process's stdout carries
+    // the one-line JSON contract and must stay clean.
+    def forkRehearsal(outFile: String, timeoutSecs: Long,
+                      env: Map[String, String], tmpDir: String,
+                      logFile: String): Boolean =
+      Harness.fork("graft.ScaleRehearsal", Seq(sfDir, baseFile, outFile),
+        new java.io.File(outFile), new java.io.File(tmpDir).getAbsoluteFile,
+        sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "48g"), timeoutSecs,
+        ProcessBuilder.Redirect.to(new java.io.File(logFile)), env)
+    // the child's artifact, or null when the rehearsal did not run or
+    // left no readable artifact (each case says so on stderr)
+    val rehearsal: JsonNode =
+      if (!rehearse) NullNode.instance
       else if (remaining < MinForkSecs + FinalMargin) {
         System.err.println(f"[bench] BUDGET: skipping rehearsal entirely " +
           f"(remaining ${remaining}%.0f s < ${MinForkSecs + FinalMargin}%.0f)")
         writeArtifacts("rehearsal_skipped_budget",
-          Seq("rehearsal_skipped_budget" -> "true"), "null")
-        ("null", "null", "null", "[]")
+          Seq("rehearsal_skipped_budget" -> true), NullNode.instance)
+        NullNode.instance
       } else {
       try {
         // Like-for-like q138 exponent (round-11 verdict): the adaptive
@@ -426,48 +399,20 @@ object Bench {
         // gating it against the unpinned (cross-plan) base.
         val pinnedSkipped = scala.collection.mutable.ArrayBuffer[String]()
         val nbBaseFailed = scala.collection.mutable.ArrayBuffer[String]()
-        val InitNumKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-        // child-granularity + no-broadcast pinned measurement of one query
-        def pinnedRuns(n: String, noBc: Boolean, maxRuns: Int): Option[(Double, Long)] = {
-          val prevBc = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-          val prevABc = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-          val prevInit = spark.conf.getOption(InitNumKey)
-          if (noBc) {
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-          }
-          // The pinned bases match the CHILD's shuffle granularity
-          // (initialPartitionNum=256): lz4 shuffle blocks compress worse
-          // at 8× smaller block size, and measured on identical 1× data
-          // the 256-granularity session writes 7–13% more bytes (q107
-          // 12.69→14.29 MB, q123 17.37→18.58 MB) — enough to push a
-          // truly-linear exponent to 1.10–1.12 and trip the gate on
-          // compression framing instead of plans.
-          spark.conf.set(InitNumKey, "256")
-          try {
+        // child-granularity (ScaleRehearsal.ChildGranularity) +
+        // no-broadcast pinned measurement of one query
+        def pinnedRuns(n: String, noBc: Boolean, maxRuns: Int): Option[(Double, Long)] =
+          Harness.withConf(spark, (if (noBc) ScaleRehearsal.NoBroadcastPins else Nil) :+
+              ScaleRehearsal.ChildGranularity: _*) {
             val samples = (1 to maxRuns).flatMap { i =>
               // second run only if the budget still has fork + margin room
               if (i > 1 && remaining < MinForkSecs + FinalMargin + 60) None
-              else {
-                val b0 = shuffle.bytes.get()
-                val t0 = System.nanoTime()
-                val ok = runOne(n, sfDir)
-                val dt = (System.nanoTime() - t0) / 1e9
-                if (ok) Some((dt, shuffle.bytes.get() - b0)) else None
-              }
+              else Some(Harness.run(spark, n, sfDir)).filter(_.ok)
+                .map(r => (r.secs, r.writeBytes))
             }
             if (samples.isEmpty) None
             else Some((samples.map(_._1).min, samples.map(_._2).min))
-          } finally {
-            def restore(key: String, v: Option[String]): Unit = v match {
-              case Some(x) => spark.conf.set(key, x)
-              case None => spark.conf.unset(key)
-            }
-            restore("spark.sql.autoBroadcastJoinThreshold", prevBc)
-            restore("spark.sql.adaptive.autoBroadcastJoinThreshold", prevABc)
-            restore(InitNumKey, prevInit)
           }
-        }
         // the hash pin stays up through the nbBases loop below: q174's
         // sharded kernel is in NoBroadcastBase and its 1× base must be
         // measured under the same lcp path the child pins at every
@@ -538,16 +483,11 @@ object Bench {
             s"$n\t-1\t-1" // pinned base missing: never gate cross-plan
           case (n, t, b) => s"$n\t$t\t$b"
         }
-        val pinnedExtra = Seq(
-          "pinned_base_skipped" -> pinnedSkipped.distinct
-            .map("\"" + _ + "\"").mkString("[", ",", "]"),
-          "nobroadcast_base_failed" -> nbBaseFailed
-            .map("\"" + _ + "\"").mkString("[", ",", "]"))
-        writeArtifacts("pinned_bases", pinnedExtra, "null")
+        writeArtifacts("pinned_bases", Seq(
+          "pinned_base_skipped" -> pinnedSkipped.distinct.toSeq,
+          "nobroadcast_base_failed" -> nbBaseFailed.toSeq), NullNode.instance)
 
-        val baseFile = "scale_rehearsal_base.tsv"
         val outFile = "scale_rehearsal_out.json"
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outFile))
         java.nio.file.Files.write(java.nio.file.Paths.get(baseFile),
           (baseLines.mkString("\n") + "\n")
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -583,72 +523,43 @@ object Bench {
         val budget100 = sys.env.get("SPARK_GRAFT_DECADE2_BUDGET")
           .map(_.toDouble)
           .getOrElse(math.max(0.0, forkBudget - childOverhead - budget10))
-        val forked = ScaleRehearsal.fork(sfDir, baseFile, outFile,
+        val forked = forkRehearsal(outFile,
           timeoutSecs = math.max(60, forkBudget.toLong),
-          childEnv = Map(
+          env = Map(
             "SPARK_GRAFT_REHEARSAL_BUDGET" -> budget10.toLong.toString,
-            "SPARK_GRAFT_DECADE2_BUDGET" -> budget100.toLong.toString))
-        if (!forked) {
-          // fallback: same protocol in-process, but on a FRESH session
-          // (stop the headline session first — its block-manager state
-          // is exactly what the fork isolates against)
-          System.err.println("[bench] rehearsal fork unavailable; " +
-            "running in-process on a fresh SparkSession")
-          spark.stop()
-          val spark2 = SparkSession.builder()
-            .master(s"local[$cpus]")
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
-          spark2.sparkContext.setLogLevel("WARN")
-          try ScaleRehearsal.runAll(spark2, sfDir, baseFile, outFile,
-            freshJvm = false, budget10Override = Some(budget10),
-            budget100Override = Some(budget100))
-          finally spark2.stop()
+            "SPARK_GRAFT_DECADE2_BUDGET" -> budget100.toLong.toString),
+          tmpDir = "scale_rehearsal_tmp", logFile = "scale_rehearsal_child.log")
+        if (forked) Harness.readJson(outFile)
+        else {
+          System.err.println("[bench] scale rehearsal failed: the child " +
+            s"wrote no $outFile (see scale_rehearsal_child.log)")
+          NullNode.instance
         }
-        val json = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(outFile)),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        // compact-line exponents: the tier10 exponent map (first
-        // "exponent" object in the child JSON)
-        val exps = "\"exponent\":(\\{[^}]*\\})".r.findFirstMatchIn(json)
-          .map(_.group(1)).getOrElse("null")
-        // the deterministic shuffle-bytes gate (r13 verdict #8): union
-        // of every tier's failures — non-empty means a plan got
-        // superlinear in BYTES, which no amount of wall-clock noise can
-        // explain away. Carried on the compact line AND shouted to
-        // stderr so the regression cannot land silently.
-        val gateFails = "\"bytes_gate_failures\":(\\[[^\\]]*\\])".r
-          .findAllMatchIn(json).map(_.group(1)).toSeq
-        val failing = gateFails.flatMap(
-          "\"([^\"]+)\"".r.findAllMatchIn(_).map(_.group(1))).distinct
-        if (failing.nonEmpty)
-          System.err.println("[bench] BYTES-EXPONENT GATE FAILED (exp > " +
-            s"${ScaleRehearsal.BytesGateMax}): ${failing.mkString(", ")}")
-        // queries the gate never evaluated (r14 ADVICE #1): the child
-        // publishes the union list; shout it so an ungated query can't
-        // read as a pass
-        val notEval = "\"gate_not_evaluated\":(\\[[^\\]]*\\])".r
-          .findFirstMatchIn(json).map(_.group(1)).getOrElse("[]")
-        val notEvalNames = "\"([^\"]+)\"".r.findAllMatchIn(notEval)
-          .map(_.group(1)).toSeq
-        if (notEvalNames.nonEmpty)
-          System.err.println("[bench] BYTES GATE NOT EVALUATED for: " +
-            notEvalNames.mkString(", "))
-        val gate = failing.map("\"" + _ + "\"").mkString("[", ",", "]")
-        (json, exps, gate, notEval)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] scale rehearsal failed: ${e.getMessage}")
         System.clearProperty("graft.lcp.path")
         System.clearProperty("graft.sa.path")
-        ("null", "null", "null", "[]")
+        NullNode.instance
       }
     }
-    val (rehearsalJson, rehearsalExps, rehearsalBytesGate, rehearsalNotEval) =
-      compactFallback
+    // the deterministic shuffle-bytes gate (r13 verdict #8): union of
+    // every tier's failures — non-empty means a plan got superlinear in
+    // BYTES, which no amount of wall-clock noise can explain away.
+    // Carried on the compact line AND shouted to stderr so the
+    // regression cannot land silently.
+    def strings(arr: JsonNode): Seq[String] = arr.asScala.map(_.asText).toSeq
+    val failing = Seq("tier10", "decade2")
+      .flatMap(t => strings(rehearsal.path(t).path("bytes_gate_failures"))).distinct
+    if (failing.nonEmpty)
+      System.err.println("[bench] BYTES-EXPONENT GATE FAILED (exp > " +
+        s"${ScaleRehearsal.BytesGateMax}): ${failing.mkString(", ")}")
+    // queries the gate never evaluated (r14 ADVICE #1): the child
+    // publishes the union list; shout it so an ungated query can't
+    // read as a pass
+    val notEval = strings(rehearsal.path("gate_not_evaluated"))
+    if (notEval.nonEmpty)
+      System.err.println("[bench] BYTES GATE NOT EVALUATED for: " +
+        notEval.mkString(", "))
 
     // ---- core-scaling probe at the 10× tier (r18 verdict item 2) ----
     // The driver's 8-vs-32-CPU comparison runs at sf0.1, where nearly
@@ -660,83 +571,77 @@ object Bench {
     // rehearsal's tier-10 samples) and publish both sides plus the
     // wall ratio. Budget-guarded and additive: skipping it changes
     // nothing else in the artifact.
-    val coreProbeJson: String = {
+    val coreProbeJson: JsonNode = {
       val probeQs = Seq("q24_ngram_jaccard", "q121_containment_dedup",
         "q127_dup_substring_cut")
       val MinProbeSecs = 300.0
-      def tier10Queries(json: String): Map[String, Double] =
-        "\"tier10\":\\{\"queries\":(\\{[^{}]*\\})".r
-          .findFirstMatchIn(json).map(_.group(1)) match {
-          case Some(m) =>
-            "\"([^\"]+)\":([-0-9.eE]+)".r.findAllMatchIn(m)
-              .map(g => g.group(1) -> g.group(2).toDouble).toMap
-          case None => Map.empty
-        }
-      val ref = tier10Queries(rehearsalJson)
+      def tier10Secs(artifact: JsonNode): Map[String, Double] =
+        artifact.path("tier10").path("queries").properties().asScala
+          .map(e => e.getKey -> e.getValue.asDouble).toMap
+      val ref = tier10Secs(rehearsal)
         .filter { case (k, v) => probeQs.contains(k) && v > 0 }
       if (sys.env.getOrElse("SPARK_GRAFT_CORE_PROBE", "1") != "1" ||
-          ref.isEmpty) "null"
+          ref.isEmpty) NullNode.instance
       else if (remaining < MinProbeSecs + FinalMargin) {
         System.err.println(f"[bench] BUDGET: skipping core-scaling probe " +
           f"(remaining $remaining%.0f s < ${MinProbeSecs + FinalMargin}%.0f)")
-        "\"skipped_budget\""
+        Harness.node("skipped_budget")
       } else try {
         val probeOut = "scale_rehearsal_core_probe.json"
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(probeOut))
         val probeBudget = math.min(900.0, remaining - FinalMargin - 30.0)
-        val okFork = ScaleRehearsal.fork(sfDir, "scale_rehearsal_base.tsv",
-          probeOut, timeoutSecs = math.max(60, probeBudget.toLong),
-          childEnv = Map(
+        val okFork = forkRehearsal(probeOut,
+          timeoutSecs = math.max(60, probeBudget.toLong),
+          env = Map(
             "SPARK_GRAFT_CPUS" -> "8",
             "SPARK_GRAFT_REHEARSAL_QUERIES" -> probeQs.mkString(","),
             "SPARK_GRAFT_REHEARSAL_BUDGET" ->
               math.max(60, (probeBudget - 150).toLong).toString,
             "SPARK_GRAFT_DECADE2_BUDGET" -> "0"),
+          tmpDir = "scale_rehearsal_tmp_core_probe",
           logFile = "scale_rehearsal_core_probe.log")
-        if (!okFork) "\"fork_unavailable\""
+        if (!okFork) Harness.node("fork_unavailable")
         else {
-          val probeJson = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(probeOut)),
-            java.nio.charset.StandardCharsets.UTF_8)
-          val c8 = tier10Queries(probeJson).filter(_._2 > 0)
+          val c8 = tier10Secs(Harness.readJson(probeOut)).filter(_._2 > 0)
           val entries = probeQs.filter(n => ref.contains(n) && c8.contains(n))
-          if (entries.isEmpty) "\"probe_incomplete\""
+          if (entries.isEmpty) Harness.node("probe_incomplete")
           else {
-            def m(vals: Map[String, Double]): String = entries
-              .map(n => "\"" + n + "\":" + f"${vals(n)}%.3f")
-              .mkString("{", ",", "}")
-            val ratios = entries
-              .map(n => "\"" + n + "\":" + f"${c8(n) / ref(n)}%.3f")
-              .mkString("{", ",", "}")
-            s"""{"tier":"10x","cpus_ref":$cpus,"cpus_probe":8,"secs_ref":${m(ref)},"secs_probe":${m(c8)},"wall_ratio_probe_over_ref":$ratios}"""
+            def m(f: String => Double): JsonNode =
+              Harness.obj(entries.map(n => n -> Harness.fixed(f(n), 3)): _*)
+            Harness.obj("tier" -> "10x", "cpus_ref" -> cpus.toInt,
+              "cpus_probe" -> 8, "secs_ref" -> m(ref), "secs_probe" -> m(c8),
+              "wall_ratio_probe_over_ref" -> m(n => c8(n) / ref(n)))
           }
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] core-scaling probe failed: ${e.getMessage}")
-        "\"probe_failed\""
+        Harness.node("probe_failed")
       }
     }
 
-    val line = writeArtifacts("final",
-      Seq("core_scaling_10x" -> coreProbeJson), rehearsalJson)
+    writeArtifacts("final", Seq("core_scaling_10x" -> coreProbeJson), rehearsal)
     // stdout gets a COMPACT line that fits the driver's ~2 KB stdout
     // tail capture (the full line is >10 KB; every round's driver
     // artifact through r11 recorded `parsed: null` because only a
     // truncated suffix of it survived the capture). The compact form
     // keeps the driver contract — one JSON line with metric/value/
     // queries — carrying the 10 slowest queries plus the rehearsal
-    // exponents; the complete per-query data still lands in
-    // bench_out.json and the directly-written BENCH_r<N>.json.
+    // exponents; the complete per-query data lands in the artifact
+    // named by `full` and the directly-written BENCH_r<N>.json.
     val topQ = passResults.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map { case (k, v, _) => "\"" + k + "\":" + f"$v%.2f" }
-      .mkString("{", ",", "}")
+      .map { case (k, v, _) => k -> Harness.fixed(v, 2) }
     // n_queries counts the full queries map (r15 verdict #3: the
     // compact line said 172 while bench_out.json and CORRECTNESS held
     // 173 — passResults excludes the oracle tier, `results` doesn't)
-    val compact =
-      f"""{"metric":"total","value":$total%.1f,"unit":"sec","oracle_tier_secs":$oracleTierSecs%.1f,"n_queries":${results.size},"queries":$topQ,"errors":$errs,"scale_exponent":$rehearsalExps,"bytes_gate_failures":$rehearsalBytesGate,"gate_not_evaluated":$rehearsalNotEval,"sf":"$sfDir","full":"bench_out.json"}"""
-    println(compact)
-    val _ = line
+    println(Harness.json.writeValueAsString(Harness.obj(
+      "metric" -> "total", "value" -> Harness.fixed(total, 1), "unit" -> "sec",
+      "oracle_tier_secs" -> Harness.fixed(oracleTierSecs, 1),
+      "n_queries" -> results.size, "queries" -> Harness.obj(topQ: _*),
+      "errors" -> failed.toSeq,
+      // compact-line exponents: the child's tier10 exponent map
+      "scale_exponent" -> rehearsal.path("tier10").path("exponent"),
+      "bytes_gate_failures" -> (if (rehearsal.isObject) Some(failing) else None),
+      "gate_not_evaluated" -> notEval,
+      "sf" -> sfDir, "full" -> outPaths.headOption)))
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Scratch runner for local iteration (not part of the driver contract).
@@ -10,15 +9,7 @@ import org.apache.spark.sql.execution.FormattedMode
   */
 object Dev {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark32 = Harness.session()
     val dir = "/root/testdata/sf0.01"
     val interesting = Seq(
       "q01_pricing_summary", "q02_revenue_by_nation", "q03_top_orders",
@@ -89,12 +80,10 @@ object Dev {
     sb.append("the expression-heavy stages, `TakeOrderedAndProject` for top-k.\n")
     interesting.foreach { name =>
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(SparkEntry.queries(name)(spark, dir)
+      sb.append(SparkEntry.queries(name)(spark32, dir)
         .queryExecution.explainString(FormattedMode).trim)
       sb.append("\n```\n")
     }
-    spark.stop()
-
     // AQE FINAL plans at sf0.1 for the most expensive queries (r12
     // verdict #8): the static sf0.01 dump above shows what the planner
     // INTENDS; AQE's broadcast-vs-shuffle decisions differ by scale, so
@@ -105,15 +94,6 @@ object Dev {
     // a noop write would wrap the plan in a fresh QueryExecution and
     // leave this one unexecuted) so explainString reflects the final
     // adaptive physical plan.
-    val spark32 = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark32.sparkContext.setLogLevel("WARN")
     val heaviest = Seq(
       "q137_suffix_array", "q127_dup_substring_cut", "q110_triangle_count",
       "q126_dup_substring_coverage", "q140_tfidf_neardup",

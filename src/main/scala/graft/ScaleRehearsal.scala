@@ -1,49 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{IntNode, NullNode, ObjectNode}
 import org.apache.spark.sql.SparkSession
-
-/** Accumulates shuffle bytes across all tasks; snapshot the counters
-  * around a query to attribute its shuffle volume (queries run
-  * sequentially and are fully materialized, so deltas don't interleave).
-  * Shared by the headline bench loop and the scale rehearsal: shuffle
-  * volume is the metric that predicts 100 TB cost, and — unlike
-  * wall-clock on a shared box — it is largely DETERMINISTIC, so its
-  * scaling exponent is reproducible evidence even when timing isn't.
-  *
-  * WRITE and READ are tracked separately (r14): `bytes` — the gated
-  * metric — is WRITE-only, because write volume is exactly the data
-  * movement the plan requested and is invariant to runtime
-  * remediation; READ bytes include AQE skew-join split re-reads (each
-  * split re-reads the non-skewed side's matching partition) and
-  * task-retry re-fetches, so a skew-heavy tier can legitimately read
-  * multiples of what was written — adaptive remediation, not plan
-  * superlinearity. `readBytes` is still published in the rehearsal
-  * artifact as the skew-amplification diagnostic (read ≫ write at one
-  * tier ⇒ AQE split a skewed join there).
-  */
-private[graft] final class ShuffleBytesListener extends SparkListener {
-  val bytes = new AtomicLong(0L)
-  val readBytes = new AtomicLong(0L)
-  /** Source-scan bytes (parquet/file reads). Published since r17 as the
-    * re-scan diagnostic: an operator that reads its input k× instead of
-    * once shows up here and nowhere in the shuffle counters — exactly
-    * the defect class of shardedDedupCut's former per-shard corpus
-    * re-scan (r16 verdict #1), whose fix is evidenced by input bytes
-    * staying FLAT as nShards grows (SuffixArraySpec pins the ratio).
-    */
-  val inputBytes = new AtomicLong(0L)
-  override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
-    val m = taskEnd.taskMetrics
-    if (m != null) {
-      bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      readBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      inputBytes.addAndGet(m.inputMetrics.bytesRead)
-    }
-  }
-}
 
 /** The bench's scale rehearsal, isolated in its own JVM (r12 verdict
   * #1: the rehearsal must be a measurement, not a lottery).
@@ -54,9 +13,8 @@ private[graft] final class ShuffleBytesListener extends SparkListener {
   * identical code measure 22–165 s across runs (q110), and the
   * one-sided min-of-two retry could only bias exponents DOWN (r12
   * ADVICE). This main runs with a fresh heap and a fresh SparkSession;
-  * [[Bench]] forks it via ProcessBuilder (`run / fork := true` means
-  * `java.class.path` carries the full app classpath) and falls back to
-  * an in-process fresh-session run if the fork can't start.
+  * [[Bench]] launches it through [[Harness.fork]], and a child that
+  * writes no artifact is reported as such, never re-run in the parent.
   *
   * Sampling protocol — SYMMETRIC, raw samples published:
   *  - every 10× query gets TWO timed runs (two full interleaved
@@ -513,72 +471,68 @@ object ScaleRehearsal {
     */
   private def Q174Shards: Int = graft.queries.IndexQueries.Q174Shards
 
-  private def jmap(m: Seq[(String, String)]): String =
-    m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-  private def fmt(d: Double): String = if (d < 0) "-1" else f"$d%.3f"
+  /** The no-broadcast pin: broadcast joins disabled, the join strategy
+    * every scaled tier (and any real 100 TB run) uses for
+    * [[NoBroadcastBase]] members.
+    */
+  val NoBroadcastPins: Seq[(String, String)] = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
 
-  /** Run one registered query fully materialized (noop write) with the
+  /** Spill-awareness at the scaled tiers (the 100× runs that OOMed
+    * r13's first decade-2 attempt): shuffles START wide and AQE
+    * coalesces small ones back to ~target size, so a 120 GB sort at
+    * 100× gets ~256 tasks while bench-scale stages still collapse to a
+    * handful — the adaptive answer to "shuffle.partitions=32 is sized
+    * for sf0.1, not for 100× of it". Every rehearsal session runs under
+    * it, and Bench measures the pinned 1× gate bases under it too: lz4
+    * shuffle blocks compress worse at 8× smaller block size, and on
+    * identical 1× data the 256-granularity session writes 7–13% more
+    * bytes (q107 12.69→14.29 MB, q123 17.37→18.58 MB) — enough to push
+    * a truly-linear exponent to 1.10–1.12 and trip the gate on
+    * compression framing instead of plans.
+    */
+  val ChildGranularity: (String, String) =
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "256"
+
+  /** A rehearsal session: the shared harness policy at the scaled-tier
+    * shuffle granularity. storageFraction stays at the 0.5 default: 0.3
+    * was tried after run 3's execution-memory starvation at 100× and
+    * measured ~2× slower at the 10× tier (more disk round-trips for the
+    * walk's hv stream) without saving the 100× walk — whose true bound
+    * is the single-JVM local-mode heap, now handled by the
+    * Decade2Feasibility pre-skip instead of a session-wide knob.
+    */
+  private[graft] def rehearsalSession(): SparkSession = {
+    val spark = Harness.session()
+    spark.conf.set(ChildGranularity._1, ChildGranularity._2)
+    spark
+  }
+
+  /** -1 for a missing measurement, else the artifact's 3 decimals. */
+  private def fmt(d: Double): JsonNode =
+    if (d < 0) IntNode.valueOf(-1) else Harness.fixed(d, 3)
+  /** -1 for an unmeasurable (-999) exponent, else 3 decimals. */
+  private def fmtExp(e: Double): JsonNode =
+    if (e == -999.0) IntNode.valueOf(-1) else Harness.fixed(e, 3)
+
+  /** Committed full-budget evidence for each of `names` that has some. */
+  private def priorEvidenceJson(names: Seq[String]): ObjectNode =
+    Harness.obj(names.flatMap(n => PriorEvidence.get(n).map { case (v, from) =>
+      n -> Harness.obj("settled" -> v, "evidence_from" -> from) }): _*)
+
+  /** Run one registered query through [[Harness.run]] with the
     * like-for-like broadcast pin for [[NoBroadcastBase]] members —
     * every tier runs under the join strategy the 100 TB plan would use
     * (Bench pins the 1× bases identically). Shared by the rehearsal
     * loop and the decade-2 SA sub-fork ([[ScaleRehearsalSaD2]]).
     */
   private[graft] def runPinned(spark: SparkSession, name: String,
-                               dir: String): Boolean =
-    SparkEntry.queries.get(name) match {
-      case None =>
-        System.err.println(s"[rehearsal] $name is not in SparkEntry.queries")
-        false
-      case Some(fn) =>
-        val pinNoBc = NoBroadcastBase.contains(name)
-        val prevBc = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-        val prevABc = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        if (pinNoBc) {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        }
-        try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[rehearsal] $name failed at $dir: ${e.getMessage}")
-          false
-        }
-        // per-sample release of query-transient persists — each
-        // sample must see the same storage state, or pass-2 runs
-        // measure the leak, not the engine (see TransientPersists)
-        finally {
-          graft.operators.TransientPersists.releaseAll()
-          if (pinNoBc) {
-            def restore(key: String, v: Option[String]): Unit = v match {
-              case Some(x) => spark.conf.set(key, x)
-              case None => spark.conf.unset(key)
-            }
-            restore("spark.sql.autoBroadcastJoinThreshold", prevBc)
-            restore("spark.sql.adaptive.autoBroadcastJoinThreshold", prevABc)
-          }
-        }
+                               dir: String): Harness.Run =
+    Harness.withConf(spark,
+      (if (NoBroadcastBase.contains(name)) NoBroadcastPins else Nil): _*) {
+      Harness.run(spark, name, dir)
     }
-
-  /** JSON-escape a free-text value before it is quoted into the
-    * artifact (r15 ADVICE #1: skip reasons interpolate e.getMessage,
-    * and Spark exception messages routinely carry newlines/quotes —
-    * one unescaped reason invalidated the whole tier's JSON). Every
-    * human-written or exception-derived string in the artifact goes
-    * through here; `jstr` is the quote-and-escape shorthand.
-    */
-  private[graft] def jesc(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-  private def jstr(s: String): String = "\"" + jesc(s) + "\""
 
   /** args: sfDir baseFile outFile.
     * baseFile: one `name<TAB>secs<TAB>bytes` line per headline query
@@ -589,48 +543,16 @@ object ScaleRehearsal {
     */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, baseFile, outFile) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // fixed, CPU-decoupled (Bench's r19 scaling-contract rule): the
-    // 8-CPU core-scaling probe must shuffle through the SAME partition
-    // layout as the 32-CPU tier it is compared against, or the probe
-    // re-creates the cancelled-signal coupling it exists to fix
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      // Spill-awareness at the scaled tiers (the 100× runs that OOMed
-      // r13's first decade-2 attempt): shuffles START wide and AQE
-      // coalesces small ones back to ~target size, so a 120 GB sort at
-      // 100× gets ~256 tasks while bench-scale stages still collapse
-      // to a handful — the adaptive answer to "shuffle.partitions=32
-      // is sized for sf0.1, not for 100× of it".
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      // storageFraction stays at the 0.5 default: 0.3 was tried after
-      // run 3's execution-memory starvation at 100× and measured ~2×
-      // slower at the 10× tier (more disk round-trips for the walk's
-      // hv stream) without saving the 100× walk — whose true bound is
-      // the single-JVM local-mode heap, now handled by the
-      // Decade2Feasibility pre-skip instead of a session-wide knob.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try runAll(spark, sfDir, baseFile, outFile, freshJvm = true)
+    val spark = rehearsalSession()
+    try runAll(spark, sfDir, baseFile, outFile)
     finally spark.stop()
   }
 
-  /** The rehearsal proper; also callable in-process on a fresh session
-    * when the fork path is unavailable. Stage budgets default to the
-    * env (which the forked child receives from Bench's governor);
-    * explicit args let the in-process fallback pass the governor's
-    * values directly since it shares Bench's environment.
+  /** The rehearsal proper. Stage budgets come from the env, which the
+    * forked child receives from Bench's governor.
     */
   def runAll(spark: SparkSession, sfDir: String, baseFile: String,
-             outFile: String, freshJvm: Boolean,
-             budget10Override: Option[Double] = None,
-             budget100Override: Option[Double] = None): Unit = {
+             outFile: String): Unit = {
     // Targeted-validation filter (round-tooling use only, never set by
     // the driver): a comma list narrows both tiers to the named queries so
     // a fix can be re-rehearsed in minutes instead of re-running all
@@ -648,8 +570,6 @@ object ScaleRehearsal {
       f => ScaleRehearsal.names.filter(f))
     val decade2Names = only.fold(ScaleRehearsal.decade2Names)(
       f => ScaleRehearsal.decade2Names.filter(f))
-    val shuffle = new ShuffleBytesListener
-    spark.sparkContext.addSparkListener(shuffle)
     val base: Map[String, (Double, Long)] =
       scala.io.Source.fromFile(baseFile).getLines().flatMap { line =>
         line.split('\t') match {
@@ -668,20 +588,7 @@ object ScaleRehearsal {
     // lcp pin; Bench re-measures q137's 1× base under the same pin.
     System.setProperty("graft.sa.path", "distributed")
 
-    def runOne(name: String, dir: String): Boolean = runPinned(spark, name, dir)
-    /** (secs, shuffleWriteBytes, shuffleReadBytes, inputScanBytes);
-      * (-1,-1,-1,-1) on failure. */
-    def timeOne(name: String, dir: String): (Double, Long, Long, Long) = {
-      val b0 = shuffle.bytes.get()
-      val r0 = shuffle.readBytes.get()
-      val i0 = shuffle.inputBytes.get()
-      val t0 = System.nanoTime()
-      val ok = runOne(name, dir)
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (ok) (dt, shuffle.bytes.get() - b0, shuffle.readBytes.get() - r0,
-        shuffle.inputBytes.get() - i0)
-      else (-1.0, -1L, -1L, -1L)
-    }
+    def runOne(name: String, dir: String): Harness.Run = runPinned(spark, name, dir)
     def expOf(name: String, secs: Double, decades: Int): Double =
       base.get(name) match {
         case Some((b, _)) if secs > 0 && b > 0 =>
@@ -704,30 +611,29 @@ object ScaleRehearsal {
     // code compiles on first execution — measured q110: 98 s cold,
     // 25 s, 15 s across three same-JVM runs), so most heavy queries
     // disagree pass-1-vs-2 and take the third, warm-dominated median.
-    val budget10 = budget10Override.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_BUDGET", "1500").toDouble)
+    val budget10 = sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_BUDGET", "1500").toDouble
     val deadline10 = System.nanoTime() + (budget10 * 1e9).toLong
     def inBudget10: Boolean = System.nanoTime() < deadline10
     val samples = scala.collection.mutable.LinkedHashMap[String,
-      scala.collection.mutable.ArrayBuffer[(Double, Long, Long, Long)]]()
+      scala.collection.mutable.ArrayBuffer[Harness.Run]]()
     names.foreach(n => samples(n) = scala.collection.mutable.ArrayBuffer.empty)
     // pass 1
     names.foreach { n =>
-      if (inBudget10) samples(n) += timeOne(n, ScaledDir10)
+      if (inBudget10) samples(n) += runOne(n, ScaledDir10)
     }
     // pass 2 (skip failures, budget-outs, and over-cutoff singles)
     names.foreach { n =>
       val s = samples(n)
-      if (inBudget10 && s.nonEmpty && s.head._1 > 0 &&
-          s.head._1 <= SingleRunCutoffSecs)
-        s += timeOne(n, ScaledDir10)
+      if (inBudget10 && s.nonEmpty && s.head.ok &&
+          s.head.secs <= SingleRunCutoffSecs)
+        s += runOne(n, ScaledDir10)
     }
     // tie-break pass: two samples whose implied exponents disagree
     names.foreach { n =>
       val s = samples(n)
-      if (inBudget10 && s.size == 2 && s.forall(_._1 > 0) &&
-          math.abs(expOf(n, s(0)._1, 1) - expOf(n, s(1)._1, 1)) > AgreeTol)
-        s += timeOne(n, ScaledDir10)
+      if (inBudget10 && s.size == 2 && s.forall(_.ok) &&
+          math.abs(expOf(n, s(0).secs, 1) - expOf(n, s(1).secs, 1)) > AgreeTol)
+        s += runOne(n, ScaledDir10)
     }
     def finalSecs(s: Seq[Double]): Double = {
       val ok = s.filter(_ > 0)
@@ -735,13 +641,13 @@ object ScaleRehearsal {
       else if (ok.size <= 2) ok.min // additive noise ⇒ min is the engine cost
       else ok.sorted.apply(ok.size / 2) // median decides a disagreement
     }
-    val tier10 = names.map { n =>
+    def minBytes(s: Seq[Long]): Long = { val ok = s.filter(_ >= 0); if (ok.isEmpty) -1L else ok.min }
+    /** One tier row: (name, secs, write, read, input bytes, raw samples). */
+    type Row = (String, Double, Long, Long, Long, Seq[Harness.Run])
+    val tier10: Seq[Row] = names.map { n =>
       val s = samples(n).toSeq
-      val secs = finalSecs(s.map(_._1))
-      val bytes = { val ok = s.map(_._2).filter(_ >= 0); if (ok.isEmpty) -1L else ok.min }
-      val rBytes = { val ok = s.map(_._3).filter(_ >= 0); if (ok.isEmpty) -1L else ok.min }
-      val iBytes = { val ok = s.map(_._4).filter(_ >= 0); if (ok.isEmpty) -1L else ok.min }
-      (n, secs, bytes, rBytes, iBytes, s)
+      (n, finalSecs(s.map(_.secs)), minBytes(s.map(_.writeBytes)),
+        minBytes(s.map(_.readBytes)), minBytes(s.map(_.inputBytes)), s)
     }
     def bytesExp(name: String, bytes: Long, decades: Int): Double =
       base.get(name) match {
@@ -760,37 +666,30 @@ object ScaleRehearsal {
       *    pinned all-shuffle so the compared plans match;
       *  - BytesGateExempt rows are excluded, reasons published.
       */
-    def tierJson(rows: Seq[(String, Double, Long, Long, Long, Seq[(Double, Long, Long, Long)])],
-                 decades: Int, skipped: Seq[String],
+    def tierJson(rows: Seq[Row], decades: Int, skipped: Seq[String],
                  gateExps: Seq[(String, Double)],
-                 extra: Seq[(String, String)] = Nil): String = {
+                 extra: Seq[(String, Any)] = Nil): ObjectNode = {
       val gateFails = gateExps.collect {
         case (n, e) if e != -999.0 && e > BytesGateMax => n }
-      jmap(Seq(
-        "queries" -> jmap(rows.map(r => r._1 -> fmt(r._2))),
-        "exponent" -> jmap(rows.map(r =>
-          r._1 -> { val e = expOf(r._1, r._2, decades)
-            if (e == -999.0) "-1" else f"$e%.3f" })),
-        "raw_secs" -> jmap(rows.map(r =>
-          r._1 -> r._6.map(x => fmt(x._1)).mkString("[", ",", "]"))),
-        "runs" -> jmap(rows.map(r => r._1 -> r._6.count(_._1 > 0).toString)),
-        "shuffle_bytes" -> jmap(rows.map(r => r._1 -> r._3.toString)),
+      def perQuery(f: Row => Any): ObjectNode = Harness.obj(rows.map(r => r._1 -> f(r)): _*)
+      Harness.obj(Seq(
+        "queries" -> perQuery(r => fmt(r._2)),
+        "exponent" -> perQuery(r => fmtExp(expOf(r._1, r._2, decades))),
+        "raw_secs" -> perQuery(r => r._6.map(x => fmt(x.secs))),
+        "runs" -> perQuery(r => r._6.count(_.ok)),
+        "shuffle_bytes" -> perQuery(_._3),
         // read/write ≫ 1 at one tier = AQE skew-split re-reads there
-        "shuffle_read_bytes" -> jmap(rows.map(r => r._1 -> r._4.toString)),
+        "shuffle_read_bytes" -> perQuery(_._4),
         // source-scan volume (r16 verdict #1's diagnostic: a per-shard
         // corpus re-scan shows up HERE, in no shuffle counter)
-        "input_bytes" -> jmap(rows.map(r => r._1 -> r._5.toString)),
-        "bytes_exponent" -> jmap(rows.map(r =>
-          r._1 -> { val e = bytesExp(r._1, r._3, decades)
-            if (e == -999.0) "-1" else f"$e%.3f" })),
-        "bytes_gate_max" -> BytesGateMax.toString,
-        "bytes_gate_exponent" -> jmap(gateExps.map { case (n, e) =>
-          n -> (if (e == -999.0) "-1" else f"$e%.3f") }),
-        "bytes_gate_failures" -> gateFails.map("\"" + _ + "\"")
-          .mkString("[", ",", "]"),
-        "bytes_gate_ok" -> gateFails.isEmpty.toString,
-        "skipped_budget" -> skipped.map("\"" + _ + "\"").mkString("[", ",", "]"))
-        ++ extra)
+        "input_bytes" -> perQuery(_._5),
+        "bytes_exponent" -> perQuery(r => fmtExp(bytesExp(r._1, r._3, decades))),
+        "bytes_gate_max" -> BytesGateMax,
+        "bytes_gate_exponent" -> Harness.obj(gateExps.map { case (n, e) =>
+          n -> fmtExp(e) }: _*),
+        "bytes_gate_failures" -> gateFails,
+        "bytes_gate_ok" -> gateFails.isEmpty,
+        "skipped_budget" -> skipped) ++ extra: _*)
     }
     val skipped10 = names.filter(n => samples(n).isEmpty)
     // tier-10 gate membership: not deferred to decade 2, not exempt
@@ -801,9 +700,6 @@ object ScaleRehearsal {
     }
     val deferred = tier10.map(_._1).filter(decade2Names.contains)
       .filterNot(BytesGateExempt.contains)
-    val tier10Extra = Seq(
-      "gate_deferred_to_decade2" -> deferred.map("\"" + _ + "\"")
-        .mkString("[", ",", "]"))
     /** The explicit not-a-pass list (r14 ADVICE #1): every gate-subject
       * query whose exponent the artifact does NOT actually carry —
       * tier-10 rows with a missing/-1 base (-999 exponents), tier-10
@@ -818,31 +714,29 @@ object ScaleRehearsal {
         skipped10.filterNot(BytesGateExempt.contains) ++
         deferred.filterNot(d2Evaluated)).distinct
     // BPE adaptive-regime probe telemetry (r15 verdict #7), filled in
-    // after the 10× tier; "null" when the probe was skipped
-    var bpeProbeJson: String = "null"
+    // after the 10× tier; null when the probe was skipped
+    var bpeProbeJson: JsonNode = NullNode.instance
     // autoShards-sized sharded-kernel probe telemetry (r16 verdict #3)
-    var autoShardsProbeJson: String = "null"
+    var autoShardsProbeJson: JsonNode = NullNode.instance
     // probe wall billed against the decade-2 budget (r16 ADVICE: the
     // probes run between the tiers and previously charged neither)
     var probeSecs: Double = 0.0
-    def writeOut(decade2Json: String, d2Evaluated: Set[String]): Unit = {
-      val json = jmap(Seq(
-        "factor" -> "10",
+    def writeOut(decade2Json: JsonNode, d2Evaluated: Set[String]): Unit = {
+      val notEval = notEvaluated(d2Evaluated)
+      Harness.writeJson(outFile, Harness.obj(
+        "factor" -> 10,
         "bpe_adaptive" -> bpeProbeJson,
         "autoshards_probe" -> autoShardsProbeJson,
-        "probe_secs" -> f"$probeSecs%.1f",
-        "fresh_jvm" -> freshJvm.toString,
-        "agree_tol" -> AgreeTol.toString,
-        "single_run_cutoff_secs" -> SingleRunCutoffSecs.toString,
-        "nobroadcast_pinned" -> NoBroadcastBase.toSeq.sorted
-          .map("\"" + _ + "\"").mkString("[", ",", "]"),
-        "bytes_gate_exempt" -> jmap(BytesGateExempt.toSeq.sortBy(_._1)
-          .map { case (k, v) => k -> jstr(v) }),
-        "gate_deferral_evidence" -> jmap(GateDeferralEvidence.toSeq
-          .sortBy(_._1).filter(e => deferred.contains(e._1))
-          .map { case (k, v) => k -> jstr(v) }),
-        "gate_not_evaluated" -> notEvaluated(d2Evaluated)
-          .map("\"" + _ + "\"").mkString("[", ",", "]"),
+        "probe_secs" -> Harness.fixed(probeSecs, 1),
+        // always a dedicated JVM since the in-process fallback is gone
+        "fresh_jvm" -> true,
+        "agree_tol" -> AgreeTol,
+        "single_run_cutoff_secs" -> SingleRunCutoffSecs,
+        "nobroadcast_pinned" -> NoBroadcastBase.toSeq.sorted,
+        "bytes_gate_exempt" -> Harness.obj(BytesGateExempt.toSeq.sortBy(_._1): _*),
+        "gate_deferral_evidence" -> Harness.obj(GateDeferralEvidence.toSeq
+          .sortBy(_._1).filter(e => deferred.contains(e._1)): _*),
+        "gate_not_evaluated" -> notEval,
         // top-level evidence merge (r15 verdict #2, extended to BOTH
         // tiers in r16): every gate-unevaluated query with committed
         // full-budget evidence carries it here, so an in-slot
@@ -850,17 +744,12 @@ object ScaleRehearsal {
         // query's settled exponent?" on its own — tier-10 budget
         // skips included (a tier-10 miss also starves the member's
         // decade-2 base, so the decade-2 map alone can't cover it)
-        "evidence_prior" -> jmap(notEvaluated(d2Evaluated)
-          .flatMap(n => PriorEvidence.get(n).map(n -> _))
-          .map { case (n, (v, from)) => n -> jmap(Seq(
-            "settled" -> jstr(v), "evidence_from" -> jstr(from))) })) ++
-        Seq("tier10" -> tierJson(tier10, 1, skipped10, tier10Gate,
-            tier10Extra),
-          "decade2" -> decade2Json))
-      java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        "evidence_prior" -> priorEvidenceJson(notEval),
+        "tier10" -> tierJson(tier10, 1, skipped10, tier10Gate,
+          Seq("gate_deferred_to_decade2" -> deferred)),
+        "decade2" -> decade2Json))
     }
-    writeOut("null", Set.empty) // 10× tier is durable even if 100× dies
+    writeOut(NullNode.instance, Set.empty) // 10× tier is durable even if 100× dies
 
     // ---- BPE adaptive-regime probe on the 10× corpus (r15 verdict #7) ----
     // q83's production budget (256 MB) never binds on this synthetic
@@ -893,20 +782,19 @@ object ScaleRehearsal {
         val fixed = graft.functions.Bpe.trainDistributed(words, "w", "n",
           numMerges = probeCap, distributedRounds = fixedRounds,
           collectBudgetBytes = 0L)
-        jmap(Seq(
-          "engaged" -> (last > fixedRounds).toString,
-          "fixed_rounds" -> fixedRounds.toString,
-          "last_distributed_rounds" -> last.toString,
-          "initial_estimate_bytes" -> est0.toString,
-          "collect_budget_bytes" -> budgetB.toString,
-          "probe_merge_cap" -> probeCap.toString,
-          "output_invariant_vs_fixed_path" ->
-            (adaptive.merges == fixed.merges).toString))
+        Harness.obj(
+          "engaged" -> (last > fixedRounds),
+          "fixed_rounds" -> fixedRounds,
+          "last_distributed_rounds" -> last,
+          "initial_estimate_bytes" -> est0,
+          "collect_budget_bytes" -> budgetB,
+          "probe_merge_cap" -> probeCap,
+          "output_invariant_vs_fixed_path" -> (adaptive.merges == fixed.merges))
       } catch { case e: Exception =>
-        jmap(Seq("engaged" -> "false", "error" -> jstr(
-          Option(e.getMessage).getOrElse(e.getClass.getName))))
+        Harness.obj("engaged" -> false,
+          "error" -> Option(e.getMessage).getOrElse(e.getClass.getName))
       }
-      writeOut("null", Set.empty)
+      writeOut(NullNode.instance, Set.empty)
     }
 
     // ---- autoShards-sized sharded kernel, end-to-end (r16 verdict #3) ----
@@ -922,24 +810,17 @@ object ScaleRehearsal {
     // count actually holds the one-shard envelope. Expensive (~one
     // q174 run at 10×), so it runs only when the decade-2 budget is
     // full-run-sized (> 2000 s; the in-slot artifact records the skip
-    // + reason) or when SPARK_GRAFT_AUTOSHARDS_PROBE=1 forces it;
-    // either way its wall bills to the decade-2 budget below.
-    val budget100Raw = budget100Override.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_DECADE2_BUDGET", "1200").toDouble)
-    val probeForce = sys.env.get("SPARK_GRAFT_AUTOSHARDS_PROBE")
-    val probeWanted = probeForce match {
-      case Some("0") => false
-      case Some("1") => true
-      case _ => budget100Raw > 2000 &&
-        only.forall(_.contains("q174_sharded_dedup_cut"))
-    }
+    // + reason); its wall bills to the decade-2 budget below.
+    val budget100Raw =
+      sys.env.getOrElse("SPARK_GRAFT_DECADE2_BUDGET", "1200").toDouble
+    val probeWanted = budget100Raw > 2000 &&
+      only.forall(_.contains("q174_sharded_dedup_cut"))
     if (!inBudget10)
-      autoShardsProbeJson = jmap(Seq("skipped" -> jstr("tier-10 budget exhausted")))
+      autoShardsProbeJson = Harness.obj("skipped" -> "tier-10 budget exhausted")
     else if (!probeWanted)
-      autoShardsProbeJson = jmap(Seq("skipped" -> jstr(
-        f"decade-2 budget ${budget100Raw}%.0f s below the 2000 s full-run " +
-          "threshold (probe costs ~one 10x kernel run); " +
-          "SPARK_GRAFT_AUTOSHARDS_PROBE=1 forces it")))
+      autoShardsProbeJson = Harness.obj("skipped" ->
+        (f"decade-2 budget ${budget100Raw}%.0f s below the 2000 s full-run " +
+          "threshold (probe costs ~one 10x kernel run)"))
     else {
       autoShardsProbeJson = try {
         val (sumLen, maxLen) = corpusStats(spark, ScaledDir10)
@@ -1002,26 +883,26 @@ object ScaleRehearsal {
         // concurrent-attribution noise (r17 ADVICE)
         val driftEnd = math.max(0L,
           tmpFile.getTotalSpace - tmpFile.getUsableSpace - disk0)
-        jmap(Seq(
-          "peak_disk_method" -> jstr("whole-tmpdir usage delta sampled at " +
+        Harness.obj(
+          "peak_disk_method" -> ("whole-tmpdir usage delta sampled at " +
             "4 Hz plus spilled block bytes: concurrent unrelated disk " +
             "activity on the volume is ATTRIBUTED to the probe, and " +
             "sub-250 ms spill peaks can be missed - an approximate, " +
             "environment-sensitive gate, not an exact measurement"),
-          "disk_drift_end_bytes" -> driftEnd.toString,
-          "sum_len" -> sumLen.toString,
-          "max_len" -> maxLen.toString,
-          "need_bytes" -> need.toString,
-          "budget_bytes" -> budgetBytes.toString,
-          "auto_shards" -> nShards.toString,
+          "disk_drift_end_bytes" -> driftEnd,
+          "sum_len" -> sumLen,
+          "max_len" -> maxLen,
+          "need_bytes" -> need,
+          "budget_bytes" -> budgetBytes,
+          "auto_shards" -> nShards,
           "per_shard_envelope_bytes" -> graft.operators.SuffixArray
-            .walkWorkingSetBytes(sumLen / nShards, maxLen).toString,
-          "rows" -> rows.toString,
-          "wall_secs" -> f"$wall%.1f",
-          "baseline_mem_bytes" -> mem0.toString,
-          "baseline_blockdisk_bytes" -> bdisk0.toString,
-          "peak_disk_bytes" -> peakDisk.get().toString,
-          "peak_mem_bytes" -> peakMem.get().toString,
+            .walkWorkingSetBytes(sumLen / nShards, maxLen),
+          "rows" -> rows,
+          "wall_secs" -> Harness.fixed(wall, 1),
+          "baseline_mem_bytes" -> mem0,
+          "baseline_blockdisk_bytes" -> bdisk0,
+          "peak_disk_bytes" -> peakDisk.get(),
+          "peak_mem_bytes" -> peakMem.get(),
           // the machine allowance is 4× the walk budget — the exact
           // inverse of the feasibility convention (need ≤ usable/4):
           // walkWorkingSetBytes models the WALK's checkpoint+pair set,
@@ -1032,15 +913,14 @@ object ScaleRehearsal {
           // disk the budget was derived from. peak_mem_bytes is the
           // deserialized-heap diagnostic (single-JVM constraint,
           // handled by the feasibility pre-skip), not disk-gated.
-          "machine_allowance_bytes" -> (4L * budgetBytes).toString,
-          "within_budget" -> (peakDisk.get() <= 4L * budgetBytes).toString))
+          "machine_allowance_bytes" -> 4L * budgetBytes,
+          "within_budget" -> (peakDisk.get() <= 4L * budgetBytes))
       } catch { case e: Exception =>
-        jmap(Seq("error" -> jstr(
-          Option(e.getMessage).getOrElse(e.getClass.getName))))
+        Harness.obj("error" -> Option(e.getMessage).getOrElse(e.getClass.getName))
       }
     }
     probeSecs = (System.nanoTime() - probeT0) / 1e9
-    writeOut("null", Set.empty)
+    writeOut(NullNode.instance, Set.empty)
 
     // ---- 100× tier: one run each, priority-ordered, budget-capped ----
     // probe wall bills here (r16 ADVICE: the fork timeout is fixed, so
@@ -1052,8 +932,9 @@ object ScaleRehearsal {
       ScaleData.ensure(spark, sfDir, ScaledDir100, 100,
         tables = Set("documents", "lineitem", "customer"))
       val deadline100 = System.nanoTime() + (budget100 * 1e9).toLong
-      val ran = scala.collection.mutable.ArrayBuffer[(String, Double, Long,
-        Long, Long, Seq[(Double, Long, Long, Long)])]()
+      val ran = scala.collection.mutable.ArrayBuffer[Row]()
+      def record(n: String, r: Harness.Run): Unit =
+        ran += ((n, r.secs, r.writeBytes, r.readBytes, r.inputBytes, Seq(r)))
       val skipped = scala.collection.mutable.ArrayBuffer[String]()
       val t10secs = tier10.map(r => r._1 -> r._2).toMap
       val wb10 = tier10.map(r => r._1 -> r._3).toMap
@@ -1064,9 +945,9 @@ object ScaleRehearsal {
       val resourceSkipped =
         scala.collection.mutable.ArrayBuffer[(String, String)]()
       // SA-family sub-fork telemetry (r17 verdict #2), published in the
-      // decade-2 object so a reader can tell fresh-JVM measurements
-      // from in-process ones without the child log
-      var saSubforkJson: String = "null"
+      // decade-2 object so a reader can tell what the sub-fork ran
+      // without the child log
+      var saSubforkJson: JsonNode = NullNode.instance
       def d2Flush(pending: Seq[String]): Unit = {
         val lastExp: Seq[(String, Double)] = ran.toSeq.map {
           case (n, _, wb100, _, _, _) =>
@@ -1081,26 +962,18 @@ object ScaleRehearsal {
         // still pending) carries its most recent committed full-budget
         // evidence inline, with provenance
         val settled = lastExp.collect { case (n, e) if e != -999.0 => n }.toSet
-        val priorEv = decade2Names
-          .filterNot(settled)
-          .flatMap(n => PriorEvidence.get(n).map(n -> _))
         val d2Extra = Seq(
           "sa_subfork" -> saSubforkJson,
-          "bytes_exponent_last" -> jmap(lastExp.map {
-            case (n, e) => n -> (if (e == -999.0) "-1" else f"$e%.3f") }),
-          "skipped_resource" -> jmap(resourceSkipped.toSeq.map {
-            case (n, why) => n -> jstr(why) }),
-          "evidence_prior" -> jmap(priorEv.map { case (n, (v, from)) =>
-            n -> jmap(Seq("settled" -> jstr(v), "evidence_from" -> jstr(from))) }),
-          "not_yet_run" -> pending.map("\"" + _ + "\"")
-            .mkString("[", ",", "]"))
+          "bytes_exponent_last" -> Harness.obj(lastExp.map {
+            case (n, e) => n -> fmtExp(e) }: _*),
+          "skipped_resource" -> Harness.obj(resourceSkipped.toSeq: _*),
+          "evidence_prior" -> priorEvidenceJson(decade2Names.filterNot(settled)),
+          "not_yet_run" -> pending)
         val d2Gate = lastExp.filterNot(x => BytesGateExempt.contains(x._1))
-        val evaluated = lastExp.collect {
-          case (n, e) if e != -999.0 => n }.toSet
         writeOut(tierJson(ran.toSeq, 2,
-          (skipped ++ pending).distinct.toSeq, d2Gate, d2Extra), evaluated)
+          (skipped ++ pending).distinct.toSeq, d2Gate, d2Extra), settled)
       }
-      val t10nruns = tier10.map(r => r._1 -> r._6.count(_._1 > 0)).toMap
+      val t10nruns = tier10.map(r => r._1 -> r._6.count(_.ok)).toMap
       val unusable = scala.collection.mutable.Set[String]() // skipped or failed
       // Cost estimate for the budget pre-skip (r14: starts-only gating
       // let q137 begin near the deadline and overrun the fork budget by
@@ -1162,9 +1035,9 @@ object ScaleRehearsal {
       val saMembers = decade2Names.filter(decade2SaFamily)
       nonSa.zipWithIndex.foreach { case (n, i) =>
         if (!preSkip(n, budgetGated = true)) {
-          val r = timeOne(n, ScaledDir100)
-          ran += ((n, r._1, r._2, r._3, r._4, Seq(r)))
-          if (r._1 <= 0) unusable += n
+          val r = runOne(n, ScaledDir100)
+          record(n, r)
+          if (!r.ok) unusable += n
         }
         d2Flush(nonSa.drop(i + 1) ++ saMembers)
       }
@@ -1173,7 +1046,7 @@ object ScaleRehearsal {
       // already absorbed the whole tier-10 + probes, and q137's 100×
       // build OOM stopped the shared SparkContext — losing the family
       // to heap-debt SCHEDULING, not plans (the fresh-JVM targeted
-      // rerun settled everything at the same exponents). Protocol now:
+      // rerun settled everything at the same exponents). Protocol:
       // pre-check each member here (deps + feasibility; the corpus
       // scan needs this session), then STOP this session — its heap
       // must not peak alongside the sub-fork's — and run the survivors
@@ -1181,37 +1054,26 @@ object ScaleRehearsal {
       // (secs, write/read/input bytes) over a TSV; the child applies
       // the same per-member budget estimates against its own deadline
       // and the same dep rules on failures, so a mid-family death
-      // costs only the in-flight member. SPARK_GRAFT_SA_SUBFORK=0
-      // falls back to the pre-r18 in-process protocol.
+      // costs only the in-flight member.
       val saRunnable = saMembers.filterNot(preSkip(_, budgetGated = false))
       if (saRunnable.nonEmpty) {
         val remainingSecs = (deadline100 - System.nanoTime()) / 1e9
-        val cp = System.getProperty("java.class.path")
+        val mem = sys.env.getOrElse("SPARK_GRAFT_SA_MEM", SaSubforkMem)
         // don't pay the sub-fork's ~90 s JVM-start + warmup when the
-        // remaining budget cannot hold even the CHEAPEST member — the
-        // in-process branch then budget-skips everything instantly
-        // (the in-slot driver bench's usual decade-2 tail state)
-        val subforkOk = freshJvm &&
-          sys.env.getOrElse("SPARK_GRAFT_SA_SUBFORK", "1") == "1" &&
-          cp != null && cp.contains("classes") &&
-          remainingSecs > saRunnable.map(estOf).min + 90
-        if (!subforkOk) {
-          System.err.println(s"[rehearsal] decade-2 SA family: in-process " +
-            s"(subfork unavailable: freshJvm=$freshJvm remaining=" +
-            f"$remainingSecs%.0f s)")
-          saRunnable.zipWithIndex.foreach { case (n, i) =>
-            if (!preSkip(n, budgetGated = true)) {
-              val r = timeOne(n, ScaledDir100)
-              ran += ((n, r._1, r._2, r._3, r._4, Seq(r)))
-              if (r._1 <= 0) unusable += n
-            }
-            d2Flush(saRunnable.drop(i + 1))
+        // remaining budget cannot hold even the CHEAPEST member (the
+        // usual decade-2 tail state of an in-slot bench)
+        if (remainingSecs <= saRunnable.map(estOf).min + 90) {
+          saRunnable.foreach { n =>
+            System.err.println(f"[rehearsal] decade-2 budget: skipping $n " +
+              f"(est ${estOf(n)}%.0f s + 90 s sub-fork start > remaining " +
+              f"${remainingSecs}%.0f s)")
           }
+          skipped ++= saRunnable
         } else {
-          saSubforkJson = jmap(Seq("used" -> "true",
-            "members" -> saRunnable.map(jstr).mkString("[", ",", "]"),
-            "mem" -> jstr(sys.env.getOrElse("SPARK_GRAFT_SA_MEM", SaSubforkMem)),
-            "state" -> jstr("launched")))
+          def subforkJson(state: String, more: (String, Any)*): JsonNode =
+            Harness.obj(Seq("used" -> true, "members" -> saRunnable,
+              "state" -> state) ++ more: _*)
+          saSubforkJson = subforkJson("launched", "mem" -> mem)
           d2Flush(saRunnable) // durable artifact before this session dies
           try spark.stop()
           catch { case e: Exception =>
@@ -1220,20 +1082,18 @@ object ScaleRehearsal {
           System.gc() // release this JVM's heap before the 56g child starts
           val t0 = System.nanoTime()
           val sub = forkSaD2(ScaledDir100, saRunnable.map(n => n -> estOf(n)),
-            deadlineSecs = math.max(60.0, remainingSecs - 30.0))
-          val wall = (System.nanoTime() - t0) / 1e9
+            deadlineSecs = math.max(60.0, remainingSecs - 30.0), mem)
+          val wall = Harness.fixed((System.nanoTime() - t0) / 1e9, 1)
           sub match {
             case None =>
-              saSubforkJson = jmap(Seq("used" -> "true",
-                "members" -> saRunnable.map(jstr).mkString("[", ",", "]"),
-                "state" -> jstr("fork failed - members recorded as skipped"),
-                "wall_secs" -> f"$wall%.1f"))
+              saSubforkJson = subforkJson(
+                "fork failed - members recorded as skipped", "wall_secs" -> wall)
               skipped ++= saRunnable
             case Some(rows) =>
               rows.foreach {
                 case (n, Right(r)) =>
-                  ran += ((n, r._1, r._2, r._3, r._4, Seq(r)))
-                  if (r._1 <= 0) unusable += n
+                  record(n, r)
+                  if (!r.ok) unusable += n
                 case (n, Left(why)) =>
                   System.err.println(s"[rehearsal] SA subfork skipped $n: $why")
                   skipped += n; unusable += n
@@ -1245,11 +1105,8 @@ object ScaleRehearsal {
                   lost.mkString(", "))
                 skipped ++= lost
               }
-              saSubforkJson = jmap(Seq("used" -> "true",
-                "members" -> saRunnable.map(jstr).mkString("[", ",", "]"),
-                "state" -> jstr("completed"),
-                "mem" -> jstr(sys.env.getOrElse("SPARK_GRAFT_SA_MEM", SaSubforkMem)),
-                "wall_secs" -> f"$wall%.1f"))
+              saSubforkJson = subforkJson("completed", "mem" -> mem,
+                "wall_secs" -> wall)
           }
         }
       }
@@ -1257,146 +1114,42 @@ object ScaleRehearsal {
     }
   }
 
-  /** JPMS opens Spark needs on Java 17+, shared by every forked JVM. */
-  private[graft] val AddOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   /** Launch [[ScaleRehearsalSaD2]] — the decade-2 SA-family sub-fork —
     * and parse its per-member TSV. Returns None when the process could
     * not start or produced no file at all; otherwise one entry per
-    * reported member: Right((secs, writeBytes, readBytes, inputBytes))
-    * for attempted members (secs = -1 on failure, matching timeOne's
-    * convention) or Left(reason) for members the child skipped
-    * (budget / failed deps). The TSV is appended-and-flushed per
-    * member, so a timeout kill loses only the in-flight member.
+    * reported member: Right(run) for attempted members (ok = false on
+    * failure) or Left(reason) for members the child skipped (budget /
+    * failed deps). The TSV is appended-and-flushed per member, so a
+    * timeout kill loses only the in-flight member.
     */
   private def forkSaD2(scaledDir: String, members: Seq[(String, Double)],
-                       deadlineSecs: Double)
-      : Option[Seq[(String, Either[String, (Double, Long, Long, Long)])]] = {
-    try {
-      val cp = System.getProperty("java.class.path")
-      val javaBin = new java.io.File(
-        new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-      val mem = sys.env.getOrElse("SPARK_GRAFT_SA_MEM", SaSubforkMem)
-      // tmpdir nested under THIS process's tmpdir: when Bench forked us,
-      // java.io.tmpdir is scale_rehearsal_tmp, which the Bench parent
-      // deletes after waitFor — so even a SIGKILLed grandchild's spill
-      // dirs get cleaned by the grandparent
-      val subTmp = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        "graft_sa_subfork_tmp").getAbsoluteFile
-      subTmp.mkdirs()
-      val outTsv = new java.io.File("scale_rehearsal_sa_sub.tsv").getAbsoluteFile
-      java.nio.file.Files.deleteIfExists(outTsv.toPath)
-      val cmd = Seq(javaBin) ++ AddOpens ++ Seq(s"-Xmx$mem",
-        "-Duser.timezone=UTC", s"-Djava.io.tmpdir=$subTmp",
-        "-cp", cp, "graft.ScaleRehearsalSaD2",
-        scaledDir, outTsv.getAbsolutePath,
-        members.map { case (n, e) => f"$n:$e%.0f" }.mkString(","),
-        f"$deadlineSecs%.0f")
-      val pb = new ProcessBuilder(cmd: _*)
-      val log = new java.io.File("scale_rehearsal_child.log")
-      pb.redirectOutput(ProcessBuilder.Redirect.appendTo(log))
-      pb.redirectError(ProcessBuilder.Redirect.appendTo(log))
-      val p = pb.start()
-      try {
-        val done = p.waitFor((deadlineSecs + 120).toLong,
-          java.util.concurrent.TimeUnit.SECONDS)
-        if (!done) { p.destroyForcibly(); p.waitFor() }
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(subTmp)
+                       deadlineSecs: Double, mem: String)
+      : Option[Seq[(String, Either[String, Harness.Run])]] = {
+    val outTsv = new java.io.File("scale_rehearsal_sa_sub.tsv").getAbsoluteFile
+    // tmpdir nested under THIS process's tmpdir: when Bench forked us,
+    // java.io.tmpdir is scale_rehearsal_tmp, which the Bench parent
+    // deletes after the child exits — so even a SIGKILLed grandchild's
+    // spill dirs get cleaned by the grandparent
+    val subTmp = new java.io.File(
+      System.getProperty("java.io.tmpdir", "/tmp"),
+      "graft_sa_subfork_tmp").getAbsoluteFile
+    // the sub-fork's output joins this process's own (the child log
+    // when Bench forked us)
+    val ok = Harness.fork("graft.ScaleRehearsalSaD2", Seq(scaledDir,
+      outTsv.getAbsolutePath,
+      members.map { case (n, e) => f"$n:$e%.0f" }.mkString(","),
+      f"$deadlineSecs%.0f"), outTsv, subTmp, mem,
+      timeoutSecs = (deadlineSecs + 120).toLong, ProcessBuilder.Redirect.INHERIT)
+    if (!ok) None
+    else Some(scala.io.Source.fromFile(outTsv).getLines().toSeq.flatMap { line =>
+      line.split('\t') match {
+        case Array("#skip", n, why) => Some(n -> Left(why))
+        case Array(n, s, wb, rb, ib) =>
+          Some(n -> Right(Harness.Run(s.toDouble >= 0, s.toDouble, wb.toLong,
+            rb.toLong, ib.toLong)))
+        case _ => None
       }
-      if (!outTsv.isFile) None
-      else Some(scala.io.Source.fromFile(outTsv).getLines().toSeq.flatMap { line =>
-        line.split('\t') match {
-          case Array("#skip", n, why) => Some(n -> Left(why))
-          case Array(n, s, wb, rb, ib) =>
-            Some(n -> Right((s.toDouble, wb.toLong, rb.toLong, ib.toLong)))
-          case _ => None
-        }
-      })
-    } catch { case e: Exception =>
-      System.err.println(s"[rehearsal] SA subfork failed: ${e.getMessage}")
-      None
-    }
-  }
-
-  /** Parent-side fork: launch this main in a dedicated JVM. Returns
-    * true if the child ran and produced `outFile`. Child stdout/stderr
-    * go to `scale_rehearsal_child.log` (the parent's stdout carries the
-    * bench's one-line JSON contract and must stay clean).
-    */
-  def fork(sfDir: String, baseFile: String, outFile: String,
-           timeoutSecs: Long,
-           childEnv: Map[String, String] = Map.empty,
-           logFile: String = "scale_rehearsal_child.log"): Boolean = {
-    try {
-      val cp = System.getProperty("java.class.path")
-      if (cp == null || !cp.contains("classes")) {
-        System.err.println(s"[rehearsal] classpath unusable for fork: $cp")
-        return false
-      }
-      val javaBin = new java.io.File(
-        new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-      val addOpens = AddOpens
-      // 48g default (box: 128 GiB; the idle parent holds 32g): the 100×
-      // tier's SA build OOMed at 32g when identical 64-char start keys
-      // landed in ONE range partition. That ceiling is since fixed at
-      // the source (headRank range-partitions on (key, gid), so equal
-      // keys split — see SuffixArray.rangeByKeyGid); the headroom stays
-      // because the 100× tier's other sorts/joins are sized for it.
-      val mem = sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "48g")
-      // Dedicated tmpdir for the child's Spark local dirs (blockmgr,
-      // shuffle spills): a timeout-killed JVM cannot clean its own —
-      // measured: one killed rehearsal left a 43 GB blockmgr orphan in
-      // /tmp that drove the NEXT run into No-space-left spill failures.
-      // The parent owns the dir and deletes it after waitFor, whatever
-      // the exit path.
-      val childTmp = new java.io.File(
-        "scale_rehearsal_tmp" +
-          (if (logFile.contains("core_probe")) "_core_probe" else ""))
-        .getAbsoluteFile
-      childTmp.mkdirs()
-      val cmd = Seq(javaBin) ++ addOpens ++ Seq(s"-Xmx$mem",
-        "-Duser.timezone=UTC", s"-Djava.io.tmpdir=$childTmp",
-        "-cp", cp, "graft.ScaleRehearsal",
-        sfDir, baseFile, outFile)
-      val pb = new ProcessBuilder(cmd: _*)
-      // governor-computed stage budgets (Bench sizes them from its
-      // remaining wall; explicit env overrides pass through unchanged)
-      childEnv.foreach { case (k, v) => pb.environment().put(k, v) }
-      val log = new java.io.File(logFile)
-      pb.redirectOutput(ProcessBuilder.Redirect.to(log))
-      pb.redirectError(ProcessBuilder.Redirect.appendTo(log))
-      val p = pb.start()
-      try {
-        val done = p.waitFor(timeoutSecs, java.util.concurrent.TimeUnit.SECONDS)
-        if (!done) { p.destroyForcibly(); p.waitFor() }
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(childTmp)
-      }
-      // a killed child may still have written the 10× tier (writeOut
-      // runs per tier) — partial evidence beats none
-      new java.io.File(outFile).isFile
-    } catch { case e: Exception =>
-      System.err.println(s"[rehearsal] fork failed: ${e.getMessage}")
-      false
-    }
+    })
   }
 }
 
@@ -1436,22 +1189,7 @@ object ScaleRehearsalSaD2 {
         val i = s.lastIndexOf(':')
         (s.substring(0, i), s.substring(i + 1).toDouble)
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // fixed, CPU-decoupled — same rule as ScaleRehearsal.main
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      // same scaled-tier spill-awareness as the rehearsal session
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val shuffle = new ShuffleBytesListener
-    spark.sparkContext.addSparkListener(shuffle)
+    val spark = ScaleRehearsal.rehearsalSession()
     // same like-for-like pins as every rehearsal tier (and the 1× base)
     System.setProperty("graft.lcp.path", "hash")
     System.setProperty("graft.sa.path", "distributed")
@@ -1478,15 +1216,9 @@ object ScaleRehearsalSaD2 {
             brokenDeps.mkString("+"))
           unusable += n
         } else {
-          val b0 = shuffle.bytes.get()
-          val r0 = shuffle.readBytes.get()
-          val i0 = shuffle.inputBytes.get()
-          val t0 = System.nanoTime()
-          val ok = ScaleRehearsal.runPinned(spark, n, scaledDir)
-          val dt = (System.nanoTime() - t0) / 1e9
-          if (ok)
-            emit(f"$n\t$dt%.3f\t${shuffle.bytes.get() - b0}\t" +
-              s"${shuffle.readBytes.get() - r0}\t${shuffle.inputBytes.get() - i0}")
+          val r = ScaleRehearsal.runPinned(spark, n, scaledDir)
+          if (r.ok)
+            emit(f"$n\t${r.secs}%.3f\t${r.writeBytes}\t${r.readBytes}\t${r.inputBytes}")
           else {
             emit(s"$n\t-1\t-1\t-1\t-1")
             unusable += n

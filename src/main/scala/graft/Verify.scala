@@ -1,25 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare.
+  *
+  * args: sfDir outDir [comma-separated query-name filter], e.g.
+  * `runMain graft.Verify <sfDir> <outDir> q24_ngram_jaccard,q127_dup_substring_cut`
+  * dumps just those queries so `tools/t2check.py <outDir>` gates them.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: sfDir outDir [comma-separated query-name filter (dev only)]
     val sfDir = args(0)
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // A throwing query must not vanish from the correctness artifact
     // (round 7: 15 broken queries were silently absent). Dump a 1-row
@@ -32,7 +26,6 @@ object Verify {
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        graft.operators.TransientPersists.releaseAll()
       } catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: $msg")
@@ -44,28 +37,12 @@ object Verify {
         } catch { case e2: Throwable =>
           System.err.println(s"[verify] $name err-row dump failed: ${e2.getMessage}")
         }
-      }
+      } finally graft.operators.TransientPersists.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Harness.writeJson(s"$outDir/oracle_sql.json", Harness.obj(SparkEntry.oracleSql
+      .filter { case (k, _) => only.forall(_.contains(k)) }.toSeq: _*))
     // Machine-readable failure record beside the dumps (and loud on stderr).
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Harness.writeJson(s"$outDir/errors.json", Harness.obj(errors.toSeq: _*))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
     spark.stop()

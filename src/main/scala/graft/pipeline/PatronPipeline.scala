@@ -19,8 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object PatronPipeline extends Logging {
 
-  class PipelineStallError(message: String) extends RuntimeException(message)
-
   /** I/O dependencies. The three lookups take a DataFrame of keys and
     * return matching warehouse rows — implementations should push the keys
     * into the warehouse scan (IN-list / semi-join pushdown, reference
@@ -50,35 +48,11 @@ object PatronPipeline extends Logging {
     df.withColumn("patron_id_plaintext",
       col("patron_id_plaintext").cast("long").cast("string"))
 
-  /** Stall guard (reference A1/A2, lib/pipeline_controller.py:150-162,
-    * 264-272): a full batch sharing one timestamp means the watermark
-    * cannot advance — fail loudly rather than loop forever.
-    *
-    * This is the reference's CONSERVATIVE form: it assumes a `>=` rescan
-    * (helpers/query_helper.py:21), so it also fires on a legitimate final
-    * full page whose rows all share one watermark with nothing beyond it.
-    * [[graft.sources.PollingSource]] uses strict-`>` offsets plus a
-    * `limit+1` straddle probe and DELIVERS that page, stalling only when a
-    * single watermark group alone exceeds the page — so do NOT pair this
-    * guard with the polling source (leave `runMode`'s `batchSize` at its
-    * default there; the two layers would disagree on exactly that shape).
-    * Intended for guard-less sources on the reference batch-parity path.
-    */
-  def stallGuard(df: DataFrame, batchSize: Long, orderingField: String): Unit = {
-    val row = df.agg(
-      count(lit(1)).as("n"),
-      min(col(orderingField)).as("mn"),
-      max(col(orderingField)).as("mx")).head()
-    if (row.getLong(0) == batchSize && row.get(1) != null && row.get(1) == row.get(2)) {
-      logError("Too many records found with the same timestamp")
-      throw new PipelineStallError("Too many records found with the same timestamp")
-    }
-  }
-
   /** Cross-batch unseen filter (reference P6 `processed_ids` anti-join,
-    * lib/pipeline_controller.py:165-168). In the streaming runner this is
-    * `dropDuplicates` against the state store; the batch form is an
-    * explicit left-anti join against the accumulated key set.
+    * lib/pipeline_controller.py:165-168): a left-anti join against the
+    * accumulated key set. [[graft.streaming.PatronStream.runAll]] applies
+    * it per micro-batch against the run-scoped seen keys it persists
+    * beside the checkpoint.
     */
   def filterUnseen(df: DataFrame, seenKeys: DataFrame): DataFrame =
     df.join(seenKeys.select(col("patron_id_plaintext")), Seq("patron_id_plaintext"), "left_anti")

@@ -13,16 +13,28 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *                            matching "poll until a short batch")
   *  - ST2 S3 offset JSON    → `checkpointLocation` offset/commit log
   *  - ST3 watermark advance → engine-managed source offsets
-  *  - ST4 processed_ids set → `dropDuplicates("patron_id_plaintext")`
-  *                            backed by the state store (same run-scoped
-  *                            lifetime as the reference's in-memory set)
+  *  - ST4 processed_ids set → run-scoped seen keys: a parquet key set
+  *                            beside the checkpoint, one subdir per
+  *                            `runId`, applied as a left-anti join
+  *                            ([[PatronPipeline.filterUnseen]]) — the
+  *                            reference's per-run set lifetime
   *  - ST5 upper time bound  → AvailableNow snapshot semantics
-  *  - ST6 stall guard       → per-batch guard in foreachBatch (fails query)
+  *  - ST6 stall guard       → owned by the source (see below)
   *  - ST8 batch-size bounds → source rate options (e.g.
   *                            maxFilesPerTrigger / maxOffsetsPerTrigger)
   *
+  * ST6 ownership (intentional deviation from the reference's guard,
+  * lib/pipeline_controller.py:150-162): the reference stalls on ANY full
+  * batch sharing one timestamp because its next `>=` scan would loop.
+  * Here [[graft.sources.PollingSource]] polls `limit+1` rows and fails
+  * the query only when a watermark group alone exceeds the page (the one
+  * case its strict-`>` offset genuinely cannot advance past), so a
+  * legitimate final full page whose rows share one watermark is
+  * delivered; file/Kafka sources define batches by offsets that always
+  * advance.
+  *
   * O1 (three sequential modes sharing one dedup scope): modes are unioned
-  * into ONE mode-tagged stream with a single global dropDuplicates — the
+  * into ONE mode-tagged stream filtered against one seen-key set — the
   * Spark-native equivalent of the reference's instance-level
   * `processed_ids` shared across its three sequential runs (SURVEY §7.4
   * risk 5). A patron in several modes' windows is emitted once, by the
@@ -119,102 +131,5 @@ object PatronStream {
         }
       }
       .start()
-  }
-
-  /** Run one mode as a streaming query. `stream` is any streaming
-    * DataFrame with the Sierra schema (file, Kafka, or a custom JDBC
-    * micro-batch source).
-    *
-    * ST6 ownership (intentional deviation from the reference's guard,
-    * lib/pipeline_controller.py:150-162): the reference stalls on ANY full
-    * batch sharing one timestamp because its next `>=` scan would loop.
-    * Here the SOURCE owns stall detection — [[graft.sources.PollingSource]]
-    * polls `limit+1` rows and fails only when a watermark group alone
-    * exceeds the page (the one case its strict-`>` offset genuinely cannot
-    * advance past), and file/Kafka sources define batches by offsets that
-    * always advance. Re-checking count==batchSize here would kill the
-    * legitimate final full page whose rows share one watermark, and after
-    * the per-address `dropDuplicates` the batch count no longer equals the
-    * page size anyway. `batchSize` applies [[PatronPipeline.stallGuard]]
-    * for sources with no guard of their own (the reference's batch-mode
-    * parity path); pass the default to delegate ST6 to the source.
-    */
-  def runMode(stream: DataFrame, mode: PipelineMode, deps: PatronPipeline.Deps,
-              checkpointDir: String, sink: AvroSink.RecordSink,
-              batchSize: Long = Long.MaxValue,
-              schemaJson: String = Schemas.patronInfoAvroJson,
-              runId: String = java.util.UUID.randomUUID().toString): StreamingQuery = {
-    // Cross-batch suppression is PATRON-keyed (suppressSeenPatrons), not
-    // per-address: the polling source never splits a watermark group
-    // across pages, so all of a patron's address rows land in one
-    // micro-batch, and any later delivery of the same patron — identical,
-    // partially changed, or fully changed address set — is suppressed
-    // entirely, exactly like the reference's processed_ids. Suppression is
-    // RUN-scoped (`runId`): each runMode invocation is one drain (one
-    // reference poller run), and a patron re-updated in a LATER run is
-    // re-emitted — the reference resets processed_ids per run while its
-    // S3 watermark persists (lib/pipeline_controller.py:74). NOTE:
-    // upgrading from the boolean-state version changes the
-    // flatMapGroupsWithState state schema — existing checkpoints written
-    // by dropDuplicates-era or boolean-state builds must be restarted
-    // fresh (state store schemas are not migratable).
-    val canonical = PatronPipeline.withCanonicalId(stream)
-    val deduped =
-      if (mode == PipelineMode.DeletedPatrons)
-        canonical.dropDuplicates("patron_id_plaintext")
-      else suppressSeenPatrons(canonical, runId)
-    deduped.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          if (mode != PipelineMode.DeletedPatrons) {
-            PatronPipeline.stallGuard(batch, batchSize, mode.orderingField)
-            val out = PatronPipeline.processActivePatrons(batch, mode, deps,
-              col(mode.orderingField) +: PatronPipeline.addressPriority)
-            AvroSink.write(out, sink, schemaJson = schemaJson)
-          } else {
-            PatronPipeline.stallGuard(batch, batchSize, mode.orderingField)
-            val out = PatronPipeline.processDeletedPatrons(batch, deps)
-            AvroSink.write(out, sink, schemaJson = schemaJson)
-          }
-        }
-      }
-      .start()
-  }
-
-  /** Patron-keyed cross-batch suppression — the reference's run-scoped
-    * `processed_ids` set (lib/pipeline_controller.py:74,165-174), expressed
-    * as streaming state: within one run, the FIRST micro-batch that
-    * delivers a patron passes ALL of that patron's address rows through
-    * (the downstream ordered keep-first then picks the top-priority
-    * address, helpers/query_helper.py:30); every later delivery of the
-    * same patron IN THE SAME RUN is suppressed wholesale. A per-address
-    * `dropDuplicates` key cannot express this: novel (patron,
-    * display_order, type_id) rows of an already-emitted patron would leak
-    * through, and the batch-level keep-first could then emit a
-    * non-top-priority address.
-    *
-    * State holds the `runId` that last emitted the patron, NOT a plain
-    * seen-bit: the reference resets `processed_ids` at every poller run
-    * while the S3 watermark persists, so a patron updated again in a
-    * later run must be RE-emitted. A boolean under NoTimeout would
-    * suppress it for the checkpoint's whole lifetime — silent data loss
-    * relative to the reference. Comparing the stored runId to the current
-    * one reproduces the run-scoped lifetime exactly while the state store
-    * itself stays checkpoint-persistent (which is what keeps the SOURCE
-    * watermark durable). Footprint is one string per patron id — same
-    * asymptotics as `dropDuplicates`' key set.
-    */
-  private def suppressSeenPatrons(df: DataFrame, runId: String): DataFrame = {
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val idx = df.schema.fieldIndex("patron_id_plaintext")
-    implicit val rowEnc: Encoder[Row] = Encoders.row(df.schema)
-    df.groupByKey(_.getString(idx))(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[Row], state: GroupState[String]) =>
-          if (state.exists && state.get == runId) Iterator.empty
-          else { state.update(runId); rows })(Encoders.STRING, rowEnc)
   }
 }

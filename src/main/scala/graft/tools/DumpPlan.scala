@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Round-tooling dev main (never invoked by the driver): dumps the
@@ -16,16 +15,7 @@ object DumpPlan {
     val tag = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,12 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-tooling dev main (never invoked by the driver): times a
   * comma-listed subset of SparkEntry queries at a given SF dir with N
   * passes, printing per-pass seconds and shuffle-write bytes. Exists so
   * a wall regression can be bisected in minutes without running the
   * full 173-query bench (args: sfDir queries [passes] [warmupDir]).
+  * One query, three passes (`<sfDir> <name> 3`) is the single-query
+  * bench timing.
   */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
@@ -14,38 +14,13 @@ object TimeQueries {
     val names = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val passes = if (args.length > 2) args(2).toInt else 3
     val warmupDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val shuffle = new graft.ShuffleBytesListener
-    spark.sparkContext.addSparkListener(shuffle)
-    def runOne(name: String, dir: String): Boolean = {
-      val fn = graft.SparkEntry.queries(name)
-      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[time] $name failed: ${e.getMessage}"); false }
-      // TIME_NO_RELEASE=1 reproduces the pre-r14 leak (cross-pass cache
-      // reuse) for bisecting measurement-semantics deltas
-      finally if (sys.env.getOrElse("TIME_NO_RELEASE", "0") != "1")
-        graft.operators.TransientPersists.releaseAll()
-    }
+    val spark = graft.Harness.session()
     if (new java.io.File(warmupDir).isDirectory && warmupDir != sfDir)
-      names.foreach(runOne(_, warmupDir))
+      names.foreach(graft.Harness.run(spark, _, warmupDir))
     (1 to passes).foreach { p =>
       names.foreach { n =>
-        val b0 = shuffle.bytes.get()
-        val i0 = shuffle.inputBytes.get()
-        val t0 = System.nanoTime()
-        val ok = runOne(n, sfDir)
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[time] pass=$p $n%-32s ${if (ok) f"$dt%8.2f s" else "FAILED"} write=${(shuffle.bytes.get() - b0) / 1048576.0}%9.2f MB input=${(shuffle.inputBytes.get() - i0) / 1048576.0}%9.2f MB")
+        val r = graft.Harness.run(spark, n, sfDir)
+        println(f"[time] pass=$p $n%-32s ${if (r.ok) f"${r.secs}%8.2f s" else "FAILED"} write=${r.writeBytes / 1048576.0}%9.2f MB input=${r.inputBytes / 1048576.0}%9.2f MB")
       }
     }
     spark.stop()

@@ -57,20 +57,6 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     }
   }
 
-  test("jesc produces valid JSON string content for hostile reasons") {
-    val hostile = "line1\nline2\t\"quoted\\path\"\r\u0001ctrl"
-    val escaped = ScaleRehearsal.jesc(hostile)
-    // must parse as a JSON string and round-trip the original
-    val json = "{\"r\":\"" + escaped + "\"}"
-    // minimal structural checks without a JSON lib: no raw control
-    // chars, no unescaped quotes/backslashes remain
-    assert(!escaped.exists(_ < ' '))
-    assert(!escaped.replace("\\\\", "").replace("\\\"", "").contains("\""))
-    assert(escaped.contains("\\n") && escaped.contains("\\t") &&
-      escaped.contains("\\r") && escaped.contains("\\u0001"))
-    assert(json.length > hostile.length)
-  }
-
   test("feasibility-checked members are decade-2 members, and q110 precedes the SA family (context-kill isolation)") {
     val idx = ScaleRehearsal.decade2Names.zipWithIndex.toMap
     ScaleRehearsal.Decade2Feasibility.keys.foreach(n =>

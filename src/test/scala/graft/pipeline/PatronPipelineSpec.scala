@@ -188,19 +188,6 @@ class PatronPipelineSpec extends AnyFunSuite {
     assert(got == Seq(("obf_456", "obf_B")))
   }
 
-  test("stall guard raises on a full batch with one timestamp (:549-597)") {
-    val rows = activeSierraRows.map(r =>
-      Row.fromSeq(r.toSeq.updated(11, ts(2021, 1, 1, 0, 0, 0))))
-    val df = sierraDf(rows)
-    intercept[PatronPipeline.PipelineStallError] {
-      PatronPipeline.stallGuard(df, batchSize = 4, "creation_timestamp")
-    }
-    // Not a full batch → no error even with equal timestamps.
-    PatronPipeline.stallGuard(df, batchSize = 5, "creation_timestamp")
-    // Full batch, distinct timestamps → no error.
-    PatronPipeline.stallGuard(sierraDf(activeSierraRows), 4, "creation_timestamp")
-  }
-
   test("iphlc backfill warns and nulls missing patrons (:626-636)") {
     val df = spark.createDataFrame(Seq(
       Row("123", null), Row("456", null), Row("789", null), Row("012", null))

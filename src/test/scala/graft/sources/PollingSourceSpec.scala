@@ -144,8 +144,8 @@ class PollingSourceSpec extends AnyFunSuite {
     // Exactly `limit` rows share the last watermark and NO row lies beyond
     // it: the limit+1 probe shows the group does not straddle the page, so
     // the source delivers it and advances (the reference's conservative
-    // guard would stall here — intentional deviation, see
-    // PatronStream.runMode Scaladoc).
+    // guard would stall here — intentional deviation, see the
+    // PatronStream class doc).
     val rows = Seq((1L, "a", 1001L), (2L, "b", 1002L), (3L, "c", 1002L),
       (4L, "d", 1002L))
     PollClientRegistry.register("finalfull", new FixedClient(rows))

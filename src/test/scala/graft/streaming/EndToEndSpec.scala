@@ -60,13 +60,17 @@ class EndToEndSpec extends AnyFunSuite {
       .option("limit", "2") // forces 2 micro-batches for 3 patrons
       .load()
 
+    // the updated and deleted modes: empty file streams of their schemas
+    val empty = java.nio.file.Files.createTempDirectory("e2e-empty").toFile.getAbsolutePath
+    new java.io.File(s"$empty/upd").mkdirs()
+    new java.io.File(s"$empty/del").mkdirs()
+
     StreamSinkLog.reset()
     val ckpt = java.nio.file.Files.createTempDirectory("e2e-ckpt").toFile.getAbsolutePath
-    // No batchSize: the polling source owns ST6 stall detection (see
-    // runMode's Scaladoc) — the pipeline-level guard is for guard-less
-    // sources only.
-    val q = PatronStream.runMode(stream, PipelineMode.NewPatrons, deps,
-      ckpt, new StreamSinkLog)
+    val q = PatronStream.runAll(stream,
+      spark.readStream.schema(Schemas.sierraActive).parquet(s"$empty/upd"),
+      spark.readStream.schema(Schemas.sierraDeleted).parquet(s"$empty/del"),
+      deps, ckpt, new StreamSinkLog)
     q.awaitTermination(120000)
 
     val decoded = StreamSinkLog.records.map(AvroSink.decode(_))

@@ -58,9 +58,14 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(Schemas.sierraActive)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/*")
+    // the updated and deleted modes: empty file streams of their schemas
+    new java.io.File(s"$dir/upd").mkdirs()
+    new java.io.File(s"$dir/del").mkdirs()
+    def noUpdates = spark.readStream.schema(Schemas.sierraActive).parquet(s"$dir/upd")
+    def noDeletes = spark.readStream.schema(Schemas.sierraDeleted).parquet(s"$dir/del")
 
     StreamSinkLog.reset()
-    val q = PatronStream.runMode(stream, PipelineMode.NewPatrons, deps,
+    val q = PatronStream.runAll(stream, noUpdates, noDeletes, deps,
       ckpt, new StreamSinkLog)
     q.awaitTermination(60000)
     val firstRun = StreamSinkLog.records.map(AvroSink.decode(_))
@@ -85,9 +90,9 @@ class StreamingSpec extends AnyFunSuite {
       Row(999L, 9, 9, "lib9", "c", "r", "33333", "3 ave", dt(2021, 9, 1),
         null, ts(2021, 9, 3), ts(2020, 12, 1), 1, 1))).write.parquet(s"$srcDir/b3")
     StreamSinkLog.reset()
-    val q2 = PatronStream.runMode(
+    val q2 = PatronStream.runAll(
       spark.readStream.schema(Schemas.sierraActive).parquet(s"$srcDir/*"),
-      PipelineMode.NewPatrons, deps, ckpt, new StreamSinkLog)
+      noUpdates, noDeletes, deps, ckpt, new StreamSinkLog)
     q2.awaitTermination(60000)
     val secondRun = StreamSinkLog.records.map(AvroSink.decode(_))
       .map(r => (r.get("geoid").toString, r.get("postal_code").toString)).sorted

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-tooling dev main (never invoked by the driver): measures the
   * NO-BROADCAST pinned 1× base for a comma list of queries — exactly
   * Bench's pinnedRuns protocol (broadcast joins disabled, child
@@ -16,47 +14,21 @@ object PinnedBaseProbe {
     val outFile = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val runs = if (args.length > 3) args(3).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val shuffle = new graft.ShuffleBytesListener
-    spark.sparkContext.addSparkListener(shuffle)
-    // Bench.pinnedRuns conf, verbatim
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-    def runOne(name: String, dir: String): Boolean = {
-      val fn = graft.SparkEntry.queries(name)
-      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[pinnedbase] $name failed: ${e.getMessage}"); false }
-      finally graft.operators.TransientPersists.releaseAll()
-    }
+    val spark = graft.Harness.session()
     val warmupDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmupDir).isDirectory && warmupDir != sfDir)
-      names.foreach(runOne(_, warmupDir))
-    val lines = names.map { n =>
-      val samples = (1 to runs).flatMap { _ =>
-        val b0 = shuffle.bytes.get()
-        val t0 = System.nanoTime()
-        val ok = runOne(n, sfDir)
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (ok) Some((dt, shuffle.bytes.get() - b0)) else None
+    // Bench.pinnedRuns conf, verbatim
+    val lines = graft.Harness.withConf(spark, graft.ScaleRehearsal.NoBroadcastPins :+
+        graft.ScaleRehearsal.ChildGranularity: _*) {
+      if (new java.io.File(warmupDir).isDirectory && warmupDir != sfDir)
+        names.foreach(graft.Harness.run(spark, _, warmupDir))
+      names.map { n =>
+        val samples = (1 to runs).map(_ => graft.Harness.run(spark, n, sfDir)).filter(_.ok)
+        val (s, b) =
+          if (samples.isEmpty) (-1.0, -1L)
+          else (samples.map(_.secs).min, samples.map(_.writeBytes).min)
+        System.err.println(f"[pinnedbase] $n secs=$s%.3f bytes=$b")
+        s"$n\t$s\t$b"
       }
-      val (s, b) =
-        if (samples.isEmpty) (-1.0, -1L)
-        else (samples.map(_._1).min, samples.map(_._2).min)
-      System.err.println(f"[pinnedbase] $n secs=$s%.3f bytes=$b")
-      s"$n\t$s\t$b"
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (lines.mkString("\n") + "\n")
