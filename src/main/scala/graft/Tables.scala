@@ -11,10 +11,6 @@ import org.apache.spark.sql.functions._
   * predicate pushdown / column pruning on the scan.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -50,14 +46,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register all tables as temp views (used by SQL-form queries and tests).
-    * Routes `events` through its dtype-normalizing loader so SQL-form
-    * consumers see the same `ts` type as the DataFrame API.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(spark, dir) else load(spark, dir, n)
-      df.createOrReplaceTempView(n)
-    }
 }

@@ -100,7 +100,6 @@ object Bpe extends Serializable {
       "vocab ids are 1-based; id 0 is the reserved OOV sentinel")
     def encode(text: String): IndexedSeq[Int] = Bpe.encode(text, this)
     def decode(ids: Seq[Int]): String = Bpe.decode(ids, this)
-    def vocabSize: Int = vocab.size
   }
 
   /** Merge every non-overlapping occurrence of `pair`, left to right. */
@@ -282,13 +281,12 @@ object Bpe extends Serializable {
     // code-point symbolization (NOT per-UTF-16-char): supplementary
     // characters stay whole symbols, matching [[train]]
     val symsUdf = udf { w: String => symbolize(w) :+ EndOfWord }
-    // per-round eager checkpoints go through Checkpoints.tracked —
-    // Dataset.unpersist cannot free a localCheckpoint, so each round
-    // releases the superseded round's blocks explicitly (and the final
-    // one is released after the collect())
-    var (df, dfIds) = graft.operators.Checkpoints.tracked(
-      wordCounts.select(symsUdf(col(wordCol)).as("syms"),
-        col(countCol).cast("long").as("n")))
+    // per-round eager checkpoints: each round releases the superseded
+    // round's blocks ([[graft.operators.Checkpoints.release]]), and the
+    // final one is released after the collect()
+    var df = wordCounts.select(symsUdf(col(wordCol)).as("syms"),
+        col(countCol).cast("long").as("n"))
+      .localCheckpoint()
     // base chars from the SAME symbolization (code-point symbols), in
     // code-point order so vocab ids match train()'s exactly
     val baseChars = df
@@ -330,16 +328,16 @@ object Bpe extends Serializable {
         val applyUdf = udf { s: Seq[String] =>
           mergeOnce(s.toVector, best): Seq[String]
         }
-        val (ck, ids) = graft.operators.Checkpoints.tracked(
-          df.select(applyUdf(col("syms")).as("syms"), col("n")))
-        graft.operators.Checkpoints.release(df, dfIds)
-        df = ck; dfIds = ids
+        val ck = df.select(applyUdf(col("syms")).as("syms"), col("n"))
+          .localCheckpoint()
+        graft.operators.Checkpoints.release(df)
+        df = ck
       }
     }
     lastDistributedRounds = merges.length // test-visible switch point
     val words = df.collect().map(r =>
       (r.getSeq[String](0).toVector, r.getLong(1))).toVector
-    graft.operators.Checkpoints.release(df, dfIds)
+    graft.operators.Checkpoints.release(df)
     val tail =
       if (exhausted) IndexedSeq.empty
       else mergeLoop(words, numMerges - merges.length)

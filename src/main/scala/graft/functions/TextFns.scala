@@ -52,10 +52,6 @@ object TextFns {
   // expression-tree form gets its signature subtree duplicated per band by
   // CollapseProject and recomputed 32× per row.
 
-  /** Count of tokens that appear in `words`. */
-  def markerCount(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words.map(lit): _*)))
-
   /** Fused single-pass text statistics (token count, junk chars, non-space
     * chars, per-language marker occurrence counts). The expression form —
     * one `filter(split(...), isin)` chain per language — goes through

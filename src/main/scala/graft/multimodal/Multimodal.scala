@@ -459,12 +459,4 @@ object Multimodal {
       if (b == null) null else java.lang.Long.valueOf(codec.pixelHash(b)) }
     df.withColumn("pixel_hash", u(col(binCol)))
   }
-
-  /** Content-hash repartitioning for media skew: payloads vary 1000× in
-    * size, so partitioning by an id correlated with source (e.g. one
-    * crawl shard of 4K videos) leaves whole tasks oversized. A uniform
-    * content-hash key spreads large items independently of origin.
-    */
-  def repartitionBySize(df: DataFrame, binCol: String, numPartitions: Int): DataFrame =
-    df.repartition(numPartitions, expr(s"hash($binCol)"))
 }

@@ -839,7 +839,7 @@ object Dedup {
     * exactly what [[ccLocal]] and [[IncrementalCC]] rely on.
     */
   private def ccDistributed(edges: DataFrame, vertices: DataFrame): DataFrame = {
-    // Checkpoints.trackedFresh = localCheckpoint + rebuild from the
+    // Checkpoints.fresh = localCheckpoint + rebuild from the
     // checkpointed RDD: cuts BOTH lineage and INHERITED STATISTICS.
     // LogicalRDD checkpoints carry the origin plan's sizeInBytes
     // forward, and join estimates MULTIPLY — an iterated self-join
@@ -853,25 +853,18 @@ object Dedup {
     // AQE picks the real strategy from runtime shuffle sizes (the
     // GraphFrames CC workaround). Row conversion cost is per-level and
     // level sizes shrink geometrically, so the roundtrip is noise next
-    // to the shuffles. Every superseded checkpoint's blocks are
-    // released by tracked id (the leak class that made repeated q153
-    // runs climb 8.8 → 20.1 s in one session).
-    var allIds = Set.empty[Int]
-    def ckptFresh(df: DataFrame): (DataFrame, Set[Int]) = {
-      val (fresh, ids) = Checkpoints.trackedFresh(df)
-      allIds ++= ids
-      (fresh, ids)
-    }
-    var e = ckptFresh(edges.select(col("src"), col("dst"))
+    // to the shuffles. Every checkpoint is eager, so each one is
+    // released ([[Checkpoints.release]]) the moment the checkpoint that
+    // supersedes it exists (the leak class that made repeated q153 runs
+    // climb 8.8 → 20.1 s in one session); only the returned map's stays.
+    var e = Checkpoints.fresh(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")))._1
+      .filter(col("src") =!= col("dst")))
     var rounds = 0
-    // each level's compressed map, WITH the block ids backing it — the
-    // unwind must know which ids back the frame it finally returns
-    val stack = scala.collection.mutable.ListBuffer.empty[(DataFrame, Set[Int])]
+    val stack = scala.collection.mutable.ListBuffer.empty[DataFrame] // each level's compressed map
     while (!e.isEmpty) {
       // hook: l(v) = min(v, min over neighbors)
-      var (l, lIds) = ckptFresh(e.groupBy(col("src").as("id"))
+      var l = Checkpoints.fresh(e.groupBy(col("src").as("id"))
         .agg(min(col("dst")).as("m"))
         .select(col("id"), least(col("id"), col("m")).as("label")))
       rounds += 1
@@ -880,41 +873,42 @@ object Dedup {
       var changed = true
       while (changed) {
         val l2 = l.select(col("id").as("__jid"), col("label").as("__jlabel"))
-        val (composed, cIds) = ckptFresh(
+        val composed = Checkpoints.fresh(
           l.join(l2, l("label") === l2("__jid"), "left")
             .select(l("id"), l("label").as("__old"),
               coalesce(col("__jlabel"), l("label")).as("label")))
         rounds += 1
         changed = !composed.filter(col("label") =!= col("__old")).isEmpty
+        Checkpoints.release(l)
         l = composed.select(col("id"), col("label"))
-        lIds = cIds
       }
-      stack += ((l, lIds))
+      stack += l
       // contract: edges between super-nodes, loops dropped
-      e = ckptFresh(e
+      val contracted = Checkpoints.fresh(e
         .join(l.select(col("id").as("src"), col("label").as("__ls")), Seq("src"))
         .join(l.select(col("id").as("dst"), col("label").as("__ld")), Seq("dst"))
         .select(col("__ls").as("src"), col("__ld").as("dst"))
         .filter(col("src") =!= col("dst"))
-        .distinct())._1
+        .distinct())
+      Checkpoints.release(e)
+      e = contracted
       rounds += 1
     }
+    Checkpoints.release(e)
     lastDistributedRounds.set(rounds)
     // unwind: final(v) = m_k(…m_2(m_1(v))) — compose top-down so every
-    // join after the first runs against an already-collapsed map
+    // join after the first runs against an already-collapsed map; both
+    // inputs of each compose are superseded once it exists
     val full = stack.reduceRightOption { (m, acc) =>
-      val a = acc._1.select(col("id").as("__aid"), col("label").as("__alabel"))
-      ckptFresh(m._1.join(a, m._1("label") === a("__aid"), "left")
-        .select(m._1("id"),
-          coalesce(col("__alabel"), m._1("label")).as("label")))
+      val a = acc.select(col("id").as("__aid"), col("label").as("__alabel"))
+      val composed = Checkpoints.fresh(m.join(a, m("label") === a("__aid"), "left")
+        .select(m("id"), coalesce(col("__alabel"), m("label")).as("label")))
+      Checkpoints.release(m)
+      Checkpoints.release(acc)
+      composed
     }
-    // free every checkpoint this call created EXCEPT the blocks backing
-    // the returned map (with a single level, that is the level's own
-    // compressed map — no compose ran). All checkpoints are eager, so a
-    // superseded checkpoint is no longer an input to anything.
-    Checkpoints.release(vertices, allIds -- full.map(_._2).getOrElse(Set.empty))
     full match {
-      case Some((labels, _)) =>
+      case Some(labels) =>
         vertices.select(col("id"))
           .join(labels.select(col("id"), col("label").as("__cc_label")),
             Seq("id"), "left")

@@ -30,7 +30,10 @@ import org.apache.spark.sql.functions._
   * anti-joins against the sub-k node set — which SHRINKS every round
   * and is broadcastable after the first peel on real dup graphs. Edges
   * are localCheckpointed per round so the plan stays one round deep;
-  * the only driver state is the removed-count loop guard.
+  * each round's sub-k set and the edge set it supersedes are released
+  * ([[Checkpoints.release]]) once the peeled edge set is checkpointed,
+  * so only the final edge checkpoint the result reads stays live. The
+  * only driver state is the removed-count loop guard.
   */
 object KCore {
 
@@ -71,11 +74,14 @@ object KCore {
       val bad = deg.filter(col("deg") < k).select("node").localCheckpoint()
       removed = bad.count()
       if (removed > 0) {
-        e = e
+        val peeled = e
           .join(bad.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
           .join(bad.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
           .localCheckpoint()
+        Checkpoints.release(e)
+        e = peeled
       }
+      Checkpoints.release(bad)
       round += 1
     }
     lastRounds.set(round)

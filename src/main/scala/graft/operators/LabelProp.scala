@@ -38,16 +38,14 @@ object LabelProp {
     */
   def propagate(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // checkpoints are TRACKED and released once superseded
-    // ([[Checkpoints]]): r13 measured repeated q153 runs in one session
-    // rising 8.8 → 12.8 → 20.1 s purely from leaked per-round blocks
-    val (e, eIds) = Checkpoints.tracked(
-      edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
-    val (seedsOnly, seedIds) =
-      Checkpoints.tracked(seeds.select(col("v"), col("label")))
+    // every checkpoint is released once superseded
+    // ([[Checkpoints.release]]): r13 measured repeated q153 runs in one
+    // session rising 8.8 → 12.8 → 20.1 s purely from leaked per-round blocks
+    val e = edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .localCheckpoint()
+    val seedsOnly = seeds.select(col("v"), col("label")).localCheckpoint()
     var labels = seedsOnly
-    var labelIds = Set.empty[Int] // round 0 IS seedsOnly; free separately
     (1 to iters).foreach { _ =>
       val votes = e.join(labels, e("dst") === labels("v"))
         .groupBy(e("src").as("node"), col("label"))
@@ -57,15 +55,15 @@ object LabelProp {
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
         .select(col("node").as("v"), col("m.l").as("label"))
         .join(seedsOnly.select("v"), Seq("v"), "left_anti")
-      val (next, nextIds) = Checkpoints.tracked(seedsOnly.unionByName(won))
-      Checkpoints.release(labels, labelIds) // superseded (next is eager)
+      val next = seedsOnly.unionByName(won).localCheckpoint()
+      // superseded (next is eager); round 0 IS seedsOnly, freed below
+      if (labels ne seedsOnly) Checkpoints.release(labels)
       labels = next
-      labelIds = nextIds
     }
     // the final checkpoint (labels) must stay persisted — a truncated
     // lineage cannot recompute — but the graph and seeds are done
-    Checkpoints.release(e, eIds)
-    Checkpoints.release(seedsOnly, seedIds)
+    Checkpoints.release(e)
+    Checkpoints.release(seedsOnly)
     labels
   }
 }

@@ -28,7 +28,9 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *  - Every iteration's rank is materialized via `localCheckpoint` each
   *    `checkpointEvery` rounds so the lineage (and the re-execution cost
   *    of a lost partition) stays bounded instead of nesting
-  *    `iterations` joins deep.
+  *    `iterations` joins deep; each checkpoint is released
+  *    ([[Checkpoints.release]]) once the next one has drained it, so
+  *    only the returned ranks' checkpoint stays live.
   *
   * Cross-engine determinism: ranks are rounded to `roundScale` (1e-12)
   * decimals EVERY iteration, in-engine, so summation order (engine-,
@@ -124,6 +126,7 @@ object PageRank {
 
     var ranks = nodes.select(col("node"),
       round(lit(1.0 / n.toDouble), roundScale).as("rank"))
+    var lastCheckpoint: Option[DataFrame] = None
     for (i <- 1 to iterations) {
       val contribs = ranks
         .join(e, ranks("node") === e("src"))
@@ -135,12 +138,14 @@ object PageRank {
         .select(col("node"),
           round(lit(tele) + lit(damping) * coalesce(col("s"), lit(0.0)),
             roundScale).as("rank"))
-      if (i % checkpointEvery == 0 && i < iterations)
+      if (i % checkpointEvery == 0 || i == iterations) {
         ranks = ranks.localCheckpoint()
+        lastCheckpoint.foreach(Checkpoints.release)
+        lastCheckpoint = Some(ranks)
+      }
     }
-    val out = ranks.localCheckpoint()
     nodes.unpersist(blocking = false)
-    out
+    ranks
   }
 
   /** ANSI-SQL replay of [[run]] with the iterations UNROLLED as chained

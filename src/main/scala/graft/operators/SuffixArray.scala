@@ -499,19 +499,13 @@ object SuffixArray {
     // headRank's scan — the old separate groupBy(r)/semi-join pass to
     // seed the active set was one extra corpus-keyed shuffle + join +
     // checkpoint before the first round.
-    val dbg = sys.env.contains("GRAFT_SA_DEBUG")
-    val tB0 = System.nanoTime()
-    def dbgLog(msg: String): Unit = if (dbg)
-      System.err.println(f"[sabuild] ${(System.nanoTime() - tB0) / 1e9}%6.1f s $msg")
     var t = headRank(pos, partitions)
       .repartition(partitions, col("gid"))
       .sortWithinPartitions("gid")
       .localCheckpoint()
-    dbgLog(s"headRank + initial checkpoint done (partitions=$partitions)")
     var nActive = t.filter(col("a")).count()
     var k = k0
     while (nActive > 0 && k < maxLen) {
-      dbgLog(s"round k=$k nActive=$nActive")
       // shuffled-hash hints are CONDITIONAL on the build side fitting
       // in execution memory (the walk's rule, same 1M-rows/partition
       // bound): active-set-sized sides build, the corpus-sized t/lk
@@ -540,23 +534,18 @@ object SuffixArray {
       // active separately — three corpus-adjacent materialization jobs
       // per round): the new t carries the updated rank AND the active
       // flag, so next round's active set is a free filter of t. The
-      // superseded round's checkpoint is released as soon as its rows
-      // are drained into the new one (direct RDD references to this
-      // build's own round — see [[checkpointRdds]]), so peak storage is
-      // two rounds' t, not the sum of all rounds — the q137 100×-build heap-debt class (r17
-      // verdict #2) shrinks by rounds×.
-      val tNew0 = t.join(hinted(upd), Seq("gid"), "left")
+      // superseded round's checkpoint is released (by frame, see
+      // [[Checkpoints.release]]) as soon as its rows are drained into
+      // the new one, so peak storage is two rounds' t, not the sum of
+      // all rounds — the q137 100×-build heap-debt class (r17 verdict
+      // #2) shrinks by rounds×.
+      val tNew = t.join(hinted(upd), Seq("gid"), "left")
         .select(col("gid"), coalesce(col("nr"), col("r")).as("r"),
           coalesce(col("na"), lit(false)).as("a"))
         .sortWithinPartitions("gid")
-      if (dbg)
-        System.err.println(s"[sabuild] round k=$k plan:\n" +
-          tNew0.queryExecution.executedPlan.toString.linesIterator.take(40)
-            .mkString("\n"))
-      val tNew = tNew0.localCheckpoint()
-      dbgLog(s"round k=$k tNew checkpointed")
+        .localCheckpoint()
       nActive = tNew.filter(col("a")).count()
-      checkpointRdds(t).foreach(_.unpersist(blocking = false))
+      Checkpoints.release(t)
       t = tNew
       k *= 2
     }
@@ -596,8 +585,8 @@ object SuffixArray {
     * q178 rides) — reuse of prior results within a session, so each
     * family pays for one kernel run. Keyed by (session, a key from the
     * builders below: the corpus path plus the artifact's parameters);
-    * each value is a localCheckpoint plus the persistent-RDD ids that
-    * hold it, so reuse costs a scan and eviction frees its blocks.
+    * each value is an eager localCheckpoint, so reuse costs a scan and
+    * eviction ([[Checkpoints.release]]) frees its blocks.
     * Testdata dirs are immutable within a run; a mutated corpus needs a
     * fresh key (the caller owns that contract, same as any persisted
     * index). The query that MEANS "compute the artifact" (q137, q138,
@@ -605,7 +594,7 @@ object SuffixArray {
     * never a probe of a prior pass's cache.
     */
   private val resultCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), (DataFrame, Set[Int])]()
+    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** Cache keys: the corpus path plus the artifact's parameters. */
   def saKey(corpus: String): String = s"$corpus#sa"
@@ -618,26 +607,29 @@ object SuffixArray {
   private def cacheKey(spark: SparkSession, key: String) =
     (System.identityHashCode(spark), key)
 
-  /** The cached frame for `key` in this session, or `make` run through
-    * [[checkpointReleasing]] and cached. `make` may itself read other
-    * entries (the LCP walk over the cached SA), so it runs OUTSIDE the
-    * map's atomic sections — `computeIfAbsent` forbids touching the
-    * map from its mapping function. Hit/miss is logged (r17 ADVICE):
-    * q174's invalidate-then-recompute makes the family's cost
-    * attribution order-dependent under query filters, and a run where
-    * q175 computes the whole kernel must be distinguishable from one
-    * that rode the cache.
+  /** The cached frame for `key` in this session, or `make` eagerly
+    * localCheckpointed and cached, with every intermediate checkpoint
+    * `make` left behind freed by the [[Checkpoints.scope]] around it.
+    * `make` may itself read other entries (the LCP walk over the
+    * cached SA), so it runs OUTSIDE the map's atomic sections —
+    * `computeIfAbsent` forbids touching the map from its mapping
+    * function — and the scope keeps every cached frame's checkpoint,
+    * so an entry created by a nested miss inside `make` stays live.
+    * Hit/miss is logged (r17 ADVICE): q174's invalidate-then-recompute
+    * makes the family's cost attribution order-dependent under query
+    * filters, and a run where q175 computes the whole kernel must be
+    * distinguishable from one that rode the cache.
     */
   def cached(spark: SparkSession, key: String)(make: => DataFrame): DataFrame = {
     val k = cacheKey(spark, key)
     val hit = resultCache.get(k)
     System.err.println(
       s"[suffixarray] cache ${if (hit != null) "HIT" else "MISS"}: key=$key")
-    if (hit != null) hit._1
-    else {
-      val entry = checkpointReleasing(spark)(make)
+    if (hit != null) hit
+    else Checkpoints.scope(spark, keep = resultCache.values.asScala) {
+      val entry = make.localCheckpoint() // eager: final blocks exist after this
       resultCache.put(k, entry)
-      entry._1
+      entry
     }
   }
 
@@ -657,52 +649,8 @@ object SuffixArray {
     */
   def invalidate(spark: SparkSession, key: String): Unit = {
     val evicted = resultCache.remove(cacheKey(spark, key))
-    if (evicted != null) releaseRddIds(spark.sparkContext, evicted._2)
+    if (evicted != null) Checkpoints.release(evicted)
   }
-
-  /** Run `make` (a pipeline that localCheckpoints internally), then
-    * eagerly localCheckpoint its result and RELEASE every intermediate
-    * checkpoint it left behind. `Dataset.unpersist` cannot free a
-    * localCheckpoint (it only talks to the CacheManager; measured: the
-    * blocks survive), and waiting for ContextCleaner ties executor
-    * storage to driver GC timing — the round-11 failure mode where
-    * stranded SA checkpoints degraded an unrelated 10× plan. Tracking
-    * persistent-RDD-id deltas around the calls makes both the
-    * intermediates and (via the returned ids) the final checkpoint
-    * deterministically evictable. Ids held by cache entries are never
-    * intermediates: a nested [[cached]] miss inside `make` leaves its
-    * entry's checkpoint live. Id-delta tracking assumes no other
-    * persist activity on the same SparkContext during the build — the
-    * single-driver-loop usage every caller here has.
-    */
-  private def checkpointReleasing(
-      spark: SparkSession)(make: => DataFrame): (DataFrame, Set[Int]) = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val built = make
-    val mid = sc.getPersistentRDDs.keySet.toSet
-    val df = built.localCheckpoint() // eager: final blocks exist after this
-    val after = sc.getPersistentRDDs.keySet.toSet
-    val held = resultCache.values.asScala.flatMap(_._2).toSet
-    releaseRddIds(sc, mid -- before -- held) // intermediates are now unreachable
-    (df, after -- mid)
-  }
-
-  private def releaseRddIds(sc: org.apache.spark.SparkContext,
-                            ids: Set[Int]): Unit =
-    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true)))
-
-  /** The persisted RDDs behind an (eagerly) localCheckpoint'd frame —
-    * the frame's analyzed plan is rooted at the LogicalRDD wrapping
-    * the checkpointed internal RDD, so holding that reference lets a
-    * producer release EXACTLY its own checkpoint: a walk releases only
-    * its own superseded rounds, while the frames it reads (the SA, the
-    * hv table) stay live for their owners to release.
-    */
-  private[operators] def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
 
   /** Evict and free EVERY cached checkpoint for a session — the
     * boundary call between workload phases (Bench runs it before the
@@ -724,7 +672,7 @@ object SuffixArray {
     * lcpByHashWalkNoAqe): freed at the same workload boundary as the
     * SA/LCP checkpoint caches ([[clearCaches]]) and, as a backstop,
     * at JVM exit — a walk result that was [[cached]] is eagerly
-    * re-checkpointed by checkpointReleasing, so the sidecar's lifetime
+    * re-checkpointed by [[cached]], so the sidecar's lifetime
     * only matters to direct adjacentLcp callers within a phase.
     */
   private val doneSidecars =
@@ -1073,7 +1021,6 @@ object SuffixArray {
       s"nShards must be in [1, $MaxShards], got $nShards " +
         "(the content key decodes four md5 hex digits - see MaxShards)")
     val spark = docs.sparkSession
-    val sc = spark.sparkContext
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_sharded_cut").toFile
     doneSidecars.add(outDir) // freed at the same phase boundary as caches
@@ -1101,9 +1048,13 @@ object SuffixArray {
       }
     try {
       (0 until nShards).foreach { s =>
-        val beforeIds = sc.getPersistentRDDs.keySet.toSet
         val beforeDirs = doneSidecars.asScala.toSet
-        try {
+        // once this shard's cut rows are durably in outDir, the scope
+        // releases every checkpoint it created (build intermediates,
+        // the walk's hv + final rounds) and the finally deletes its
+        // walk sidecars — peak storage stays one shard's across the
+        // whole loop
+        try Checkpoints.scope(spark) {
           val dshard = shardInputDir match {
             case Some(d) => spark.read.parquet(d.getAbsolutePath)
               .filter(col("__shard") === s).drop("__shard")
@@ -1118,11 +1069,6 @@ object SuffixArray {
           cut.write.mode("overwrite").parquet(
             new java.io.File(outDir, s"__cutshard=$s").getAbsolutePath)
         } finally {
-          // this shard's cut rows are durably in outDir: release every
-          // checkpoint it created (build intermediates, the walk's hv +
-          // final rounds) and delete its walk sidecars — peak storage
-          // stays one shard's across the whole loop
-          releaseRddIds(sc, sc.getPersistentRDDs.keySet.toSet -- beforeIds)
           doneSidecars.asScala.toList
             .filterNot(beforeDirs).filterNot(_ == outDir)
             .foreach { d => doneSidecars.remove(d); deleteRecursively(d) }
@@ -1144,7 +1090,7 @@ object SuffixArray {
       spark.read.parquet(outDir.getAbsolutePath).drop("__cutshard")
     else // a clean corpus can yield zero spans in every shard, and an
          // all-empty write may leave no part files to infer schema from
-      spark.createDataFrame(sc.emptyRDD[Row], outSchema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
   }
 
   /** Cross-shard-complete dedup cut: the union of [[shardedDedupCut]]'s
@@ -1296,7 +1242,6 @@ object SuffixArray {
     // LogicalRDD carries this layout, so every walk round's join
     // accepts hv as-is — no exchange, no per-round sort of the
     // corpus-sized side; only the shrinking active side shuffles.
-    val tHv0 = System.nanoTime()
     val hv = docs
       .filter(length(col(textCol)) >= 1) // sequence(1,0) is descending
       .select(col(docIdCol).as("d"), col(textCol).as("t"),
@@ -1313,8 +1258,6 @@ object SuffixArray {
       // decode each round) without saving the 100x walk, whose true bound
       // is the single-JVM local-mode heap (see Decade2Feasibility)
       .localCheckpoint()
-    if (sys.env.contains("GRAFT_LCP_DEBUG"))
-      System.err.println(f"[lcpwalk] hv build ${(System.nanoTime() - tHv0) / 1e9}%.1f s")
     val lens = docs.select(col(docIdCol),
       length(col(textCol)).cast("long").as("len"))
     val a = sa.select(col("sa_rank").as("r"), col(docIdCol).as("doc_a"),
@@ -1333,17 +1276,14 @@ object SuffixArray {
       .withColumn("lcp", lit(0L))
       .withColumn("jmax", lit(maxJ))
       .localCheckpoint()
-    // the RDDs behind the round whose checkpoint `active` currently
-    // filters — released once the NEXT round's checkpoint has drained
-    // it. DIRECT references to this walk's own checkpoints (not a
-    // context-global id delta): a walk releases only its own rounds.
-    // hv's checkpoint is deliberately NOT released here: the returned
-    // sidecar frame is this walk's only product and the caller
-    // (checkpointReleasing / shardedDedupCut's per-shard finally) owns
-    // the walk's terminal cleanup.
-    var prevRoundRdds: Seq[org.apache.spark.rdd.RDD[_]] = checkpointRdds(active)
-    if (sys.env.contains("GRAFT_LCP_DEBUG"))
-      System.err.println(f"[lcpwalk] pair init ${(System.nanoTime() - tHv0) / 1e9}%.1f s (cumulative)")
+    // the round checkpoint `active` currently filters — released by
+    // frame ([[Checkpoints.release]]) once the NEXT round's checkpoint
+    // has drained it, so a walk releases only its own rounds. hv's
+    // checkpoint is deliberately NOT released here: the returned
+    // sidecar frame is this walk's only product and the caller's
+    // [[Checkpoints.scope]] ([[cached]] or shardedDedupCut's per-shard
+    // loop) owns the walk's terminal cleanup.
+    var round = active
     // Finished pairs SPILL to an append-only parquet sidecar each round
     // instead of accumulating as views over every round's checkpoint
     // (r15 100× postmortem: the union-of-all-rounds form pinned EVERY
@@ -1359,13 +1299,7 @@ object SuffixArray {
     def spillDone(df: DataFrame): Unit =
       df.write.mode("append").parquet(doneDir.getAbsolutePath)
     var nActive = active.count()
-    var roundT0 = System.nanoTime()
     while (nActive > 0) {
-      if (sys.env.contains("GRAFT_LCP_DEBUG")) {
-        System.err.println(f"[lcpwalk] round start nActive=$nActive " +
-          f"(${(System.nanoTime() - roundT0) / 1e9}%.1f s since last)")
-        roundT0 = System.nanoTime()
-      }
       // the a-side lookup can never miss (lcp < sl_a is invariant); a
       // b-side miss means suffix b is exhausted (lcp == sl_b, b is a
       // prefix of a) and is decided WITHOUT the join — so both lookups
@@ -1393,12 +1327,7 @@ object SuffixArray {
       // is therefore provably empty; the one that lived here cost a
       // full scan + an empty parquet write job EVERY round (r15
       // ADVICE). The jmax < 0 spill below covers all completion paths,
-      // including lcp reaching sl_b after a step. Asserted under debug
-      // only.
-      if (sys.env.contains("GRAFT_LCP_DEBUG")) {
-        val bad = active.filter(col("lcp") >= col("sl_b")).count()
-        assert(bad == 0L, s"lcp < sl_b loop invariant violated: $bad rows")
-      }
+      // including lcp reaching sl_b after a step.
       val buildFits = nActive / parts <= 1000000L
       val live = if (buildFits) active.hint("shuffle_hash") else active
       val ha = hv.select(col("d").as("doc_a"), col("q").as("qa"), col("hv").as("ha"))
@@ -1420,10 +1349,6 @@ object SuffixArray {
       // functions are interpreted per-row (sequence allocation +
       // closure calls on 15M rows per round at 10×), while the chain
       // of element_at comparisons is plain whole-stage codegen.
-      if (sys.env.contains("GRAFT_LCP_DEBUG"))
-        System.err.println(s"[lcpwalk] round plan (nActive=$nActive):\n" +
-          st.queryExecution.executedPlan.toString.linesIterator.take(30)
-            .mkString("\n"))
       val jmExpr = (0 to maxJ).foldLeft(lit(null).cast("int")) { (acc, j) =>
         when(col("jmax") >= j &&
           expr(s"element_at(ha, ${j + 1}) = element_at(hb, ${j + 1})"),
@@ -1441,19 +1366,18 @@ object SuffixArray {
             .otherwise(lit(-1)))
         .select("doc_a", "p_a", "doc_b", "p_b", "sl_a", "sl_b", "lcp", "jmax")
       val steppedCp = stepped.localCheckpoint()
-      val newRdds = checkpointRdds(steppedCp)
       spillDone(steppedCp.filter(col("jmax") < 0)
         .select("lcp", "doc_a", "p_a", "doc_b", "p_b"))
       active = steppedCp.filter(col("jmax") >= 0)
       nActive = active.count()
       // the previous round's checkpoint is fully drained (its done rows
       // are in the sidecar, its live rows in steppedCp) — release it
-      prevRoundRdds.foreach(_.unpersist(blocking = false))
-      prevRoundRdds = newRdds
+      Checkpoints.release(round)
+      round = steppedCp
     }
     // the final round's checkpoint is drained too: the walk's result is
     // read back from the sidecar alone
-    prevRoundRdds.foreach(_.unpersist(blocking = false))
+    Checkpoints.release(round)
     if (doneDir.isDirectory &&
         doneDir.listFiles().exists(_.getName.endsWith(".parquet")))
       spark.read.parquet(doneDir.getAbsolutePath)

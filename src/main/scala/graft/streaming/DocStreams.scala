@@ -336,6 +336,13 @@ object DocStreams {
     * CC (re-unioning an edge changes nothing), but the sentinel still
     * skips the redundant work and keeps the state write count aligned
     * with committed batches.
+    *
+    * Storage: every checkpoint a batch creates (the prior state, the
+    * batch's edges, the merged state and the merge's own) is freed by a
+    * [[graft.operators.Checkpoints.scope]] once the state write
+    * commits, so executor storage does not grow with the batch count.
+    * `sink` must therefore materialize the frame inside the call, as
+    * `foreachBatch` already requires.
     */
   def streamingClusterMaintenance(incomingEdges: DataFrame, stateDir: String,
                                   checkpoint: String)
@@ -345,32 +352,34 @@ object DocStreams {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        val (prior: DataFrame, lastApplied: Long) =
-          try {
-            val st = s.read.parquet(stateDir)
-            val applied = st.filter(col("id") === -1L && col("label") === -1L)
-              .select("applied").as[Long].collect().headOption.getOrElse(-1L)
-            (st.filter(col("id") =!= -1L).select("id", "label").localCheckpoint(),
-              applied)
-          } catch { // first batch: empty clustering
-            case _: org.apache.spark.sql.AnalysisException =>
-              (Seq.empty[(Long, Long)].toDF("id", "label"), -1L)
-          }
-        val merged =
-          if (batchId <= lastApplied) prior
-          else {
-            val edges = batch.toDF().select(col("src"), col("dst"))
-              .localCheckpoint()
-            val newVerts = edges.select(col("src").as("id"))
-              .unionByName(edges.select(col("dst").as("id"))).distinct()
-            graft.operators.IncrementalCC.merge(prior, edges, newVerts)
-              .localCheckpoint()
-          }
-        sink(merged.withColumn("batch_id", lit(batchId)))
-        if (batchId > lastApplied)
-          merged.withColumn("applied", lit(-1L))
-            .unionByName(Seq((-1L, -1L, batchId)).toDF("id", "label", "applied"))
-            .coalesce(1).write.mode("overwrite").parquet(stateDir)
+        graft.operators.Checkpoints.scope(s) {
+          val (prior: DataFrame, lastApplied: Long) =
+            try {
+              val st = s.read.parquet(stateDir)
+              val applied = st.filter(col("id") === -1L && col("label") === -1L)
+                .select("applied").as[Long].collect().headOption.getOrElse(-1L)
+              (st.filter(col("id") =!= -1L).select("id", "label").localCheckpoint(),
+                applied)
+            } catch { // first batch: empty clustering
+              case _: org.apache.spark.sql.AnalysisException =>
+                (Seq.empty[(Long, Long)].toDF("id", "label"), -1L)
+            }
+          val merged =
+            if (batchId <= lastApplied) prior
+            else {
+              val edges = batch.toDF().select(col("src"), col("dst"))
+                .localCheckpoint()
+              val newVerts = edges.select(col("src").as("id"))
+                .unionByName(edges.select(col("dst").as("id"))).distinct()
+              graft.operators.IncrementalCC.merge(prior, edges, newVerts)
+                .localCheckpoint()
+            }
+          sink(merged.withColumn("batch_id", lit(batchId)))
+          if (batchId > lastApplied)
+            merged.withColumn("applied", lit(-1L))
+              .unionByName(Seq((-1L, -1L, batchId)).toDF("id", "label", "applied"))
+              .coalesce(1).write.mode("overwrite").parquet(stateDir)
+        }
       }
       .start()
 

@@ -811,14 +811,14 @@ class SuffixArraySpec extends AnyFunSuite {
         Dedup.winnowedCharSpans(ddf, "doc_id", "text", 20, 8)))
     keys.foreach(k => assert(SuffixArray.isCached(spark, k), k))
     val sc = spark.sparkContext
-    val ids = frames.map(f => SuffixArray.checkpointRdds(f).map(_.id))
+    val ids = frames.map(f => Checkpoints.roots(f).map(_.id))
     assert(ids.forall(_.nonEmpty))
     assert(ids.flatten.forall(sc.getPersistentRDDs.contains))
     assert(frames(1).count() == bruteSa(docs).size)
     val other = spark.newSession()
     val otherSa = SuffixArray.cached(other, keys(1))(
       SuffixArray.build(other.createDataFrame(docs).toDF("doc_id", "text")))
-    val otherIds = SuffixArray.checkpointRdds(otherSa).map(_.id)
+    val otherIds = Checkpoints.roots(otherSa).map(_.id)
     SuffixArray.clearCaches(spark)
     keys.foreach(k => assert(!SuffixArray.isCached(spark, k), k))
     assert(ids.flatten.forall(id => !sc.getPersistentRDDs.contains(id)))

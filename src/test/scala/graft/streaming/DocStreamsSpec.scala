@@ -574,6 +574,7 @@ class DocStreamsSpec extends AnyFunSuite {
     write(s"$tmp/src/b1", Row(1L, 2L), Row(5L, 6L))
     write(s"$tmp/src/b2", Row(2L, 5L), Row(8L, 9L))
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Map[Long, Long]]
+    val baselineRdds = spark.sparkContext.getPersistentRDDs.keySet
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*")
     val q = DocStreams.streamingClusterMaintenance(
@@ -592,6 +593,14 @@ class DocStreamsSpec extends AnyFunSuite {
       .filter(org.apache.spark.sql.functions.col("id") =!= -1L)
       .select("id", "label").as[(Long, Long)].collect().toMap
     assert(st == perBatch(1))
+    // every checkpoint a batch created is freed once its state write
+    // commits (poll briefly, as for the eval gram set below)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (System.nanoTime() < deadline &&
+        !spark.sparkContext.getPersistentRDDs.keySet.subsetOf(baselineRdds))
+      Thread.sleep(100)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(baselineRdds),
+      "per-batch checkpoints not released after the stream stopped")
   }
 
   test("streaming LSH probe: per-batch probes equal the one-shot probe") {
