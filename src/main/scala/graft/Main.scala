@@ -64,15 +64,11 @@ object Main {
     def rsLookup(cols: Seq[String], key: String): DataFrame => DataFrame =
       JdbcLookup.lookup(spark, rsUrl, rsProps, cfg.redshiftTable, cols, key)
 
-    // Reference parity: BCRYPT_SALT is a "$2b$NN$..." crypt salt and keys
-    // the warehouse joins (lib/pipeline_controller.py:20,195-197). A
-    // non-bcrypt-shaped value selects the fast salted-SHA option for
-    // deployments whose warehouse keys are not bcrypt-derived.
-    val obfuscator: Obfuscator =
-      if (cfg.bcryptSalt.startsWith("$2")) new BcryptObfuscator(cfg.bcryptSalt)
-      else new Sha256Obfuscator(cfg.bcryptSalt)
     val deps = PatronPipeline.Deps(
-      obfuscator,
+      // BCRYPT_SALT is a "$2b$NN$..." crypt salt and keys the warehouse
+      // joins (lib/pipeline_controller.py:20,195-197); a missing or
+      // malformed one fails here, before the stream starts
+      new BcryptObfuscator(cfg.bcryptSalt),
       new CensusBatchGeocoder(required("Main.censusPoster", censusPoster)),
       new NycBatchGeocoder(required("Main.geosupport", geosupport)),
       addressLookup = rsLookup(Seq("address_hash", "patron_id", "geoid",

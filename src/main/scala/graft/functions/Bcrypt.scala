@@ -194,18 +194,26 @@ object Bcrypt {
 
   private val Magic = "OrpheanBeholderScryDoubt".getBytes(StandardCharsets.US_ASCII)
 
-  /** bcrypt(password, salt-string) → full crypt string, e.g.
-    * `hashpw("pw", "$2b$12$<22 chars>")` →
-    * `"$2b$12$<22 chars><31-char digest>"`. Supports `$2a$` and `$2b$`
-    * (identical for ≤72-byte passwords; both cap at 72 here).
+  /** The cost of a `$2a$NN$`/`$2b$NN$` salt string (29+ chars, cost
+    * 4–31); any other shape is an IllegalArgumentException.
     */
-  def hashpw(password: String, salt: String): String = {
+  def checkSalt(salt: String): Int = {
     require(salt.length >= 29 && salt.startsWith("$2")
       && (salt.charAt(2) == 'a' || salt.charAt(2) == 'b')
       && salt.charAt(3) == '$' && salt.charAt(6) == '$',
       s"malformed bcrypt salt: expected $$2a$$NN$$ or $$2b$$NN$$ prefix")
     val cost = salt.substring(4, 6).toInt
     require(cost >= 4 && cost <= 31, s"bcrypt cost out of range: $cost")
+    cost
+  }
+
+  /** bcrypt(password, salt-string) → full crypt string, e.g.
+    * `hashpw("pw", "$2b$12$<22 chars>")` →
+    * `"$2b$12$<22 chars><31-char digest>"`. Supports `$2a$` and `$2b$`
+    * (identical for ≤72-byte passwords; both cap at 72 here).
+    */
+  def hashpw(password: String, salt: String): String = {
+    val cost = checkSalt(salt)
     val saltBytes = decodeB64(salt.substring(7, 29), 16)
 
     val pwBytes0 = password.getBytes(StandardCharsets.UTF_8)

@@ -626,12 +626,17 @@ object SuffixArray {
     System.err.println(
       s"[suffixarray] cache ${if (hit != null) "HIT" else "MISS"}: key=$key")
     if (hit != null) hit
-    else Checkpoints.scope(spark, keep = resultCache.values.asScala) {
+    else Checkpoints.scope(spark, keep = cachedFrames) {
       val entry = make.localCheckpoint() // eager: final blocks exist after this
       resultCache.put(k, entry)
       entry
     }
   }
+
+  /** Every cached frame, across sessions: what a [[Checkpoints.scope]]
+    * around a query keeps.
+    */
+  private[graft] def cachedFrames: Iterable[DataFrame] = resultCache.values.asScala
 
   /** Is `key` cached for this session? Bench snapshots this before each
     * sharded-family query so the artifact records which measurements

@@ -1,20 +1,19 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.pipeline.AddressParser.AddressParts
 
-/** Geocoding enrichment (reference S8/S9/E1/E2). Both geocoders are
-  * DataFrame→DataFrame operators keyed by `patron_id_plaintext` — Spark has
-  * no pandas row index, so the key is carried through every tier
-  * (SURVEY §7.4 risk 1) and results are merged by key-join + coalesce.
+/** Geocoding enrichment (reference S8/S9/E1/E2). A geocoder is a plain
+  * batch function over address rows keyed by `patron_id_plaintext` —
+  * Spark has no pandas row index, so the key is carried through every
+  * tier (SURVEY §7.4 risk 1). [[PatronPipeline.geocodeUnknown]] chains
+  * the tiers over one batch inside a single `mapPartitions`, so a
+  * geocoder never sees a DataFrame.
   */
 trait BatchGeocoder extends Serializable {
-  /** Input: (patron_id_plaintext, address, city, region, postal_code
-    * [, house_number, street_name]). Output: one row per input row,
-    * (patron_id_plaintext, geoid) with geoid nullable.
+  /** One batch of (key, address) rows in; key → geoid out. A key that is
+    * absent or maps to null is a miss.
     */
-  def geocode(df: DataFrame): DataFrame
+  def geocode(batch: Seq[(String, AddressParts)]): Map[String, String]
 }
 
 /** Injected HTTP transport so tests (and this zero-egress build) can fake
@@ -87,58 +86,30 @@ object CensusCsv {
 }
 
 /** Census Geocoder API batch client (reference E1,
-  * lib/census_geocoder_api_client.py:23-90) as a `mapPartitions` operator:
-  * one HTTP round-trip per partition (the reference's one-call-per-batch
-  * becomes one-call-per-partition — at scale, `repartition(n)` upstream
-  * sets the effective API batch size). Includes the reference's recursive
-  * binary split-retry: on transport failure halve the chunk while halves
-  * stay ≥ `splitFloor` (=1000, :75-83), else fail the task.
+  * lib/census_geocoder_api_client.py:23-90): one HTTP round-trip per
+  * batch, with the reference's recursive binary split-retry: on
+  * transport failure halve the chunk while halves stay ≥ `splitFloor`
+  * (=1000, :75-83), else raise [[CensusGeocoderError]].
   */
 final class CensusBatchGeocoder(poster: HttpPoster, splitFloor: Int = 1000)
     extends BatchGeocoder {
 
-  private def sendWithSplit(lines: Vector[(String, String)]): Map[String, String] = {
-    try {
-      val body = lines.map(_._2).mkString("\n").getBytes("UTF-8")
-      CensusCsv.parseResponse(poster.post(body))
-    } catch {
+  private def sendWithSplit(lines: Vector[String]): Map[String, String] = {
+    try CensusCsv.parseResponse(poster.post(lines.mkString("\n").getBytes("UTF-8")))
+    catch {
       case e: java.io.IOException =>
         val half = lines.length / 2
-        if (half >= splitFloor) {
-          val r1 = sendWithSplit(lines.take(half))
-          val r2 = sendWithSplit(lines.drop(half))
-          r1 ++ r2
-        } else {
-          throw new CensusGeocoderError(
-            s"Failed to retrieve geocoded addresses from API: ${e.getMessage}")
-        }
+        if (half >= splitFloor)
+          sendWithSplit(lines.take(half)) ++ sendWithSplit(lines.drop(half))
+        else throw new CensusGeocoderError(
+          s"Failed to retrieve geocoded addresses from API: ${e.getMessage}")
     }
   }
 
-  override def geocode(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("patron_id_plaintext", StringType),
-      StructField("geoid", StringType)))
-    val input = df.select("patron_id_plaintext", "address", "city", "region", "postal_code")
-    val rdd = input.rdd.mapPartitions { it =>
-      val rows = it.toVector
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val lines = rows.map { r =>
-          val key = r.getString(0)
-          key -> CensusCsv.toCsvLine(Seq(key, r.getString(1), r.getString(2),
-            r.getString(3), r.getString(4)))
-        }
-        val geoids = sendWithSplit(lines)
-        rows.iterator.map { r =>
-          val key = r.getString(0)
-          Row(key, geoids.getOrElse(key, null))
-        }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  override def geocode(batch: Seq[(String, AddressParts)]): Map[String, String] =
+    sendWithSplit(batch.iterator.map { case (key, p) =>
+      CensusCsv.toCsvLine(Seq(key, p.address, p.city, p.region, p.postalCode))
+    }.toVector)
 }
 
 class CensusGeocoderError(message: String) extends RuntimeException(message)
@@ -154,39 +125,29 @@ trait GeosupportLike extends Serializable {
 
 class GeosupportError(message: String) extends RuntimeException(message)
 
-/** NYC geocoder (reference E2, lib/nyc_geocoder_client.py:24-69): borough →
-  * county FIPS, census-tract vintage coalesce 2020→2010→2000→1990, null on
-  * any miss or Geosupport error. The reference's 2-thread pool becomes
-  * partition parallelism.
+/** NYC geocoder (reference E2, lib/nyc_geocoder_client.py:24-69): one
+  * Geosupport call per row, borough → county FIPS, census-tract vintage
+  * coalesce 2020→2010→2000→1990, null on any miss or Geosupport error.
+  * The reference's 2-thread pool becomes partition parallelism.
   */
 final class NycBatchGeocoder(geosupport: GeosupportLike) extends BatchGeocoder {
 
-  override def geocode(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("patron_id_plaintext", StringType),
-      StructField("geoid", StringType)))
-    val input = df.select("patron_id_plaintext", "house_number", "street_name", "postal_code")
-    val gs = geosupport
-    val rdd = input.rdd.mapPartitions { it =>
-      it.map { r =>
-        val geoid =
-          try {
-            val result = gs.address(r.getString(1), r.getString(2), r.getString(3))
-            val county = result.get("First Borough Name").flatMap(NycBatchGeocoder.boroughMap.get)
-            val tract = Seq("2020 Census Tract", "2010 Census Tract",
-                "2000 Census Tract", "1990 Census Tract")
-              .iterator.flatMap(result.get).find(t => t != null && t.nonEmpty)
-            (county, tract) match {
-              case (Some(c), Some(t)) => c + t
-              case _ => null
-            }
-          } catch { case _: GeosupportError => null }
-        Row(r.getString(0), geoid)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  override def geocode(batch: Seq[(String, AddressParts)]): Map[String, String] =
+    batch.map { case (key, p) =>
+      val geoid =
+        try {
+          val result = geosupport.address(p.houseNumber, p.streetName, p.postalCode)
+          val county = result.get("First Borough Name").flatMap(NycBatchGeocoder.boroughMap.get)
+          val tract = Seq("2020 Census Tract", "2010 Census Tract",
+              "2000 Census Tract", "1990 Census Tract")
+            .iterator.flatMap(result.get).find(t => t != null && t.nonEmpty)
+          (county, tract) match {
+            case (Some(c), Some(t)) => c + t
+            case _ => null
+          }
+        } catch { case _: GeosupportError => null }
+      key -> geoid
+    }.toMap
 }
 
 object NycBatchGeocoder {
@@ -203,10 +164,6 @@ object NycBatchGeocoder {
   * `get_geoids` return values).
   */
 final class MapGeocoder(mapping: Map[String, String]) extends BatchGeocoder {
-  override def geocode(df: DataFrame): DataFrame = {
-    val m = mapping
-    val lookup = udf { key: String => m.get(key).orNull }
-    df.select(col("patron_id_plaintext"),
-      lookup(col("patron_id_plaintext")).as("geoid"))
-  }
+  override def geocode(batch: Seq[(String, AddressParts)]): Map[String, String] =
+    batch.flatMap { case (key, _) => mapping.get(key).map(key -> _) }.toMap
 }

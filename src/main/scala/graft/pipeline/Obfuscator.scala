@@ -1,21 +1,16 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-import java.util.Base64
-
 /** PII obfuscation (reference F1: bcrypt with an env salt via
   * nypl-py-utils `obfuscate`, applied at lib/pipeline_controller.py:195-197,
   * 289-291, 359-364). Deterministic keyed hash: equal plaintexts must map
   * to equal ciphertexts across runs, or the warehouse joins (J3/J4/J5)
   * break.
   *
-  * [[BcryptObfuscator]] is the reference-parity implementation (pure-JVM
-  * bcrypt, verified against libxcrypt vectors — graft.functions.Bcrypt);
-  * [[Sha256Obfuscator]] remains as the fast non-parity option for
-  * environments where warehouse keys are not bcrypt-derived. Parallelism
-  * note: the reference fans obfuscation over a ThreadPoolExecutor; here
-  * partition parallelism does the same job with zero extra code.
+  * [[BcryptObfuscator]] is the one production implementation (pure-JVM
+  * bcrypt, verified against libxcrypt vectors — graft.functions.Bcrypt).
+  * Parallelism note: the reference fans obfuscation over a
+  * ThreadPoolExecutor; here partition parallelism does the same job with
+  * zero extra code.
   */
 trait Obfuscator extends Serializable {
   def obfuscate(plaintext: String): String
@@ -27,17 +22,16 @@ trait Obfuscator extends Serializable {
   * stored in the warehouse. `salt` is the full env-provided salt string.
   */
 final class BcryptObfuscator(salt: String) extends Obfuscator {
+  // checked here, on the driver, so a missing or malformed salt fails the
+  // launch instead of the first executor task
+  try graft.functions.Bcrypt.checkSalt(salt)
+  catch { case e: IllegalArgumentException =>
+    throw new IllegalArgumentException(
+      s"BCRYPT_SALT must be a $$2b$$NN$$ bcrypt salt: ${e.getMessage}", e)
+  }
+
   override def obfuscate(plaintext: String): String =
     graft.functions.Bcrypt.hashpw(plaintext, salt).substring(29)
-}
-
-final class Sha256Obfuscator(salt: String) extends Obfuscator {
-  override def obfuscate(plaintext: String): String = {
-    val md = MessageDigest.getInstance("SHA-256")
-    md.update(salt.getBytes(StandardCharsets.UTF_8))
-    md.update(plaintext.getBytes(StandardCharsets.UTF_8))
-    Base64.getUrlEncoder.withoutPadding.encodeToString(md.digest())
-  }
 }
 
 /** Test double: fixed plaintext→ciphertext map (mirrors the reference

@@ -1,21 +1,31 @@
 package graft.pipeline
 
+import graft.operators.Checkpoints
+import graft.pipeline.AddressParser.AddressParts
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
 
 /** The three patron-pipeline mode DAGs (reference entry points traced in
-  * SURVEY.md §3), re-expressed as pure DataFrame transforms with injected
-  * I/O dependencies. Everything is a declarative plan — Catalyst handles
-  * predicate pushdown / broadcast choice; the only imperative pieces are
-  * the geocoder HTTP calls (mapPartitions inside BatchGeocoder).
+  * SURVEY.md §3), re-expressed as DataFrame transforms with injected I/O
+  * dependencies. Catalyst handles predicate pushdown and broadcast choice;
+  * the one imperative piece is the geocode cascade ([[geocodeUnknown]]),
+  * a pure function of one batch's unknown rows that runs once per
+  * partition inside a single `mapPartitions`, filling `patron_id` and
+  * `geoid` in place. There are no tier frames and no driver-side probes
+  * between tiers: a tier with no input simply makes no call.
   *
   * Scale notes: every join here is keyed on a unique patron or hash key;
   * the lookup sides (warehouse hits for ONE batch's keys) are small by
   * construction, so Spark broadcasts them — no shuffle of the batch side.
   * The only window (`dedupKeepFirst`) shuffles on patron id, the same key
-  * as the upstream source partitioning.
+  * as the upstream source partitioning. A frame that more than one plan
+  * reads is materialized once with [[Checkpoints.fresh]], so bcrypt and
+  * the geocoders never re-run for a row; the caller frees those
+  * checkpoints (a [[Checkpoints.scope]] per micro-batch in
+  * [[graft.streaming.PatronStream.runAll]]).
   */
 object PatronPipeline extends Logging {
 
@@ -99,97 +109,75 @@ object PatronPipeline extends Logging {
     if (s == null) null else obf.obfuscate(s)
   }
 
-  /** The geocode cascade for patrons unknown to the warehouse (reference
-    * `_process_unknown_patrons`, lib/pipeline_controller.py:352-411; O4):
-    * census(raw) → census(re-parsed) → NYC(parsed + P9 filter), each tier
-    * seeing only the prior tier's nulls, short-circuiting when none remain.
-    * Row identity is `patron_id_plaintext` throughout (no pandas index).
-    *
-    * Returns (patron_id_plaintext, patron_id, geoid) for EVERY input row.
+  /** The geocode cascade for one batch of patrons unknown to the
+    * warehouse (reference `_process_unknown_patrons`,
+    * lib/pipeline_controller.py:352-411; O4), a pure function of its rows:
+    *  1. F1 obfuscated patron id; F5 sanitize (strip quotes and
+    *     backslashes, null→'') and F3 `full_address` (single-space join,
+    *     outer trim; inner double spaces from empty fields are faithful);
+    *  2. P8: only non-empty addresses are geocodable (:373-376);
+    *  3. census on the sanitized address;
+    *  4. E3 re-parse of the tier-1 misses, then census again — the API's
+    *     own advice for spurious batch-mode misses (:379-390);
+    *  5. P9: NYC Geosupport on what is still missing and has a house
+    *     number, street name and postal code (:393-404);
+    *  6. SO2: the earliest non-null geoid wins.
+    * A tier with no input makes no call. Rows are (patron_id_plaintext,
+    * raw address parts); returns (patron_id_plaintext, patron_id, geoid)
+    * per row, in input order.
     */
-  def geocodeUnknown(unknown: DataFrame, deps: Deps): DataFrame = {
-    val obf = obfuscateUdf(deps.obfuscator)
-    // F5 sanitize + F3 full_address (reference :365-372): strip quotes and
-    // backslashes, null→'', single-space join, outer trim (inner
-    // double-space artifacts from empty fields are faithful).
-    val clean = (c: String) =>
-      regexp_replace(coalesce(col(c), lit("")), "['\"\\\\]", "")
-    val addressDf = unknown
-      .withColumn("patron_id", obf(col("patron_id_plaintext")))
-      .withColumn("address", clean("address"))
-      .withColumn("city", clean("city"))
-      .withColumn("region", clean("region"))
-      .withColumn("postal_code", clean("postal_code"))
-      .withColumn("full_address",
-        trim(concat(col("address"), lit(" "), col("city"), lit(" "),
-          col("region"), lit(" "), col("postal_code"))))
-      // Consumed by up to three geocode tiers + the id projection; one
-      // batch's unknown rows fit memory by construction (≤ poll limit).
-      // Released by LRU eviction — per-batch explicit unpersist isn't
-      // possible while the returned plan still references it.
-      .persist()
-    val ids = addressDf.select("patron_id_plaintext", "patron_id")
+  def geocodeUnknown(unknown: Seq[(String, AddressParts)], obfuscator: Obfuscator,
+                     census: BatchGeocoder, nyc: BatchGeocoder): Seq[(String, String, String)] = {
+    def clean(s: String) = Option(s).getOrElse("").replaceAll("['\"\\\\]", "")
+    val sanitized = unknown.map { case (key, p) =>
+      val (a, c, r, z) = (clean(p.address), clean(p.city), clean(p.region), clean(p.postalCode))
+      key -> AddressParts(a, c, r, z, s"$a $c $r $z".replaceAll("^ +| +$", ""))
+    }
+    def tier(g: BatchGeocoder, rows: Seq[(String, AddressParts)]): Map[String, String] =
+      if (rows.nonEmpty) g.geocode(rows).filter(_._2 != null) else Map.empty
+    def nonEmpty(s: String) = s != null && s.nonEmpty
 
-    def result(geoids: DataFrame): DataFrame =
-      ids.join(geoids, Seq("patron_id_plaintext"), "left")
-        .select(col("patron_id_plaintext"), col("patron_id"), col("geoid"))
-
-    // P8: only non-empty addresses are geocodable (reference :373-376).
-    val input1 = addressDf.filter(length(col("full_address")) > 0)
-    if (input1.isEmpty) return result(ids.select(col("patron_id_plaintext"), lit(null).cast("string").as("geoid")))
-
-    // Tier 1: census on the raw (sanitized) address.
-    val g1 = deps.census.geocode(input1).withColumnRenamed("geoid", "geoid1")
-
-    // Tier 2: re-parse tier-1 misses (E3) and retry census — recommended by
-    // the API itself for spurious batch-mode misses (reference :379-390).
-    val retry1 = input1.join(g1.filter(col("geoid1").isNull),
-      Seq("patron_id_plaintext"), "left_semi")
-    if (retry1.isEmpty) return result(g1.withColumnRenamed("geoid1", "geoid"))
-
-    val reparsed = reparse(retry1)
-    val g2 = deps.census.geocode(reparsed).withColumnRenamed("geoid", "geoid2")
-
-    // Tier 3: NYC Geosupport on remaining misses that are geocodable (P9:
-    // house number, street name, postal all non-empty, reference :393-404).
-    val retry2 = reparsed.join(g2.filter(col("geoid2").isNull),
-      Seq("patron_id_plaintext"), "left_semi")
-    val nycInput = retry2.filter(
-      length(col("house_number")) > 0 && length(col("street_name")) > 0 &&
-        length(col("postal_code")) > 0)
-    val g3 =
-      if (nycInput.isEmpty) null
-      else deps.nyc.geocode(nycInput).withColumnRenamed("geoid", "geoid3")
-
-    // SO2: merge tiers, earliest non-null wins per key.
-    var merged = g1.join(g2, Seq("patron_id_plaintext"), "left")
-    merged =
-      if (g3 == null) merged.withColumn("geoid3", lit(null).cast("string"))
-      else merged.join(g3, Seq("patron_id_plaintext"), "left")
-    val geoids = merged.select(col("patron_id_plaintext"),
-      coalesce(col("geoid1"), col("geoid2"), col("geoid3")).as("geoid"))
-    result(geoids)
+    val input1 = sanitized.filter(r => r._2.fullAddress.nonEmpty)
+    val g1 = tier(census, input1)
+    val input2 = input1.filterNot(r => g1.contains(r._1))
+      .map { case (key, p) => key -> AddressParser.reformat(p) }
+    val g2 = tier(census, input2)
+    val g3 = tier(nyc, input2.filter { case (key, p) =>
+      !g2.contains(key) && nonEmpty(p.houseNumber) && nonEmpty(p.streetName) &&
+        nonEmpty(p.postalCode)
+    })
+    unknown.map { case (key, _) =>
+      (key, if (key == null) null else obfuscator.obfuscate(key),
+        g1.get(key).orElse(g2.get(key)).orElse(g3.get(key)).orNull)
+    }
   }
 
-  /** E3 re-parse as a struct-returning UDF over the carried key. */
-  private def reparse(df: DataFrame): DataFrame = {
-    val parseUdf = udf { (address: String, city: String, region: String,
-                          postal: String, full: String) =>
-      val p = AddressParser.reformat(AddressParser.AddressParts(
-        Option(address).getOrElse(""), Option(city).getOrElse(""),
-        Option(region).getOrElse(""), Option(postal).getOrElse(""),
-        Option(full).getOrElse("")))
-      (p.address, p.city, p.region, p.postalCode, p.houseNumber, p.streetName)
-    }
-    df.withColumn("__p", parseUdf(col("address"), col("city"), col("region"),
-        col("postal_code"), col("full_address")))
-      .withColumn("address", col("__p._1"))
-      .withColumn("city", col("__p._2"))
-      .withColumn("region", col("__p._3"))
-      .withColumn("postal_code", col("__p._4"))
-      .withColumn("house_number", col("__p._5"))
-      .withColumn("street_name", col("__p._6"))
-      .drop("__p")
+  /** Fill `patron_id` and `geoid` in place for every row the warehouse
+    * did not know (null `patron_id`, reference P7 :212-215), running
+    * [[geocodeUnknown]] once per partition — the partition is the
+    * geocoder batch. J6 is the reference's `df.update`: new non-null
+    * values win. `__unknown` marks the filled rows.
+    */
+  private def fillUnknown(routed: DataFrame, deps: Deps): DataFrame = {
+    val (obf, census, nyc) = (deps.obfuscator, deps.census, deps.nyc)
+    val schema = routed.schema
+    val Seq(key, pid, geo, addr, city, region, postal) = Seq("patron_id_plaintext",
+      "patron_id", "geoid", "address", "city", "region", "postal_code").map(schema.fieldIndex)
+    routed.mapPartitions { it =>
+      val rows = it.toVector
+      val filled = geocodeUnknown(rows.filter(_.isNullAt(pid)).map { r =>
+        r.getString(key) -> AddressParts(r.getString(addr), r.getString(city),
+          r.getString(region), r.getString(postal), null)
+      }, obf, census, nyc).iterator
+      rows.iterator.map { r =>
+        if (!r.isNullAt(pid)) Row.fromSeq(r.toSeq :+ false)
+        else {
+          val (_, id, g) = filled.next()
+          Row.fromSeq(r.toSeq.updated(pid, id)
+            .updated(geo, if (g != null) g else r.get(geo)) :+ true)
+        }
+      }
+    }(Encoders.row(schema.add("__unknown", BooleanType)))
   }
 
   /** NEW / UPDATED patrons single-iteration transform (reference
@@ -197,6 +185,13 @@ object PatronPipeline extends Logging {
     * lib/pipeline_controller.py:135-246). Input: unseen, id-canonical
     * Sierra rows. `dedupOrder` expresses the reference's keep-first
     * priority (display_order, patron_record_address_type_id).
+    *
+    * UPDATED materializes twice with [[Checkpoints.fresh]], each time
+    * because more than one plan reads the frame: the hashed batch (the
+    * J3 lookup's keys and its join side) and the post-cascade frame (the
+    * J5 count, sample and the caller's write). So bcrypt and the
+    * geocoders run once per row. The caller owns their lifetime
+    * ([[graft.streaming.PatronStream.runAll]] scopes each micro-batch).
     */
   def processActivePatrons(sierra: DataFrame, mode: PipelineMode, deps: Deps,
                            dedupOrder: Seq[Column]): DataFrame = {
@@ -207,40 +202,27 @@ object PatronPipeline extends Logging {
 
     // O3 routing: UPDATED consults the warehouse by address hash (J3);
     // NEW starts fully unknown with iphlc defaulted from the current code
-    // (reference :199-210).
-    val routed = mode match {
+    // (reference :199-210). Unknown rows then get their id and geoid
+    // from the cascade (J6).
+    val out = mode match {
       case PipelineMode.UpdatedPatrons =>
-        val hits = deps.addressLookup(deduped.select("address_hash"))
-        deduped.join(broadcast(hits), Seq("address_hash"), "left")
+        val hashed = Checkpoints.fresh(deduped)
+        val hits = deps.addressLookup(hashed.select("address_hash"))
+        val filled = Checkpoints.fresh(fillUnknown(
+          hashed.join(broadcast(hits), Seq("address_hash"), "left"), deps))
+        // J5: iphlc backfill for updated patrons whose address missed the
+        // warehouse, only when the batch had any (reference :219-227,
+        // 413-435).
+        if (filled.filter(col("__unknown")).count() > 0) backfillIphlc(filled, deps)
+        else filled
       case _ =>
-        deduped
+        fillUnknown(deduped
           .withColumn("patron_id", lit(null).cast("string"))
           .withColumn("geoid", lit(null).cast("string"))
-          .withColumn("initial_patron_home_library_code", col("patron_home_library_code"))
+          .withColumn("initial_patron_home_library_code", col("patron_home_library_code")),
+          deps)
     }
-
-    // Unknown patrons: obfuscate id + geocode cascade; J6 merge-back is a
-    // key-join + coalesce (new non-null values win).
-    val unknown = routed.filter(col("patron_id").isNull)
-      .select("address", "city", "region", "postal_code", "patron_id_plaintext")
-    val merged =
-      if (unknown.isEmpty) routed
-      else {
-        val geocoded = geocodeUnknown(unknown, deps)
-          .withColumnRenamed("patron_id", "g_patron_id")
-          .withColumnRenamed("geoid", "g_geoid")
-        val m = routed.join(broadcast(geocoded), Seq("patron_id_plaintext"), "left")
-          .withColumn("patron_id", coalesce(col("g_patron_id"), col("patron_id")))
-          .withColumn("geoid", coalesce(col("g_geoid"), col("geoid")))
-          .drop("g_patron_id", "g_geoid")
-        // J5: iphlc backfill for updated patrons whose address missed the
-        // warehouse (reference :219-227, 413-435).
-        mode match {
-          case PipelineMode.UpdatedPatrons => backfillIphlc(m, deps)
-          case _ => m
-        }
-      }
-    shapeActiveOutput(merged)
+    shapeActiveOutput(out)
   }
 
   /** Max missing-patron ids named in the backfill warning (J5/O7). */
@@ -253,22 +235,17 @@ object PatronPipeline extends Logging {
       .withColumnRenamed("initial_patron_home_library_code", "iphlc_found")
     // Warn with a BOUNDED sample: collecting every missing id to the driver
     // is unbounded at scale (a cold warehouse could miss a whole batch).
-    // Persist around the two actions (count + sample) so the anti-join and
-    // the lookup feeding it execute once, as the unbounded version did.
     val missingDf = needs.join(found, Seq("patron_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val missingCount = missingDf.count()
-      if (missingCount > 0) {
-        val sample = missingDf.sort("patron_id").limit(missingWarnSample)
-          .collect().map(_.getString(0))
-        val suffix = if (missingCount > sample.length)
-          s" … and ${missingCount - sample.length} more" else ""
-        logWarning("The following updated patrons could not be found in " +
-          s"Redshift ($missingCount total): " +
-          sample.mkString("['", "', '", "']") + suffix)
-      }
-    } finally missingDf.unpersist()
+    val missingCount = missingDf.count()
+    if (missingCount > 0) {
+      val sample = missingDf.sort("patron_id").limit(missingWarnSample)
+        .collect().map(_.getString(0))
+      val suffix = if (missingCount > sample.length)
+        s" … and ${missingCount - sample.length} more" else ""
+      logWarning("The following updated patrons could not be found in " +
+        s"Redshift ($missingCount total): " +
+        sample.mkString("['", "', '", "']") + suffix)
+    }
     df.join(broadcast(found), Seq("patron_id"), "left")
       .withColumn("initial_patron_home_library_code",
         coalesce(col("initial_patron_home_library_code"), col("iphlc_found")))
@@ -307,7 +284,9 @@ object PatronPipeline extends Logging {
     */
   def processDeletedPatrons(deleted: DataFrame, deps: Deps): DataFrame = {
     val obf = obfuscateUdf(deps.obfuscator)
-    val withIds = deleted.withColumn("patron_id", obf(col("patron_id_plaintext")))
+    // read by the J4 lookup's keys and its join side: hash each id once
+    val withIds = Checkpoints.fresh(
+      deleted.withColumn("patron_id", obf(col("patron_id_plaintext"))))
     val hits = deps.patronLookup(withIds.select("patron_id"))
       .withColumnRenamed("circ_active_date_et", "rs_circ_active_date_et")
       .withColumnRenamed("creation_date_et", "rs_creation_date_et")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Checkpoints
 import graft.pipeline.{AvroSink, PatronPipeline, PipelineMode, Schemas}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -41,6 +42,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * highest-priority mode (NEW < UPDATED < DELETED in arrival order is the
   * reference's sequential behavior; priority here is by the `mode` tag
   * ordering in dedupOrder).
+  *
+  * Lifetimes: the micro-batch is the unit of both work and storage (the
+  * foreachBatch model of the Structured Streaming paper). Its body runs
+  * inside one [[Checkpoints.scope]]; every frame that more than one
+  * action reads (the deduplicated batch here, the hashed and
+  * post-cascade frames in [[PatronPipeline]]) is materialized once with
+  * [[Checkpoints.fresh]] and freed when the batch's writes end. One
+  * `distinct` over the materialized batch names the modes present, so
+  * an absent mode costs no job.
   */
 object PatronStream {
 
@@ -80,8 +90,9 @@ object PatronStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
+        val spark = batch.sparkSession
+        // every checkpoint the batch creates is freed once its writes end
+        Checkpoints.scope(spark) {
           // Only a MISSING state dir means "first run, nothing seen" — any
           // other failure (corrupt files, transient IO) must fail the batch,
           // or processed patrons would silently re-emit.
@@ -101,33 +112,29 @@ object PatronStream {
           // address row survives (the reference's SQL-order keep='first',
           // helpers/query_helper.py:30). Deleted rows carry nulls there
           // (2-col schema padded by unionByName) — nulls sort last.
-          val best = PatronPipeline.dedupKeepFirst(
+          // Materialized once: the mode census, each mode's branch and the
+          // seen-key append all read it.
+          val best = Checkpoints.fresh(PatronPipeline.dedupKeepFirst(
             PatronPipeline.filterUnseen(batch, seen),
-            col("__mode_rank") +: PatronPipeline.addressPriority)
-            .persist()
-          try {
-            val newRows = best.filter(col("__mode_rank") === 0)
-            val updRows = best.filter(col("__mode_rank") === 1)
-            val delRows = best.filter(col("__mode_rank") === 2)
-              .select("patron_id_plaintext", "deletion_date_et")
-            if (!newRows.isEmpty) AvroSink.write(
-              PatronPipeline.processActivePatrons(newRows, PipelineMode.NewPatrons,
-                deps, col(PipelineMode.NewPatrons.orderingField) +:
-                  PatronPipeline.addressPriority), sink, schemaJson = schemaJson)
-            if (!updRows.isEmpty) AvroSink.write(
-              PatronPipeline.processActivePatrons(updRows, PipelineMode.UpdatedPatrons,
-                deps, col(PipelineMode.UpdatedPatrons.orderingField) +:
-                  PatronPipeline.addressPriority), sink, schemaJson = schemaJson)
-            if (!delRows.isEmpty) AvroSink.write(
-              PatronPipeline.processDeletedPatrons(delRows, deps), sink,
-              schemaJson = schemaJson)
-            // one file per batch, not one per shuffle partition: the key
-            // set is bounded by the batch size, and an append-only state
-            // dir otherwise accumulates numPartitions small files per
-            // micro-batch — the classic small-files leak on long runs
-            best.select("patron_id_plaintext")
-              .coalesce(1).write.mode("append").parquet(seenPath)
-          } finally best.unpersist()
+            col("__mode_rank") +: PatronPipeline.addressPriority))
+          val modes = best.select("__mode_rank").distinct().collect().map(_.getInt(0)).toSet
+          def active(mode: PipelineMode, rank: Int): Unit =
+            if (modes(rank)) AvroSink.write(
+              PatronPipeline.processActivePatrons(best.filter(col("__mode_rank") === rank),
+                mode, deps, col(mode.orderingField) +: PatronPipeline.addressPriority),
+              sink, schemaJson = schemaJson)
+          active(PipelineMode.NewPatrons, 0)
+          active(PipelineMode.UpdatedPatrons, 1)
+          if (modes(2)) AvroSink.write(
+            PatronPipeline.processDeletedPatrons(best.filter(col("__mode_rank") === 2)
+              .select("patron_id_plaintext", "deletion_date_et"), deps),
+            sink, schemaJson = schemaJson)
+          // one file per batch, not one per shuffle partition: the key
+          // set is bounded by the batch size, and an append-only state
+          // dir otherwise accumulates numPartitions small files per
+          // micro-batch — the classic small-files leak on long runs
+          if (modes.nonEmpty) best.select("patron_id_plaintext")
+            .coalesce(1).write.mode("append").parquet(seenPath)
         }
       }
       .start()

@@ -3,7 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Paths}
 
-import graft.operators.TransientPersists
+import graft.operators.{Checkpoints, SuffixArray, TransientPersists}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,6 +36,16 @@ class HarnessSpec extends AnyFunSuite {
         Harness.Run(ok = false, -1.0, -1L, -1L, -1L))
       assert(held.storageLevel == StorageLevel.NONE, name)
     }
+  }
+
+  test("a measured run frees the checkpoints its query created and keeps the SA cache entries") {
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    for (_ <- 1 to 2;
+         q <- Seq("q115_equidepth_hist", "q129_quality_ensemble", "q168_cc_incremental"))
+      assert(Harness.run(spark, q, "/root/testdata/sf0.001").ok, q)
+    val cached = SuffixArray.cachedFrames.flatMap(Checkpoints.roots).map(_.id).toSet
+    assert(sc.getPersistentRDDs.keySet == baseline ++ cached)
   }
 
   test("broadcast and initialPartitionNum pins are restored after a throwing query or body") {

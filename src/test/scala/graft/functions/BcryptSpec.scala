@@ -48,6 +48,13 @@ class BcryptSpec extends AnyFunSuite {
     assert(obf.obfuscate("password").length == 31)
   }
 
+  test("BcryptObfuscator rejects a missing or malformed BCRYPT_SALT when constructed") {
+    Seq("", "abc").foreach { salt =>
+      val e = intercept[IllegalArgumentException](new graft.pipeline.BcryptObfuscator(salt))
+      assert(e.getMessage.contains("BCRYPT_SALT"), salt)
+    }
+  }
+
   test("malformed salts are rejected") {
     intercept[IllegalArgumentException](Bcrypt.hashpw("x", "$2c$04$abcdefghijklmnopqrstuv"))
     intercept[IllegalArgumentException](Bcrypt.hashpw("x", "$2b$99$abcdefghijklmnopqrstuv"))

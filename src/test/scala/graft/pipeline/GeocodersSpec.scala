@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import graft.TestSpark
+import graft.pipeline.AddressParser.AddressParts
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -12,8 +12,6 @@ import scala.jdk.CollectionConverters._
   * No_Match/Tie → null, 11-digit geoid assembly, recursive split-retry).
   */
 class CensusGeocoderSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
   // _API_RESPONSE (tests/test_census_geocoder_api_client.py:11-15), keyed
   // by our string row keys instead of pandas integer index.
   private val apiResponse =
@@ -23,24 +21,19 @@ class CensusGeocoderSpec extends AnyFunSuite {
       + "\"k3\",\"012 bad address, Bronx, NY, 55555-6666\",\"No_Match\"\n"
       + "\"k4\",\"345 tie address, Queens, NY, 77777\",\"Tie\"\n")
 
-  private val schema = StructType(Seq(
-    StructField("patron_id_plaintext", StringType),
-    StructField("address", StringType),
-    StructField("city", StringType),
-    StructField("region", StringType),
-    StructField("postal_code", StringType)))
+  private val rows: Seq[(String, AddressParts)] = Seq(
+    "k0" -> AddressParts("123 good address", "New York", "NY", "11111", ""),
+    "k1" -> AddressParts("456 bad address", "Brooklyn", "NY", "22222", ""),
+    "k2" -> AddressParts("789 good address", "Staten Island", "NY", "33333-4444", ""),
+    "k3" -> AddressParts("012 bad address", "Bronx", "NY", "55555-6666", ""),
+    "k4" -> AddressParts("345 tie address", "Queens", "NY", "77777", ""))
 
-  private def addressDf = spark.createDataFrame(Seq(
-    Row("k0", "123 good address", "New York", "NY", "11111"),
-    Row("k1", "456 bad address", "Brooklyn", "NY", "22222"),
-    Row("k2", "789 good address", "Staten Island", "NY", "33333-4444"),
-    Row("k3", "012 bad address", "Bronx", "NY", "55555-6666"),
-    Row("k4", "345 tie address", "Queens", "NY", "77777")).asJava, schema)
-    .coalesce(1)
+  /** One geoid (null on a miss) per input key. */
+  private def perRow(batch: Seq[(String, AddressParts)], got: Map[String, String]) =
+    batch.map { case (k, _) => k -> got.get(k).orNull }.toMap
 
   test("geoid assembly: Match → state+county+tract, No_Match/Tie → null (:67-75)") {
-    val got = new CensusBatchGeocoder(new FixedResponsePoster(apiResponse)).geocode(addressDf)
-      .collect().map(r => r.getString(0) -> Option(r.getString(1)).orNull).toMap
+    val got = perRow(rows, new CensusBatchGeocoder(new FixedResponsePoster(apiResponse)).geocode(rows))
     assert(got == Map("k0" -> "00111222222", "k1" -> null,
       "k2" -> "44555666666", "k3" -> null, "k4" -> null))
   }
@@ -48,21 +41,18 @@ class CensusGeocoderSpec extends AnyFunSuite {
   test("split-retry halves failed batches while halves ≥ floor (:52-64)") {
     // 4 rows with floor 2: first call fails → two 2-row calls succeed.
     PosterCallLog.reset()
-    val got = new CensusBatchGeocoder(new FailOncePoster, splitFloor = 2)
-      .geocode(addressDf.limit(4)).collect()
+    val batch = rows.take(4)
+    val got = perRow(batch, new CensusBatchGeocoder(new FailOncePoster, splitFloor = 2).geocode(batch))
     assert(PosterCallLog.count == 3)
-    assert(got.length == 4 && got.forall(_.getString(1) == "00111222222"))
+    assert(got.size == 4 && got.values.forall(_ == "00111222222"))
     // request CSV shape (reference serializes key,address,city,region,postal)
     assert(PosterCallLog.firstBody.contains("k0,123 good address,New York,NY,11111"))
   }
 
   test("split-retry below floor raises CensusGeocoderError (:75-90)") {
-    val ex = intercept[org.apache.spark.SparkException] {
-      new CensusBatchGeocoder(new AlwaysFailPoster, splitFloor = 1000)
-        .geocode(addressDf).collect()
+    intercept[CensusGeocoderError] {
+      new CensusBatchGeocoder(new AlwaysFailPoster, splitFloor = 1000).geocode(rows)
     }
-    assert(ex.getCause.isInstanceOf[CensusGeocoderError] ||
-      Option(ex.getCause).exists(_.getCause.isInstanceOf[CensusGeocoderError]))
   }
 
   test("csv round-trip quoting") {
@@ -71,7 +61,7 @@ class CensusGeocoderSpec extends AnyFunSuite {
   }
 }
 
-/** Serializable test posters (anonymous classes would capture the spec). */
+/** Test posters; each call is logged in [[PosterCallLog]]. */
 final class FixedResponsePoster(response: String) extends HttpPoster {
   def post(body: Array[Byte]): Array[Byte] = {
     PosterCallLog.record(new String(body, "UTF-8"))
@@ -94,7 +84,9 @@ final class AlwaysFailPoster extends HttpPoster {
     throw new java.io.IOException("connection error")
 }
 
-/** Static call log — local mode shares one JVM, so executors hit this. */
+/** Static call log — local mode shares one JVM, so a poster running in
+  * an executor task logs here too.
+  */
 object PosterCallLog {
   private val calls = new java.util.concurrent.CopyOnWriteArrayList[String]()
   def reset(): Unit = calls.clear()
@@ -108,15 +100,11 @@ object PosterCallLog {
   * null, GeosupportError → null.
   */
 class NycGeocoderSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private val schema = StructType(Seq(
-    StructField("patron_id_plaintext", StringType),
-    StructField("house_number", StringType),
-    StructField("street_name", StringType),
-    StructField("postal_code", StringType)))
-
-  private def df(rows: Row*) = spark.createDataFrame(rows.asJava, schema)
+  /** (key, house number, street name, postal) rows as the cascade's NYC
+    * tier hands them over.
+    */
+  private def batch(rows: (String, String, String, String)*): Seq[(String, AddressParts)] =
+    rows.map { case (k, h, s, z) => k -> AddressParts("", "", "", z, "", h, s) }
 
   private def geosupport(results: Map[String, Map[String, String]]) =
     new GeosupportLike {
@@ -133,11 +121,10 @@ class NycGeocoderSpec extends AnyFunSuite {
       "4" -> Map("First Borough Name" -> "STATEN IS",
         "2020 Census Tract" -> "567890", "2010 Census Tract" -> "999999"),
       "5" -> Map("First Borough Name" -> "BRONX")))
-    val got = new NycBatchGeocoder(gs).geocode(df(
-      Row("a", "123", "ave", "11111"), Row("b", "456", "st", "22222"),
-      Row("c", "789", "blvd", "33333-4444"), Row("d", "01-23", "ct", "55555"),
-      Row("e", "4", "pl", "66666"), Row("f", "5", "rd", "77777")))
-      .collect().map(r => r.getString(0) -> Option(r.getString(1)).orNull).toMap
+    val got = new NycBatchGeocoder(gs).geocode(batch(
+      ("a", "123", "ave", "11111"), ("b", "456", "st", "22222"),
+      ("c", "789", "blvd", "33333-4444"), ("d", "01-23", "ct", "55555"),
+      ("e", "4", "pl", "66666"), ("f", "5", "rd", "77777")))
     assert(got == Map(
       "a" -> "36005123456", "b" -> "36047789012", "c" -> "36061345678",
       "d" -> "36081901234", "e" -> "36085567890", "f" -> null))
@@ -146,9 +133,8 @@ class NycGeocoderSpec extends AnyFunSuite {
   test("non-borough → null (:38-44); GeosupportError → null (:46-48)") {
     val gs = geosupport(Map(
       "123" -> Map("First Borough Name" -> "NOT A BOROUGH", "2020 Census Tract" -> "123456")))
-    val got = new NycBatchGeocoder(gs).geocode(df(
-      Row("a", "123", "ave", "11111"), Row("b", "999", "st", "22222")))
-      .collect().map(r => r.getString(0) -> Option(r.getString(1)).orNull).toMap
+    val got = new NycBatchGeocoder(gs).geocode(batch(
+      ("a", "123", "ave", "11111"), ("b", "999", "st", "22222")))
     assert(got == Map("a" -> null, "b" -> null))
   }
 }

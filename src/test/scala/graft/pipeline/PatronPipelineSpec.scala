@@ -4,6 +4,7 @@ import java.sql.{Date, Timestamp}
 import java.time.{LocalDate, ZoneId, ZonedDateTime}
 
 import graft.TestSpark
+import graft.pipeline.AddressParser.AddressParts
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -146,6 +147,65 @@ class PatronPipelineSpec extends AnyFunSuite {
         "2020-12-01", "2021-09-02", "2021-09-01", 9L, 9L, "home_library9", "zz")))
   }
 
+  // A warehouse whose address row for 999 carries no iphlc, which only
+  // the J5 backfill (iphlc table: "ii") can fill.
+  private def partialIphlcDeps(census: BatchGeocoder, nyc: BatchGeocoder) = deps(
+    census = census, nyc = nyc,
+    addressLookup = PatronPipeline.staticLookup(spark.createDataFrame(Seq(
+      Row("addr_hash_9", "obfuscated_patron_9", "99999999999", null),
+      Row("addr_hash_8", "obfuscated_patron_8", "88888888888", "yy")).asJava,
+      Schemas.redshiftAddress), "address_hash"),
+    iphlc = PatronPipeline.staticLookup(spark.createDataFrame(Seq(
+      Row("obfuscated_patron_9", "ii"), Row("obfuscated_4", "aa")).asJava,
+      Schemas.redshiftIphlc), "patron_id"))
+
+  test("UPDATED batch the warehouse fully knows: no geocoder call, known rows out, no J5 backfill") {
+    GeocodeCallLog.reset()
+    val out = PatronPipeline.processActivePatrons(
+      sierraDf(extraSierraRows.take(2)), PipelineMode.UpdatedPatrons,
+      partialIphlcDeps(new LoggedGeocoder("census"), new LoggedGeocoder("nyc")),
+      Seq(col("last_updated_timestamp")))
+    assert(collectOut(out) == Seq(
+      Seq("obfuscated_patron_8", "addr_hash_8", "posta", "88888888888",
+        "2020-12-02", "2021-08-02", "2021-08-01", 8L, 8L, "home_library8", "yy"),
+      Seq("obfuscated_patron_9", "addr_hash_9", "posta", "99999999999",
+        "2020-12-01", "2021-09-02", "2021-09-01", 9L, 9L, "home_library9", null)))
+    assert(GeocodeCallLog.calls.isEmpty)
+  }
+
+  test("UPDATED batch with one unknown patron geocodes only it and backfills every missing iphlc") {
+    GeocodeCallLog.reset()
+    val out = PatronPipeline.processActivePatrons(
+      sierraDf(activeSierraRows.take(1) ++ extraSierraRows.take(2)),
+      PipelineMode.UpdatedPatrons,
+      partialIphlcDeps(new LoggedGeocoder("census"), new LoggedGeocoder("nyc")),
+      Seq(col("last_updated_timestamp")))
+    val got = out.select("patron_id", "geoid", "initial_patron_home_library_code")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
+    assert(got == Seq(("obfuscated_4", null, "aa"),
+      ("obfuscated_patron_8", "88888888888", "yy"),
+      ("obfuscated_patron_9", "99999999999", "ii")))
+    // census tier 1 and tier 2 (re-parsed), each with 123 alone; no NYC
+    // call, as the re-parsed "address1" has no house number (P9)
+    assert(GeocodeCallLog.calls == Seq("census" -> Seq("123"), "census" -> Seq("123")))
+  }
+
+  test("NEW batch with only blank addresses makes no Census post and keeps a null geoid") {
+    val blank = Row(790L, 4, 5, "home_library7", "", " ", "", "", dt(2021, 1, 1),
+      dt(2021, 1, 2), ts(2021, 1, 3, 23, 59, 59), ts(2020, 12, 27, 23, 59, 59), 1, 1)
+    PosterCallLog.reset()
+    GeocodeCallLog.reset()
+    val out = PatronPipeline.processActivePatrons(
+      sierraDf(activeSierraRows.last +: Seq(blank)), PipelineMode.NewPatrons,
+      deps(census = new CensusBatchGeocoder(new FixedResponsePoster("")),
+        nyc = new LoggedGeocoder("nyc")),
+      Seq(col("last_updated_timestamp")))
+    val got = out.select("patron_id", "geoid").collect()
+      .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(got == Seq(("obf(790)", null), ("obfuscated_6", null)))
+    assert(PosterCallLog.count == 0 && GeocodeCallLog.calls.isEmpty)
+  }
+
   test("DELETED patrons golden iteration (test_pipeline_controller.py:506-547)") {
     val deleted = PatronPipeline.withCanonicalId(spark.createDataFrame(Seq(
       Row(111L, dt(2022, 1, 1)), Row(222L, dt(2022, 2, 2)),
@@ -219,55 +279,54 @@ class PatronPipelineSpec extends AnyFunSuite {
   }
 }
 
-/** Driver-side scripted geocoder: records the exact input rows each tier
-  * received (the reference asserts these via mock call_args) and replies
-  * from a fixed key→geoid map per call.
+/** Records the keys of each batch it is handed and geocodes nothing. The
+  * log is static: tasks run in this JVM but on deserialized copies.
+  */
+final class LoggedGeocoder(tier: String) extends BatchGeocoder {
+  override def geocode(batch: Seq[(String, AddressParts)]): Map[String, String] = {
+    GeocodeCallLog.record(tier, batch.map(_._1))
+    Map.empty
+  }
+}
+
+object GeocodeCallLog {
+  private val log = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+  def reset(): Unit = log.clear()
+  def record(tier: String, keys: Seq[String]): Unit = log.add(tier -> keys.sorted)
+  def calls: Seq[(String, Seq[String])] = log.asScala.toSeq
+}
+
+/** Scripted geocoder: records the exact input rows each tier received
+  * (the reference asserts these via mock call_args) and replies from a
+  * fixed key→geoid map per call.
   */
 final class ScriptedGeocoder(responses: Seq[Map[String, String]])
     extends BatchGeocoder {
-  val calls: ListBuffer[Seq[Row]] = ListBuffer.empty
+  val calls: ListBuffer[Seq[(String, AddressParts)]] = ListBuffer.empty
 
-  override def geocode(df: DataFrame): DataFrame = {
-    val rows = df.collect().toSeq
-    calls += rows
+  override def geocode(batch: Seq[(String, AddressParts)]): Map[String, String] = {
+    calls += batch
     val resp = responses(calls.length - 1)
-    val out = rows.map { r =>
-      val key = r.getAs[String]("patron_id_plaintext")
-      Row(key, resp.getOrElse(key, null))
-    }
-    df.sparkSession.createDataFrame(out.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("patron_id_plaintext",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("geoid",
-          org.apache.spark.sql.types.StringType))))
+    batch.map { case (key, _) => key -> resp.getOrElse(key, null) }.toMap
   }
 }
 
 /** Geocode-cascade golden routing test (reference
   * test_process_unknown_patrons, tests/test_pipeline_controller.py:599-624):
   * exact inter-tier inputs `_CENSUS_INPUT_1/2`, `_NYC_INPUT` and the
-  * coalesced `_ALL_GEOIDS` output.
+  * coalesced `_ALL_GEOIDS` output, through the pure per-batch cascade.
   */
 class GeocodeCascadeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private val addrSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("address", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("city", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("region", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("postal_code", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("patron_id_plaintext", org.apache.spark.sql.types.StringType)))
-
   // _ORIGINAL_ADDRESS_DF (:172-182) — nulls, quote/backslash junk.
-  private def originalRows = Seq(
-    Row("123 address", "New York", "NY", "11111", "patid1"),
-    Row(null, null, null, null, "patid2"),
-    Row("456 address", "Brooklyn", "NY", "22222", "patid3"),
-    Row("789 address", "C\"hicag\\o", "IL", "33333-4444", "patid4"),
-    Row("012 address", "LA", "CA", "55555-6666", "patid5"),
-    Row("345 address", "Tokyo", null, "", "patid6"),
-    Row("678 address", "Bronx", "NY", "77777", "patid7"))
+  private def originalRows: Seq[(String, AddressParts)] = Seq(
+    ("123 address", "New York", "NY", "11111", "patid1"),
+    (null, null, null, null, "patid2"),
+    ("456 address", "Brooklyn", "NY", "22222", "patid3"),
+    ("789 address", "C\"hicag\\o", "IL", "33333-4444", "patid4"),
+    ("012 address", "LA", "CA", "55555-6666", "patid5"),
+    ("345 address", "Tokyo", null, "", "patid6"),
+    ("678 address", "Bronx", "NY", "77777", "patid7"))
+    .map { case (a, c, r, z, key) => key -> AddressParts(a, c, r, z, null) }
 
   test("cascade routing + coalesced geoids (test_pipeline_controller.py:599-624)") {
     val census = new ScriptedGeocoder(Seq(
@@ -280,16 +339,12 @@ class GeocodeCascadeSpec extends AnyFunSuite {
       Map("patid3" -> "99000111111")))
     val obf = new MapObfuscator(
       (1 to 7).map(i => s"patid$i" -> s"obfuscated_$i").toMap)
-    val d = PatronPipeline.Deps(obf, census, nyc,
-      null, null, null)
 
-    val unknown = spark.createDataFrame(originalRows.asJava, addrSchema)
-    val out = PatronPipeline.geocodeUnknown(unknown, d)
-      .collect().map(r => (r.getString(0), r.getString(1),
-        Option(r.getString(2)).orNull)).sortBy(_._1)
+    val out = PatronPipeline.geocodeUnknown(originalRows, obf, census, nyc)
+      .sortBy(_._1)
 
     // _ALL_GEOIDS (:241-247)
-    assert(out.toSeq == Seq(
+    assert(out == Seq(
       ("patid1", "obfuscated_1", "00111222222"),
       ("patid2", "obfuscated_2", null),
       ("patid3", "obfuscated_3", "99000111111"),
@@ -300,11 +355,9 @@ class GeocodeCascadeSpec extends AnyFunSuite {
 
     // _CENSUS_INPUT_1 (:184-202): patid2 dropped (empty address), junk
     // sanitized ('C"hicag\o' → 'Chicago').
-    val call1 = census.calls(0).map(r => (
-      r.getAs[String]("patron_id_plaintext"), r.getAs[String]("address"),
-      r.getAs[String]("city"), r.getAs[String]("region"),
-      r.getAs[String]("postal_code"), r.getAs[String]("full_address")))
-      .sortBy(_._1)
+    assert(census.calls.length == 2 && nyc.calls.length == 1)
+    val call1 = census.calls(0).map { case (k, p) =>
+      (k, p.address, p.city, p.region, p.postalCode, p.fullAddress) }.sortBy(_._1)
     assert(call1 == Seq(
       ("patid1", "123 address", "New York", "NY", "11111", "123 address New York NY 11111"),
       ("patid3", "456 address", "Brooklyn", "NY", "22222", "456 address Brooklyn NY 22222"),
@@ -314,11 +367,9 @@ class GeocodeCascadeSpec extends AnyFunSuite {
       ("patid7", "678 address", "Bronx", "NY", "77777", "678 address Bronx NY 77777")))
 
     // _CENSUS_INPUT_2 (:204-217): tier-1 misses, re-parsed.
-    val call2 = census.calls(1).map(r => (
-      r.getAs[String]("patron_id_plaintext"), r.getAs[String]("address"),
-      r.getAs[String]("city"), r.getAs[String]("region"),
-      r.getAs[String]("postal_code"), r.getAs[String]("house_number"),
-      r.getAs[String]("street_name"))).sortBy(_._1)
+    val call2 = census.calls(1).map { case (k, p) =>
+      (k, p.address, p.city, p.region, p.postalCode, p.houseNumber, p.streetName) }
+      .sortBy(_._1)
     assert(call2 == Seq(
       ("patid3", "456 address", "Brooklyn", "NY", "22222", "456", "address"),
       ("patid5", "012 address", "LA", "CA", "55555-6666", "012", "address"),
@@ -326,8 +377,7 @@ class GeocodeCascadeSpec extends AnyFunSuite {
       ("patid7", "678 address", "Bronx", "NY", "77777", "678", "address")))
 
     // _NYC_INPUT (:219-230): still-missing rows passing the P9 filter.
-    val call3 = nyc.calls(0).map(
-      _.getAs[String]("patron_id_plaintext")).sorted
+    val call3 = nyc.calls(0).map(_._1).sorted
     assert(call3 == Seq("patid3", "patid7"))
   }
 }

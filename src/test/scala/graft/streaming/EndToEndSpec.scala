@@ -47,7 +47,7 @@ class EndToEndSpec extends AnyFunSuite {
     PollClientRegistry.register("sierra_e2e", new SierraStandIn(rows))
 
     val deps = PatronPipeline.Deps(
-      new Sha256Obfuscator("salt"),
+      new MapObfuscator(Map.empty),
       new MapGeocoder(Map("123" -> "36061000100", "456" -> "36047000200")),
       new MapGeocoder(Map.empty),
       keys => spark.createDataFrame(Seq.empty[Row].asJava, Schemas.redshiftAddress),

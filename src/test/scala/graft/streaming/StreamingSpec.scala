@@ -48,7 +48,7 @@ class StreamingSpec extends AnyFunSuite {
         null, ts(2021, 2, 3), ts(2020, 12, 30), 1, 1))).write.parquet(s"$srcDir/b2")
 
     val deps = PatronPipeline.Deps(
-      new Sha256Obfuscator("salt"),
+      new MapObfuscator(Map.empty),
       new MapGeocoder(Map("123" -> "g1", "456" -> "g2", "999" -> "g9")),
       new MapGeocoder(Map.empty),
       keys => spark.createDataFrame(Seq.empty[Row].asJava, Schemas.redshiftAddress),
