@@ -3,7 +3,8 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.NullNode
+import com.fasterxml.jackson.databind.node.{NullNode, ObjectNode}
+import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
@@ -41,7 +42,7 @@ import com.fasterxml.jackson.databind.node.NullNode
   * WALL-CLOCK GOVERNOR (r14 verdict #1: the round's official bench was
   * rc=124/parsed:null because the default invocation outgrew the
   * driver's slot). The whole run works against one total budget
-  * (`SPARK_GRAFT_BENCH_BUDGET`, default 3600 s, measured from main()
+  * (`SPARK_GRAFT_BENCH_BUDGET`, default 3300 s, measured from main()
   * entry), degrades gracefully — the optional stages (pinned gate
   * bases, then the forked scale rehearsal, trimming its decade-2 tier
   * first via per-stage child budgets) shrink to the remaining time —
@@ -50,6 +51,12 @@ import com.fasterxml.jackson.databind.node.NullNode
   * leaves a complete headline artifact on disk instead of
   * `parsed: null`. Whatever is skipped is recorded in the artifact
   * (`pinned_base_skipped`, `rehearsal_skipped_budget`), never silent.
+  *
+  * `main` runs four stages in order: the headline ([[headlineStage]]),
+  * the pinned 1× gate bases ([[pinnedBasesStage]]), the forked
+  * rehearsal ([[rehearsalStage]]), and the final artifact with the
+  * compact stdout line ([[compactLine]]); [[Artifacts]] writes the
+  * artifact at each boundary.
   *
   * Each query is fully materialized via a noop write (count() could skip
   * projection work under column pruning).
@@ -160,17 +167,57 @@ object Bench {
     "q174_sharded_dedup_cut", "q175_sharded_dup_coverage",
     "q176_cross_shard_dedup_cut", "q178_cross_shard_dup_coverage")
 
+  /** One measured headline query: (name, secs, shuffle write bytes);
+    * -1/-1 when it failed in any pass.
+    */
+  private[graft] type Sample = (String, Double, Long)
+
+  /** The headline stage's outcome. `failed` names every query that
+    * failed in any run; the cache-warm maps record, per sharded-family
+    * member, whether its oracle-tier run rode a warm family cache.
+    */
+  private final case class Headline(passes: Seq[Seq[Sample]],
+      passResults: Seq[Sample], oracleResults: Seq[Sample], failed: Seq[String],
+      shardedCacheWarm: Seq[(String, Boolean)],
+      winnowCacheWarm: Seq[(String, Boolean)]) {
+    /** the headline minimums, then the oracle tier's single runs */
+    val results: Seq[Sample] = passResults ++ oracleResults
+    val total: Double = passResults.filter(_._2 >= 0).map(_._2).sum
+    // reconciliation field (r16 verdict #6): the headline `total`
+    // excludes the oracle tier by design, so an auditor summing the
+    // queries map lands `oracle_tier_secs` above it — publish the
+    // difference explicitly instead of making them read this file
+    val oracleTierSecs: Double = oracleResults.filter(_._2 >= 0).map(_._2).sum
+  }
+
+  /** The pinned 1× gate bases that were measured (see
+    * [[pinnedBasesStage]]), the queries the budget skipped and the
+    * no-broadcast queries whose every pinned run failed.
+    */
+  private[graft] final case class PinnedBases(bases: Map[String, (Double, Long)],
+      skipped: Seq[String], failed: Seq[String])
+
+  /** The queries whose 1× base is re-measured under the rehearsal's
+    * lcp/SA path pins, each with the budget reserve its run needs.
+    */
+  private val PathPinned: Seq[(String, Double)] = Seq(
+    "q137_suffix_array" -> 90.0, "q138_longest_dup_substring" -> 60.0)
+
+  /** The wall-clock governor: one total budget, measured from main() entry. */
+  private final class Governor(val budget: Double) {
+    private val t0 = System.nanoTime()
+    def elapsed: Double = (System.nanoTime() - t0) / 1e9
+    def remaining: Double = budget - elapsed
+  }
+
+  // Governor reserves: the fork needs at least this much to produce a
+  // usable 10× tier; below it the rehearsal (and the pinned bases that
+  // only exist to feed it) is skipped outright — explicitly recorded.
+  private val MinForkSecs = 500.0
+  private val FinalMargin = 90.0 // println + artifact write + spark.stop()
+  private val BaseFile = "scale_rehearsal_base.tsv"
+
   def main(args: Array[String]): Unit = {
-    val tStart = System.nanoTime()
-    // machine-load sample at run start (r15 verdict #4): rides in the
-    // artifact so a wall regression can be weighed against box
-    // contention without a quiet-box rerun (r14's "suffix-family
-    // regression" and r15's driver-vs-builder 195 vs 172 s were both
-    // uniform contention, diagnosable only by re-running)
-    val loadAvgStart: String =
-      try scala.io.Source.fromFile("/proc/loadavg").getLines()
-        .next().split(' ').take(3).mkString(",")
-      catch { case _: Exception => "" }
     // Total wall budget for the WHOLE bench (headline + pinned bases +
     // forked rehearsal), sized to the observed driver slot: r13's full
     // run passed at 3077 s TOTAL sbt wall (BENCH_r13.json's success
@@ -180,18 +227,65 @@ object Bench {
     // leave room for that overhead inside the slot: 3300 s + warm
     // startup (~30 s) stays inside 3600 s, and even a cold compile
     // (~200 s) keeps the total at ~3530 s.
-    val totalBudget =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "3300").toDouble
-    def elapsed: Double = (System.nanoTime() - tStart) / 1e9
-    def remaining: Double = totalBudget - elapsed
+    val gov = new Governor(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "3300").toDouble)
+    // machine-load sample at run start (r15 verdict #4): rides in the
+    // artifact so a wall regression can be weighed against box
+    // contention without a quiet-box rerun (r14's "suffix-family
+    // regression" and r15's two-box 195 vs 172 s were both uniform
+    // contention, diagnosable only by re-running)
+    val loadAvgStart: String =
+      try scala.io.Source.fromFile("/proc/loadavg").getLines()
+        .next().split(' ').take(3).mkString(",")
+      catch { case _: Exception => "" }
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the round artifacts belong to the sf0.1 benchmark run: a local
     // sf0.01 iteration must not overwrite them
     val atBenchSf = sfDir.endsWith("sf0.1")
-    val cpus = Harness.cpus
     val spark = Harness.session()
 
+    // ---- stage 1: headline ----
+    val h = headlineStage(spark, sfDir)
+    val out = new Artifacts(h, sfDir, atBenchSf, gov)
+    // per-query raw samples across the 3 passes (r15 verdict #4): min
+    // is the reported number, but the SPREAD is what distinguishes a
+    // real 10 % regression from a noisy box — contention inflates all
+    // three samples uniformly; a plan regression moves the min.
+    val rawJson = Harness.obj(h.passes.transpose.map { samples =>
+      samples.head._1 -> samples.map(s => Harness.fixed(s._2, 3))
+    }: _*)
+    out.write("headline", Seq(
+      "loadavg_start" -> loadAvgStart,
+      "sharded_cut_cache_warm" -> Harness.obj(h.shardedCacheWarm: _*),
+      "winnow_span_cache_warm" -> Harness.obj(h.winnowCacheWarm: _*),
+      "queries_raw" -> rawJson), NullNode.instance)
+
+    // ---- stages 2 and 3: pinned 1× gate bases, then the rehearsal fork ----
+    // Opt out with SPARK_GRAFT_SCALE_REHEARSAL=0.
+    val rehearse = sys.env.getOrElse("SPARK_GRAFT_SCALE_REHEARSAL", "1") == "1" &&
+      atBenchSf
+    val rehearsal: JsonNode =
+      if (!rehearse) NullNode.instance
+      else if (gov.remaining < MinForkSecs + FinalMargin) {
+        System.err.println(f"[bench] BUDGET: skipping rehearsal entirely " +
+          f"(remaining ${gov.remaining}%.0f s < ${MinForkSecs + FinalMargin}%.0f)")
+        out.write("rehearsal_skipped_budget",
+          Seq("rehearsal_skipped_budget" -> true), NullNode.instance)
+        NullNode.instance
+      } else rehearsalStage(spark, sfDir, h, out, gov)
+
+    // ---- stage 4: final artifact and the compact stdout line ----
+    val line = compactLine(h, rehearsal, sfDir, out.paths.headOption)
+    out.write("final", Nil, rehearsal)
+    println(Harness.json.writeValueAsString(line))
+    spark.stop()
+  }
+
+  /** The headline: an untimed warmup, THREE timed passes (per-query
+    * minimum), then the oracle tier's single runs.
+    */
+  private def headlineStage(spark: SparkSession, sfDir: String): Headline = {
     // A failed query must NEVER look like a fast success: Harness.run
     // reports failure, timed passes record -1 for any query that failed
     // in any pass, and the JSON carries an explicit errors key.
@@ -204,12 +298,12 @@ object Bench {
     if (new java.io.File(warmupDir).isDirectory && warmupDir != sfDir)
       headline.foreach(Harness.run(spark, _, warmupDir))
 
-    def timeOne(name: String): (String, Double, Long) = {
+    def timeOne(name: String): Sample = {
       val r = Harness.run(spark, name, sfDir)
       if (!r.ok) failed += name
       (name, r.secs, r.writeBytes)
     }
-    def timedPass(): Seq[(String, Double, Long)] =
+    def timedPass(): Seq[Sample] =
       headline.filterNot(oracleTier).map(timeOne)
     val passes = Seq.fill(3)(timedPass())
     val passResults = passes.transpose.map { samples =>
@@ -237,21 +331,19 @@ object Bench {
           graft.queries.IndexQueries.q176WinnowKey(sfDir))
       timeOne(name)
     }
-    val results = passResults ++ oracleResults
+    Headline(passes, passResults, oracleResults, failed.toSeq,
+      shardedCacheWarm.toSeq, winnowCacheWarm.toSeq)
+  }
 
-    // ---- incremental artifact writer ----------------------------------
-    // Called at every stage boundary from here on: the full headline map
-    // is durable the moment the 3 passes finish, and each later stage
-    // only ever REPLACES the artifact with a strictly richer one. A
-    // driver kill at any point after this line can no longer produce
-    // `parsed: null`.
-    val total = passResults.filter(_._2 >= 0).map(_._2).sum
-    // reconciliation field (r16 verdict #6): the headline `total`
-    // excludes the oracle tier by design, so an auditor summing the
-    // queries map lands `oracle_tier_secs` above it — publish the
-    // difference explicitly instead of making them read this file
-    val oracleTierSecs = oracleResults.filter(_._2 >= 0).map(_._2).sum
-    val round: Option[Int] = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt)
+  /** The incremental artifact writer, called at every stage boundary
+    * from the headline on: the full headline map is durable the moment
+    * the 3 passes finish, and each later stage only ever REPLACES the
+    * artifact with a strictly richer one. A kill at any point after the
+    * headline can no longer produce `parsed: null`.
+    */
+  private final class Artifacts(h: Headline, sfDir: String, atBenchSf: Boolean,
+                                gov: Governor) {
+    private val round: Option[Int] = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt)
       .orElse {
         // explicit UTF-8: the forked JVM's default charset follows the
         // POSIX locale (US-ASCII), and VERDICT.md's first line holds an
@@ -266,34 +358,34 @@ object Bench {
           None
         }
       }
-    val outPaths =
+    val paths: Seq[String] =
       (if (atBenchSf) Seq("bench_out.json") else Nil) ++ sys.env.get("SPARK_GRAFT_BENCH_OUT")
     // stage → governor-elapsed at the stage's artifact write: the
     // budget-tuning evidence (how long each stage ACTUALLY costs in a
     // driver run) rides along in every artifact.
-    val stageElapsed = scala.collection.mutable.LinkedHashMap[String, Double]()
+    private val stageElapsed = scala.collection.mutable.LinkedHashMap[String, Double]()
     // extras accumulate across stages: each artifact write REPLACES the
     // file, so a later stage must re-carry earlier stages' keys or the
     // final artifact silently loses them (pinned_base_skipped /
     // nobroadcast_base_failed were written at the pinned stage and
     // dropped by the final rewrite)
-    val stickyExtra = scala.collection.mutable.LinkedHashMap[String, Any]()
-    def writeArtifacts(stage: String, newExtra: Seq[(String, Any)],
-                       rehearsal: JsonNode): Unit = {
+    private val stickyExtra = scala.collection.mutable.LinkedHashMap[String, Any]()
+
+    def write(stage: String, newExtra: Seq[(String, Any)], rehearsal: JsonNode): Unit = {
       newExtra.foreach { case (k, v) => stickyExtra(k) = v }
-      stageElapsed(stage) = elapsed
+      stageElapsed(stage) = gov.elapsed
       val line = Harness.obj(Seq(
-        "metric" -> "total", "value" -> total, "unit" -> "sec",
-        "oracle_tier_secs" -> oracleTierSecs, "stage" -> stage,
-        "budget" -> totalBudget,
+        "metric" -> "total", "value" -> h.total, "unit" -> "sec",
+        "oracle_tier_secs" -> h.oracleTierSecs, "stage" -> stage,
+        "budget" -> gov.budget,
         "stage_elapsed" -> Harness.obj(stageElapsed.toSeq.map {
           case (k, v) => k -> Harness.fixed(v, 1) }: _*),
-        "queries" -> Harness.obj(results.map(r => r._1 -> r._2): _*),
-        "shuffle_bytes" -> Harness.obj(results.map(r => r._1 -> r._3): _*),
-        "errors" -> failed.toSeq,
+        "queries" -> Harness.obj(h.results.map(r => r._1 -> r._2): _*),
+        "shuffle_bytes" -> Harness.obj(h.results.map(r => r._1 -> r._3): _*),
+        "errors" -> h.failed,
         "oracle_tier" -> headline.filter(oracleTier)) ++ stickyExtra ++ Seq(
         "scale_rehearsal" -> rehearsal, "sf" -> sfDir): _*)
-      outPaths.foreach { path =>
+      paths.foreach { path =>
         try Harness.writeJson(path, line)
         catch { case e: Exception =>
           System.err.println(s"[bench] could not write $path: ${e.getMessage}")
@@ -313,6 +405,7 @@ object Bench {
       // while PERF compared the 32-CPU one; the `_c8` suffix matches
       // the driver's own BENCH_r18_c8.json naming).
       if (atBenchSf) round.foreach { n =>
+        val cpus = Harness.cpus
         val suffix = if (cpus == "32") "" else s"_c$cpus"
         try Harness.writeJson(f"BENCH_r$n%02d$suffix%s.json", Harness.obj(
           "n" -> n, "rc" -> None, "producer" -> "bench-self", "stage" -> stage,
@@ -323,325 +416,234 @@ object Bench {
         }
       }
     }
-    // per-query raw samples across the 3 passes (r15 verdict #4): min
-    // is the reported number, but the SPREAD is what distinguishes a
-    // real 10 % regression from a noisy box — contention inflates all
-    // three samples uniformly; a plan regression moves the min.
-    val rawJson = Harness.obj(passes.transpose.map { samples =>
-      samples.head._1 -> samples.map(s => Harness.fixed(s._2, 3))
-    }: _*)
-    writeArtifacts("headline", Seq(
-      "loadavg_start" -> loadAvgStart,
-      "sharded_cut_cache_warm" -> Harness.obj(shardedCacheWarm.toSeq: _*),
-      "winnow_span_cache_warm" -> Harness.obj(winnowCacheWarm.toSeq: _*),
-      "queries_raw" -> rawJson), NullNode.instance)
+  }
 
-    // ---- pinned 1× gate bases (budget-guarded) ------------------------
-    // Scale rehearsal (VERDICT r8 #5, re-architected r13 per VERDICT
-    // r12 #1): the heaviest operators run at derived 10× and 100×
-    // tiers (disjoint replicas — see ScaleData) in a DEDICATED FORKED
-    // JVM (fresh heap, fresh SparkSession — no residual block-manager
-    // state from the 172-query headline loop, which r12 showed can
-    // swing identical plans 22–165 s), with symmetric multi-run
-    // sampling, raw samples, and shuffle-byte exponents all published.
-    // See ScaleRehearsal for the protocol. Opt out with
-    // SPARK_GRAFT_SCALE_REHEARSAL=0.
-    val rehearse = sys.env.getOrElse("SPARK_GRAFT_SCALE_REHEARSAL", "1") == "1" &&
-      atBenchSf
-    // Governor reserves: the fork needs at least this much to produce a
-    // usable 10× tier; below it the rehearsal (and the pinned bases that
-    // only exist to feed it) is skipped outright — explicitly recorded.
-    val MinForkSecs = 500.0
-    val FinalMargin = 90.0 // println + artifact write + spark.stop()
-    val baseFile = "scale_rehearsal_base.tsv"
-    // The rehearsal child: a fresh JVM on the same classpath. 48g
-    // default heap (box: 128 GiB; the idle parent holds 32g): the 100×
-    // tier's SA build OOMed at 32g when identical 64-char start keys
-    // landed in ONE range partition. That ceiling is since fixed at the
-    // source (headRank range-partitions on (key, gid), so equal keys
-    // split — see SuffixArray.rangeByKeyGid); the headroom stays
-    // because the 100× tier's other sorts/joins are sized for it. The
-    // child's output goes to `logFile`: this process's stdout carries
-    // the one-line JSON contract and must stay clean.
-    def forkRehearsal(outFile: String, timeoutSecs: Long,
-                      env: Map[String, String], tmpDir: String,
-                      logFile: String): Boolean =
-      Harness.fork("graft.ScaleRehearsal", Seq(sfDir, baseFile, outFile),
-        new java.io.File(outFile), new java.io.File(tmpDir).getAbsoluteFile,
-        sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "48g"), timeoutSecs,
-        ProcessBuilder.Redirect.to(new java.io.File(logFile)), env)
-    // the child's artifact, or null when the rehearsal did not run or
-    // left no readable artifact (each case says so on stderr)
-    val rehearsal: JsonNode =
-      if (!rehearse) NullNode.instance
-      else if (remaining < MinForkSecs + FinalMargin) {
-        System.err.println(f"[bench] BUDGET: skipping rehearsal entirely " +
-          f"(remaining ${remaining}%.0f s < ${MinForkSecs + FinalMargin}%.0f)")
-        writeArtifacts("rehearsal_skipped_budget",
-          Seq("rehearsal_skipped_budget" -> true), NullNode.instance)
-        NullNode.instance
-      } else {
-      try {
-        // Like-for-like q138 exponent (round-11 verdict): the adaptive
-        // LCP dispatch picks broadcast-descent at 1× and hash-walk at
-        // 10× (the 10× corpus crosses the 256 MB boundary), so the
-        // naive exponent compares two different algorithms. Pin the
-        // hash-walk path and measure a fresh 1× base under the pin in
-        // THIS session (the headline SA cache is still warm, so this
-        // times the walk, not the build — matching the scaled run,
-        // which rides q137's 10× build); the child keeps the same pin.
-        // Pinned-base protocol (r14 ADVICE #2): gate bases get TWO runs
-        // (min) when the budget allows — the 1.1 gate threshold sits
-        // within single-run bytes variance for small queries — and a
-        // base whose every run fails is recorded in
-        // `nobroadcast_base_failed` and written as -1/-1 so the child
-        // lists the query as gate_not_evaluated instead of silently
-        // gating it against the unpinned (cross-plan) base.
-        val pinnedSkipped = scala.collection.mutable.ArrayBuffer[String]()
-        val nbBaseFailed = scala.collection.mutable.ArrayBuffer[String]()
-        // child-granularity (ScaleRehearsal.ChildGranularity) +
-        // no-broadcast pinned measurement of one query
-        def pinnedRuns(n: String, noBc: Boolean, maxRuns: Int): Option[(Double, Long)] =
-          Harness.withConf(spark, (if (noBc) ScaleRehearsal.NoBroadcastPins else Nil) :+
-              ScaleRehearsal.ChildGranularity: _*) {
-            val samples = (1 to maxRuns).flatMap { i =>
-              // second run only if the budget still has fork + margin room
-              if (i > 1 && remaining < MinForkSecs + FinalMargin + 60) None
-              else Some(Harness.run(spark, n, sfDir)).filter(_.ok)
-                .map(r => (r.secs, r.writeBytes))
+  /** The pinned 1× gate bases, measured in THIS session (budget-guarded).
+    *
+    * Like-for-like q138 exponent (round-11 verdict): the adaptive LCP
+    * dispatch picks broadcast-descent at 1× and hash-walk at 10× (the
+    * 10× corpus crosses the 256 MB boundary), so the naive exponent
+    * compares two different algorithms. Pin the hash-walk path and
+    * measure a fresh 1× base under the pin (the headline SA cache is
+    * still warm, so this times the walk, not the build — matching the
+    * scaled run, which rides q137's 10× build); the child keeps the
+    * same pin. Pinned-base protocol (r14 ADVICE #2): gate bases get TWO
+    * runs (min) when the budget allows — the 1.1 gate threshold sits
+    * within single-run bytes variance for small queries — and a base
+    * whose every run fails is recorded in `nobroadcast_base_failed` and
+    * written as -1/-1 so the child lists the query as
+    * gate_not_evaluated instead of silently gating it against the
+    * unpinned (cross-plan) base.
+    */
+  private def pinnedBasesStage(spark: SparkSession, sfDir: String, h: Headline,
+                               gov: Governor): PinnedBases = {
+    val pinnedSkipped = scala.collection.mutable.ArrayBuffer[String]()
+    val nbBaseFailed = scala.collection.mutable.ArrayBuffer[String]()
+    // child-granularity (ScaleRehearsal.ChildGranularity) +
+    // no-broadcast pinned measurement of one query
+    def pinnedRuns(n: String, noBc: Boolean, maxRuns: Int): Option[(Double, Long)] =
+      Harness.withConf(spark, (if (noBc) ScaleRehearsal.NoBroadcastPins else Nil) :+
+          ScaleRehearsal.ChildGranularity: _*) {
+        val samples = (1 to maxRuns).flatMap { i =>
+          // second run only if the budget still has fork + margin room
+          if (i > 1 && gov.remaining < MinForkSecs + FinalMargin + 60) None
+          else Some(Harness.run(spark, n, sfDir)).filter(_.ok)
+            .map(r => (r.secs, r.writeBytes))
+        }
+        if (samples.isEmpty) None
+        else Some((samples.map(_._1).min, samples.map(_._2).min))
+      }
+    // the hash pin stays up through the nbBases loop below: q174's
+    // sharded kernel is in NoBroadcastBase and its 1× base must be
+    // measured under the same lcp path the child pins at every
+    // tier (the only other adjacentLcp caller there is q138,
+    // handled here); cleared after the loop.
+    System.setProperty("graft.lcp.path", "hash")
+    // r18: the SA build's adaptive dispatch takes the single-task
+    // path at sf0.1 while every rehearsal tier pins distributed —
+    // re-measure q137's 1× base under the same pin (the q138
+    // precedent) so its exponent compares one algorithm. Runs
+    // BEFORE q138's pinned walk so the distributed rebuild lands
+    // on q137's base and the walk base rides its cache, exactly
+    // the tier-stage order.
+    System.setProperty("graft.sa.path", "distributed")
+    try {
+      val pathBases: Seq[(String, (Double, Long))] = PathPinned.flatMap {
+        case (n, reserve) =>
+          if (gov.remaining < MinForkSecs + FinalMargin + reserve) {
+            pinnedSkipped += n; None
+          } else pinnedRuns(n, noBc = false, maxRuns = 1).map(n -> _)
+      }
+      // Like-for-like 1× bases for the data-scaled-broadcast class
+      // (ScaleRehearsal.NoBroadcastBase): re-measure each with
+      // broadcast joins disabled — the join strategy every scaled
+      // tier (and any real 100 TB run) uses — so the child's
+      // exponent compares the same algorithm at both tiers. The
+      // headline numbers stay unpinned.
+      val nbBases: Map[String, (Double, Long)] =
+        ScaleRehearsal.NoBroadcastBase.iterator
+          .filter(n => headline.contains(n) && !h.failed.contains(n))
+          .flatMap { n =>
+            if (gov.remaining < MinForkSecs + FinalMargin + 30) {
+              pinnedSkipped += n; None
+            } else pinnedRuns(n, noBc = true,
+              // two-run min exists because the 1.1 gate sits within
+              // single-run bytes variance for SMALL queries; q174's
+              // fresh 4-shard kernel is ~40 s/run with 300 MB of
+              // writes — variance is relatively tiny and a second
+              // run costs real slot
+              maxRuns = if (n == "q174_sharded_dedup_cut") 1 else 2) match {
+              case Some(r) => Some(n -> r)
+              case None =>
+                System.err.println(s"[bench] WARNING: no-broadcast base " +
+                  s"re-measurement FAILED for $n — query will be " +
+                  "gate_not_evaluated, not gated against the unpinned base")
+                nbBaseFailed += n
+                None
             }
-            if (samples.isEmpty) None
-            else Some((samples.map(_._1).min, samples.map(_._2).min))
-          }
-        // the hash pin stays up through the nbBases loop below: q174's
-        // sharded kernel is in NoBroadcastBase and its 1× base must be
-        // measured under the same lcp path the child pins at every
-        // tier (the only other adjacentLcp caller there is q138,
-        // handled here); cleared after the loop.
-        System.setProperty("graft.lcp.path", "hash")
-        // r18: the SA build's adaptive dispatch takes the single-task
-        // path at sf0.1 while every rehearsal tier pins distributed —
-        // re-measure q137's 1× base under the same pin (the q138
-        // precedent) so its exponent compares one algorithm. Runs
-        // BEFORE q138's pinned walk so the distributed rebuild lands
-        // on q137's base and the walk base rides its cache, exactly
-        // the tier-stage order.
-        System.setProperty("graft.sa.path", "distributed")
-        val q137Pinned: Option[(Double, Long)] =
-          if (remaining < MinForkSecs + FinalMargin + 90) {
-            pinnedSkipped += "q137_suffix_array"; None
-          } else pinnedRuns("q137_suffix_array", noBc = false, maxRuns = 1)
-        val q138Pinned: Option[(Double, Long)] =
-          if (remaining < MinForkSecs + FinalMargin + 60) {
-            pinnedSkipped += "q138_longest_dup_substring"; None
-          } else pinnedRuns("q138_longest_dup_substring", noBc = false, maxRuns = 1)
-        // Like-for-like 1× bases for the data-scaled-broadcast class
-        // (ScaleRehearsal.NoBroadcastBase): re-measure each with
-        // broadcast joins disabled — the join strategy every scaled
-        // tier (and any real 100 TB run) uses — so the child's
-        // exponent compares the same algorithm at both tiers. The
-        // headline numbers above stay unpinned.
-        val nbBases: Map[String, (Double, Long)] =
-          ScaleRehearsal.NoBroadcastBase.iterator
-            .filter(n => headline.contains(n) && !failed.contains(n))
-            .flatMap { n =>
-              if (remaining < MinForkSecs + FinalMargin + 30) {
-                pinnedSkipped += n; None
-              } else pinnedRuns(n, noBc = true,
-                // two-run min exists because the 1.1 gate sits within
-                // single-run bytes variance for SMALL queries; q174's
-                // fresh 4-shard kernel is ~40 s/run with 300 MB of
-                // writes — variance is relatively tiny and a second
-                // run costs real slot
-                maxRuns = if (n == "q174_sharded_dedup_cut") 1 else 2) match {
-                case Some(r) => Some(n -> r)
-                case None =>
-                  System.err.println(s"[bench] WARNING: no-broadcast base " +
-                    s"re-measurement FAILED for $n — query will be " +
-                    "gate_not_evaluated, not gated against the unpinned base")
-                  nbBaseFailed += n
-                  None
-              }
-            }.toMap
-        System.clearProperty("graft.lcp.path")
-        System.clearProperty("graft.sa.path")
-        // 1× bases for the child: headline min-of-3 secs + min bytes;
-        // q138 overridden by the lcp-path pin, NoBroadcastBase queries
-        // by the no-broadcast pin. A query whose pinned base failed or
-        // was budget-skipped gets -1/-1 — the child maps that to
-        // gate_not_evaluated rather than a silent cross-plan exponent.
-        val baseLines = results.map {
-          case ("q137_suffix_array", _, _) =>
-            val (s, b) = q137Pinned.getOrElse((-1.0, -1L))
-            s"q137_suffix_array\t$s\t$b"
-          case ("q138_longest_dup_substring", _, _) =>
-            val (s, b) = q138Pinned.getOrElse((-1.0, -1L))
-            s"q138_longest_dup_substring\t$s\t$b"
-          case (n, _, _) if nbBases.contains(n) =>
-            s"$n\t${nbBases(n)._1}\t${nbBases(n)._2}"
-          case (n, _, _) if ScaleRehearsal.NoBroadcastBase.contains(n) =>
-            s"$n\t-1\t-1" // pinned base missing: never gate cross-plan
-          case (n, t, b) => s"$n\t$t\t$b"
-        }
-        writeArtifacts("pinned_bases", Seq(
-          "pinned_base_skipped" -> pinnedSkipped.distinct.toSeq,
-          "nobroadcast_base_failed" -> nbBaseFailed.toSeq), NullNode.instance)
+          }.toMap
+      PinnedBases(pathBases.toMap ++ nbBases, pinnedSkipped.distinct.toSeq,
+        nbBaseFailed.toSeq)
+    } finally {
+      System.clearProperty("graft.lcp.path")
+      System.clearProperty("graft.sa.path")
+    }
+  }
 
-        val outFile = "scale_rehearsal_out.json"
-        java.nio.file.Files.write(java.nio.file.Paths.get(baseFile),
-          (baseLines.mkString("\n") + "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // Child budgets from the governor's remaining wall, not fixed
-        // defaults (r14: fixed 700+1500+1200 s on top of the headline
-        // loop overflowed the slot → rc=124). Overhead covers child JVM
-        // start + sf0.001 warmup + ScaleData.ensure on existing data;
-        // tier-10 gets its measured need (~1100 s incl tie-breaks)
-        // capped by what's left; decade-2 gets the rest. Explicit env
-        // overrides still win (round-tooling full-budget runs).
-        // reserve the core-scaling probe's slice BEFORE the main fork
-        // (the fork consumes its whole budget whenever decade-2 has
-        // work, which is always on a full run — without the reserve
-        // the probe would be structurally budget-starved). The probe
-        // is a luxury next to the byte gates: it only takes its slice
-        // from wall the rehearsal fork would have ABOVE a 1800 s
-        // floor, so a tight driver slot gives the gates everything
-        // and records the probe as skipped_budget.
-        val probeReserve =
-          if (sys.env.getOrElse("SPARK_GRAFT_CORE_PROBE", "1") == "1")
-            math.min(420.0, math.max(0.0, remaining - FinalMargin - 1800.0))
-          else 0.0
-        val forkBudget = remaining - FinalMargin - probeReserve
-        val childOverhead = 250.0
-        // 0.50 split since r16 (was 0.45): tier-10 gained q174 (~220 s
-        // cold single), and a tier-10 budget-out costs MORE than a
-        // decade-2 one — the tier-10 sample is also the member's
-        // decade-2 base, while skipped decade-2 members carry
-        // committed evidence inline (evidence_prior)
-        val budget10 = sys.env.get("SPARK_GRAFT_REHEARSAL_BUDGET")
-          .map(_.toDouble)
-          .getOrElse(math.min(1600.0, math.max(300.0, (forkBudget - childOverhead) * 0.50)))
-        val budget100 = sys.env.get("SPARK_GRAFT_DECADE2_BUDGET")
-          .map(_.toDouble)
-          .getOrElse(math.max(0.0, forkBudget - childOverhead - budget10))
-        val forked = forkRehearsal(outFile,
-          timeoutSecs = math.max(60, forkBudget.toLong),
-          env = Map(
-            "SPARK_GRAFT_REHEARSAL_BUDGET" -> budget10.toLong.toString,
-            "SPARK_GRAFT_DECADE2_BUDGET" -> budget100.toLong.toString),
-          tmpDir = "scale_rehearsal_tmp", logFile = "scale_rehearsal_child.log")
-        if (forked) Harness.readJson(outFile)
-        else {
-          System.err.println("[bench] scale rehearsal failed: the child " +
-            s"wrote no $outFile (see scale_rehearsal_child.log)")
-          NullNode.instance
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] scale rehearsal failed: ${e.getMessage}")
-        System.clearProperty("graft.lcp.path")
-        System.clearProperty("graft.sa.path")
-        NullNode.instance
+  /** The rehearsal child's 1× bases, one `name<TAB>secs<TAB>bytes` line
+    * per result: the headline min-of-3 secs and min bytes, except that
+    * q137/q138 and the NoBroadcastBase queries take their pinned base.
+    * A query whose pinned base failed or was budget-skipped gets -1/-1 —
+    * the child maps that to gate_not_evaluated rather than a silent
+    * cross-plan exponent.
+    */
+  private[graft] def baseLines(results: Seq[Sample], pinned: PinnedBases): Seq[String] =
+    results.map { case (n, t, b) =>
+      pinned.bases.get(n) match {
+        case Some((s, w)) => s"$n\t$s\t$w"
+        case None if PathPinned.exists(_._1 == n) ||
+            ScaleRehearsal.NoBroadcastBase.contains(n) =>
+          s"$n\t-1\t-1" // pinned base missing: never gate cross-plan
+        case None => s"$n\t$t\t$b"
       }
     }
-    // the deterministic shuffle-bytes gate (r13 verdict #8): union of
-    // every tier's failures — non-empty means a plan got superlinear in
-    // BYTES, which no amount of wall-clock noise can explain away.
-    // Carried on the compact line AND shouted to stderr so the
-    // regression cannot land silently.
+
+  /** The pinned bases, then the scale rehearsal in a forked child; the
+    * child's artifact, or null when it left no readable artifact (each
+    * case says so on stderr).
+    *
+    * Scale rehearsal (VERDICT r8 #5, re-architected r13 per VERDICT
+    * r12 #1): the heaviest operators run at derived 10× and 100× tiers
+    * (disjoint replicas — see ScaleData) in a DEDICATED FORKED JVM
+    * (fresh heap, fresh SparkSession — no residual block-manager state
+    * from the 172-query headline loop, which r12 showed can swing
+    * identical plans 22–165 s), with symmetric multi-run sampling, raw
+    * samples, and shuffle-byte exponents all published. See
+    * ScaleRehearsal for the protocol.
+    */
+  private def rehearsalStage(spark: SparkSession, sfDir: String, h: Headline,
+                             out: Artifacts, gov: Governor): JsonNode =
+    try {
+      val pinned = pinnedBasesStage(spark, sfDir, h, gov)
+      out.write("pinned_bases", Seq(
+        "pinned_base_skipped" -> pinned.skipped,
+        "nobroadcast_base_failed" -> pinned.failed), NullNode.instance)
+
+      val outFile = "scale_rehearsal_out.json"
+      java.nio.file.Files.write(java.nio.file.Paths.get(BaseFile),
+        (baseLines(h.results, pinned).mkString("\n") + "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      // Child budgets from the governor's remaining wall, not fixed
+      // defaults (r14: fixed 700+1500+1200 s on top of the headline
+      // loop overflowed the slot → rc=124). Overhead covers child JVM
+      // start + sf0.001 warmup + ScaleData.ensure on existing data;
+      // tier-10 gets its measured need (~1100 s incl tie-breaks)
+      // capped by what's left; decade-2 gets the rest. Explicit env
+      // overrides still win (round-tooling full-budget runs).
+      val forkBudget = gov.remaining - FinalMargin
+      val childOverhead = 250.0
+      // 0.50 split since r16 (was 0.45): tier-10 gained q174 (~220 s
+      // cold single), and a tier-10 budget-out costs MORE than a
+      // decade-2 one — the tier-10 sample is also the member's
+      // decade-2 base, while skipped decade-2 members carry
+      // committed evidence inline (evidence_prior)
+      val budget10 = sys.env.get("SPARK_GRAFT_REHEARSAL_BUDGET")
+        .map(_.toDouble)
+        .getOrElse(math.min(1600.0, math.max(300.0, (forkBudget - childOverhead) * 0.50)))
+      val budget100 = sys.env.get("SPARK_GRAFT_DECADE2_BUDGET")
+        .map(_.toDouble)
+        .getOrElse(math.max(0.0, forkBudget - childOverhead - budget10))
+      // The rehearsal child: a fresh JVM on the same classpath. 48g
+      // default heap (box: 128 GiB; the idle parent holds 32g): the
+      // 100× tier's SA build OOMed at 32g when identical 64-char start
+      // keys landed in ONE range partition. That ceiling is since fixed
+      // at the source (headRank range-partitions on (key, gid), so
+      // equal keys split — see SuffixArray.rangeByKeyGid); the headroom
+      // stays because the 100× tier's other sorts/joins are sized for
+      // it. The child's output goes to its log file: this process's
+      // stdout carries the one-line JSON contract and must stay clean.
+      val forked = Harness.fork("graft.ScaleRehearsal", Seq(sfDir, BaseFile, outFile),
+        new java.io.File(outFile),
+        new java.io.File("scale_rehearsal_tmp").getAbsoluteFile,
+        sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "48g"),
+        timeoutSecs = math.max(60, forkBudget.toLong),
+        ProcessBuilder.Redirect.to(new java.io.File("scale_rehearsal_child.log")),
+        env = Map(
+          "SPARK_GRAFT_REHEARSAL_BUDGET" -> budget10.toLong.toString,
+          "SPARK_GRAFT_DECADE2_BUDGET" -> budget100.toLong.toString))
+      if (forked) Harness.readJson(outFile)
+      else {
+        System.err.println("[bench] scale rehearsal failed: the child " +
+          s"wrote no $outFile (see scale_rehearsal_child.log)")
+        NullNode.instance
+      }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] scale rehearsal failed: ${e.getMessage}")
+      NullNode.instance
+    }
+
+  /** The stdout line, COMPACT to fit a ~2 KB stdout tail capture (the
+    * full line is >10 KB; every round's captured artifact through r11
+    * recorded `parsed: null` because only a truncated suffix of it
+    * survived the capture). It keeps the one-line contract —
+    * one JSON line with metric/value/queries — carrying the 10 slowest
+    * queries plus the rehearsal exponents; the complete per-query data
+    * lands in the artifact named by `full` and the directly-written
+    * BENCH_r<N>.json.
+    *
+    * The deterministic shuffle-bytes gate (r13 verdict #8) rides on it:
+    * the union of every tier's failures — non-empty means a plan got
+    * superlinear in BYTES, which no amount of wall-clock noise can
+    * explain away — and the queries the gate never evaluated (r14
+    * ADVICE #1), both also shouted to stderr so neither can land
+    * silently or read as a pass.
+    */
+  private def compactLine(h: Headline, rehearsal: JsonNode, sfDir: String,
+                          full: Option[String]): ObjectNode = {
     def strings(arr: JsonNode): Seq[String] = arr.asScala.map(_.asText).toSeq
     val failing = Seq("tier10", "decade2")
       .flatMap(t => strings(rehearsal.path(t).path("bytes_gate_failures"))).distinct
     if (failing.nonEmpty)
       System.err.println("[bench] BYTES-EXPONENT GATE FAILED (exp > " +
         s"${ScaleRehearsal.BytesGateMax}): ${failing.mkString(", ")}")
-    // queries the gate never evaluated (r14 ADVICE #1): the child
-    // publishes the union list; shout it so an ungated query can't
-    // read as a pass
     val notEval = strings(rehearsal.path("gate_not_evaluated"))
     if (notEval.nonEmpty)
       System.err.println("[bench] BYTES GATE NOT EVALUATED for: " +
         notEval.mkString(", "))
-
-    // ---- core-scaling probe at the 10× tier (r18 verdict item 2) ----
-    // The driver's 8-vs-32-CPU comparison runs at sf0.1, where nearly
-    // every query is per-stage-scheduling-bound — structurally unable
-    // to show core scaling (r18's all-0.93–1.13 ratios). Real evidence
-    // needs data-bound work: re-run three data-bound queries at the 10×
-    // tier in a FRESH 8-CPU child (same pins, same fixed
-    // shuffle.partitions — only the core count differs from the main
-    // rehearsal's tier-10 samples) and publish both sides plus the
-    // wall ratio. Budget-guarded and additive: skipping it changes
-    // nothing else in the artifact.
-    val coreProbeJson: JsonNode = {
-      val probeQs = Seq("q24_ngram_jaccard", "q121_containment_dedup",
-        "q127_dup_substring_cut")
-      val MinProbeSecs = 300.0
-      def tier10Secs(artifact: JsonNode): Map[String, Double] =
-        artifact.path("tier10").path("queries").properties().asScala
-          .map(e => e.getKey -> e.getValue.asDouble).toMap
-      val ref = tier10Secs(rehearsal)
-        .filter { case (k, v) => probeQs.contains(k) && v > 0 }
-      if (sys.env.getOrElse("SPARK_GRAFT_CORE_PROBE", "1") != "1" ||
-          ref.isEmpty) NullNode.instance
-      else if (remaining < MinProbeSecs + FinalMargin) {
-        System.err.println(f"[bench] BUDGET: skipping core-scaling probe " +
-          f"(remaining $remaining%.0f s < ${MinProbeSecs + FinalMargin}%.0f)")
-        Harness.node("skipped_budget")
-      } else try {
-        val probeOut = "scale_rehearsal_core_probe.json"
-        val probeBudget = math.min(900.0, remaining - FinalMargin - 30.0)
-        val okFork = forkRehearsal(probeOut,
-          timeoutSecs = math.max(60, probeBudget.toLong),
-          env = Map(
-            "SPARK_GRAFT_CPUS" -> "8",
-            "SPARK_GRAFT_REHEARSAL_QUERIES" -> probeQs.mkString(","),
-            "SPARK_GRAFT_REHEARSAL_BUDGET" ->
-              math.max(60, (probeBudget - 150).toLong).toString,
-            "SPARK_GRAFT_DECADE2_BUDGET" -> "0"),
-          tmpDir = "scale_rehearsal_tmp_core_probe",
-          logFile = "scale_rehearsal_core_probe.log")
-        if (!okFork) Harness.node("fork_unavailable")
-        else {
-          val c8 = tier10Secs(Harness.readJson(probeOut)).filter(_._2 > 0)
-          val entries = probeQs.filter(n => ref.contains(n) && c8.contains(n))
-          if (entries.isEmpty) Harness.node("probe_incomplete")
-          else {
-            def m(f: String => Double): JsonNode =
-              Harness.obj(entries.map(n => n -> Harness.fixed(f(n), 3)): _*)
-            Harness.obj("tier" -> "10x", "cpus_ref" -> cpus.toInt,
-              "cpus_probe" -> 8, "secs_ref" -> m(ref), "secs_probe" -> m(c8),
-              "wall_ratio_probe_over_ref" -> m(n => c8(n) / ref(n)))
-          }
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] core-scaling probe failed: ${e.getMessage}")
-        Harness.node("probe_failed")
-      }
-    }
-
-    writeArtifacts("final", Seq("core_scaling_10x" -> coreProbeJson), rehearsal)
-    // stdout gets a COMPACT line that fits the driver's ~2 KB stdout
-    // tail capture (the full line is >10 KB; every round's driver
-    // artifact through r11 recorded `parsed: null` because only a
-    // truncated suffix of it survived the capture). The compact form
-    // keeps the driver contract — one JSON line with metric/value/
-    // queries — carrying the 10 slowest queries plus the rehearsal
-    // exponents; the complete per-query data lands in the artifact
-    // named by `full` and the directly-written BENCH_r<N>.json.
-    val topQ = passResults.filter(_._2 >= 0).sortBy(-_._2).take(10)
+    val topQ = h.passResults.filter(_._2 >= 0).sortBy(-_._2).take(10)
       .map { case (k, v, _) => k -> Harness.fixed(v, 2) }
     // n_queries counts the full queries map (r15 verdict #3: the
     // compact line said 172 while bench_out.json and CORRECTNESS held
     // 173 — passResults excludes the oracle tier, `results` doesn't)
-    println(Harness.json.writeValueAsString(Harness.obj(
-      "metric" -> "total", "value" -> Harness.fixed(total, 1), "unit" -> "sec",
-      "oracle_tier_secs" -> Harness.fixed(oracleTierSecs, 1),
-      "n_queries" -> results.size, "queries" -> Harness.obj(topQ: _*),
-      "errors" -> failed.toSeq,
+    Harness.obj(
+      "metric" -> "total", "value" -> Harness.fixed(h.total, 1), "unit" -> "sec",
+      "oracle_tier_secs" -> Harness.fixed(h.oracleTierSecs, 1),
+      "n_queries" -> h.results.size, "queries" -> Harness.obj(topQ: _*),
+      "errors" -> h.failed,
       // compact-line exponents: the child's tier10 exponent map
       "scale_exponent" -> rehearsal.path("tier10").path("exponent"),
       "bytes_gate_failures" -> (if (rehearsal.isObject) Some(failing) else None),
       "gate_not_evaluated" -> notEval,
-      "sf" -> sfDir, "full" -> outPaths.headOption)))
-    spark.stop()
+      "sf" -> sfDir, "full" -> full)
   }
 }

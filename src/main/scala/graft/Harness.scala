@@ -105,26 +105,34 @@ object Harness {
   final case class Run(ok: Boolean, secs: Double, writeBytes: Long,
                        readBytes: Long, inputBytes: Long)
 
+  /** Evaluate one query under its lifetime: `body` runs, then the
+    * query-transient persists are released, failed or not — without
+    * this, 173 queries × 3 passes accumulate dozens of un-evictable
+    * MEMORY_AND_DISK tables, and the storage pressure makes later runs
+    * of unrelated queries spike (the r13 q112 variance — see
+    * TransientPersists). Then the eager checkpoints the query created —
+    * the ones its result is rooted at included — are freed through
+    * [[Checkpoints.scope]], except the [[SuffixArray.cached]] entries
+    * later queries ride. [[run]] and [[Verify.dump]] evaluate every
+    * query through it.
+    */
+  def queryLifetime[T](spark: SparkSession)(body: => T): T =
+    Checkpoints.scope(spark, keep = SuffixArray.cachedFrames) {
+      try body finally TransientPersists.releaseAll()
+    }
+
   /** Fully materialize the registered query `name` over `dir` through a
     * noop write (count() could skip projection work under column
-    * pruning) and measure it. A failed or unregistered query must NEVER
-    * look like a fast success (round 7: 13 broken queries were recorded
-    * as ~0.06 s / 0-shuffle-byte wins), so it comes back ok=false with
-    * -1 fields and a stderr line.
-    *
-    * Query-transient persists are released after every run, failed or
-    * not: without this, 173 queries × 3 passes accumulate dozens of
-    * un-evictable MEMORY_AND_DISK tables, and the storage pressure makes
-    * later runs of unrelated queries spike (the r13 q112 variance — see
-    * TransientPersists). After the clock stops, the eager checkpoints
-    * the run created — the ones its result is rooted at included — are
-    * freed through [[Checkpoints.scope]], except the
-    * [[SuffixArray.cached]] entries later queries ride.
+    * pruning) and measure it, under [[queryLifetime]]; the clock stops
+    * before the lifetime's releases. A failed or unregistered query
+    * must NEVER look like a fast success (round 7: 13 broken queries
+    * were recorded as ~0.06 s / 0-shuffle-byte wins), so it comes back
+    * ok=false with -1 fields and a stderr line.
     */
   def run(spark: SparkSession, name: String, dir: String): Run = {
     val c = counters(spark)
     val (w0, r0, i0) = (c.bytes.get(), c.readBytes.get(), c.inputBytes.get())
-    val (ok, secs) = Checkpoints.scope(spark, keep = SuffixArray.cachedFrames) {
+    val (ok, secs) = queryLifetime(spark) {
       val t0 = System.nanoTime()
       val ok =
         try SparkEntry.queries.get(name) match {
@@ -137,7 +145,7 @@ object Harness {
         } catch { case e: Throwable =>
           System.err.println(s"[harness] $name failed at $dir: ${e.getMessage}")
           false
-        } finally TransientPersists.releaseAll()
+        }
       (ok, (System.nanoTime() - t0) / 1e9)
     }
     if (ok) Run(ok = true, secs, c.bytes.get() - w0, c.readBytes.get() - r0,

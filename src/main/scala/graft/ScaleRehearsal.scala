@@ -37,6 +37,11 @@ import org.apache.spark.sql.SparkSession
   * bytes curve — the 10× tier tops out near 1 GB, and a 100 TB design
   * claim deserves more than one decade of evidence. Budget-capped with
   * the skipped tail listed explicitly (no silent truncation).
+  *
+  * [[runAll]] is the two tiers in order, [[tier10]] then [[decade2]].
+  * The artifact carries the bytes gate's evidence and the protocol it
+  * ran under: per-tier samples, bytes, exponents, gate failures, and
+  * the not-evaluated list with committed prior evidence beside it.
   */
 object ScaleRehearsal {
 
@@ -534,11 +539,90 @@ object ScaleRehearsal {
       Harness.run(spark, name, dir)
     }
 
+  /** The 1× bases: query → (secs, shuffle write bytes). */
+  private[graft] type Base = Map[String, (Double, Long)]
+
+  /** One `name<TAB>secs<TAB>bytes` line per query; other lines are skipped. */
+  private def readBase(file: String): Base =
+    scala.io.Source.fromFile(file).getLines().flatMap { line =>
+      line.split('\t') match {
+        case Array(n, s, b) => Some(n -> (s.toDouble, b.toLong))
+        case _ => None
+      }
+    }.toMap
+
+  /** Per-decade exponent of `x` over its 1× value `base`, or -999
+    * (unmeasurable) when either side is missing or not positive.
+    */
+  private def exponent(x: Double, base: Option[Double], decades: Int): Double =
+    base match {
+      case Some(b) if x > 0 && b > 0 => math.log10(x / b) / decades
+      case _ => -999.0
+    }
+  private def secsExp(base: Base, name: String, secs: Double, decades: Int): Double =
+    exponent(secs, base.get(name).map(_._1), decades)
+  private def bytesExp(base: Base, name: String, bytes: Long, decades: Int): Double =
+    exponent(bytes.toDouble, base.get(name).map(_._2.toDouble), decades)
+
+  /** A query's reported seconds over its samples: the min of one or two
+    * successful ones (contention noise is strictly additive, so the min
+    * is the engine cost), the median of three (the tie-break decides a
+    * disagreement); -1 when none succeeded.
+    */
+  private[graft] def finalSecs(s: Seq[Double]): Double = {
+    val ok = s.filter(_ > 0)
+    if (ok.isEmpty) -1.0
+    else if (ok.size <= 2) ok.min
+    else ok.sorted.apply(ok.size / 2)
+  }
+  private def minBytes(s: Seq[Long]): Long = {
+    val ok = s.filter(_ >= 0)
+    if (ok.isEmpty) -1L else ok.min
+  }
+
+  /** One tier row: reported seconds, write/read/input bytes, raw runs. */
+  private[graft] final case class Row(name: String, secs: Double,
+      writeBytes: Long, readBytes: Long, inputBytes: Long,
+      runs: Seq[Harness.Run])
+
+  /** The measured 10× tier: its rows and budget skips, read against the
+    * 1× `base`. Which exponent gates a query is tier policy:
+    *  - decade-2 members gate on their LAST decade (10×→100×), where
+    *    plan transitions have settled — the 1×→10× decade is published
+    *    but deferred (`deferred`);
+    *  - everything else gates on 1×→10× (`gate`), with NoBroadcastBase
+    *    pinned all-shuffle so the compared plans match;
+    *  - BytesGateExempt rows are excluded, reasons published.
+    */
+  private[graft] final class Tier10(val rows: Seq[Row], val skipped: Seq[String],
+                                    decade2Names: Seq[String], val base: Base) {
+    val gate: Seq[(String, Double)] = rows.collect {
+      case r if !decade2Names.contains(r.name) && !BytesGateExempt.contains(r.name) =>
+        r.name -> bytesExp(base, r.name, r.writeBytes, 1)
+    }
+    val deferred: Seq[String] = rows.map(_.name).filter(decade2Names.contains)
+      .filterNot(BytesGateExempt.contains)
+
+    /** The explicit not-a-pass list (r14 ADVICE #1): every gate-subject
+      * query whose exponent the artifact does NOT actually carry —
+      * tier-10 rows with a missing/-1 base (-999 exponents), tier-10
+      * budget skips, and deferred-to-decade-2 members whose last-decade
+      * exponent never materialized (never ran, failed at 100×, or the
+      * whole 100× tier never ran). Published at top level and shouted
+      * by Bench so `bytes_gate_ok: true` can never silently cover an
+      * unevaluated query.
+      */
+    def notEvaluated(d2Evaluated: Set[String]): Seq[String] =
+      (gate.collect { case (n, e) if e == -999.0 => n } ++
+        skipped.filterNot(BytesGateExempt.contains) ++
+        deferred.filterNot(d2Evaluated)).distinct
+  }
+
   /** args: sfDir baseFile outFile.
     * baseFile: one `name<TAB>secs<TAB>bytes` line per headline query
     * (1× minimums from the parent's 3-pass loop; q138's entry is the
     * pinned-hash base). outFile: the rehearsal JSON, written after the
-    * 10× tier and rewritten after the 100× tier so a crashed/killed
+    * 10× tier and rewritten after each 100× member so a crashed/killed
     * child still leaves the completed tiers on disk.
     */
   def main(args: Array[String]): Unit = {
@@ -548,8 +632,9 @@ object ScaleRehearsal {
     finally spark.stop()
   }
 
-  /** The rehearsal proper. Stage budgets come from the env, which the
-    * forked child receives from Bench's governor.
+  /** The rehearsal proper: [[tier10]], then [[decade2]]. Stage budgets
+    * come from the env, which the forked child receives from Bench's
+    * governor.
     */
   def runAll(spark: SparkSession, sfDir: String, baseFile: String,
              outFile: String): Unit = {
@@ -570,13 +655,7 @@ object ScaleRehearsal {
       f => ScaleRehearsal.names.filter(f))
     val decade2Names = only.fold(ScaleRehearsal.decade2Names)(
       f => ScaleRehearsal.decade2Names.filter(f))
-    val base: Map[String, (Double, Long)] =
-      scala.io.Source.fromFile(baseFile).getLines().flatMap { line =>
-        line.split('\t') match {
-          case Array(n, s, b) => Some(n -> (s.toDouble, b.toLong))
-          case _ => None
-        }
-      }.toMap
+    val base = readBase(baseFile)
     // q138's adaptive LCP dispatch picks broadcast-descent at 1× and
     // hash-walk at 10×; pin hash for the whole rehearsal so the
     // exponent compares the same algorithm (the 1× base in baseFile
@@ -588,22 +667,27 @@ object ScaleRehearsal {
     // lcp pin; Bench re-measures q137's 1× base under the same pin.
     System.setProperty("graft.sa.path", "distributed")
 
-    def runOne(name: String, dir: String): Harness.Run = runPinned(spark, name, dir)
-    def expOf(name: String, secs: Double, decades: Int): Double =
-      base.get(name) match {
-        case Some((b, _)) if secs > 0 && b > 0 =>
-          math.log10(secs / b) / decades
-        case _ => -999.0
-      }
-
     // JIT/codegen warmup on the smallest SF — this JVM is cold, and an
     // unwarmed pass-1 would systematically disagree with pass-2.
     val warmupDir = "/root/testdata/sf0.001"
-    val allNames = (names ++ decade2Names).distinct
     if (new java.io.File(warmupDir).isDirectory)
-      allNames.foreach(runOne(_, warmupDir))
+      (names ++ decade2Names).distinct.foreach(runPinned(spark, _, warmupDir))
 
-    // ---- 10× tier: two interleaved passes + tie-break ----
+    val t10 = tier10(spark, sfDir, names, decade2Names, base)
+    def writeOut(decade2Json: JsonNode, d2Evaluated: Set[String]): Unit =
+      Harness.writeJson(outFile, artifact(t10, decade2Json, d2Evaluated))
+    writeOut(NullNode.instance, Set.empty) // 10× tier is durable even if 100× dies
+    val budget100 = sys.env.getOrElse("SPARK_GRAFT_DECADE2_BUDGET", "1200").toDouble
+    if (budget100 > 0)
+      decade2(spark, sfDir, decade2Names, t10, budget100, writeOut)
+  }
+
+  /** The 10× tier: two interleaved passes plus a tie-break pass, under
+    * the `SPARK_GRAFT_REHEARSAL_BUDGET` deadline (see the class doc's
+    * sampling protocol).
+    */
+  private def tier10(spark: SparkSession, sfDir: String, names: Seq[String],
+                     decade2Names: Seq[String], base: Base): Tier10 = {
     ScaleData.ensure(spark, sfDir, ScaledDir10, 10)
     // Default sized for the observed pass profile: pass 1 pays the
     // scaled-tier codegen/JIT (the warmup covers the sf0.001 plan
@@ -614,504 +698,284 @@ object ScaleRehearsal {
     val budget10 = sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_BUDGET", "1500").toDouble
     val deadline10 = System.nanoTime() + (budget10 * 1e9).toLong
     def inBudget10: Boolean = System.nanoTime() < deadline10
+    def runOne(name: String): Harness.Run = runPinned(spark, name, ScaledDir10)
     val samples = scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.ArrayBuffer[Harness.Run]]()
     names.foreach(n => samples(n) = scala.collection.mutable.ArrayBuffer.empty)
     // pass 1
     names.foreach { n =>
-      if (inBudget10) samples(n) += runOne(n, ScaledDir10)
+      if (inBudget10) samples(n) += runOne(n)
     }
     // pass 2 (skip failures, budget-outs, and over-cutoff singles)
     names.foreach { n =>
       val s = samples(n)
       if (inBudget10 && s.nonEmpty && s.head.ok &&
           s.head.secs <= SingleRunCutoffSecs)
-        s += runOne(n, ScaledDir10)
+        s += runOne(n)
     }
     // tie-break pass: two samples whose implied exponents disagree
     names.foreach { n =>
       val s = samples(n)
       if (inBudget10 && s.size == 2 && s.forall(_.ok) &&
-          math.abs(expOf(n, s(0).secs, 1) - expOf(n, s(1).secs, 1)) > AgreeTol)
-        s += runOne(n, ScaledDir10)
+          math.abs(secsExp(base, n, s(0).secs, 1) -
+            secsExp(base, n, s(1).secs, 1)) > AgreeTol)
+        s += runOne(n)
     }
-    def finalSecs(s: Seq[Double]): Double = {
-      val ok = s.filter(_ > 0)
-      if (ok.isEmpty) -1.0
-      else if (ok.size <= 2) ok.min // additive noise ⇒ min is the engine cost
-      else ok.sorted.apply(ok.size / 2) // median decides a disagreement
-    }
-    def minBytes(s: Seq[Long]): Long = { val ok = s.filter(_ >= 0); if (ok.isEmpty) -1L else ok.min }
-    /** One tier row: (name, secs, write, read, input bytes, raw samples). */
-    type Row = (String, Double, Long, Long, Long, Seq[Harness.Run])
-    val tier10: Seq[Row] = names.map { n =>
+    val rows = names.map { n =>
       val s = samples(n).toSeq
-      (n, finalSecs(s.map(_.secs)), minBytes(s.map(_.writeBytes)),
+      Row(n, finalSecs(s.map(_.secs)), minBytes(s.map(_.writeBytes)),
         minBytes(s.map(_.readBytes)), minBytes(s.map(_.inputBytes)), s)
     }
-    def bytesExp(name: String, bytes: Long, decades: Int): Double =
-      base.get(name) match {
-        case Some((_, b)) if bytes > 0 && b > 0 =>
-          math.log10(bytes.toDouble / b) / decades
-        case _ => -999.0
-      }
-    /** The deterministic gate: any measurable WRITE-bytes exponent in
-      * `gateExps` above BytesGateMax is asserted as a failure IN the
-      * artifact, so plan-level superlinearity cannot hide behind
-      * wall-clock noise. Which exponent gates a query is tier policy:
-      *  - decade-2 members gate on their LAST decade (10×→100×),
-      *    where plan transitions have settled — the 1×→10× decade is
-      *    published but deferred (`gate_deferred_to_decade2`);
-      *  - everything else gates on 1×→10×, with NoBroadcastBase
-      *    pinned all-shuffle so the compared plans match;
-      *  - BytesGateExempt rows are excluded, reasons published.
-      */
-    def tierJson(rows: Seq[Row], decades: Int, skipped: Seq[String],
-                 gateExps: Seq[(String, Double)],
-                 extra: Seq[(String, Any)] = Nil): ObjectNode = {
-      val gateFails = gateExps.collect {
-        case (n, e) if e != -999.0 && e > BytesGateMax => n }
-      def perQuery(f: Row => Any): ObjectNode = Harness.obj(rows.map(r => r._1 -> f(r)): _*)
-      Harness.obj(Seq(
-        "queries" -> perQuery(r => fmt(r._2)),
-        "exponent" -> perQuery(r => fmtExp(expOf(r._1, r._2, decades))),
-        "raw_secs" -> perQuery(r => r._6.map(x => fmt(x.secs))),
-        "runs" -> perQuery(r => r._6.count(_.ok)),
-        "shuffle_bytes" -> perQuery(_._3),
-        // read/write ≫ 1 at one tier = AQE skew-split re-reads there
-        "shuffle_read_bytes" -> perQuery(_._4),
-        // source-scan volume (r16 verdict #1's diagnostic: a per-shard
-        // corpus re-scan shows up HERE, in no shuffle counter)
-        "input_bytes" -> perQuery(_._5),
-        "bytes_exponent" -> perQuery(r => fmtExp(bytesExp(r._1, r._3, decades))),
-        "bytes_gate_max" -> BytesGateMax,
-        "bytes_gate_exponent" -> Harness.obj(gateExps.map { case (n, e) =>
-          n -> fmtExp(e) }: _*),
-        "bytes_gate_failures" -> gateFails,
-        "bytes_gate_ok" -> gateFails.isEmpty,
-        "skipped_budget" -> skipped) ++ extra: _*)
-    }
-    val skipped10 = names.filter(n => samples(n).isEmpty)
-    // tier-10 gate membership: not deferred to decade 2, not exempt
-    val tier10Gate = tier10.collect {
-      case (n, _, wb, _, _, _)
-        if !decade2Names.contains(n) && !BytesGateExempt.contains(n) =>
-        n -> bytesExp(n, wb, 1)
-    }
-    val deferred = tier10.map(_._1).filter(decade2Names.contains)
-      .filterNot(BytesGateExempt.contains)
-    /** The explicit not-a-pass list (r14 ADVICE #1): every gate-subject
-      * query whose exponent the artifact does NOT actually carry —
-      * tier-10 rows with a missing/-1 base (-999 exponents), tier-10
-      * budget skips, and deferred-to-decade-2 members whose last-decade
-      * exponent never materialized (never ran, failed at 100×, or the
-      * whole 100× tier never ran). Published at top level and shouted
-      * by Bench so `bytes_gate_ok: true` can never silently cover an
-      * unevaluated query.
-      */
-    def notEvaluated(d2Evaluated: Set[String]): Seq[String] =
-      ((tier10Gate.collect { case (n, e) if e == -999.0 => n }) ++
-        skipped10.filterNot(BytesGateExempt.contains) ++
-        deferred.filterNot(d2Evaluated)).distinct
-    // BPE adaptive-regime probe telemetry (r15 verdict #7), filled in
-    // after the 10× tier; null when the probe was skipped
-    var bpeProbeJson: JsonNode = NullNode.instance
-    // autoShards-sized sharded-kernel probe telemetry (r16 verdict #3)
-    var autoShardsProbeJson: JsonNode = NullNode.instance
-    // probe wall billed against the decade-2 budget (r16 ADVICE: the
-    // probes run between the tiers and previously charged neither)
-    var probeSecs: Double = 0.0
-    def writeOut(decade2Json: JsonNode, d2Evaluated: Set[String]): Unit = {
-      val notEval = notEvaluated(d2Evaluated)
-      Harness.writeJson(outFile, Harness.obj(
-        "factor" -> 10,
-        "bpe_adaptive" -> bpeProbeJson,
-        "autoshards_probe" -> autoShardsProbeJson,
-        "probe_secs" -> Harness.fixed(probeSecs, 1),
-        // always a dedicated JVM since the in-process fallback is gone
-        "fresh_jvm" -> true,
-        "agree_tol" -> AgreeTol,
-        "single_run_cutoff_secs" -> SingleRunCutoffSecs,
-        "nobroadcast_pinned" -> NoBroadcastBase.toSeq.sorted,
-        "bytes_gate_exempt" -> Harness.obj(BytesGateExempt.toSeq.sortBy(_._1): _*),
-        "gate_deferral_evidence" -> Harness.obj(GateDeferralEvidence.toSeq
-          .sortBy(_._1).filter(e => deferred.contains(e._1)): _*),
-        "gate_not_evaluated" -> notEval,
-        // top-level evidence merge (r15 verdict #2, extended to BOTH
-        // tiers in r16): every gate-unevaluated query with committed
-        // full-budget evidence carries it here, so an in-slot
-        // budget-trimmed artifact still answers "what is this
-        // query's settled exponent?" on its own — tier-10 budget
-        // skips included (a tier-10 miss also starves the member's
-        // decade-2 base, so the decade-2 map alone can't cover it)
-        "evidence_prior" -> priorEvidenceJson(notEval),
-        "tier10" -> tierJson(tier10, 1, skipped10, tier10Gate,
-          Seq("gate_deferred_to_decade2" -> deferred)),
-        "decade2" -> decade2Json))
-    }
-    writeOut(NullNode.instance, Set.empty) // 10× tier is durable even if 100× dies
+    new Tier10(rows, names.filter(n => samples(n).isEmpty), decade2Names, base)
+  }
 
-    // ---- BPE adaptive-regime probe on the 10× corpus (r15 verdict #7) ----
-    // q83's production budget (256 MB) never binds on this synthetic
-    // vocabulary at ANY tier — the corpus is Heaps-law-tiny — so the
-    // gated query alone can't show the distributed→collect switch
-    // engaging on scaled data. This probe trains on the 10× corpus
-    // under a budget derived from the LIVE table (half its initial
-    // collect footprint, so the budget binds by construction) with a
-    // 32-merge cap, and publishes the switch telemetry. It also pins
-    // mechanism-invariance ON SCALED DATA: the budgeted model's merges
-    // must equal the fixed-prefix path's (BpeSpec pins the same law at
-    // unit scale). Untimed and ungated — the per-round work after the
-    // word-count shuffle is distinct-vocabulary-sized, not corpus-sized.
-    val probeT0 = System.nanoTime()
-    if (inBudget10) {
-      bpeProbeJson = try {
-        import org.apache.spark.sql.functions._
-        val words = Tables.documents(spark, ScaledDir10)
-          .select(explode(graft.functions.TextFns.tokens(col("text"))).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("n"))
-          .localCheckpoint()
-        val est0 = graft.functions.Bpe.initialCollectEstimate(words, "w")
-        val budgetB = math.max(1L, est0 / 2)
-        val fixedRounds = 4
-        val probeCap = 32
-        val adaptive = graft.functions.Bpe.trainDistributed(words, "w", "n",
-          numMerges = probeCap, distributedRounds = fixedRounds,
-          collectBudgetBytes = budgetB)
-        val last = graft.functions.Bpe.lastDistributedRounds
-        val fixed = graft.functions.Bpe.trainDistributed(words, "w", "n",
-          numMerges = probeCap, distributedRounds = fixedRounds,
-          collectBudgetBytes = 0L)
-        Harness.obj(
-          "engaged" -> (last > fixedRounds),
-          "fixed_rounds" -> fixedRounds,
-          "last_distributed_rounds" -> last,
-          "initial_estimate_bytes" -> est0,
-          "collect_budget_bytes" -> budgetB,
-          "probe_merge_cap" -> probeCap,
-          "output_invariant_vs_fixed_path" -> (adaptive.merges == fixed.merges))
-      } catch { case e: Exception =>
-        Harness.obj("engaged" -> false,
-          "error" -> Option(e.getMessage).getOrElse(e.getClass.getName))
-      }
-      writeOut(NullNode.instance, Set.empty)
-    }
+  /** One tier's artifact object. Any measurable WRITE-bytes exponent in
+    * `gateExps` above BytesGateMax is asserted as a failure IN the
+    * artifact, so plan-level superlinearity cannot hide behind
+    * wall-clock noise ([[Tier10]] says which exponent gates a query).
+    */
+  private def tierJson(base: Base, rows: Seq[Row], decades: Int,
+                       skipped: Seq[String], gateExps: Seq[(String, Double)],
+                       extra: Seq[(String, Any)] = Nil): ObjectNode = {
+    val gateFails = gateExps.collect {
+      case (n, e) if e != -999.0 && e > BytesGateMax => n }
+    def perQuery(f: Row => Any): ObjectNode = Harness.obj(rows.map(r => r.name -> f(r)): _*)
+    Harness.obj(Seq(
+      "queries" -> perQuery(r => fmt(r.secs)),
+      "exponent" -> perQuery(r => fmtExp(secsExp(base, r.name, r.secs, decades))),
+      "raw_secs" -> perQuery(r => r.runs.map(x => fmt(x.secs))),
+      "runs" -> perQuery(r => r.runs.count(_.ok)),
+      "shuffle_bytes" -> perQuery(_.writeBytes),
+      // read/write ≫ 1 at one tier = AQE skew-split re-reads there
+      "shuffle_read_bytes" -> perQuery(_.readBytes),
+      // source-scan volume (r16 verdict #1's diagnostic: a per-shard
+      // corpus re-scan shows up HERE, in no shuffle counter)
+      "input_bytes" -> perQuery(_.inputBytes),
+      "bytes_exponent" -> perQuery(r => fmtExp(bytesExp(base, r.name, r.writeBytes, decades))),
+      "bytes_gate_max" -> BytesGateMax,
+      "bytes_gate_exponent" -> Harness.obj(gateExps.map { case (n, e) =>
+        n -> fmtExp(e) }: _*),
+      "bytes_gate_failures" -> gateFails,
+      "bytes_gate_ok" -> gateFails.isEmpty,
+      "skipped_budget" -> skipped) ++ extra: _*)
+  }
 
-    // ---- autoShards-sized sharded kernel, end-to-end (r16 verdict #3) ----
-    // q174 pins nShards=4 so the DuckDB oracle can replay the shard
-    // assignment; the REAL deployment path — nShards =
-    // SuffixArray.autoShards(corpus, budget) — was never exercised
-    // end-to-end. This probe runs shardedDedupCut on the 10× corpus
-    // with a budget derived from the LIVE corpus (one third of the
-    // walk working set, so autoShards > 1 and the budget BINDS by
-    // construction), samples peak storage while it runs (persisted
-    // RDD bytes + tmpdir disk delta, 4 Hz), and publishes
-    // within_budget — the measured statement that the auto-sized shard
-    // count actually holds the one-shard envelope. Expensive (~one
-    // q174 run at 10×), so it runs only when the decade-2 budget is
-    // full-run-sized (> 2000 s; the in-slot artifact records the skip
-    // + reason); its wall bills to the decade-2 budget below.
-    val budget100Raw =
-      sys.env.getOrElse("SPARK_GRAFT_DECADE2_BUDGET", "1200").toDouble
-    val probeWanted = budget100Raw > 2000 &&
-      only.forall(_.contains("q174_sharded_dedup_cut"))
-    if (!inBudget10)
-      autoShardsProbeJson = Harness.obj("skipped" -> "tier-10 budget exhausted")
-    else if (!probeWanted)
-      autoShardsProbeJson = Harness.obj("skipped" ->
-        (f"decade-2 budget ${budget100Raw}%.0f s below the 2000 s full-run " +
-          "threshold (probe costs ~one 10x kernel run)"))
-    else {
-      autoShardsProbeJson = try {
-        val (sumLen, maxLen) = corpusStats(spark, ScaledDir10)
-        val need = graft.operators.SuffixArray.walkWorkingSetBytes(sumLen, maxLen)
-        val budgetBytes = need / 3 + 1
-        val nShards = graft.operators.SuffixArray.autoShards(sumLen, maxLen, budgetBytes)
-        // the probe measures ITS OWN working set: evict the tier-10
-        // runs' resident SA/LCP caches first (decade-2 does the same),
-        // and subtract the remaining storage baseline — the first
-        // probe run counted ~7 GB of tier-10 residents as probe peak
-        // and reported within_budget=false on attribution, not sizing
-        graft.operators.SuffixArray.clearCaches(spark)
-        val tmpFile = new java.io.File(System.getProperty("java.io.tmpdir", "/tmp"))
-        val disk0 = tmpFile.getTotalSpace - tmpFile.getUsableSpace
-        def storageNow: (Long, Long) = {
-          var mem = 0L; var dsk = 0L
-          spark.sparkContext.getRDDStorageInfo
-            .foreach { i => mem += i.memSize; dsk += i.diskSize }
-          (mem, dsk)
-        }
-        val (mem0, bdisk0) = storageNow
-        // TWO peaks, because the budget's domain is DISK/SPILL bytes:
-        // walkWorkingSetBytes models serialized checkpoint + sidecar +
-        // sort-spill volume (the thing the feasibility checks compare
-        // against usable disk, and the thing that killed the r15 100×
-        // attempts), so within_budget gates on tmpdir delta + spilled
-        // block bytes. Deserialized in-memory block sizes run 3-5× the
-        // serialized estimate (Java object headers/boxing) and are the
-        // OTHER constraint (single-JVM heap, handled by the
-        // feasibility pre-skip) — published as peak_mem_bytes, not
-        // gated against the disk envelope.
-        val peakDisk = new java.util.concurrent.atomic.AtomicLong(0L)
-        val peakMem = new java.util.concurrent.atomic.AtomicLong(0L)
-        @volatile var sampling = true
-        val sampler = new Thread(() => {
-          while (sampling) {
-            val tmpDelta = math.max(0L,
-              tmpFile.getTotalSpace - tmpFile.getUsableSpace - disk0)
-            val (mem, dsk) = storageNow
-            peakDisk.accumulateAndGet(
-              tmpDelta + math.max(0L, dsk - bdisk0), math.max(_, _))
-            peakMem.accumulateAndGet(math.max(0L, mem - mem0), math.max(_, _))
-            Thread.sleep(250)
-          }
-        }, "graft-autoshards-probe-sampler")
-        sampler.setDaemon(true)
-        val t0 = System.nanoTime()
-        sampler.start()
-        val rows =
-          try graft.operators.SuffixArray.shardedDedupCut(
-            Tables.documents(spark, ScaledDir10), minLen = 40,
-            nShards = nShards).count()
-          finally { sampling = false; sampler.join(2000) }
-        val wall = (System.nanoTime() - t0) / 1e9
-        graft.operators.SuffixArray.clearCaches(spark) // release the probe's sidecars
-        // end-of-probe drift on the same whole-volume counter: after
-        // the caches/sidecars are released, any residual delta is
-        // activity the probe did NOT cause (or failed to clean) — the
-        // reader's scale for how much of peak_disk_bytes could be
-        // concurrent-attribution noise (r17 ADVICE)
-        val driftEnd = math.max(0L,
-          tmpFile.getTotalSpace - tmpFile.getUsableSpace - disk0)
-        Harness.obj(
-          "peak_disk_method" -> ("whole-tmpdir usage delta sampled at " +
-            "4 Hz plus spilled block bytes: concurrent unrelated disk " +
-            "activity on the volume is ATTRIBUTED to the probe, and " +
-            "sub-250 ms spill peaks can be missed - an approximate, " +
-            "environment-sensitive gate, not an exact measurement"),
-          "disk_drift_end_bytes" -> driftEnd,
-          "sum_len" -> sumLen,
-          "max_len" -> maxLen,
-          "need_bytes" -> need,
-          "budget_bytes" -> budgetBytes,
-          "auto_shards" -> nShards,
-          "per_shard_envelope_bytes" -> graft.operators.SuffixArray
-            .walkWorkingSetBytes(sumLen / nShards, maxLen),
-          "rows" -> rows,
-          "wall_secs" -> Harness.fixed(wall, 1),
-          "baseline_mem_bytes" -> mem0,
-          "baseline_blockdisk_bytes" -> bdisk0,
-          "peak_disk_bytes" -> peakDisk.get(),
-          "peak_mem_bytes" -> peakMem.get(),
-          // the machine allowance is 4× the walk budget — the exact
-          // inverse of the feasibility convention (need ≤ usable/4):
-          // walkWorkingSetBytes models the WALK's checkpoint+pair set,
-          // and the 4× headroom is for what it deliberately does not
-          // model (the build's shuffle files, batch-boundary cleanup
-          // lag). The deployment claim the probe asserts end-to-end:
-          // an autoShards-sized run fits the machine whose usable
-          // disk the budget was derived from. peak_mem_bytes is the
-          // deserialized-heap diagnostic (single-JVM constraint,
-          // handled by the feasibility pre-skip), not disk-gated.
-          "machine_allowance_bytes" -> 4L * budgetBytes,
-          "within_budget" -> (peakDisk.get() <= 4L * budgetBytes))
-      } catch { case e: Exception =>
-        Harness.obj("error" -> Option(e.getMessage).getOrElse(e.getClass.getName))
-      }
-    }
-    probeSecs = (System.nanoTime() - probeT0) / 1e9
-    writeOut(NullNode.instance, Set.empty)
+  /** The rehearsal artifact: the 10× tier, the decade-2 object (null
+    * until decade 2 runs) and the gate's not-evaluated list.
+    */
+  private def artifact(t10: Tier10, decade2Json: JsonNode,
+                       d2Evaluated: Set[String]): ObjectNode = {
+    val notEval = t10.notEvaluated(d2Evaluated)
+    Harness.obj(
+      "factor" -> 10,
+      // always a dedicated JVM since the in-process fallback is gone
+      "fresh_jvm" -> true,
+      "agree_tol" -> AgreeTol,
+      "single_run_cutoff_secs" -> SingleRunCutoffSecs,
+      "nobroadcast_pinned" -> NoBroadcastBase.toSeq.sorted,
+      "bytes_gate_exempt" -> Harness.obj(BytesGateExempt.toSeq.sortBy(_._1): _*),
+      "gate_deferral_evidence" -> Harness.obj(GateDeferralEvidence.toSeq
+        .sortBy(_._1).filter(e => t10.deferred.contains(e._1)): _*),
+      "gate_not_evaluated" -> notEval,
+      // top-level evidence merge (r15 verdict #2, extended to BOTH
+      // tiers in r16): every gate-unevaluated query with committed
+      // full-budget evidence carries it here, so an in-slot
+      // budget-trimmed artifact still answers "what is this
+      // query's settled exponent?" on its own — tier-10 budget
+      // skips included (a tier-10 miss also starves the member's
+      // decade-2 base, so the decade-2 map alone can't cover it)
+      "evidence_prior" -> priorEvidenceJson(notEval),
+      "tier10" -> tierJson(t10.base, t10.rows, 1, t10.skipped, t10.gate,
+        Seq("gate_deferred_to_decade2" -> t10.deferred)),
+      "decade2" -> decade2Json)
+  }
 
-    // ---- 100× tier: one run each, priority-ordered, budget-capped ----
-    // probe wall bills here (r16 ADVICE: the fork timeout is fixed, so
-    // un-billed probe time would eat the decade-2 tail and could get
-    // the child killed mid-tier)
-    val budget100 = math.max(0.0, budget100Raw - probeSecs)
-    if (budget100 > 0) {
-      graft.operators.SuffixArray.clearCaches(spark)
-      ScaleData.ensure(spark, sfDir, ScaledDir100, 100,
-        tables = Set("documents", "lineitem", "customer"))
-      val deadline100 = System.nanoTime() + (budget100 * 1e9).toLong
-      val ran = scala.collection.mutable.ArrayBuffer[Row]()
-      def record(n: String, r: Harness.Run): Unit =
-        ran += ((n, r.secs, r.writeBytes, r.readBytes, r.inputBytes, Seq(r)))
-      val skipped = scala.collection.mutable.ArrayBuffer[String]()
-      val t10secs = tier10.map(r => r._1 -> r._2).toMap
-      val wb10 = tier10.map(r => r._1 -> r._3).toMap
-      // Rebuild + rewrite the artifact after EVERY 100× query (r14: a
-      // fork-timeout kill mid-decade-2 left 5 members as -1 in the only
-      // complete-looking artifact) — whatever ran is durable, whatever
-      // didn't is listed, and a kill can only lose the in-flight query.
-      val resourceSkipped =
-        scala.collection.mutable.ArrayBuffer[(String, String)]()
-      // SA-family sub-fork telemetry (r17 verdict #2), published in the
-      // decade-2 object so a reader can tell what the sub-fork ran
-      // without the child log
-      var saSubforkJson: JsonNode = NullNode.instance
-      def d2Flush(pending: Seq[String]): Unit = {
-        val lastExp: Seq[(String, Double)] = ran.toSeq.map {
-          case (n, _, wb100, _, _, _) =>
-            n -> (wb10.get(n) match {
-              case Some(b) if b > 0 && wb100 > 0 =>
-                math.log10(wb100.toDouble / b)
-              case _ => -999.0
-            })
-        }
-        // self-contained artifact (r15 verdict #2): any decade-2 member
-        // whose exponent this run did NOT settle (skipped, failed, or
-        // still pending) carries its most recent committed full-budget
-        // evidence inline, with provenance
-        val settled = lastExp.collect { case (n, e) if e != -999.0 => n }.toSet
-        val d2Extra = Seq(
-          "sa_subfork" -> saSubforkJson,
-          "bytes_exponent_last" -> Harness.obj(lastExp.map {
-            case (n, e) => n -> fmtExp(e) }: _*),
-          "skipped_resource" -> Harness.obj(resourceSkipped.toSeq: _*),
-          "evidence_prior" -> priorEvidenceJson(decade2Names.filterNot(settled)),
-          "not_yet_run" -> pending)
-        val d2Gate = lastExp.filterNot(x => BytesGateExempt.contains(x._1))
-        writeOut(tierJson(ran.toSeq, 2,
-          (skipped ++ pending).distinct.toSeq, d2Gate, d2Extra), settled)
+  /** Decade 2 (100×): one run each, priority-ordered, capped at `budget`
+    * seconds. Each member is pre-checked (budget, SA-stage dependencies,
+    * resource feasibility — every skip reason published); the non-SA
+    * members run in this session, the SA family in its own sub-forked
+    * JVM. `writeOut` rewrites the artifact after every member.
+    */
+  private def decade2(spark: SparkSession, sfDir: String,
+                      decade2Names: Seq[String], tier10: Tier10, budget: Double,
+                      writeOut: (JsonNode, Set[String]) => Unit): Unit = {
+    graft.operators.SuffixArray.clearCaches(spark)
+    ScaleData.ensure(spark, sfDir, ScaledDir100, 100,
+      tables = Set("documents", "lineitem", "customer"))
+    val deadline100 = System.nanoTime() + (budget * 1e9).toLong
+    val ran = scala.collection.mutable.ArrayBuffer[Row]()
+    def record(n: String, r: Harness.Run): Unit =
+      ran += Row(n, r.secs, r.writeBytes, r.readBytes, r.inputBytes, Seq(r))
+    val skipped = scala.collection.mutable.ArrayBuffer[String]()
+    val t10 = tier10.rows.map(r => r.name -> r).toMap
+    // Rebuild + rewrite the artifact after EVERY 100× query (r14: a
+    // fork-timeout kill mid-decade-2 left 5 members as -1 in the only
+    // complete-looking artifact) — whatever ran is durable, whatever
+    // didn't is listed, and a kill can only lose the in-flight query.
+    val resourceSkipped =
+      scala.collection.mutable.ArrayBuffer[(String, String)]()
+    // SA-family sub-fork telemetry (r17 verdict #2), published in the
+    // decade-2 object so a reader can tell what the sub-fork ran
+    // without the child log
+    var saSubforkJson: JsonNode = NullNode.instance
+    def d2Flush(pending: Seq[String]): Unit = {
+      val lastExp: Seq[(String, Double)] = ran.toSeq.map { r =>
+        r.name -> exponent(r.writeBytes.toDouble,
+          t10.get(r.name).map(_.writeBytes.toDouble), 1)
       }
-      val t10nruns = tier10.map(r => r._1 -> r._6.count(_.ok)).toMap
-      val unusable = scala.collection.mutable.Set[String]() // skipped or failed
-      // Cost estimate for the budget pre-skip (r14: starts-only gating
-      // let q137 begin near the deadline and overrun the fork budget by
-      // its full 100× runtime): observed 100×/10× wall ratios run
-      // 5–15× across the family, so estimate at the top of that band.
-      // Cold-vs-true-cost split (r15 ADVICE #2): a multi-sample 10×
-      // min is warm — use it uncapped; a single sample exists because
-      // run 1 exceeded the cutoff and is cold-inclusive, so subtract a
-      // constant cold-compile estimate instead of clamping.
-      val ColdCompileSecs = 120.0
-      def estOf(n: String): Double = t10secs.get(n).filter(_ > 0)
-        .map { s =>
-          val warmish =
-            if (t10nruns.getOrElse(n, 0) >= 2) s
-            else math.max(60.0, s - ColdCompileSecs)
-          math.max(60.0, 15.0 * warmish)
-        }
-        .getOrElse(60.0)
-      // pre-checks shared by the in-process loop and the SA sub-fork
-      // (check order budget → deps → feasibility — r15 ADVICE #5: the
-      // feasibility check scans the scaled corpus, so it only runs for
-      // members the cheaper checks let through). `budgetGated = false`
-      // defers the sequential budget decision to the sub-forked child,
-      // which applies the same estimates against its own deadline.
-      def preSkip(n: String, budgetGated: Boolean): Boolean = {
-        val remainingSecs = (deadline100 - System.nanoTime()) / 1e9
-        val brokenDeps = decade2SaDeps.getOrElse(n, Nil).filter(unusable)
-        if (budgetGated && remainingSecs <= estOf(n)) {
-          System.err.println(f"[rehearsal] decade-2 budget: skipping $n " +
-            f"(est ${estOf(n)}%.0f s > remaining ${remainingSecs}%.0f s)")
-          skipped += n; unusable += n; true
-        } else if (brokenDeps.nonEmpty) {
-          // attribution dependency (see decade2SaDeps): with the
-          // prerequisite stage uncached, this run would bill the
-          // missing build/walk to this query and fail the gate on
-          // attribution, not plans
-          System.err.println(s"[rehearsal] decade-2: skipping $n — its " +
-            s"SA-stage prerequisites were skipped/failed: " +
-            brokenDeps.mkString(", "))
-          skipped += n; unusable += n; true
-        } else {
-          val infeasible: Option[String] =
-            Decade2Feasibility.get(n).flatMap { check =>
-              try check(spark, ScaledDir100)
-              catch { case e: Exception =>
-                Some(s"feasibility check itself failed: ${e.getMessage}")
-              }
+      // self-contained artifact (r15 verdict #2): any decade-2 member
+      // whose exponent this run did NOT settle (skipped, failed, or
+      // still pending) carries its most recent committed full-budget
+      // evidence inline, with provenance
+      val settled = lastExp.collect { case (n, e) if e != -999.0 => n }.toSet
+      val d2Extra = Seq(
+        "sa_subfork" -> saSubforkJson,
+        "bytes_exponent_last" -> Harness.obj(lastExp.map {
+          case (n, e) => n -> fmtExp(e) }: _*),
+        "skipped_resource" -> Harness.obj(resourceSkipped.toSeq: _*),
+        "evidence_prior" -> priorEvidenceJson(decade2Names.filterNot(settled)),
+        "not_yet_run" -> pending)
+      val d2Gate = lastExp.filterNot(x => BytesGateExempt.contains(x._1))
+      writeOut(tierJson(tier10.base, ran.toSeq, 2,
+        (skipped ++ pending).distinct.toSeq, d2Gate, d2Extra), settled)
+    }
+    val unusable = scala.collection.mutable.Set[String]() // skipped or failed
+    // Cost estimate for the budget pre-skip (r14: starts-only gating
+    // let q137 begin near the deadline and overrun the fork budget by
+    // its full 100× runtime): observed 100×/10× wall ratios run
+    // 5–15× across the family, so estimate at the top of that band.
+    // Cold-vs-true-cost split (r15 ADVICE #2): a multi-sample 10×
+    // min is warm — use it uncapped; a single sample exists because
+    // run 1 exceeded the cutoff and is cold-inclusive, so subtract a
+    // constant cold-compile estimate instead of clamping.
+    val ColdCompileSecs = 120.0
+    def estOf(n: String): Double = t10.get(n).filter(_.secs > 0)
+      .map { r =>
+        val warmish =
+          if (r.runs.count(_.ok) >= 2) r.secs
+          else math.max(60.0, r.secs - ColdCompileSecs)
+        math.max(60.0, 15.0 * warmish)
+      }
+      .getOrElse(60.0)
+    // pre-checks shared by the in-process loop and the SA sub-fork
+    // (check order budget → deps → feasibility — r15 ADVICE #5: the
+    // feasibility check scans the scaled corpus, so it only runs for
+    // members the cheaper checks let through). `budgetGated = false`
+    // defers the sequential budget decision to the sub-forked child,
+    // which applies the same estimates against its own deadline.
+    def preSkip(n: String, budgetGated: Boolean): Boolean = {
+      val remainingSecs = (deadline100 - System.nanoTime()) / 1e9
+      val brokenDeps = decade2SaDeps.getOrElse(n, Nil).filter(unusable)
+      if (budgetGated && remainingSecs <= estOf(n)) {
+        System.err.println(f"[rehearsal] decade-2 budget: skipping $n " +
+          f"(est ${estOf(n)}%.0f s > remaining ${remainingSecs}%.0f s)")
+        skipped += n; unusable += n; true
+      } else if (brokenDeps.nonEmpty) {
+        // attribution dependency (see decade2SaDeps): with the
+        // prerequisite stage uncached, this run would bill the
+        // missing build/walk to this query and fail the gate on
+        // attribution, not plans
+        System.err.println(s"[rehearsal] decade-2: skipping $n — its " +
+          s"SA-stage prerequisites were skipped/failed: " +
+          brokenDeps.mkString(", "))
+        skipped += n; unusable += n; true
+      } else {
+        val infeasible: Option[String] =
+          Decade2Feasibility.get(n).flatMap { check =>
+            try check(spark, ScaledDir100)
+            catch { case e: Exception =>
+              Some(s"feasibility check itself failed: ${e.getMessage}")
             }
-          infeasible match {
-            case Some(why) =>
-              System.err.println(s"[rehearsal] decade-2: skipping $n — $why")
-              resourceSkipped += (n -> why)
-              skipped += n; unusable += n; true
-            case None => false
           }
+        infeasible match {
+          case Some(why) =>
+            System.err.println(s"[rehearsal] decade-2: skipping $n — $why")
+            resourceSkipped += (n -> why)
+            skipped += n; unusable += n; true
+          case None => false
         }
       }
-      val nonSa = decade2Names.filterNot(decade2SaFamily)
-      val saMembers = decade2Names.filter(decade2SaFamily)
-      nonSa.zipWithIndex.foreach { case (n, i) =>
-        if (!preSkip(n, budgetGated = true)) {
-          val r = runOne(n, ScaledDir100)
-          record(n, r)
-          if (!r.ok) unusable += n
-        }
-        d2Flush(nonSa.drop(i + 1) ++ saMembers)
-      }
-      // ---- the SA family, in its own sub-forked JVM (r17 verdict #2) ----
-      // r17's in-run decade-2 reached this block with a heap that had
-      // already absorbed the whole tier-10 + probes, and q137's 100×
-      // build OOM stopped the shared SparkContext — losing the family
-      // to heap-debt SCHEDULING, not plans (the fresh-JVM targeted
-      // rerun settled everything at the same exponents). Protocol:
-      // pre-check each member here (deps + feasibility; the corpus
-      // scan needs this session), then STOP this session — its heap
-      // must not peak alongside the sub-fork's — and run the survivors
-      // in a fresh 56g JVM that times each member and reports
-      // (secs, write/read/input bytes) over a TSV; the child applies
-      // the same per-member budget estimates against its own deadline
-      // and the same dep rules on failures, so a mid-family death
-      // costs only the in-flight member.
-      val saRunnable = saMembers.filterNot(preSkip(_, budgetGated = false))
-      if (saRunnable.nonEmpty) {
-        val remainingSecs = (deadline100 - System.nanoTime()) / 1e9
-        val mem = sys.env.getOrElse("SPARK_GRAFT_SA_MEM", SaSubforkMem)
-        // don't pay the sub-fork's ~90 s JVM-start + warmup when the
-        // remaining budget cannot hold even the CHEAPEST member (the
-        // usual decade-2 tail state of an in-slot bench)
-        if (remainingSecs <= saRunnable.map(estOf).min + 90) {
-          saRunnable.foreach { n =>
-            System.err.println(f"[rehearsal] decade-2 budget: skipping $n " +
-              f"(est ${estOf(n)}%.0f s + 90 s sub-fork start > remaining " +
-              f"${remainingSecs}%.0f s)")
-          }
-          skipped ++= saRunnable
-        } else {
-          def subforkJson(state: String, more: (String, Any)*): JsonNode =
-            Harness.obj(Seq("used" -> true, "members" -> saRunnable,
-              "state" -> state) ++ more: _*)
-          saSubforkJson = subforkJson("launched", "mem" -> mem)
-          d2Flush(saRunnable) // durable artifact before this session dies
-          try spark.stop()
-          catch { case e: Exception =>
-            System.err.println(s"[rehearsal] pre-subfork stop: ${e.getMessage}")
-          }
-          System.gc() // release this JVM's heap before the 56g child starts
-          val t0 = System.nanoTime()
-          val sub = forkSaD2(ScaledDir100, saRunnable.map(n => n -> estOf(n)),
-            deadlineSecs = math.max(60.0, remainingSecs - 30.0), mem)
-          val wall = Harness.fixed((System.nanoTime() - t0) / 1e9, 1)
-          sub match {
-            case None =>
-              saSubforkJson = subforkJson(
-                "fork failed - members recorded as skipped", "wall_secs" -> wall)
-              skipped ++= saRunnable
-            case Some(rows) =>
-              rows.foreach {
-                case (n, Right(r)) =>
-                  record(n, r)
-                  if (!r.ok) unusable += n
-                case (n, Left(why)) =>
-                  System.err.println(s"[rehearsal] SA subfork skipped $n: $why")
-                  skipped += n; unusable += n
-              }
-              val reported = rows.map(_._1).toSet
-              val lost = saRunnable.filterNot(reported)
-              if (lost.nonEmpty) {
-                System.err.println(s"[rehearsal] SA subfork lost: " +
-                  lost.mkString(", "))
-                skipped ++= lost
-              }
-              saSubforkJson = subforkJson("completed", "mem" -> mem,
-                "wall_secs" -> wall)
-          }
-        }
-      }
-      d2Flush(Nil)
     }
+    val nonSa = decade2Names.filterNot(decade2SaFamily)
+    val saMembers = decade2Names.filter(decade2SaFamily)
+    nonSa.zipWithIndex.foreach { case (n, i) =>
+      if (!preSkip(n, budgetGated = true)) {
+        val r = runPinned(spark, n, ScaledDir100)
+        record(n, r)
+        if (!r.ok) unusable += n
+      }
+      d2Flush(nonSa.drop(i + 1) ++ saMembers)
+    }
+    // ---- the SA family, in its own sub-forked JVM (r17 verdict #2) ----
+    // r17's in-run decade-2 reached this block with a heap that had
+    // already absorbed the whole tier-10 + probes, and q137's 100×
+    // build OOM stopped the shared SparkContext — losing the family
+    // to heap-debt SCHEDULING, not plans (the fresh-JVM targeted
+    // rerun settled everything at the same exponents). Protocol:
+    // pre-check each member here (deps + feasibility; the corpus
+    // scan needs this session), then STOP this session — its heap
+    // must not peak alongside the sub-fork's — and run the survivors
+    // in a fresh 56g JVM that times each member and reports
+    // (secs, write/read/input bytes) over a TSV; the child applies
+    // the same per-member budget estimates against its own deadline
+    // and the same dep rules on failures, so a mid-family death
+    // costs only the in-flight member.
+    val saRunnable = saMembers.filterNot(preSkip(_, budgetGated = false))
+    if (saRunnable.nonEmpty) {
+      val remainingSecs = (deadline100 - System.nanoTime()) / 1e9
+      val mem = sys.env.getOrElse("SPARK_GRAFT_SA_MEM", SaSubforkMem)
+      // don't pay the sub-fork's ~90 s JVM-start + warmup when the
+      // remaining budget cannot hold even the CHEAPEST member (the
+      // usual decade-2 tail state of an in-slot bench)
+      if (remainingSecs <= saRunnable.map(estOf).min + 90) {
+        saRunnable.foreach { n =>
+          System.err.println(f"[rehearsal] decade-2 budget: skipping $n " +
+            f"(est ${estOf(n)}%.0f s + 90 s sub-fork start > remaining " +
+            f"${remainingSecs}%.0f s)")
+        }
+        skipped ++= saRunnable
+      } else {
+        def subforkJson(state: String, more: (String, Any)*): JsonNode =
+          Harness.obj(Seq("used" -> true, "members" -> saRunnable,
+            "state" -> state) ++ more: _*)
+        saSubforkJson = subforkJson("launched", "mem" -> mem)
+        d2Flush(saRunnable) // durable artifact before this session dies
+        try spark.stop()
+        catch { case e: Exception =>
+          System.err.println(s"[rehearsal] pre-subfork stop: ${e.getMessage}")
+        }
+        System.gc() // release this JVM's heap before the 56g child starts
+        val t0 = System.nanoTime()
+        val sub = forkSaD2(ScaledDir100, saRunnable.map(n => n -> estOf(n)),
+          deadlineSecs = math.max(60.0, remainingSecs - 30.0), mem)
+        val wall = Harness.fixed((System.nanoTime() - t0) / 1e9, 1)
+        sub match {
+          case None =>
+            saSubforkJson = subforkJson(
+              "fork failed - members recorded as skipped", "wall_secs" -> wall)
+            skipped ++= saRunnable
+          case Some(rows) =>
+            rows.foreach {
+              case (n, Right(r)) =>
+                record(n, r)
+                if (!r.ok) unusable += n
+              case (n, Left(why)) =>
+                System.err.println(s"[rehearsal] SA subfork skipped $n: $why")
+                skipped += n; unusable += n
+            }
+            val reported = rows.map(_._1).toSet
+            val lost = saRunnable.filterNot(reported)
+            if (lost.nonEmpty) {
+              System.err.println(s"[rehearsal] SA subfork lost: " +
+                lost.mkString(", "))
+              skipped ++= lost
+            }
+            saSubforkJson = subforkJson("completed", "mem" -> mem,
+              "wall_secs" -> wall)
+        }
+      }
+    }
+    d2Flush(Nil)
   }
 
   /** Launch [[ScaleRehearsalSaD2]] — the decade-2 SA-family sub-fork —

@@ -344,25 +344,6 @@ object Bpe extends Serializable {
     buildModel(baseChars, merges.toIndexedSeq ++ tail)
   }
 
-  /** Driver-collect footprint estimate of a word table BEFORE any
-    * merges — the round-0 value of [[trainDistributed]]'s internal
-    * per-round estimate, same formula (per word ~64 B of tuple/array
-    * headers + per symbol 56 B of String overhead + 2 B/char payload).
-    * Exposed for the scale rehearsal's adaptive-regime probe (which
-    * derives a binding budget from the live table) and for capacity
-    * planning a real vocabulary's collect.
-    */
-  def initialCollectEstimate(wordCounts: org.apache.spark.sql.DataFrame,
-                             wordCol: String): Long = {
-    import org.apache.spark.sql.functions._
-    val symsUdf = udf { w: String => symbolize(w) :+ EndOfWord }
-    val r = wordCounts.select(symsUdf(col(wordCol)).as("syms"))
-      .agg(sum(expr(
-        """aggregate(transform(syms, s -> 56L + 2L * length(s)),
-          |          64L, (acc, x) -> acc + x)""".stripMargin))).head
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
   /** Encode one word: greedy lowest-rank merging (the GPT-2 loop), then
     * symbol → id with UTF-8 byte fallback for unseen characters.
     */

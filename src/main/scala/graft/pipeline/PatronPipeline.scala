@@ -183,8 +183,10 @@ object PatronPipeline extends Logging {
   /** NEW / UPDATED patrons single-iteration transform (reference
     * `_run_active_patrons_single_iteration`,
     * lib/pipeline_controller.py:135-246). Input: unseen, id-canonical
-    * Sierra rows. `dedupOrder` expresses the reference's keep-first
-    * priority (display_order, patron_record_address_type_id).
+    * Sierra rows, ONE row per patron — the reference's keep-first
+    * dedup (A4) is the caller's, and [[graft.streaming.PatronStream.runAll]]
+    * applies it once per micro-batch with [[dedupKeepFirst]] before
+    * splitting the batch by mode, so no second per-key window runs here.
     *
     * UPDATED materializes twice with [[Checkpoints.fresh]], each time
     * because more than one plan reads the frame: the hashed batch (the
@@ -193,12 +195,11 @@ object PatronPipeline extends Logging {
     * geocoders run once per row. The caller owns their lifetime
     * ([[graft.streaming.PatronStream.runAll]] scopes each micro-batch).
     */
-  def processActivePatrons(sierra: DataFrame, mode: PipelineMode, deps: Deps,
-                           dedupOrder: Seq[Column]): DataFrame = {
+  def processActivePatrons(sierra: DataFrame, mode: PipelineMode,
+                           deps: Deps): DataFrame = {
     require(mode != PipelineMode.DeletedPatrons, "use processDeletedPatrons")
     val obf = obfuscateUdf(deps.obfuscator)
-    val deduped = dedupKeepFirst(sierra, dedupOrder)
-      .withColumn("address_hash", obf(addressHashPlaintext))
+    val hashedRows = sierra.withColumn("address_hash", obf(addressHashPlaintext))
 
     // O3 routing: UPDATED consults the warehouse by address hash (J3);
     // NEW starts fully unknown with iphlc defaulted from the current code
@@ -206,7 +207,7 @@ object PatronPipeline extends Logging {
     // from the cascade (J6).
     val out = mode match {
       case PipelineMode.UpdatedPatrons =>
-        val hashed = Checkpoints.fresh(deduped)
+        val hashed = Checkpoints.fresh(hashedRows)
         val hits = deps.addressLookup(hashed.select("address_hash"))
         val filled = Checkpoints.fresh(fillUnknown(
           hashed.join(broadcast(hits), Seq("address_hash"), "left"), deps))
@@ -216,7 +217,7 @@ object PatronPipeline extends Logging {
         if (filled.filter(col("__unknown")).count() > 0) backfillIphlc(filled, deps)
         else filled
       case _ =>
-        fillUnknown(deduped
+        fillUnknown(hashedRows
           .withColumn("patron_id", lit(null).cast("string"))
           .withColumn("geoid", lit(null).cast("string"))
           .withColumn("initial_patron_home_library_code", col("patron_home_library_code")),

@@ -5,23 +5,18 @@ package graft.pipeline
   * the reference's runtime enum check (lib/pipeline_controller.py:91-93).
   */
 sealed trait PipelineMode {
-  /** Sierra ordering/watermark field for this mode. */
-  def orderingField: String
   /** Poller-state key (reference: lib/pipeline_controller.py:454-466). */
   def stateKey: String
 }
 
 object PipelineMode {
   case object NewPatrons extends PipelineMode {
-    val orderingField = "creation_timestamp"
     val stateKey = "creation_dt"
   }
   case object UpdatedPatrons extends PipelineMode {
-    val orderingField = "last_updated_timestamp"
     val stateKey = "update_dt"
   }
   case object DeletedPatrons extends PipelineMode {
-    val orderingField = "deletion_date_et"
     val stateKey = "deletion_date"
   }
 }

@@ -277,7 +277,8 @@ object IndexQueries {
     * previous hand-duplicated `% 4` literals could silently desync
     * from this value). A real deployment sizes the count with
     * `SuffixArray.autoShards` against its per-machine envelope instead
-    * (the scale rehearsal's autoShards probe exercises that path).
+    * (`scale_rehearsal_autoshards_probe_r17.json` records one such run
+    * at the 10× tier, inside its disk allowance).
     */
   val Q174Shards = 4
 

@@ -40,8 +40,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `processed_ids` shared across its three sequential runs (SURVEY §7.4
   * risk 5). A patron in several modes' windows is emitted once, by the
   * highest-priority mode (NEW < UPDATED < DELETED in arrival order is the
-  * reference's sequential behavior; priority here is by the `mode` tag
-  * ordering in dedupOrder).
+  * reference's sequential behavior; priority here is the `__mode_rank`
+  * tag, the first key of the batch's one `dedupKeepFirst`, which leaves
+  * one row per patron for the mode branches).
   *
   * Lifetimes: the micro-batch is the unit of both work and storage (the
   * foreachBatch model of the Structured Streaming paper). Its body runs
@@ -121,7 +122,7 @@ object PatronStream {
           def active(mode: PipelineMode, rank: Int): Unit =
             if (modes(rank)) AvroSink.write(
               PatronPipeline.processActivePatrons(best.filter(col("__mode_rank") === rank),
-                mode, deps, col(mode.orderingField) +: PatronPipeline.addressPriority),
+                mode, deps),
               sink, schemaJson = schemaJson)
           active(PipelineMode.NewPatrons, 0)
           active(PipelineMode.UpdatedPatrons, 1)

@@ -48,6 +48,18 @@ class HarnessSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.keySet == baseline ++ cached)
   }
 
+  test("a Verify dump frees the checkpoints its queries created and keeps the SA cache entries") {
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    val out = Files.createTempDirectory("verify-dump").toString
+    val qs = Set("q115_equidepth_hist", "q129_quality_ensemble", "q168_cc_incremental")
+    for (_ <- 1 to 2)
+      assert(Verify.dump(spark, "/root/testdata/sf0.001", out, Some(qs)).isEmpty)
+    qs.foreach(q => assert(new File(out, q).isDirectory, q))
+    val cached = SuffixArray.cachedFrames.flatMap(Checkpoints.roots).map(_.id).toSet
+    assert(sc.getPersistentRDDs.keySet == baseline ++ cached)
+  }
+
   test("broadcast and initialPartitionNum pins are restored after a throwing query or body") {
     val pins = ScaleRehearsal.NoBroadcastPins :+ ScaleRehearsal.ChildGranularity
     val initKey = ScaleRehearsal.ChildGranularity._1

@@ -63,4 +63,43 @@ class ScaleRehearsalSpec extends AnyFunSuite {
       assert(idx.contains(n), s"$n has a feasibility check but is not in decade2Names"))
     assert(idx("q110_triangle_count") < idx("q137_suffix_array"))
   }
+
+  test("finalSecs: min of one or two successful samples, median of three, -1 when none succeeded") {
+    import ScaleRehearsal.finalSecs
+    assert(finalSecs(Seq(2.0)) == 2.0)
+    assert(finalSecs(Seq(3.0, 2.0)) == 2.0)
+    assert(finalSecs(Seq(3.0, 1.0, 2.0)) == 2.0)
+    assert(finalSecs(Seq(-1.0, 4.0)) == 4.0)
+    assert(finalSecs(Seq(5.0, -1.0, 4.0)) == 4.0)
+    assert(finalSecs(Seq(-1.0)) == -1.0)
+    assert(finalSecs(Nil) == -1.0)
+  }
+
+  test("notEvaluated lists -1 bases, tier-10 budget skips and deferred members with no decade-2 exponent, never exempt ones") {
+    def row(n: String, bytes: Long) =
+      ScaleRehearsal.Row(n, if (bytes < 0) -1.0 else 1.0, bytes, bytes, bytes, Nil)
+    val exempt = "q153_label_propagation"
+    assert(ScaleRehearsal.BytesGateExempt.contains(exempt))
+    val rows = Seq(
+      row("q107_fuzzy_join", 1000L),         // gated, base present
+      row("q25_minhash_lsh", 1000L),         // gated, base -1/-1
+      row("q24_ngram_jaccard", -1L),         // tier-10 budget skip
+      row(exempt, -1L),                      // exempt, base -1 and skipped
+      row("q145_dedup_sweep", 1000L),        // deferred, no decade-2 exponent
+      row("q148_dedup_quality_audit", 1000L)) // deferred, evaluated in decade 2
+    val base: ScaleRehearsal.Base = Map(
+      "q107_fuzzy_join" -> (1.0, 100L), "q25_minhash_lsh" -> (-1.0, -1L),
+      "q24_ngram_jaccard" -> (1.0, 100L), exempt -> (-1.0, -1L),
+      "q145_dedup_sweep" -> (1.0, 100L), "q148_dedup_quality_audit" -> (1.0, 100L))
+    val t10 = new ScaleRehearsal.Tier10(rows, Seq("q24_ngram_jaccard", exempt),
+      Seq("q145_dedup_sweep", "q148_dedup_quality_audit"), base)
+    assert(t10.gate.map(_._1) == Seq("q107_fuzzy_join", "q25_minhash_lsh", "q24_ngram_jaccard"))
+    assert(t10.gate.head._2 == 1.0)
+    assert(t10.deferred == Seq("q145_dedup_sweep", "q148_dedup_quality_audit"))
+    assert(t10.notEvaluated(Set("q148_dedup_quality_audit")) ==
+      Seq("q25_minhash_lsh", "q24_ngram_jaccard", "q145_dedup_sweep"))
+    assert(t10.notEvaluated(Set.empty) ==
+      Seq("q25_minhash_lsh", "q24_ngram_jaccard", "q145_dedup_sweep",
+        "q148_dedup_quality_audit"))
+  }
 }

@@ -131,6 +131,23 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
+  test("a budget binding on every round keeps all 32 merges distributed on sf0.001 word counts, with the fixed path's model") {
+    // real-corpus form of the switch-point invariance above: a 1-byte
+    // budget binds on every round, so training never collects before
+    // the cap, and the budgeted model must equal the fixed-prefix one
+    val words = graft.Tables.documents(spark, dir)
+      .select(explode(TextFns.tokens(col("text"))).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("n"))
+    def runWith(budget: Long): Bpe.Model =
+      Bpe.trainDistributed(words, "w", "n", numMerges = 32,
+        distributedRounds = 4, collectBudgetBytes = budget)
+    val budgeted = runWith(1L)
+    assert(Bpe.lastDistributedRounds == 32)
+    val fixed = runWith(0L)
+    assert(budgeted.merges == fixed.merges)
+    assert(budgeted.vocab == fixed.vocab)
+  }
+
   test("non-BMP: code-point symbols, cp-order tiebreaks, train ≡ distributed") {
     import spark.implicits._
     // \uE000 sorts ABOVE 😀 (U+1F600) in UTF-16 unit order but BELOW

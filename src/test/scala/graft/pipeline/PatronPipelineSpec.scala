@@ -56,6 +56,11 @@ class PatronPipelineSpec extends AnyFunSuite {
     PatronPipeline.withCanonicalId(
       spark.createDataFrame(rows.asJava, Schemas.sierraActive))
 
+  // processActivePatrons takes one row per patron; the goldens apply the
+  // reference's keep-first (A4) first, as PatronStream.runAll does.
+  private def keepFirst(df: DataFrame): DataFrame =
+    PatronPipeline.dedupKeepFirst(df, Seq(col("last_updated_timestamp")))
+
   // Mocked obfuscation mapping (reference mocks `obfuscate` side_effect,
   // :427-428, :476-478, :523-524).
   private val obfuscator = new MapObfuscator(Map(
@@ -109,8 +114,7 @@ class PatronPipelineSpec extends AnyFunSuite {
 
   test("NEW patrons golden iteration (test_pipeline_controller.py:410-449)") {
     val out = PatronPipeline.processActivePatrons(
-      sierraDf(activeSierraRows), PipelineMode.NewPatrons, deps(),
-      Seq(col("last_updated_timestamp")))
+      keepFirst(sierraDf(activeSierraRows)), PipelineMode.NewPatrons, deps())
     assert(out.schema == Schemas.output)
     assert(collectOut(out) == Seq(
       Seq("obfuscated_4", "obfuscated_1", "posta", "12345", "2020-12-31",
@@ -130,10 +134,9 @@ class PatronPipelineSpec extends AnyFunSuite {
     val input = PatronPipeline.filterUnseen(
       sierraDf(activeSierraRows ++ extraSierraRows), seen)
     val out = PatronPipeline.processActivePatrons(
-      input, PipelineMode.UpdatedPatrons,
+      keepFirst(input), PipelineMode.UpdatedPatrons,
       deps(addressLookup = PatronPipeline.staticLookup(redshiftAddressDf, "address_hash"),
-        iphlc = PatronPipeline.staticLookup(redshiftIphlcDf, "patron_id")),
-      Seq(col("last_updated_timestamp")))
+        iphlc = PatronPipeline.staticLookup(redshiftIphlcDf, "patron_id")))
     assert(collectOut(out) == Seq(
       Seq("obfuscated_4", "obfuscated_1", "posta", "12345", "2020-12-31",
         "2021-01-02", "2021-01-01", 4L, 5L, "home_library1", "aa"),
@@ -162,9 +165,8 @@ class PatronPipelineSpec extends AnyFunSuite {
   test("UPDATED batch the warehouse fully knows: no geocoder call, known rows out, no J5 backfill") {
     GeocodeCallLog.reset()
     val out = PatronPipeline.processActivePatrons(
-      sierraDf(extraSierraRows.take(2)), PipelineMode.UpdatedPatrons,
-      partialIphlcDeps(new LoggedGeocoder("census"), new LoggedGeocoder("nyc")),
-      Seq(col("last_updated_timestamp")))
+      keepFirst(sierraDf(extraSierraRows.take(2))), PipelineMode.UpdatedPatrons,
+      partialIphlcDeps(new LoggedGeocoder("census"), new LoggedGeocoder("nyc")))
     assert(collectOut(out) == Seq(
       Seq("obfuscated_patron_8", "addr_hash_8", "posta", "88888888888",
         "2020-12-02", "2021-08-02", "2021-08-01", 8L, 8L, "home_library8", "yy"),
@@ -176,10 +178,9 @@ class PatronPipelineSpec extends AnyFunSuite {
   test("UPDATED batch with one unknown patron geocodes only it and backfills every missing iphlc") {
     GeocodeCallLog.reset()
     val out = PatronPipeline.processActivePatrons(
-      sierraDf(activeSierraRows.take(1) ++ extraSierraRows.take(2)),
+      keepFirst(sierraDf(activeSierraRows.take(1) ++ extraSierraRows.take(2))),
       PipelineMode.UpdatedPatrons,
-      partialIphlcDeps(new LoggedGeocoder("census"), new LoggedGeocoder("nyc")),
-      Seq(col("last_updated_timestamp")))
+      partialIphlcDeps(new LoggedGeocoder("census"), new LoggedGeocoder("nyc")))
     val got = out.select("patron_id", "geoid", "initial_patron_home_library_code")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
     assert(got == Seq(("obfuscated_4", null, "aa"),
@@ -196,10 +197,9 @@ class PatronPipelineSpec extends AnyFunSuite {
     PosterCallLog.reset()
     GeocodeCallLog.reset()
     val out = PatronPipeline.processActivePatrons(
-      sierraDf(activeSierraRows.last +: Seq(blank)), PipelineMode.NewPatrons,
+      keepFirst(sierraDf(activeSierraRows.last +: Seq(blank))), PipelineMode.NewPatrons,
       deps(census = new CensusBatchGeocoder(new FixedResponsePoster("")),
-        nyc = new LoggedGeocoder("nyc")),
-      Seq(col("last_updated_timestamp")))
+        nyc = new LoggedGeocoder("nyc")))
     val got = out.select("patron_id", "geoid").collect()
       .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
     assert(got == Seq(("obf(790)", null), ("obfuscated_6", null)))
@@ -241,8 +241,9 @@ class PatronPipelineSpec extends AnyFunSuite {
       new MapGeocoder(Map.empty), emptyLookup,
       PatronPipeline.staticLookup(redshiftPatronDf, "patron_id"), emptyLookup)
     val out = PatronPipeline.processActivePatrons(
-      sierraDf(rows), PipelineMode.NewPatrons, d,
-      col("last_updated_timestamp") +: PatronPipeline.addressPriority)
+      PatronPipeline.dedupKeepFirst(sierraDf(rows),
+        col("last_updated_timestamp") +: PatronPipeline.addressPriority),
+      PipelineMode.NewPatrons, d)
     val got = out.select("patron_id", "address_hash").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(got == Seq(("obf_456", "obf_B")))
