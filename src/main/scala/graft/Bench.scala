@@ -46,8 +46,8 @@ import org.apache.spark.sql.SparkSession
   * entry), degrades gracefully — the optional stages (pinned gate
   * bases, then the forked scale rehearsal, trimming its decade-2 tier
   * first via per-stage child budgets) shrink to the remaining time —
-  * and every stage boundary re-writes bench_out.json AND
-  * BENCH_r<N>.json, so a kill at ANY point after the 3 headline passes
+  * and every stage boundary re-writes bench_out.json AND, when
+  * `SPARK_GRAFT_ROUND` names the round, BENCH_r<N>.json, so a kill at ANY point after the 3 headline passes
   * leaves a complete headline artifact on disk instead of
   * `parsed: null`. Whatever is skipped is recorded in the artifact
   * (`pinned_base_skipped`, `rehearsal_skipped_budget`), never silent.
@@ -343,21 +343,7 @@ object Bench {
     */
   private final class Artifacts(h: Headline, sfDir: String, atBenchSf: Boolean,
                                 gov: Governor) {
-    private val round: Option[Int] = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt)
-      .orElse {
-        // explicit UTF-8: the forked JVM's default charset follows the
-        // POSIX locale (US-ASCII), and VERDICT.md's first line holds an
-        // em-dash — the silent MalformedInputException here is exactly
-        // how r11's first artifact write was lost
-        try {
-          val head = scala.io.Source.fromFile("VERDICT.md")(scala.io.Codec.UTF8)
-            .getLines().take(1).mkString
-          "round (\\d+)".r.findFirstMatchIn(head).map(_.group(1).toInt + 1)
-        } catch { case e: Exception =>
-          System.err.println(s"[bench] round detection failed: $e")
-          None
-        }
-      }
+    private val roundFile = roundArtifact(sys.env.get("SPARK_GRAFT_ROUND"), atBenchSf, Harness.cpus)
     val paths: Seq[String] =
       (if (atBenchSf) Seq("bench_out.json") else Nil) ++ sys.env.get("SPARK_GRAFT_BENCH_OUT")
     // stage → governor-elapsed at the stage's artifact write: the
@@ -397,26 +383,31 @@ object Bench {
       // outgrew the stdout tail capture. `producer` marks it as
       // bench-written and `rc` is null, not 0: this process cannot
       // claim an exit code for itself (r14 verdict #3 — the driver's
-      // own overwrite carries the real rc). Only at the driver's sf0.1 —
-      // a local sf0.01 iteration must not overwrite the round artifact.
-      // Non-default CPU counts write a SUFFIXED artifact (r18 verdict
-      // item 2b: the driver's 8-CPU scaling run used to CLOBBER the
-      // round artifact, leaving BENCH_r18.json holding the cpus:8 run
-      // while PERF compared the 32-CPU one; the `_c8` suffix matches
-      // the driver's own BENCH_r18_c8.json naming).
-      if (atBenchSf) round.foreach { n =>
-        val cpus = Harness.cpus
-        val suffix = if (cpus == "32") "" else s"_c$cpus"
-        try Harness.writeJson(f"BENCH_r$n%02d$suffix%s.json", Harness.obj(
+      // own overwrite carries the real rc).
+      roundFile.foreach { case (n, file) =>
+        try Harness.writeJson(file, Harness.obj(
           "n" -> n, "rc" -> None, "producer" -> "bench-self", "stage" -> stage,
-          "cpus" -> cpus.toInt, "sf" -> 0.1, "tail" -> "(written by Bench.scala)",
+          "cpus" -> Harness.cpus.toInt, "sf" -> 0.1, "tail" -> "(written by Bench.scala)",
           "parsed" -> line))
         catch { case e: Exception =>
-          System.err.println(s"[bench] could not write BENCH_r$n: ${e.getMessage}")
+          System.err.println(s"[bench] could not write $file: ${e.getMessage}")
         }
       }
     }
   }
+
+  /** The round artifact's number and file name, BENCH_r<N>.json: only
+    * when the round is named (`SPARK_GRAFT_ROUND`) and the run is at the
+    * bench SF, so a local run never rewrites a committed round artifact.
+    * A non-default CPU count writes a suffixed file (`_c8` at 8 CPUs),
+    * so a scaling run cannot overwrite the 32-CPU artifact.
+    */
+  private[graft] def roundArtifact(round: Option[String], atBenchSf: Boolean,
+                                   cpus: String): Option[(Int, String)] =
+    round.filter(_ => atBenchSf).map(_.toInt).map { n =>
+      val suffix = if (cpus == "32") "" else s"_c$cpus"
+      n -> f"BENCH_r$n%02d$suffix%s.json"
+    }
 
   /** The pinned 1× gate bases, measured in THIS session (budget-guarded).
     *

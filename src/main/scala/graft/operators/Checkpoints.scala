@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SessionBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one owner of eager-checkpoint storage. `Dataset.unpersist`
@@ -28,15 +29,28 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 private[graft] object Checkpoints {
 
-  /** Eager localCheckpoint, rebuilt from the checkpointed RDD: cuts
-    * lineage AND inherited statistics (LogicalRDD checkpoints carry the
-    * origin plan's sizeInBytes forward and join estimates multiply —
-    * see Dedup.ccDistributed for the measured Catalyst stats blowup).
-    * [[release]] frees the checkpoint through the rebuild.
+  /** Eager localCheckpoint, rebuilt over the checkpoint's own
+    * `RDD[InternalRow]`: cuts lineage AND inherited statistics
+    * (LogicalRDD checkpoints carry the origin plan's sizeInBytes
+    * forward and join estimates multiply — see Dedup.ccDistributed for
+    * the measured Catalyst stats blowup). The rebuild is a stats-free
+    * `LogicalRDD` over the persisted RDD itself, with no Row round trip,
+    * so it generates no deserializer or serializer class. [[release]]
+    * and [[rows]] read that RDD.
     */
   def fresh(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint()
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+    SessionBridge.frame(ck.sparkSession, rows(ck), ck.schema)
+  }
+
+  /** The `RDD[InternalRow]` a checkpointed frame (the result of
+    * `localCheckpoint` or [[fresh]]) is a plain scan of: read it directly
+    * for a census that needs no SQL plan.
+    */
+  def rows(ck: DataFrame): RDD[InternalRow] = ck.queryExecution.analyzed match {
+    case lr: LogicalRDD => lr.rdd
+    case other => throw new IllegalArgumentException(
+      s"expected a checkpointed frame, got ${other.nodeName}")
   }
 
   /** Free the checkpoint(s) `df` is rooted at. Pass the checkpointed
@@ -69,8 +83,7 @@ private[graft] object Checkpoints {
 
   /** The persisted RDDs `df` reads: each LogicalRDD leaf of its analyzed
     * plan, followed down its RDD lineage to the first persisted RDD
-    * (the leaf itself for a plain checkpoint; the checkpoint under the
-    * row-conversion maps for a [[fresh]] one).
+    * (the leaf itself for a plain or [[fresh]] checkpoint).
     */
   private[graft] def roots(df: DataFrame): Seq[RDD[_]] = {
     def persisted(rdd: RDD[_]): Seq[RDD[_]] =

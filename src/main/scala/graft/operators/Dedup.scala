@@ -839,7 +839,7 @@ object Dedup {
     * exactly what [[ccLocal]] and [[IncrementalCC]] rely on.
     */
   private def ccDistributed(edges: DataFrame, vertices: DataFrame): DataFrame = {
-    // Checkpoints.fresh = localCheckpoint + rebuild from the
+    // Checkpoints.fresh = localCheckpoint + rebuild over the
     // checkpointed RDD: cuts BOTH lineage and INHERITED STATISTICS.
     // LogicalRDD checkpoints carry the origin plan's sizeInBytes
     // forward, and join estimates MULTIPLY — an iterated self-join
@@ -851,9 +851,7 @@ object Dedup {
     // SizeInBytesOnlyStatsPlanVisitor). The rebuilt frame reports
     // defaultSizeInBytes; static join selection turns pessimistic and
     // AQE picks the real strategy from runtime shuffle sizes (the
-    // GraphFrames CC workaround). Row conversion cost is per-level and
-    // level sizes shrink geometrically, so the roundtrip is noise next
-    // to the shuffles. Every checkpoint is eager, so each one is
+    // GraphFrames CC workaround). Every checkpoint is eager, so each one is
     // released ([[Checkpoints.release]]) the moment the checkpoint that
     // supersedes it exists (the leak class that made repeated q153 runs
     // climb 8.8 → 20.1 s in one session); only the returned map's stays.

@@ -7,6 +7,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.EncoderFactory
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
@@ -15,8 +16,8 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType
   * registry schema and PutRecords them in chunks of KINESIS_BATCH_SIZE).
   *
   * This build has avro-core but no spark-avro SQL module and no AWS SDK,
-  * so: encoding is a `mapPartitions` over the shaped output rows using
-  * avro's GenericDatumWriter (schema parsed once per partition), and the
+  * so: each partition encodes its shaped output rows with avro's
+  * GenericDatumWriter (schema parsed once per partition), and the
   * transport is an injected [[RecordSink]] — the AWS implementation slot
   * chunks ≤500 records per PutRecords call (the service cap,
   * config/production.yaml:12).
@@ -26,24 +27,30 @@ object AvroSink extends Logging {
   /** Encode the 11-column output DataFrame to one Avro binary per row. */
   def encode(df: DataFrame, schemaJson: String = Schemas.patronInfoAvroJson): DataFrame = {
     val spark = df.sparkSession
-    val fieldNames = Schemas.outputColumns
     val outSchema = StructType(Seq(StructField("value", BinaryType)))
-    val rdd = df.select(fieldNames.map(col): _*).rdd.mapPartitions { it =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      val writer = new GenericDatumWriter[GenericRecord](schema)
-      it.map { row =>
-        val rec = new GenericData.Record(schema)
-        fieldNames.zipWithIndex.foreach { case (name, i) =>
-          rec.put(name, if (row.isNullAt(i)) null else row.get(i))
-        }
-        val out = new ByteArrayOutputStream()
-        val enc = EncoderFactory.get().binaryEncoder(out, null)
-        writer.write(rec, enc)
-        enc.flush()
-        Row(out.toByteArray)
-      }
+    val rdd = df.select(Schemas.outputColumns.map(col): _*).rdd.mapPartitions { it =>
+      val encode = encoder(schemaJson)
+      it.map(row => Row(encode(i => if (row.isNullAt(i)) null else row.get(i))))
     }
     spark.createDataFrame(rdd, outSchema)
+  }
+
+  /** One partition's Avro encoder: the output values by column index, in
+    * [[Schemas.outputColumns]] order (null for null), to one binary.
+    * The schema is parsed once per call.
+    */
+  private def encoder(schemaJson: String): (Int => Any) => Array[Byte] = {
+    val schema = new Schema.Parser().parse(schemaJson)
+    val writer = new GenericDatumWriter[GenericRecord](schema)
+    value => {
+      val rec = new GenericData.Record(schema)
+      Schemas.outputColumns.zipWithIndex.foreach { case (name, i) => rec.put(name, value(i)) }
+      val out = new ByteArrayOutputStream()
+      val enc = EncoderFactory.get().binaryEncoder(out, null)
+      writer.write(rec, enc)
+      enc.flush()
+      out.toByteArray
+    }
   }
 
   /** Decode (for tests / round-trip verification). */
@@ -94,13 +101,22 @@ object AvroSink extends Logging {
 
   /** Encode + deliver, chunking per partition (each executor sends its own
     * partitions — at scale the sink parallelism equals the partition count,
-    * where the reference was single-threaded).
+    * where the reference was single-threaded). The records are the same
+    * binaries [[encode]] makes, built straight from the selected rows'
+    * `InternalRow`s: no Row conversion on either side, so the write
+    * generates no deserializer or serializer class. A plain RDD action:
+    * a caller that needs its jobs under a given session's artifact state
+    * wraps it ([[graft.streaming.PatronStream.runAll]] does).
     */
   def write(df: DataFrame, sink: RecordSink, maxBatch: Int = 500,
             schemaJson: String = Schemas.patronInfoAvroJson): Unit = {
-    encode(df, schemaJson).foreachPartition { it: Iterator[Row] =>
-      it.map(_.getAs[Array[Byte]](0)).grouped(maxBatch)
-        .foreach(chunk => sink.putRecords(chunk))
+    val selected = df.select(Schemas.outputColumns.map(col): _*)
+    val types = selected.schema.map(_.dataType)
+    selected.queryExecution.toRdd.foreachPartition { it =>
+      val encode = encoder(schemaJson)
+      val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
+      it.map(row => encode(i => if (row.isNullAt(i)) null else toScala(i)(row.get(i, types(i)))))
+        .grouped(maxBatch).foreach(chunk => sink.putRecords(chunk))
     }
   }
 }

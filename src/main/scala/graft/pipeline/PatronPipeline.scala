@@ -3,10 +3,12 @@ package graft.pipeline
 import graft.operators.Checkpoints
 import graft.pipeline.AddressParser.AddressParts
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, SessionBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The three patron-pipeline mode DAGs (reference entry points traced in
   * SURVEY.md §3), re-expressed as DataFrame transforms with injected I/O
@@ -44,11 +46,12 @@ object PatronPipeline extends Logging {
       iphlcLookup: DataFrame => DataFrame)
 
   /** Static-DataFrame lookup (semi-join pushdown form) for tests and
-    * parquet-backed warehouses: `keys ⋉ table` — Catalyst broadcasts
-    * whichever side is small.
+    * parquet-backed warehouses: `keys ⋉ table` with the batch's keys
+    * broadcast. A semi join emits each table row once however often its
+    * key repeats, so the keys need no `distinct` (and no shuffle).
     */
   def staticLookup(table: DataFrame, key: String): DataFrame => DataFrame =
-    keys => table.join(broadcast(keys.select(key).distinct()), Seq(key), "left_semi")
+    keys => table.join(broadcast(keys.select(key)), Seq(key), "left_semi")
 
   /** Canonical digit-string patron id (reference two-step
     * `.astype('Int64').astype('string')`, lib/pipeline_controller.py:147-148
@@ -156,28 +159,31 @@ object PatronPipeline extends Logging {
     * did not know (null `patron_id`, reference P7 :212-215), running
     * [[geocodeUnknown]] once per partition — the partition is the
     * geocoder batch. J6 is the reference's `df.update`: new non-null
-    * values win. `__unknown` marks the filled rows.
+    * values win. `__unknown` marks the filled rows. Works on the plan's
+    * `InternalRow`s, so no Row deserializer or serializer is generated;
+    * planning `routed` runs its broadcast and shuffle stages at once.
     */
   private def fillUnknown(routed: DataFrame, deps: Deps): DataFrame = {
     val (obf, census, nyc) = (deps.obfuscator, deps.census, deps.nyc)
     val schema = routed.schema
     val Seq(key, pid, geo, addr, city, region, postal) = Seq("patron_id_plaintext",
       "patron_id", "geoid", "address", "city", "region", "postal_code").map(schema.fieldIndex)
-    routed.mapPartitions { it =>
-      val rows = it.toVector
-      val filled = geocodeUnknown(rows.filter(_.isNullAt(pid)).map { r =>
-        r.getString(key) -> AddressParts(r.getString(addr), r.getString(city),
-          r.getString(region), r.getString(postal), null)
+    val filledRows = routed.queryExecution.toRdd.mapPartitions { it =>
+      val rows = it.map(_.copy().toSeq(schema)).toVector
+      def str(r: Seq[Any], i: Int) = Option(r(i)).map(_.toString).orNull
+      val filled = geocodeUnknown(rows.filter(_(pid) == null).map { r =>
+        str(r, key) -> AddressParts(str(r, addr), str(r, city), str(r, region), str(r, postal), null)
       }, obf, census, nyc).iterator
       rows.iterator.map { r =>
-        if (!r.isNullAt(pid)) Row.fromSeq(r.toSeq :+ false)
+        if (r(pid) != null) InternalRow.fromSeq(r :+ false)
         else {
           val (_, id, g) = filled.next()
-          Row.fromSeq(r.toSeq.updated(pid, id)
-            .updated(geo, if (g != null) g else r.get(geo)) :+ true)
+          InternalRow.fromSeq(r.updated(pid, UTF8String.fromString(id))
+            .updated(geo, if (g != null) UTF8String.fromString(g) else r(geo)) :+ true)
         }
       }
-    }(Encoders.row(schema.add("__unknown", BooleanType)))
+    }
+    SessionBridge.frame(routed.sparkSession, filledRows, schema.add("__unknown", BooleanType))
   }
 
   /** NEW / UPDATED patrons single-iteration transform (reference
@@ -191,7 +197,7 @@ object PatronPipeline extends Logging {
     * UPDATED materializes twice with [[Checkpoints.fresh]], each time
     * because more than one plan reads the frame: the hashed batch (the
     * J3 lookup's keys and its join side) and the post-cascade frame (the
-    * J5 count, sample and the caller's write). So bcrypt and the
+    * J5 decision, its lookup and the caller's write). So bcrypt and the
     * geocoders run once per row. The caller owns their lifetime
     * ([[graft.streaming.PatronStream.runAll]] scopes each micro-batch).
     */
@@ -213,9 +219,11 @@ object PatronPipeline extends Logging {
           hashed.join(broadcast(hits), Seq("address_hash"), "left"), deps))
         // J5: iphlc backfill for updated patrons whose address missed the
         // warehouse, only when the batch had any (reference :219-227,
-        // 413-435).
-        if (filled.filter(col("__unknown")).count() > 0) backfillIphlc(filled, deps)
-        else filled
+        // 413-435); one scan of the checkpoint decides
+        val unknown = filled.schema.fieldIndex("__unknown")
+        val anyUnknown = Checkpoints.rows(filled)
+          .mapPartitions(it => Iterator(it.exists(_.getBoolean(unknown)))).collect().contains(true)
+        if (anyUnknown) backfillIphlc(filled, deps) else filled
       case _ =>
         fillUnknown(hashedRows
           .withColumn("patron_id", lit(null).cast("string"))
@@ -236,11 +244,9 @@ object PatronPipeline extends Logging {
       .withColumnRenamed("initial_patron_home_library_code", "iphlc_found")
     // Warn with a BOUNDED sample: collecting every missing id to the driver
     // is unbounded at scale (a cold warehouse could miss a whole batch).
-    val missingDf = needs.join(found, Seq("patron_id"), "left_anti")
-    val missingCount = missingDf.count()
+    val (missingCount, sample) =
+      countAndLowest(needs.join(found, Seq("patron_id"), "left_anti"), missingWarnSample)
     if (missingCount > 0) {
-      val sample = missingDf.sort("patron_id").limit(missingWarnSample)
-        .collect().map(_.getString(0))
       val suffix = if (missingCount > sample.length)
         s" … and ${missingCount - sample.length} more" else ""
       logWarning("The following updated patrons could not be found in " +
@@ -251,6 +257,23 @@ object PatronPipeline extends Logging {
       .withColumn("initial_patron_home_library_code",
         coalesce(col("initial_patron_home_library_code"), col("iphlc_found")))
       .drop("iphlc_found")
+  }
+
+  /** The row count of a one-string-column frame and its `k` lowest
+    * values in `sort` order (binary, nulls first), from one pass in which
+    * each partition returns only its own count and `k` lowest.
+    */
+  private[pipeline] def countAndLowest(ids: DataFrame, k: Int): (Long, Seq[String]) = {
+    val order: Ordering[UTF8String] =
+      Ordering.fromLessThan((a, b) => b != null && (a == null || a.compareTo(b) < 0))
+    val perPartition = ids.queryExecution.toRdd.mapPartitions { it =>
+      var (n, low) = (0L, Seq.empty[UTF8String])
+      it.map(r => if (r.isNullAt(0)) null else r.getUTF8String(0).clone()).grouped(1024)
+        .foreach { chunk => n += chunk.size; low = (low ++ chunk).sorted(order).take(k) }
+      Iterator(n -> low)
+    }.collect()
+    (perPartition.map(_._1).sum,
+      perPartition.flatMap(_._2).sorted(order).take(k).map(s => if (s == null) null else s.toString))
   }
 
   /** Output shaping for active modes (reference :231-240): postal → first 5

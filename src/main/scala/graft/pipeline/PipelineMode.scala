@@ -4,19 +4,10 @@ package graft.pipeline
   * main.py:17-24). Sealed ADT — invalid modes are unrepresentable, unlike
   * the reference's runtime enum check (lib/pipeline_controller.py:91-93).
   */
-sealed trait PipelineMode {
-  /** Poller-state key (reference: lib/pipeline_controller.py:454-466). */
-  def stateKey: String
-}
+sealed trait PipelineMode
 
 object PipelineMode {
-  case object NewPatrons extends PipelineMode {
-    val stateKey = "creation_dt"
-  }
-  case object UpdatedPatrons extends PipelineMode {
-    val stateKey = "update_dt"
-  }
-  case object DeletedPatrons extends PipelineMode {
-    val stateKey = "deletion_date"
-  }
+  case object NewPatrons extends PipelineMode
+  case object UpdatedPatrons extends PipelineMode
+  case object DeletedPatrons extends PipelineMode
 }

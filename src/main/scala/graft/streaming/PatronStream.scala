@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.Checkpoints
 import graft.pipeline.{AvroSink, PatronPipeline, PipelineMode, Schemas}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SessionBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -49,9 +49,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * inside one [[Checkpoints.scope]]; every frame that more than one
   * action reads (the deduplicated batch here, the hashed and
   * post-cascade frames in [[PatronPipeline]]) is materialized once with
-  * [[Checkpoints.fresh]] and freed when the batch's writes end. One
-  * `distinct` over the materialized batch names the modes present, so
-  * an absent mode costs no job.
+  * [[Checkpoints.fresh]] and freed when the batch's writes end. One scan
+  * of the materialized batch names the modes present, so an absent mode
+  * costs no job, and the modes' outputs go to the sink in one write.
+  * The batch runs as the CALLER's session (the session of the frames
+  * passed to `runAll`), not as the stream's. Each query runs in a clone
+  * of its session with a fresh session id, and a local executor keeps
+  * one class loader per session id. Spark's codegen cache is keyed on
+  * (class loader, code), so a batch run as the clone compiles every
+  * executor-side class again on every drain. Rebasing the batch's rows
+  * into the caller's session and running the body under that session's
+  * artifact state puts every job it submits, SQL or plain RDD action,
+  * under one stable loader: a drain after the first in the same JVM
+  * compiles nothing new, as long as the batch's classes fit the codegen
+  * cache (`PatronCallCountSpec` pins both).
   */
 object PatronStream {
 
@@ -87,22 +98,25 @@ object PatronStream {
     // the checkpoint across runs, but a patron re-updated in a LATER run
     // is re-emitted. Stale run subdirs are bounded by run count, not data.
     val seenPath = s"$checkpointDir/seen_keys/run_$runId"
+    val caller = newStream.sparkSession
     unioned.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // every checkpoint the batch creates is freed once its writes end
-        Checkpoints.scope(spark) {
+      .foreachBatch { (microBatch: DataFrame, _: Long) =>
+        // The whole batch runs as the caller's session: its rows rebased,
+        // every job under its artifact state (see the class doc). Every
+        // checkpoint the batch creates is freed once its writes end.
+        SessionBridge.withResources(caller)(Checkpoints.scope(caller) {
+          val batch = SessionBridge.rebase(caller, microBatch)
           // Only a MISSING state dir means "first run, nothing seen" — any
           // other failure (corrupt files, transient IO) must fail the batch,
           // or processed patrons would silently re-emit.
           val seen =
-            try spark.read.parquet(seenPath)
+            try caller.read.parquet(seenPath)
             catch {
               case e: org.apache.spark.sql.AnalysisException
                   if e.getCondition == "PATH_NOT_FOUND" =>
-                spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+                caller.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
                   org.apache.spark.sql.types.StructType(Seq(
                     org.apache.spark.sql.types.StructField("patron_id_plaintext",
                       org.apache.spark.sql.types.StringType))))
@@ -118,25 +132,29 @@ object PatronStream {
           val best = Checkpoints.fresh(PatronPipeline.dedupKeepFirst(
             PatronPipeline.filterUnseen(batch, seen),
             col("__mode_rank") +: PatronPipeline.addressPriority))
-          val modes = best.select("__mode_rank").distinct().collect().map(_.getInt(0)).toSet
-          def active(mode: PipelineMode, rank: Int): Unit =
-            if (modes(rank)) AvroSink.write(
-              PatronPipeline.processActivePatrons(best.filter(col("__mode_rank") === rank),
-                mode, deps),
-              sink, schemaJson = schemaJson)
-          active(PipelineMode.NewPatrons, 0)
-          active(PipelineMode.UpdatedPatrons, 1)
-          if (modes(2)) AvroSink.write(
-            PatronPipeline.processDeletedPatrons(best.filter(col("__mode_rank") === 2)
-              .select("patron_id_plaintext", "deletion_date_et"), deps),
-            sink, schemaJson = schemaJson)
-          // one file per batch, not one per shuffle partition: the key
-          // set is bounded by the batch size, and an append-only state
-          // dir otherwise accumulates numPartitions small files per
-          // micro-batch — the classic small-files leak on long runs
-          if (modes.nonEmpty) best.select("patron_id_plaintext")
-            .coalesce(1).write.mode("append").parquet(seenPath)
-        }
+          val rank = best.schema.fieldIndex("__mode_rank")
+          val modes = Checkpoints.rows(best)
+            .mapPartitions(_.map(_.getInt(rank)).toSet.iterator).collect().toSet
+          def ofMode(r: Int) = best.filter(col("__mode_rank") === r)
+          val outputs = Seq(
+            Option.when(modes(0))(PatronPipeline.processActivePatrons(ofMode(0),
+              PipelineMode.NewPatrons, deps)),
+            Option.when(modes(1))(PatronPipeline.processActivePatrons(ofMode(1),
+              PipelineMode.UpdatedPatrons, deps)),
+            Option.when(modes(2))(PatronPipeline.processDeletedPatrons(
+              ofMode(2).select("patron_id_plaintext", "deletion_date_et"), deps))).flatten
+          if (outputs.nonEmpty) {
+            // one write over the modes' outputs: the union keeps each
+            // mode's partitions, so the sink sees the same chunks
+            AvroSink.write(outputs.reduce(_ union _), sink, schemaJson = schemaJson)
+            // one file per batch, not one per shuffle partition: the key
+            // set is bounded by the batch size, and an append-only state
+            // dir otherwise accumulates numPartitions small files per
+            // micro-batch — the classic small-files leak on long runs
+            best.select("patron_id_plaintext")
+              .coalesce(1).write.mode("append").parquet(seenPath)
+          }
+        })
       }
       .start()
   }

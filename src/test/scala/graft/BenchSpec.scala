@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench's pure stages: the base file it hands the rehearsal child. */
+/** Bench's pure stages: the base file it hands the rehearsal child and
+  * the round artifact's name.
+  */
 class BenchSpec extends AnyFunSuite {
 
   test("base-file lines: q137/q138 take their pinned bases, NoBroadcastBase members the no-broadcast base or -1/-1, other rows the headline") {
@@ -24,5 +26,14 @@ class BenchSpec extends AnyFunSuite {
       "q25_minhash_lsh\t2.5\t12",
       "q107_fuzzy_join\t-1\t-1",
       "q01_pricing_summary\t0.5\t7"))
+  }
+
+  test("round artifact: written only when SPARK_GRAFT_ROUND names the round, at the bench SF") {
+    assert(Bench.roundArtifact(None, atBenchSf = true, cpus = "32").isEmpty)
+    assert(Bench.roundArtifact(Some("20"), atBenchSf = false, cpus = "32").isEmpty)
+    assert(Bench.roundArtifact(Some("20"), atBenchSf = true, cpus = "32") ==
+      Some(20 -> "BENCH_r20.json"))
+    assert(Bench.roundArtifact(Some("7"), atBenchSf = true, cpus = "8") ==
+      Some(7 -> "BENCH_r07_c8.json"))
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import graft.TestSpark
 import graft.functions.Bpe
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Checkpoint lifetime: every iterative operator leaves exactly the
@@ -56,6 +58,25 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(b.count() == 1L)
     Checkpoints.release(b)
     assert(!bIds.exists(live.contains))
+  }
+
+  test("fresh is a stats-free LogicalRDD over the persisted checkpoint itself") {
+    val source = edges((1L, 2L), (2L, 3L))
+    val f = Checkpoints.fresh(source)
+    val lr = f.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr
+      case other => fail(s"expected a LogicalRDD, got ${other.nodeName}")
+    }
+    // no Row round trip: the leaf reads the checkpoint, not a map over it
+    assert(lr.rdd.getStorageLevel.isValid)
+    assert(Checkpoints.roots(f) == Seq(lr.rdd))
+    assert(live.contains(lr.rdd.id))
+    // the origin's statistics are not carried forward
+    assert(lr.stats.sizeInBytes == SQLConf.get.defaultSizeInBytes)
+    assert(source.queryExecution.optimizedPlan.stats.sizeInBytes < SQLConf.get.defaultSizeInBytes)
+    assert(f.collect().toSet == source.collect().toSet)
+    Checkpoints.release(f)
+    assert(!live.contains(lr.rdd.id))
   }
 
   test("LabelProp.propagate leaves only its result's checkpoint") {

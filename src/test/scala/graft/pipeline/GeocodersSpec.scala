@@ -160,6 +160,29 @@ class AvroSinkSpec extends AnyFunSuite {
     assert(rec.get("pcode3") == null)
   }
 
+  test("write delivers exactly the records encode makes, nulls and dates included") {
+    val df = spark.createDataFrame(Seq(
+      Row("p1", "h1", "11111", "00111222222", "2021-01-01", "2022-02-02", "2021-06-01",
+        4L, 7L, "aa", "bb"),
+      Row("p2", null, null, null, null, null, null, null, null, null, null),
+      Row("p3", "h3", "33333", null, "2020-12-31", null, "2021-03-04", 1L, null,
+        "cc", null)).asJava, Schemas.output).repartition(2)
+    DeliveredRecords.clear()
+    AvroSink.write(df, new AvroSink.RecordSink {
+      def putRecords(records: Seq[Array[Byte]]): Unit = DeliveredRecords.add(records)
+    })
+    def byId(bytes: Seq[Array[Byte]]) =
+      bytes.map(b => AvroSink.decode(b).get("patron_id").toString -> b.toSeq).toMap
+    val encoded = AvroSink.encode(df).collect().map(_.getAs[Array[Byte]](0)).toSeq
+    assert(DeliveredRecords.get.size == 3)
+    assert(byId(DeliveredRecords.get) == byId(encoded))
+    val p3 = AvroSink.decode(byId(DeliveredRecords.get)("p3").toArray)
+    assert(p3.get("creation_date_et").toString == "2020-12-31")
+    assert(p3.get("deletion_date_et") == null)
+    assert(p3.get("circ_active_date_et").toString == "2021-03-04")
+    assert(p3.get("pcode3") == null && p3.get("ptype_code") == 1L)
+  }
+
   test("sink chunks records at the Kinesis PutRecords cap") {
     val rows = (1 to 7).map(i => Row(s"p$i", null, null, null, null, null,
       null, null, null, null, null))
@@ -178,4 +201,12 @@ object CollectedChunks {
   private val chunks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
   def add(n: Int): Unit = chunks.add(n)
   def get: Seq[Int] = chunks.asScala.toSeq
+}
+
+/** Executor-side record collector for the sink test (local mode: same JVM). */
+object DeliveredRecords {
+  private val records = new java.util.concurrent.ConcurrentLinkedQueue[Array[Byte]]()
+  def clear(): Unit = records.clear()
+  def add(rs: Seq[Array[Byte]]): Unit = rs.foreach(records.add)
+  def get: Seq[Array[Byte]] = records.asScala.toSeq
 }

@@ -262,6 +262,18 @@ class PatronPipelineSpec extends AnyFunSuite {
     assert(got == Map("123" -> "aa", "456" -> null, "789" -> "bb", "012" -> null))
   }
 
+  test("countAndLowest matches count() and sort.limit over partitions, nulls and repeats") {
+    val ids = Seq("m07", null, "m03", "m10", "m03", "m01", null, "m22", "m05", "é1", "z9")
+    val df = spark.createDataFrame(ids.map(id => Row(id, null)).asJava, Schemas.redshiftIphlc)
+      .select("patron_id").repartition(3)
+    val sorted = df.sort("patron_id").limit(4).collect().map(_.getString(0)).toSeq
+    assert(PatronPipeline.countAndLowest(df, 4) == (df.count(), sorted))
+    assert(sorted == Seq(null, null, "m01", "m03"))
+    assert(PatronPipeline.countAndLowest(df, 20) ==
+      (ids.size.toLong, df.sort("patron_id").collect().map(_.getString(0)).toSeq))
+    assert(PatronPipeline.countAndLowest(df.filter("false"), 4) == (0L, Seq.empty))
+  }
+
   test("iphlc backfill warning is sample-bounded beyond the cap") {
     // More misses than missingWarnSample: the join semantics must be
     // unchanged (all misses stay null) and the driver-side collect bounded.

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.TestSpark
 import graft.pipeline._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +18,9 @@ import scala.jdk.CollectionConverters._
   * does not know it, its id, and a deleted record's id, each once; it
   * sends each unknown address to Census once, and the tier-1 misses once
   * more after the re-parse. A plan that re-executes bcrypt or a geocoder
-  * under a second action shows up here as a higher count.
+  * under a second action shows up here as a higher count. Generated
+  * classes are counted the same way: a repeat drain in one session
+  * compiles none.
   */
 class PatronCallCountSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -31,8 +34,10 @@ class PatronCallCountSpec extends AnyFunSuite {
     Row(id, 4, 5, s"lib$id", "NEW YORK", "NY", postal, address, dt(2021, 1, 1),
       null, ts(2021, 1, day), ts(2020, 12, day), 1, 1)
 
-  test("one drain: one bcrypt per address hash, unknown active id and deleted id; " +
-      "Census sees tier-1 plus tier-2 rows once") {
+  /** The one-drain fixture: three NEW, three UPDATED (two known to the
+    * warehouse) and two DELETED patrons, written once under `dir`.
+    */
+  private def fixture(): (String, PatronPipeline.Deps) = {
     val dir = Files.createTempDirectory("callcount").toFile.getAbsolutePath
     def active(rows: Row*) = spark.createDataFrame(rows.asJava, Schemas.sierraActive)
 
@@ -51,34 +56,59 @@ class PatronCallCountSpec extends AnyFunSuite {
       Row("obf(201_201 KNOWN AVE_NEW YORK_NY_10201)", "wh201", "36061000201", "lib201"),
       Row("obf(202_202 KNOWN AVE_NEW YORK_NY_10202)", "wh202", "36061000202", "lib202"))
       .asJava, Schemas.redshiftAddress)
-    val deps = PatronPipeline.Deps(
+    dir -> PatronPipeline.Deps(
       new CountingObfuscator,
       new CensusBatchGeocoder(new CountingPoster),
       new NycBatchGeocoder(new NoGeosupport),
       PatronPipeline.staticLookup(known, "address_hash"),
       _ => spark.createDataFrame(Seq.empty[Row].asJava, Schemas.redshiftPatron),
       _ => spark.createDataFrame(Seq.empty[Row].asJava, Schemas.redshiftIphlc))
+  }
 
+  /** One `runAll` drain of the fixture into checkpoint `ckpt`: the
+    * delivered records as patron_id → geoid.
+    */
+  private def drain(dir: String, deps: PatronPipeline.Deps, ckpt: String): Map[String, String] = {
     def rs(p: String) = spark.readStream.schema(
         if (p == "del") Schemas.sierraDeleted else Schemas.sierraActive)
       .parquet(s"$dir/$p")
-
-    CallCounts.reset()
     StreamSinkLog.reset()
-    PatronStream.runAll(rs("new"), rs("upd"), rs("del"), deps, s"$dir/ckpt",
+    PatronStream.runAll(rs("new"), rs("upd"), rs("del"), deps, s"$dir/$ckpt",
       new StreamSinkLog).awaitTermination(120000)
-
-    val decoded = StreamSinkLog.records.map(AvroSink.decode(_))
+    StreamSinkLog.records.map(AvroSink.decode(_))
       .map(r => r.get("patron_id").toString -> Option(r.get("geoid")).map(_.toString).orNull)
       .toMap
-    assert(decoded == Map(
-      "obf(101)" -> "36061000100", "obf(102)" -> null, "obf(103)" -> null,
-      "wh201" -> "36061000201", "wh202" -> "36061000202", "obf(203)" -> "36061000100",
-      "obf(901)" -> null, "obf(902)" -> null))
+  }
+
+  private val expected = Map(
+    "obf(101)" -> "36061000100", "obf(102)" -> null, "obf(103)" -> null,
+    "wh201" -> "36061000201", "wh202" -> "36061000202", "obf(203)" -> "36061000100",
+    "obf(901)" -> null, "obf(902)" -> null)
+
+  test("one drain: one bcrypt per address hash, unknown active id and deleted id; " +
+      "Census sees tier-1 plus tier-2 rows once") {
+    val (dir, deps) = fixture()
+    CallCounts.reset()
+    assert(drain(dir, deps, "ckpt") == expected)
     // 6 active address hashes + 4 unknown active ids + 2 deleted ids
     assert(CallCounts.bcrypt.get == 12)
     // tier 1: 101, 102, 203 (103 is blank); tier 2: 102 re-parsed
     assert(CallCounts.censusRows.get == 4)
+  }
+
+  test("three drains in one session: the second and third compile no generated class") {
+    // Each query runs in a clone of the session with a fresh session id,
+    // and the executor's class loader follows the session id; runAll runs
+    // its batch as the caller's session, so once one drain has filled the
+    // codegen cache, a repeat drain finds every class there.
+    val (dir, deps) = fixture()
+    val compiles = (1 to 3).map { i =>
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(drain(dir, deps, s"ckpt$i") == expected)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    info(s"classes compiled per drain: ${compiles.mkString(", ")}")
+    assert(compiles.tail == Seq(0L, 0L), s"classes compiled per drain: $compiles")
   }
 }
 
