@@ -78,12 +78,12 @@ object Dev {
     sb.append("`ReadSchema` pruned to referenced columns, `BroadcastHashJoin`\n")
     sb.append("on every dimension/lookup join, `WholeStageCodegen` spans over\n")
     sb.append("the expression-heavy stages, `TakeOrderedAndProject` for top-k.\n")
-    interesting.foreach { name =>
+    interesting.foreach { name => Harness.queryLifetime(spark32) {
       sb.append(s"\n## $name\n\n```\n")
       sb.append(SparkEntry.queries(name)(spark32, dir)
         .queryExecution.explainString(FormattedMode).trim)
       sb.append("\n```\n")
-    }
+    }}
     // AQE FINAL plans at sf0.1 for the most expensive queries (r12
     // verdict #8): the static sf0.01 dump above shows what the planner
     // INTENDS; AQE's broadcast-vs-shuffle decisions differ by scale, so
@@ -104,13 +104,13 @@ object Dev {
     sb.append("`isFinalPlan=true`; compare against the static sf0.01\n")
     sb.append("intent above (broadcast joins here may become shuffled\n")
     sb.append("hash/sort-merge at another decade, and vice versa).\n")
-    heaviest.foreach { name =>
+    heaviest.foreach { name => Harness.queryLifetime(spark32) {
       sb.append(s"\n## $name @ sf0.1 (final)\n\n```\n")
       val df = SparkEntry.queries(name)(spark32, "/root/testdata/sf0.1")
       df.queryExecution.toRdd.foreach(_ => ())
       sb.append(df.queryExecution.explainString(FormattedMode).trim)
       sb.append("\n```\n")
-    }
+    }}
     spark32.stop()
     Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
     println("PLANS_WRITTEN")

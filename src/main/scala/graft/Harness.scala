@@ -11,6 +11,7 @@ import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
 import com.fasterxml.jackson.databind.node._
 import graft.operators.{Checkpoints, SuffixArray, TransientPersists}
 import org.apache.spark.SparkContext
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -224,13 +225,8 @@ object Harness {
       false
     } finally {
       if (p != null && p.isAlive) p.destroyForcibly().waitFor()
-      deleteRecursively(tmpDir)
+      JavaUtils.deleteQuietly(tmpDir)
     }
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 
   /** The artifact reader/writer. Floats parse as exact decimals so a

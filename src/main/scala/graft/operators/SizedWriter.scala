@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.{col, lit, pmod, struct, xxhash64}
 
@@ -78,7 +79,7 @@ object SizedWriter {
             .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
           dirBytes(tmp).toDouble / m.toDouble
         } else dirBytes(tmp).toDouble / n.toDouble
-      } finally deleteRecursively(tmp)
+      } finally JavaUtils.deleteQuietly(tmp.toFile)
 
     val nFiles = math.max(1L,
       math.ceil(total.toDouble * bytesPerRow / targetFileBytes.toDouble).toLong)
@@ -96,13 +97,6 @@ object SizedWriter {
     val s = Files.walk(dir)
     try s.filter(p => p.toString.endsWith(".parquet"))
       .mapToLong(p => Files.size(p)).sum()
-    finally s.close()
-  }
-
-  private def deleteRecursively(dir: Path): Unit = {
-    val s = Files.walk(dir)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
     finally s.close()
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -258,19 +259,15 @@ object SuffixArray {
     * by `spark.executor.cores` (concurrent tasks share the heap;
     * unitless values are MiB, Spark's convention for this conf), and
     * the driver heap only CAPS it (never raises it past what the
-    * driver-side collect paths were sized for). `-Dgraft.sa.localMaxChars`
-    * still overrides everything. SuffixArraySpec pins the derivation.
+    * driver-side collect paths were sized for). SuffixArraySpec pins
+    * the derivation.
     */
   def localMaxChars: Long = {
-    val p = java.lang.Long.getLong("graft.sa.localMaxChars", -1L)
-    if (p > 0L) p
-    else {
-      val sess = org.apache.spark.sql.SparkSession.getActiveSession
-      localMaxCharsFor(
-        sess.flatMap(_.conf.getOption("spark.executor.memory")),
-        sess.flatMap(_.conf.getOption("spark.executor.cores")),
-        Runtime.getRuntime.maxMemory())
-    }
+    val sess = org.apache.spark.sql.SparkSession.getActiveSession
+    localMaxCharsFor(
+      sess.flatMap(_.conf.getOption("spark.executor.memory")),
+      sess.flatMap(_.conf.getOption("spark.executor.cores")),
+      Runtime.getRuntime.maxMemory())
   }
 
   /** The [[localMaxChars]] derivation as a pure function (spec-pinned).
@@ -285,8 +282,7 @@ object SuffixArray {
     val taskHeap: Long = execMem
       .flatMap { m =>
         try {
-          val bytes = org.apache.spark.network.util.JavaUtils
-            .byteStringAsMb(m) << 20
+          val bytes = JavaUtils.byteStringAsMb(m) << 20
           val cores = execCores.flatMap(c => scala.util.Try(c.toInt).toOption)
             .filter(_ >= 1).getOrElse(1)
           Some(math.min(bytes / cores, jvmMaxBytes))
@@ -670,7 +666,7 @@ object SuffixArray {
     // hash-walk done-sidecar dirs: any frame lazily reading one is a
     // pre-boundary frame and already invalid per this method's contract
     var d = doneSidecars.poll()
-    while (d != null) { deleteRecursively(d); d = doneSidecars.poll() }
+    while (d != null) { JavaUtils.deleteQuietly(d); d = doneSidecars.poll() }
   }
 
   /** Parquet sidecar dirs holding hash-walk results (see
@@ -682,14 +678,10 @@ object SuffixArray {
     */
   private val doneSidecars =
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       var d = doneSidecars.poll()
-      while (d != null) { deleteRecursively(d); d = doneSidecars.poll() }
+      while (d != null) { JavaUtils.deleteQuietly(d); d = doneSidecars.poll() }
     }))
   }
 
@@ -1049,7 +1041,7 @@ object SuffixArray {
           .write.partitionBy("__shard").mode("overwrite")
           .parquet(d.getAbsolutePath)
         if (hasParquet(d)) Some(d)
-        else { deleteRecursively(d); None } // empty corpus: no partitions
+        else { JavaUtils.deleteQuietly(d); None } // empty corpus: no partitions
       }
     try {
       (0 until nShards).foreach { s =>
@@ -1076,7 +1068,7 @@ object SuffixArray {
         } finally {
           doneSidecars.asScala.toList
             .filterNot(beforeDirs).filterNot(_ == outDir)
-            .foreach { d => doneSidecars.remove(d); deleteRecursively(d) }
+            .foreach { d => doneSidecars.remove(d); JavaUtils.deleteQuietly(d) }
           // shuffle-FILE hygiene: ContextCleaner frees a shard's
           // shuffle files only when driver GC collects the shuffle
           // dependencies, so without this nudge the files of EVERY
@@ -1090,7 +1082,7 @@ object SuffixArray {
           System.gc()
         }
       }
-    } finally shardInputDir.foreach(deleteRecursively)
+    } finally shardInputDir.foreach(JavaUtils.deleteQuietly)
     if (hasParquet(outDir))
       spark.read.parquet(outDir.getAbsolutePath).drop("__cutshard")
     else // a clean corpus can yield zero spans in every shard, and an

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType
 
 /** Avro encoding + Kinesis-shaped sink (reference S6/S7:
   * lib/pipeline_controller.py:241-244 encodes each output row against the
-  * registry schema and PutRecords them in chunks of KINESIS_BATCH_SIZE).
+  * registry schema and PutRecords them in KINESIS_BATCH_SIZE chunks; here 500).
   *
   * This build has avro-core but no spark-avro SQL module and no AWS SDK,
   * so: each partition encodes its shaped output rows with avro's

@@ -6,14 +6,12 @@ package graft.pipeline
   * deployment's concern (inject already-decrypted values).
   */
 final case class Config(
-    sierraJdbcUrl: Option[String],
     redshiftJdbcUrl: Option[String],
     redshiftTable: String,
     schemaUrl: Option[String],
     bcryptSalt: String,
     activePatronBatchSize: Int,
     deletedPatronBatchSize: Int,
-    kinesisBatchSize: Int,
     kinesisStreamArn: Option[String],
     maxBatches: Option[Int],
     ignoreCache: Boolean,
@@ -32,14 +30,12 @@ object Config {
     * config/production.yaml batch sizes).
     */
   def fromEnv(env: Map[String, String] = sys.env): Config = Config(
-    sierraJdbcUrl = env.get("SIERRA_JDBC_URL"),
     redshiftJdbcUrl = env.get("REDSHIFT_JDBC_URL"),
     redshiftTable = env.getOrElse("REDSHIFT_TABLE", "patron_info"),
     schemaUrl = env.get("PATRON_INFO_SCHEMA_URL"),
     bcryptSalt = env.getOrElse("BCRYPT_SALT", ""),
     activePatronBatchSize = env.getOrElse("ACTIVE_PATRON_BATCH_SIZE", "10000").toInt,
     deletedPatronBatchSize = env.getOrElse("DELETED_PATRON_BATCH_SIZE", "500000").toInt,
-    kinesisBatchSize = env.getOrElse("KINESIS_BATCH_SIZE", "500").toInt,
     // reference lib/pipeline_controller.py:81 (KMS-decrypted at deploy)
     kinesisStreamArn = env.get("KINESIS_STREAM_ARN"),
     maxBatches = env.get("MAX_BATCHES").map(_.toInt),

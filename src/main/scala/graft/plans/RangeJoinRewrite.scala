@@ -64,9 +64,8 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * Guards: inner joins only; TIMESTAMP bounds; skipped when both sides
   * stream (the stateful stream-stream form needs watermark-bounded
   * conditions INSIDE the join — see EventStreams.streamingAttribution);
-  * disable with `spark.graft.rangeJoin.rewrite=false`; bin width via
-  * `spark.graft.rangeJoin.binSeconds` (default 1800, same default as
-  * RangeJoin.intervalJoin).
+  * disable with `spark.graft.rangeJoin.rewrite=false`. Bins are a fixed
+  * 1800 s wide, the default of RangeJoin.intervalJoin.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -74,12 +73,11 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private def enabled: Boolean =
     conf.getConfString("spark.graft.rangeJoin.rewrite", "true").toBoolean
-  private def binUs: Long =
-    conf.getConfString("spark.graft.rangeJoin.binSeconds", "1800").toLong * 1000000L
+  private val BinUs = 1800L * 1000000L
   private def maxBins: Long =
     conf.getConfString("spark.graft.rangeJoin.maxBinsPerInterval", "10000").toLong
 
-  /** Exact floor(unix_micros(ts) / binUs) as integer arithmetic:
+  /** Exact floor(unix_micros(ts) / BinUs) as integer arithmetic:
     * `(us − pmod(us, w)) div w`. The pmod makes truncating division a
     * true floor for pre-epoch timestamps; integer div keeps bins exact
     * past the ~2^53 µs limit where double division starts to skew.
@@ -87,7 +85,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     */
   private def binOf(ts: Expression): Expression = {
     val us = UnixMicros(ts)
-    val w = Literal(binUs)
+    val w = Literal(BinUs)
     IntegralDivide(Subtract(us, Pmod(us, w)), w)
   }
 

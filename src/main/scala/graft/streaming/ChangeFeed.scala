@@ -19,22 +19,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Per-batch cost scales with |batch keys| + |state| through ONE
   * key-co-partitioned merge join and one diff join — never with stream
-  * history. State is versioned (`<stateDir>/v<batchId>`, latest wins)
-  * because the merged snapshot lazily READS the prior version while
-  * being written — an in-place overwrite would corrupt its own input.
+  * history.
   *
-  * Crash-replay is idempotent: foreachBatch is at-least-once, so a
-  * crash after `v<batchId>` commits but before the streaming
-  * checkpoint advances re-delivers the SAME batchId. Re-merging then
-  * would double-count the delta (prior would be the already-merged
-  * v<batchId>) and the overwrite would target its own input. Instead,
-  * an existing `v<batchId>` is taken as the committed merge and the
-  * feed is REBUILT as diff(v<prev>, v<batchId>) — which is why
-  * cleanup keeps the immediate predecessor version and deletes only
-  * older ones (the predecessor dies when the NEXT batch commits).
-  * Sink-before-state (the at-least-once rule used across
-  * graft.streaming): a crash between sink and state write re-emits
-  * one batch's feed rather than losing it.
+  * State: the view is [[BatchState]] snapshot state at `stateDir`, one
+  * committed version per batch. The feed is always diff(prior version,
+  * merged version), so a replayed batch (its version already committed)
+  * re-emits the same feed from the two committed versions instead of
+  * merging its delta a second time.
   */
 object ChangeFeed {
 
@@ -66,48 +57,14 @@ object ChangeFeed {
                                       stateDir: String, keys: Seq[String],
                                       aggs: Seq[(String, String)],
                                       buildState: DataFrame => DataFrame)
-                                     (sink: DataFrame => Unit): Unit = {
-    val s = batch.sparkSession
-    val dir = new java.io.File(stateDir)
-    val versions = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .sortBy(f => f.getName.drop(1).toLong)
-    val priorVersions = versions.filter(_.getName.drop(1).toLong < batchId)
-    def readPrior(fallback: DataFrame): DataFrame = priorVersions.lastOption
-      .map(f => s.read.parquet(f.getAbsolutePath))
-      .getOrElse(fallback.limit(0))
-    val (prior, merged, alreadyCommitted) =
-      versions.find(_.getName == s"v$batchId")
-        // a v<batchId> without _SUCCESS is a crash DURING the write —
-        // partial parquet that must be re-merged, not trusted as the
-        // committed snapshot (reading it would silently commit a
-        // truncated view); mode(overwrite) below replaces it cleanly
-        .filter(f => new java.io.File(f, "_SUCCESS").exists()) match {
-        case Some(f) =>
-          // Crash-replay: v<batchId> committed before the checkpoint
-          // advanced. Re-merging would double-count the delta AND
-          // overwrite a path the plan is reading; read the committed
-          // merge and rebuild the feed as diff(v<prev>, v<batchId>).
-          val m = s.read.parquet(f.getAbsolutePath)
-          (readPrior(m), m, true)
-        case None =>
-          val delta = buildState(batch)
-          val p = readPrior(delta)
-          (p, IncrementalAgg.merge(p, delta, keys, aggs), false)
-      }
-    val feed = Diff.snapshotDiff(prior, merged, keys, aggs.map(_._1))
-      .filter(col("change") =!= "unchanged")
-      .withColumn("batch_id", lit(batchId))
-    sink(feed)
-    if (!alreadyCommitted)
-      merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      f.delete(): Unit
+                                     (sink: DataFrame => Unit): Unit =
+    BatchState.advance(batch.sparkSession, stateDir, batchId) { prior =>
+      val delta = buildState(batch)
+      IncrementalAgg.merge(prior.getOrElse(delta.limit(0)), delta, keys, aggs)
+    } { (prior, merged) =>
+      sink(Diff.snapshotDiff(prior.getOrElse(merged.limit(0)), merged, keys,
+          aggs.map(_._1))
+        .filter(col("change") =!= "unchanged")
+        .withColumn("batch_id", lit(batchId)))
     }
-    // Keep the immediate predecessor (crash-replay of THIS batch needs
-    // it to rebuild the feed); delete only versions older than that.
-    priorVersions.dropRight(1)
-      .foreach(f => try rm(f) catch { case _: Exception => () })
-  }
 }

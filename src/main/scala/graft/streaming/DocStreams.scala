@@ -5,6 +5,7 @@ import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming document operators (LLM-pipeline extension, SURVEY §7.4).
   *
@@ -25,6 +26,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * The similarity reported is the MinHash ESTIMATE (matching-permutation
   * fraction) — signatures live in state, shingle sets do not; route
   * candidates through the exact batch verify where byte truth matters.
+  *
+  * State: the `foreachBatch` operators here keep their cross-batch state
+  * through [[BatchState]]. Cluster maintenance, trending terms and CMS
+  * counts keep snapshot state (one committed version per batch, so a
+  * replayed batch re-emits from its committed version instead of merging
+  * twice); `dedupAgainst`'s history and the bigram model are append-only
+  * logs read with [[BatchState.readLog]], at-least-once as each documents.
   */
 object DocStreams {
 
@@ -147,12 +155,8 @@ object DocStreams {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         val b = batch.toDF()
-        val history =
-          try s.read.parquet(historyDir).select(col(idCol), col(textCol))
-          catch { // first batch: no index yet — empty history, same schema
-            case _: org.apache.spark.sql.AnalysisException =>
-              b.select(col(idCol), col(textCol)).limit(0)
-          }
+        val history = BatchState.readLog(s, historyDir,
+          b.select(col(idCol), col(textCol)).schema)
         val survivors = graft.operators.Dedup
           .dedupAgainst(history, b, idCol, textCol, k, threshold)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -330,15 +334,8 @@ object DocStreams {
     * `cc(all edges so far)` (pinned in DocStreamsSpec against the full
     * recompute).
     *
-    * Replay safety (the [[streamingCmsCounts]] sentinel): the state
-    * write lands before the checkpoint commit, so a crash in the gap
-    * replays the batch; merging the same edges twice is IDEMPOTENT for
-    * CC (re-unioning an edge changes nothing), but the sentinel still
-    * skips the redundant work and keeps the state write count aligned
-    * with committed batches.
-    *
-    * Storage: every checkpoint a batch creates (the prior state, the
-    * batch's edges, the merged state and the merge's own) is freed by a
+    * Storage: every checkpoint a batch creates (the batch's edges, the
+    * merged state and the merge's own) is freed by a
     * [[graft.operators.Checkpoints.scope]] once the state write
     * commits, so executor storage does not grow with the batch count.
     * `sink` must therefore materialize the frame inside the call, as
@@ -353,32 +350,15 @@ object DocStreams {
         val s = batch.sparkSession
         import s.implicits._
         graft.operators.Checkpoints.scope(s) {
-          val (prior: DataFrame, lastApplied: Long) =
-            try {
-              val st = s.read.parquet(stateDir)
-              val applied = st.filter(col("id") === -1L && col("label") === -1L)
-                .select("applied").as[Long].collect().headOption.getOrElse(-1L)
-              (st.filter(col("id") =!= -1L).select("id", "label").localCheckpoint(),
-                applied)
-            } catch { // first batch: empty clustering
-              case _: org.apache.spark.sql.AnalysisException =>
-                (Seq.empty[(Long, Long)].toDF("id", "label"), -1L)
-            }
-          val merged =
-            if (batchId <= lastApplied) prior
-            else {
-              val edges = batch.toDF().select(col("src"), col("dst"))
-                .localCheckpoint()
-              val newVerts = edges.select(col("src").as("id"))
-                .unionByName(edges.select(col("dst").as("id"))).distinct()
-              graft.operators.IncrementalCC.merge(prior, edges, newVerts)
-                .localCheckpoint()
-            }
-          sink(merged.withColumn("batch_id", lit(batchId)))
-          if (batchId > lastApplied)
-            merged.withColumn("applied", lit(-1L))
-              .unionByName(Seq((-1L, -1L, batchId)).toDF("id", "label", "applied"))
-              .coalesce(1).write.mode("overwrite").parquet(stateDir)
+          BatchState.advance(s, stateDir, batchId) { prior =>
+            val edges = batch.toDF().select(col("src"), col("dst"))
+              .localCheckpoint()
+            val newVerts = edges.select(col("src").as("id"))
+              .unionByName(edges.select(col("dst").as("id"))).distinct()
+            graft.operators.IncrementalCC.merge(
+              prior.getOrElse(Seq.empty[(Long, Long)].toDF("id", "label")),
+              edges, newVerts).localCheckpoint()
+          } { (_, merged) => sink(merged.withColumn("batch_id", lit(batchId))) }
         }
       }
       .start()
@@ -434,6 +414,12 @@ object DocStreams {
         count(col("c2")).as("n_known"))
   }
 
+  /** The bigram model's log layout: one (w1, w2, c2) row per pair per
+    * appended batch; reads sum c2 by pair.
+    */
+  private val BigramModelSchema =
+    new StructType().add("w1", "string").add("w2", "string").add("c2", "long")
+
   /** Streaming bigram-perplexity quality gate — the incremental form of
     * the batch q86 filter (CCNet's band cut): each micro-batch is
     * scored against a PERSISTENT bigram model (parquet at `modelDir`)
@@ -469,15 +455,9 @@ object DocStreams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
-        import s.implicits._
         val b = batch.toDF()
-        val model =
-          try s.read.parquet(modelDir).groupBy("w1", "w2")
-            .agg(sum("c2").as("c2"))
-          catch { // first batch: no model yet
-            case _: org.apache.spark.sql.AnalysisException =>
-              Seq.empty[(String, String, Long)].toDF("w1", "w2", "c2")
-          }
+        val model = BatchState.readLog(s, modelDir, BigramModelSchema)
+          .groupBy("w1", "w2").agg(sum("c2").as("c2"))
         val scores = bigramScore(b, model, idCol, textCol)
         val scored = b
           .join(scores, b(idCol) === scores("doc_id"), "left")
@@ -523,12 +503,6 @@ object DocStreams {
     *
     * State is the sketch itself: ≤ `width−1` (term, est) rows at
     * `stateDir`, regardless of stream length — never vocab-sized.
-    * Sink-before-state (the [[streamingDedupAgainst]] rule): a crash
-    * between the two re-processes the batch; a replayed merge
-    * double-counts one batch's tokens, inflating estimates by at most
-    * that batch's mass — estimates stay upper-bounds of a stream with
-    * the replay included, and the guarantee degrades gracefully
-    * instead of silently losing mass.
     */
   def streamingTrendingTerms(incoming: DataFrame, stateDir: String,
                              textCol: String, width: Int, topK: Int,
@@ -539,31 +513,30 @@ object DocStreams {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        val row = batch.toDF()
-          .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("tok"))
-          .agg(graft.functions.MisraGries(s, col("tok"), width).as("mg"))
-          .collect()(0)
-        val batchSketch =
-          if (row.isNullAt(0)) Map.empty[String, Long]
-          else row.getMap[String, Long](0).toMap
-        val prior: Map[String, Long] =
-          try s.read.parquet(stateDir).as[(String, Long)].collect().toMap
-          catch { // first batch: no state yet
-            case _: org.apache.spark.sql.AnalysisException => Map.empty
-          }
-        // Reuse the aggregate's own merge so the cross-batch trim is
-        // bit-for-bit the algorithm the bound is proved for.
-        val merger = graft.functions.MisraGries(
-          org.apache.spark.sql.catalyst.expressions.Literal("x"), width)
-        val merged = merger.merge(
-          scala.collection.mutable.HashMap.from(prior),
-          scala.collection.mutable.HashMap.from(batchSketch))
-        val top = merged.toSeq.sortBy { case (t, c) => (-c, t) }.take(topK)
-        sink(top.zipWithIndex
-          .map { case ((t, c), i) => (batchId, (i + 1).toLong, t, c) }
-          .toDF("batch_id", "rank", "term", "est_count"))
-        merged.toSeq.toDF("term", "est")
-          .coalesce(1).write.mode("overwrite").parquet(stateDir)
+        BatchState.advance(s, stateDir, batchId) { prior =>
+          val row = batch.toDF()
+            .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("tok"))
+            .agg(graft.functions.MisraGries(s, col("tok"), width).as("mg"))
+            .collect()(0)
+          val batchSketch =
+            if (row.isNullAt(0)) Map.empty[String, Long]
+            else row.getMap[String, Long](0).toMap
+          // Reuse the aggregate's own merge so the cross-batch trim is
+          // bit-for-bit the algorithm the bound is proved for.
+          val merger = graft.functions.MisraGries(
+            org.apache.spark.sql.catalyst.expressions.Literal("x"), width)
+          merger.merge(
+            scala.collection.mutable.HashMap.from(
+              prior.fold(Map.empty[String, Long])(_.as[(String, Long)].collect().toMap)),
+            scala.collection.mutable.HashMap.from(batchSketch))
+            .toSeq.toDF("term", "est").coalesce(1)
+        } { (_, merged) =>
+          val top = merged.as[(String, Long)].collect()
+            .sortBy { case (t, c) => (-c, t) }.take(topK)
+          sink(top.toSeq.zipWithIndex
+            .map { case ((t, c), i) => (batchId, (i + 1).toLong, t, c) }
+            .toDF("batch_id", "rank", "term", "est_count"))
+        }
       }
       .start()
 
@@ -579,16 +552,6 @@ object DocStreams {
     * single-pass CMS guarantee. The sink receives per-batch estimates
     * for the caller's watch-list of keys (the production shape: point
     * lookups against 16 KB of state, no count table).
-    *
-    * Replay safety: the state parquet records the last APPLIED batchId
-    * in a sentinel row (cell = −1). The state write happens inside
-    * foreachBatch — i.e. before Spark commits the batch to the
-    * checkpoint — so a crash in that gap replays the batch on restart;
-    * without the sentinel the replayed sketch would be double-added,
-    * silently breaking the one-pass-equality claim above. A replayed
-    * (already-applied) batchId skips the merge and re-emits the
-    * watch-list estimates from the existing state, keeping both the
-    * sketch and the sink exactly-once in content.
     */
   def streamingCmsCounts(incoming: DataFrame, stateDir: String,
                          textCol: String, depth: Int, width: Int,
@@ -599,42 +562,34 @@ object DocStreams {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        val row = batch.toDF()
-          .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("tok"))
-          .agg(graft.functions.CountMin(s, col("tok"), depth, width).as("cms"))
-          .collect()(0)
-        val batchSketch: Array[Long] =
-          if (row.isNullAt(0)) new Array[Long](depth * width)
-          else row.getSeq[Long](0).toArray
-        val (prior: Array[Long], lastApplied: Long) =
-          try {
-            val cells = s.read.parquet(stateDir).as[(Int, Long)].collect()
-            val applied = cells.collectFirst { case (-1, b) => b }.getOrElse(-1L)
-            val sketch = cells.filter(_._1 >= 0).sortBy(_._1).map(_._2)
-            // a truncated state file or a depth/width change vs the run
-            // that wrote the state would silently drop cells here and
-            // corrupt every later estimate — fail with the shape instead
-            require(sketch.length == depth * width,
-              s"CMS state at $stateDir has ${sketch.length} cells; this run " +
-                s"expects depth*width = ${depth * width} — was the state " +
-                "written with different dimensions or truncated?")
-            (sketch, applied)
-          } catch { // first batch: no state yet
-            case _: org.apache.spark.sql.AnalysisException =>
-              (new Array[Long](depth * width), -1L)
-          }
-        val merged =
-          if (batchId <= lastApplied) prior // replayed batch: already in state
-          else prior.indices.map(i => prior(i) + batchSketch(i)).toArray
-        sink(watch.map { k =>
-          (batchId, k,
-            graft.functions.CountMin.estimate(merged, k, depth, width))
-        }.toDF("batch_id", "token", "est_count"))
-        if (batchId > lastApplied)
-          (merged.zipWithIndex.map { case (v, i) => (i, v) }.toSeq :+
-            ((-1, batchId)))
-            .toDF("cell", "count")
-            .coalesce(1).write.mode("overwrite").parquet(stateDir)
+        def cells(state: DataFrame): Array[Long] = {
+          val sketch = state.as[(Int, Long)].collect().sortBy(_._1).map(_._2)
+          // a depth/width change vs the run that wrote the state would
+          // silently misread cells and corrupt every later estimate —
+          // fail with the shape instead
+          require(sketch.length == depth * width,
+            s"CMS state at $stateDir has ${sketch.length} cells; this run " +
+              s"expects depth*width = ${depth * width} — was the state " +
+              "written with different dimensions?")
+          sketch
+        }
+        BatchState.advance(s, stateDir, batchId) { prior =>
+          val row = batch.toDF()
+            .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("tok"))
+            .agg(graft.functions.CountMin(s, col("tok"), depth, width).as("cms"))
+            .collect()(0)
+          val batchSketch: Array[Long] =
+            if (row.isNullAt(0)) new Array[Long](depth * width)
+            else row.getSeq[Long](0).toArray
+          val p = prior.fold(new Array[Long](depth * width))(cells)
+          p.indices.map(i => (i, p(i) + batchSketch(i)))
+            .toDF("cell", "count").coalesce(1)
+        } { (_, merged) =>
+          val sketch = cells(merged)
+          sink(watch.map { k =>
+            (batchId, k, graft.functions.CountMin.estimate(sketch, k, depth, width))
+          }.toDF("batch_id", "token", "est_count"))
+        }
       }
       .start()
 

@@ -5,6 +5,7 @@ import graft.pipeline.{AvroSink, PatronPipeline, PipelineMode, Schemas}
 import org.apache.spark.sql.{DataFrame, SessionBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** The reference's hand-written micro-batch loop
   * (lib/pipeline_controller.py:90-125), expressed natively in Structured
@@ -14,8 +15,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *                            matching "poll until a short batch")
   *  - ST2 S3 offset JSON    → `checkpointLocation` offset/commit log
   *  - ST3 watermark advance → engine-managed source offsets
-  *  - ST4 processed_ids set → run-scoped seen keys: a parquet key set
-  *                            beside the checkpoint, one subdir per
+  *  - ST4 processed_ids set → run-scoped seen keys: an append-only
+  *                            parquet key set beside the checkpoint
+  *                            ([[BatchState.readLog]]), one subdir per
   *                            `runId`, applied as a left-anti join
   *                            ([[PatronPipeline.filterUnseen]]) — the
   *                            reference's per-run set lifetime
@@ -66,6 +68,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object PatronStream {
 
+  private val SeenSchema = new StructType().add("patron_id_plaintext", "string")
+
   /** Run all three modes as ONE streaming query over mode-tagged unioned
     * sources, with a single global dropDuplicates — the Spark-native form
     * of the reference's shared `processed_ids` across its three sequential
@@ -108,19 +112,7 @@ object PatronStream {
         // checkpoint the batch creates is freed once its writes end.
         SessionBridge.withResources(caller)(Checkpoints.scope(caller) {
           val batch = SessionBridge.rebase(caller, microBatch)
-          // Only a MISSING state dir means "first run, nothing seen" — any
-          // other failure (corrupt files, transient IO) must fail the batch,
-          // or processed patrons would silently re-emit.
-          val seen =
-            try caller.read.parquet(seenPath)
-            catch {
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getCondition == "PATH_NOT_FOUND" =>
-                caller.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("patron_id_plaintext",
-                      org.apache.spark.sql.types.StringType))))
-            }
+          val seen = BatchState.readLog(caller, seenPath, SeenSchema)
           // within a batch: highest-priority mode wins (NEW < UPDATED <
           // DELETED — the reference's sequential run order); at equal mode,
           // the lowest (display_order, patron_record_address_type_id)

@@ -18,13 +18,12 @@ object DumpPlan {
     val spark = graft.Harness.session()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(FormattedMode)
+      val plan = graft.Harness.queryLifetime(spark)(graft.SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.explainString(FormattedMode))
       val path = java.nio.file.Paths.get(outDir, s"${name}_$tag.txt")
       java.nio.file.Files.write(path,
         plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       System.err.println(s"[dumpplan] wrote $path (${plan.length} chars)")
-      graft.operators.TransientPersists.releaseAll()
     }
     spark.stop()
   }

@@ -9,7 +9,6 @@ class ConfigSpec extends AnyFunSuite {
     val c = Config.fromEnv(Map.empty)
     assert(c.activePatronBatchSize == 10000)
     assert(c.deletedPatronBatchSize == 500000)
-    assert(c.kinesisBatchSize == 500)
     assert(c.startingCreationDt == "2020-01-01 00:00:00-05")
     assert(c.startingDeletionDate == "2020-01-01")
     assert(!c.ignoreCache && !c.ignoreKinesis && c.maxBatches.isEmpty)
@@ -18,10 +17,10 @@ class ConfigSpec extends AnyFunSuite {
   test("overrides and toggles parse (reference IGNORE_* string convention)") {
     val c = Config.fromEnv(Map(
       "ACTIVE_PATRON_BATCH_SIZE" -> "4", "DELETED_PATRON_BATCH_SIZE" -> "3",
-      "KINESIS_BATCH_SIZE" -> "2", "MAX_BATCHES" -> "3",
+      "MAX_BATCHES" -> "3",
       "IGNORE_CACHE" -> "True", "IGNORE_KINESIS" -> "False"))
     assert(c.activePatronBatchSize == 4 && c.deletedPatronBatchSize == 3)
-    assert(c.kinesisBatchSize == 2 && c.maxBatches.contains(3))
+    assert(c.maxBatches.contains(3))
     assert(c.ignoreCache && !c.ignoreKinesis)
   }
 

@@ -46,7 +46,7 @@ class DocStreamsSpec extends AnyFunSuite {
       Seq((1L, "a", 2L), (2L, "b", 1L), (3L, "c", 1L)),
       Seq((1L, "a", 3L), (2L, "b", 3L), (3L, "c", 1L))))
     import spark.implicits._
-    val state = spark.read.parquet(s"$tmp/state")
+    val state = BatchState.latest(spark, s"$tmp/state").get
       .as[(String, Long)].collect().toMap
     assert(state == Map("a" -> 3L, "b" -> 3L, "c" -> 1L, "d" -> 1L))
   }
@@ -87,15 +87,15 @@ class DocStreamsSpec extends AnyFunSuite {
     val onePass = allToks
       .agg(graft.functions.CountMin(spark, col("tok"), depth, width))
       .head().getSeq[Long](0).toArray
-    val stateCells = spark.read.parquet(s"$tmp/state")
-      .as[(Int, Long)].collect()
-    val state = stateCells.filter(_._1 >= 0).sortBy(_._1).map(_._2)
+    val state = BatchState.latest(spark, s"$tmp/state").get
+      .as[(Int, Long)].collect().sortBy(_._1).map(_._2)
     assert(state.sameElements(onePass),
       "streamed state must equal the one-pass batch sketch")
-    // the replay sentinel records the last applied batchId (two source
-    // files at maxFilesPerTrigger=1 → batches 0 and 1)
-    assert(stateCells.collectFirst { case (-1, b) => b }.contains(1L),
-      s"state must carry the applied-batchId sentinel: ${stateCells.toSeq}")
+    // the newest committed version is the last applied batchId (two
+    // source files at maxFilesPerTrigger=1 → batches 0 and 1)
+    val versions = BatchState.committed(spark, s"$tmp/state")
+    assert(versions.lastOption.contains(1L),
+      s"newest committed state version must be batch 1: $versions")
     // watch-list estimates: final batch reflects the full stream; CMS
     // never undercounts (a=4, b=3, zz=0+collisions)
     val fin = perBatch.last.map(t => t._2 -> t._3).toMap
@@ -138,8 +138,8 @@ class DocStreamsSpec extends AnyFunSuite {
       .select(explode(split(col("text"), " ")).as("tok"))
       .agg(graft.functions.CountMin(spark, col("tok"), depth, width))
       .head().getSeq[Long](0).toArray
-    val state = spark.read.parquet(s"$tmp/state")
-      .as[(Int, Long)].collect().filter(_._1 >= 0).sortBy(_._1).map(_._2)
+    val state = BatchState.latest(spark, s"$tmp/state").get
+      .as[(Int, Long)].collect().sortBy(_._1).map(_._2)
     assert(state.sameElements(onePass),
       "replayed batch must be skipped, not double-added")
     // the sink still re-emits estimates, and from the SAME state
@@ -170,7 +170,7 @@ class DocStreamsSpec extends AnyFunSuite {
     q.stop()
 
     import spark.implicits._
-    val state = spark.read.parquet(s"$tmp/state")
+    val state = BatchState.latest(spark, s"$tmp/state").get
       .as[(String, Long)].collect().toMap
     assert(state.size <= 2, s"state exceeded width-1 counters: $state")
     assert(state.contains("x"), s"guaranteed heavy hitter evicted: $state")
@@ -589,8 +589,7 @@ class DocStreamsSpec extends AnyFunSuite {
       8L -> 8L, 9L -> 8L))
     // persisted state = full CC over all edges seen
     import spark.implicits._
-    val st = spark.read.parquet(s"$tmp/state")
-      .filter(org.apache.spark.sql.functions.col("id") =!= -1L)
+    val st = BatchState.latest(spark, s"$tmp/state").get
       .select("id", "label").as[(Long, Long)].collect().toMap
     assert(st == perBatch(1))
     // every checkpoint a batch created is freed once its state write
