@@ -40,8 +40,6 @@ object Main {
     Seq("sierra_active_new", "sierra_active_updated", "sierra_deleted")
       .foreach(PollClientRegistry.get) // fail fast with a clear message
 
-    streaming.StateStores.configure(spark, cfg.stateStoreProvider)
-
     // The source polls strictly `> startMicros`; the reference's scans are
     // `>= start` (helpers/query_helper.py:22,36), so the configured instant
     // itself must be included — start one micro before it.
@@ -50,9 +48,6 @@ object Main {
         .format(classOf[PollingSourceProvider].getName)
         .option("client", client)
         .option("limit", limit)
-        // >1 with a PartitionedPollClient shards the row reads across
-        // executors (driver plans from the narrow watermark scan)
-        .option("numPartitions", cfg.sourceNumPartitions)
       val withStart =
         if (cfg.ignoreCache) reader.option("startMicros", startMicros - 1) else reader
       cfg.maxBatches.fold(withStart)(m => withStart.option("maxBatches", m)).load()

@@ -168,11 +168,4 @@ object InvertedIndex {
       .groupBy(col(docIdCol))
       .agg(count(lit(1)).as("n_matches"), min(col("start")).as("first_start"))
   }
-
-  /** Back-compat form over raw postings; the caller-supplied bucket
-    * count must match how the postings were built.
-    */
-  def phraseSearch(postings: DataFrame, phrase: Seq[String],
-                   docIdCol: String, numBuckets: Int): DataFrame =
-    phraseSearch(PostingsIndex(postings, numBuckets), phrase, docIdCol)
 }

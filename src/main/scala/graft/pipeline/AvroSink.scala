@@ -6,10 +6,9 @@ import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.EncoderFactory
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 /** Avro encoding + Kinesis-shaped sink (reference S6/S7:
   * lib/pipeline_controller.py:241-244 encodes each output row against the
@@ -23,17 +22,6 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType
   * config/production.yaml:12).
   */
 object AvroSink extends Logging {
-
-  /** Encode the 11-column output DataFrame to one Avro binary per row. */
-  def encode(df: DataFrame, schemaJson: String = Schemas.patronInfoAvroJson): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(StructField("value", BinaryType)))
-    val rdd = df.select(Schemas.outputColumns.map(col): _*).rdd.mapPartitions { it =>
-      val encode = encoder(schemaJson)
-      it.map(row => Row(encode(i => if (row.isNullAt(i)) null else row.get(i))))
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** One partition's Avro encoder: the output values by column index, in
     * [[Schemas.outputColumns]] order (null for null), to one binary.
@@ -101,10 +89,10 @@ object AvroSink extends Logging {
 
   /** Encode + deliver, chunking per partition (each executor sends its own
     * partitions — at scale the sink parallelism equals the partition count,
-    * where the reference was single-threaded). The records are the same
-    * binaries [[encode]] makes, built straight from the selected rows'
-    * `InternalRow`s: no Row conversion on either side, so the write
-    * generates no deserializer or serializer class. A plain RDD action:
+    * where the reference was single-threaded). Each record is encoded
+    * straight from the selected row's `InternalRow`: no Row conversion
+    * on either side, so the write generates no deserializer or
+    * serializer class. A plain RDD action:
     * a caller that needs its jobs under a given session's artifact state
     * wraps it ([[graft.streaming.PatronStream.runAll]] does).
     */

@@ -19,9 +19,7 @@ final case class Config(
     startingCreationDt: String,
     startingUpdateDt: String,
     startingDeletionDate: String,
-    checkpointDir: String,
-    sourceNumPartitions: Int,
-    stateStoreProvider: String)
+    checkpointDir: String)
 
 object Config {
 
@@ -44,10 +42,7 @@ object Config {
     startingCreationDt = env.getOrElse("STARTING_CREATION_DT", "2020-01-01 00:00:00-05"),
     startingUpdateDt = env.getOrElse("STARTING_UPDATE_DT", "2020-01-01 00:00:00-05"),
     startingDeletionDate = env.getOrElse("STARTING_DELETION_DATE", "2020-01-01"),
-    checkpointDir = env.getOrElse("CHECKPOINT_DIR", "/tmp/graft-checkpoint"),
-    sourceNumPartitions = env.getOrElse("SOURCE_NUM_PARTITIONS", "1").toInt,
-    // rocksdb | hdfs — see graft.streaming.StateStores for the tradeoff
-    stateStoreProvider = env.getOrElse("STATE_STORE_PROVIDER", "hdfs"))
+    checkpointDir = env.getOrElse("CHECKPOINT_DIR", "/tmp/graft-checkpoint"))
 
   /** Reference default watermark parsed to epoch micros (for the polling
     * source's startMicros when no checkpoint exists; `IGNORE_CACHE` resets

@@ -93,20 +93,10 @@ object JdbcPollClient {
     } finally conn.close()
   }
 
-  private def tsMicros(t: Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000) % 1000
-
-  private def dateMicros(d: java.sql.Date): Long =
-    d.toLocalDate.toEpochDay * 86400000000L
-
   /** Active-patrons scan (NEW_PATRONS ⇒ `creation_date_gmt`,
     * UPDATED_PATRONS ⇒ `record_last_updated_gmt` — query_helper.py:57-62).
-    * [[PartitionedPollClient]]: the driver plans offsets from the narrow
-    * watermark scan; executors read disjoint watermark ranges with the
-    * full join query (the client is just two strings — serializable).
     */
-  final class Active(url: String, orderingField: String)
-      extends PartitionedPollClient {
+  final class Active(url: String, orderingField: String) extends PollClient {
     require(orderingField == "creation_date_gmt"
       || orderingField == "record_last_updated_gmt",
       s"unknown ordering field: $orderingField")
@@ -118,70 +108,41 @@ object JdbcPollClient {
     // reference column order == sierraActive schema order (id, ptype,
     // pcode3, home, city, region, postal, addr, activity, deletion,
     // updated, created, display_order, type_id)
-    private def joinedSelect(innerWhere: String, innerTail: String): String =
-      s"""SELECT
-         |    x.id, ptype_code, pcode3,
-         |    CASE WHEN LENGTH(TRIM(home_library_code)) = 0
-         |        OR TRIM(home_library_code) = 'none' THEN NULL
-         |        ELSE TRIM(home_library_code) END,
-         |    TRIM(city), TRIM(region), TRIM(postal_code), TRIM(addr1),
-         |    activity_gmt,
-         |    x.deletion_date_gmt,
-         |    x.record_last_updated_gmt,
-         |    x.creation_date_gmt,
-         |    display_order,
-         |    patron_record_address_type_id
-         |FROM (
-         |    SELECT
-         |        id, record_last_updated_gmt, deletion_date_gmt, creation_date_gmt
-         |    FROM record_metadata
-         |    WHERE record_type_code = 'p'
-         |        AND $innerWhere
-         |        AND $orderingField IS NOT NULL
-         |    ORDER BY $orderingField
-         |    $innerTail) x
-         |LEFT JOIN patron_record_address
-         |    ON x.id = patron_record_address.patron_record_id
-         |LEFT JOIN patron_view
-         |    ON x.id = patron_view.id
-         |ORDER BY x.$orderingField, display_order, patron_record_address_type_id""".stripMargin
-
     override def poll(afterMicros: Long, limit: Int): Seq[Seq[Any]] =
       withPrepared(url,
-        joinedSelect(s"$orderingField > ?", s"FETCH FIRST $limit ROWS ONLY"),
+        s"""SELECT
+           |    x.id, ptype_code, pcode3,
+           |    CASE WHEN LENGTH(TRIM(home_library_code)) = 0
+           |        OR TRIM(home_library_code) = 'none' THEN NULL
+           |        ELSE TRIM(home_library_code) END,
+           |    TRIM(city), TRIM(region), TRIM(postal_code), TRIM(addr1),
+           |    activity_gmt,
+           |    x.deletion_date_gmt,
+           |    x.record_last_updated_gmt,
+           |    x.creation_date_gmt,
+           |    display_order,
+           |    patron_record_address_type_id
+           |FROM (
+           |    SELECT
+           |        id, record_last_updated_gmt, deletion_date_gmt, creation_date_gmt
+           |    FROM record_metadata
+           |    WHERE record_type_code = 'p'
+           |        AND $orderingField > ?
+           |        AND $orderingField IS NOT NULL
+           |    ORDER BY $orderingField
+           |    FETCH FIRST $limit ROWS ONLY) x
+           |LEFT JOIN patron_record_address
+           |    ON x.id = patron_record_address.patron_record_id
+           |LEFT JOIN patron_view
+           |    ON x.id = patron_view.id
+           |ORDER BY x.$orderingField, display_order, patron_record_address_type_id""".stripMargin,
         ps => ps.setTimestamp(1, toTimestamp(afterMicros)))(collect(_, schema))
-
-    override def pollWatermarks(afterMicros: Long, limit: Int): Seq[Long] =
-      withPrepared(url,
-        s"""SELECT $orderingField FROM record_metadata
-           |WHERE record_type_code = 'p'
-           |    AND $orderingField > ?
-           |    AND $orderingField IS NOT NULL
-           |ORDER BY $orderingField
-           |FETCH FIRST $limit ROWS ONLY""".stripMargin,
-        ps => ps.setTimestamp(1, toTimestamp(afterMicros))) { ps =>
-        val rs = ps.executeQuery()
-        try {
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-          while (rs.next()) buf += tsMicros(rs.getTimestamp(1))
-          buf.toSeq
-        } finally rs.close()
-      }
-
-    override def pollRange(loMicros: Long, hiMicros: Long): Seq[Seq[Any]] =
-      withPrepared(url,
-        joinedSelect(s"$orderingField > ? AND $orderingField <= ?", ""),
-        ps => {
-          ps.setTimestamp(1, toTimestamp(loMicros))
-          ps.setTimestamp(2, toTimestamp(hiMicros))
-        })(collect(_, schema))
   }
 
   /** Deleted-patrons scan (query_helper.py:33-40): date-watermarked
-    * single-table page. Sharding works the same way as [[Active]]; the
-    * watermark scan and the row scan differ only in projection width.
+    * single-table page.
     */
-  final class Deleted(url: String) extends PartitionedPollClient {
+  final class Deleted(url: String) extends PollClient {
     override def schema: StructType = Schemas.sierraDeleted
     override val watermarkField: String = "deletion_date_et"
 
@@ -195,36 +156,5 @@ object JdbcPollClient {
            |ORDER BY deletion_date_gmt
            |FETCH FIRST $limit ROWS ONLY""".stripMargin,
         ps => ps.setDate(1, toDate(afterMicros)))(collect(_, schema))
-
-    override def pollWatermarks(afterMicros: Long, limit: Int): Seq[Long] =
-      withPrepared(url,
-        s"""SELECT deletion_date_gmt
-           |FROM record_metadata
-           |WHERE record_type_code = 'p'
-           |    AND deletion_date_gmt > ?
-           |    AND deletion_date_gmt IS NOT NULL
-           |ORDER BY deletion_date_gmt
-           |FETCH FIRST $limit ROWS ONLY""".stripMargin,
-        ps => ps.setDate(1, toDate(afterMicros))) { ps =>
-        val rs = ps.executeQuery()
-        try {
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-          while (rs.next()) buf += dateMicros(rs.getDate(1))
-          buf.toSeq
-        } finally rs.close()
-      }
-
-    override def pollRange(loMicros: Long, hiMicros: Long): Seq[Seq[Any]] =
-      withPrepared(url,
-        s"""SELECT id, deletion_date_gmt
-           |FROM record_metadata
-           |WHERE record_type_code = 'p'
-           |    AND deletion_date_gmt > ? AND deletion_date_gmt <= ?
-           |    AND deletion_date_gmt IS NOT NULL
-           |ORDER BY deletion_date_gmt""".stripMargin,
-        ps => {
-          ps.setDate(1, toDate(loMicros))
-          ps.setDate(2, toDate(hiMicros))
-        })(collect(_, schema))
   }
 }

@@ -29,12 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    offset cannot advance — the source fails the query rather than loop.
   *  - ST8 backpressure: `limit` == the reference's *_PATRON_BATCH_SIZE.
   *
-  * The backing store is a [[PollClient]] (a JDBC implementation would
-  * issue exactly the reference's generated SQL; tests register in-memory
-  * clients). The poll itself runs on the driver — same topology as the
-  * reference's single poll connection — while downstream processing is
-  * fully distributed; a partitioned-range JDBC client can shard the read
-  * across executors without changing this interface.
+  * The backing store is a [[PollClient]] ([[JdbcPollClient]] issues the
+  * reference's generated SQL; tests register in-memory clients). The
+  * poll runs on the driver, the same topology as the reference's single
+  * poll connection: each batch is the page `latestOffset` polled, cut to
+  * the batch's (start, end] window and delivered as one partition, and a
+  * replay (the same window planned by a fresh source after a restart)
+  * polls that page again. Downstream processing is fully distributed.
   */
 trait PollClient {
   def schema: StructType
@@ -45,26 +46,6 @@ trait PollClient {
     * java.sql.Date / null).
     */
   def poll(afterMicros: Long, limit: Int): Seq[Seq[Any]]
-}
-
-/** A PollClient that can shard the read across executors. Offset planning
-  * only ever needs the WATERMARK COLUMN (the trim/stall logic is pure
-  * watermark arithmetic), so the driver polls a narrow ordered scan and
-  * row payloads flow database → executors directly, in parallel disjoint
-  * watermark ranges — the driver never materializes a batch. Must be
-  * Serializable: partitions carry the client itself to the executors
-  * (e.g. [[JdbcPollClient.Active]] is just a URL + field name).
-  */
-trait PartitionedPollClient extends PollClient with Serializable {
-  /** Watermarks (micros, ordered ascending) of up to `limit` entities
-    * strictly after `afterMicros` — the narrow planning scan.
-    */
-  def pollWatermarks(afterMicros: Long, limit: Int): Seq[Long]
-
-  /** Full rows with watermark in (loMicros, hiMicros], ordered by
-    * watermark — the executor-side range read.
-    */
-  def pollRange(loMicros: Long, hiMicros: Long): Seq[Seq[Any]]
 }
 
 /** Driver-side registry so option maps (strings) can reference clients. */
@@ -94,13 +75,11 @@ class PollingSourceProvider extends TableProvider {
       properties.get("client"),
       Option(properties.get("limit")).map(_.toInt).getOrElse(10000),
       Option(properties.get("startMicros")).map(_.toLong).getOrElse(Long.MinValue),
-      Option(properties.get("maxBatches")).map(_.toInt).getOrElse(Int.MaxValue),
-      Option(properties.get("numPartitions")).map(_.toInt).getOrElse(1))
+      Option(properties.get("maxBatches")).map(_.toInt).getOrElse(Int.MaxValue))
 }
 
 private class PollingTable(tableSchema: StructType, clientName: String,
-                           limit: Int, startMicros: Long, maxBatches: Int,
-                           numPartitions: Int)
+                           limit: Int, startMicros: Long, maxBatches: Int)
     extends Table with SupportsRead {
   override def name(): String = s"polling($clientName)"
   override def schema(): StructType = tableSchema
@@ -112,36 +91,23 @@ private class PollingTable(tableSchema: StructType, clientName: String,
       override def readSchema(): StructType = tableSchema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
         new PollingMicroBatchStream(tableSchema, clientName, limit, startMicros,
-          maxBatches, numPartitions)
+          maxBatches)
     }
 }
 
 private class PollingMicroBatchStream(schema: StructType, clientName: String,
-                                      limit: Int, startMicros: Long, maxBatches: Int,
-                                      numPartitions: Int)
+                                      limit: Int, startMicros: Long, maxBatches: Int)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   // ST8/MAX_BATCHES: per-run cap on micro-batches (the reference's
   // MAX_BATCHES env, lib/pipeline_controller.py:121-124).
   private val batchesPlanned = new java.util.concurrent.atomic.AtomicInteger(0)
   private def client = PollClientRegistry.get(clientName)
-  // Executor-sharded reads: offset planning needs only the watermark
-  // column, so with a PartitionedPollClient the driver polls the narrow
-  // watermark scan and planInputPartitions emits disjoint watermark
-  // ranges that EXECUTORS read directly from the store — the driver
-  // never materializes row payloads.
-  private def partitioned: Option[PartitionedPollClient] =
-    if (numPartitions > 1) client match {
-      case p: PartitionedPollClient => Some(p)
-      case _ => None
-    } else None
   private val wmIdx = schema.fieldIndex(client.watermarkField)
-  // rows/watermarks fetched for the current window, keyed by start offset
-  // (rows empty in sharded mode — executors fetch them per range).
+  // rows fetched for the current window, keyed by start offset.
   // Option, NOT a Long.MinValue sentinel: the default startMicros IS
   // Long.MinValue, so a sentinel key would collide with a genuine batch-0
   // replay after crash recovery and silently deliver an empty window.
   @volatile private var fetched: Option[(Long, Seq[Seq[Any]])] = None
-  @volatile private var fetchedWms: Option[(Long, Seq[Long])] = None
   // ST5: AvailableNow snapshots an upper bound at query start (the
   // reference bounds every poll at session-start `now`,
   // helpers/query_helper.py:22).
@@ -155,16 +121,7 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
     case other => throw new IllegalArgumentException(s"unsupported watermark type: $other")
   }
 
-  /** Ordered watermarks after `after` (plus the row page when the client
-    * cannot shard — kept for the single-partition delivery path).
-    */
-  private def pollWms(after: Long, n: Int): (Seq[Long], Seq[Seq[Any]]) =
-    partitioned match {
-      case Some(p) => (p.pollWatermarks(after, n), Seq.empty)
-      case None =>
-        val rows = client.poll(after, n)
-        (rows.map(r => micros(r(wmIdx))), rows)
-    }
+  private def watermarks(rows: Seq[Seq[Any]]): Seq[Long] = rows.map(r => micros(r(wmIdx)))
 
   override def initialOffset(): Offset = PollOffset(startMicros)
 
@@ -174,7 +131,7 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
     var last = Long.MinValue
     var continue = true
     while (continue) {
-      val (wms, _) = pollWms(last, limit)
+      val wms = watermarks(client.poll(last, limit))
       if (wms.isEmpty) continue = false
       else if (wms.max == last) continue = false // cannot advance; stall guard fires later
       // `>=`, not `==`: clients whose limit counts parent entities (the
@@ -205,7 +162,8 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
     // next page exactly. (The reference instead re-polls with >= and drops
     // re-delivered rows via processed_ids — lib/pipeline_controller.py:
     // 165-174; same delivery, no replays.)
-    val (wms0, rows0) = pollWms(committed, limit + 1)
+    val rows0 = client.poll(committed, limit + 1)
+    val wms0 = watermarks(rows0)
     // watermarks arrive ascending, so the AvailableNow bound keeps a prefix
     val keep = availableNowBound match {
       case Some(b) => wms0.count(_ <= b)
@@ -214,7 +172,6 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
     val wmsAll = wms0.take(keep)
     val wms = wmsAll.take(limit)
     fetched = Some((committed, rows0.take(keep).take(limit)))
-    fetchedWms = Some((committed, wms))
     if (wms.isEmpty) PollOffset(committed)
     else {
       val straddles = wmsAll.size > limit && wmsAll(limit) == wms.last
@@ -249,36 +206,10 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[PollOffset].micros
     val e = end.asInstanceOf[PollOffset].micros
-    partitioned match {
-      case Some(p) =>
-        // Quantile-split the window's watermarks into ≤ numPartitions
-        // contiguous ranges. Boundaries snap to watermark VALUES, so a
-        // group never spans two partitions and (lo, hi] ranges stay
-        // disjoint even under heavy duplication.
-        val wms = fetchedWms.collect { case (`s`, w) => w }
-          .getOrElse(p.pollWatermarks(s, limit + 1))
-          .filter(m => m > s && m <= e)
-        if (wms.isEmpty) Array.empty
-        else {
-          val k = math.min(numPartitions, wms.size)
-          val bounds = (1 to k)
-            .map(i => wms((wms.size * i / k) - 1))
-            .distinct
-          val ranges = bounds.foldLeft((s, Seq.empty[(Long, Long)])) {
-            case ((lo, acc), hi) => (hi, acc :+ (lo, hi))
-          }._2
-          // the final boundary always equals `e`: the end offset is the
-          // max delivered watermark by construction
-          ranges.map { case (lo, hi) =>
-            RangePollPartition(p, lo, hi): InputPartition
-          }.toArray
-        }
-      case None =>
-        val rows = fetched.collect { case (`s`, r) => r }
-          .getOrElse(client.poll(s, limit + 1))
-          .filter(r => { val m = micros(r(wmIdx)); m > s && m <= e })
-        Array(PollPartition(rows))
-    }
+    val rows = fetched.collect { case (`s`, r) => r }
+      .getOrElse(client.poll(s, limit + 1))
+      .filter(r => { val m = micros(r(wmIdx)); m > s && m <= e })
+    Array(PollPartition(rows))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -294,19 +225,10 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
 
 private case class PollPartition(rows: Seq[Seq[Any]]) extends InputPartition
 
-/** Executor-side range read: carries the (Serializable) client and a
-  * disjoint (lo, hi] watermark range; the payload never touches the
-  * driver.
-  */
-private case class RangePollPartition(client: PartitionedPollClient,
-                                      loMicros: Long, hiMicros: Long)
-    extends InputPartition
-
 private class PollReaderFactory(schema: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val rows = partition match {
       case PollPartition(r) => r.iterator
-      case RangePollPartition(c, lo, hi) => c.pollRange(lo, hi).iterator
       case other => throw new IllegalArgumentException(s"unexpected partition: $other")
     }
     new PartitionReader[InternalRow] {

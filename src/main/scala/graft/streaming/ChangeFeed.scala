@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Diff, IncrementalAgg}
+import graft.operators.{Checkpoints, Diff, IncrementalAgg}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -25,7 +25,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * committed version per batch. The feed is always diff(prior version,
   * merged version), so a replayed batch (its version already committed)
   * re-emits the same feed from the two committed versions instead of
-  * merging its delta a second time.
+  * merging its delta a second time. The merged version is materialized
+  * once per batch (the sink's diff and the version write both read it)
+  * and freed when the batch ends, so `sink` must materialize the frame
+  * inside the call, as `foreachBatch` already requires.
   */
 object ChangeFeed {
 
@@ -57,14 +60,19 @@ object ChangeFeed {
                                       stateDir: String, keys: Seq[String],
                                       aggs: Seq[(String, String)],
                                       buildState: DataFrame => DataFrame)
-                                     (sink: DataFrame => Unit): Unit =
-    BatchState.advance(batch.sparkSession, stateDir, batchId) { prior =>
-      val delta = buildState(batch)
-      IncrementalAgg.merge(prior.getOrElse(delta.limit(0)), delta, keys, aggs)
-    } { (prior, merged) =>
-      sink(Diff.snapshotDiff(prior.getOrElse(merged.limit(0)), merged, keys,
-          aggs.map(_._1))
-        .filter(col("change") =!= "unchanged")
-        .withColumn("batch_id", lit(batchId)))
+                                     (sink: DataFrame => Unit): Unit = {
+    val spark = batch.sparkSession
+    Checkpoints.scope(spark) {
+      BatchState.advance(spark, stateDir, batchId) { prior =>
+        val delta = buildState(batch)
+        Checkpoints.fresh(
+          IncrementalAgg.merge(prior.getOrElse(delta.limit(0)), delta, keys, aggs))
+      } { (prior, merged) =>
+        sink(Diff.snapshotDiff(prior.getOrElse(merged.limit(0)), merged, keys,
+            aggs.map(_._1))
+          .filter(col("change") =!= "unchanged")
+          .withColumn("batch_id", lit(batchId)))
+      }
     }
+  }
 }

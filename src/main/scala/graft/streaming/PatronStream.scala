@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.StructType
   *                            reference's per-run set lifetime
   *  - ST5 upper time bound  → AvailableNow snapshot semantics
   *  - ST6 stall guard       → owned by the source (see below)
-  *  - ST8 batch-size bounds → source rate options (e.g.
-  *                            maxFilesPerTrigger / maxOffsetsPerTrigger)
+  *  - ST8 batch-size bounds → the polling source's `limit` option
+  *                            (its default `ReadLimit.maxRows`)
   *
   * ST6 ownership (intentional deviation from the reference's guard,
   * lib/pipeline_controller.py:150-162): the reference stalls on ANY full
@@ -71,12 +71,13 @@ object PatronStream {
   private val SeenSchema = new StructType().add("patron_id_plaintext", "string")
 
   /** Run all three modes as ONE streaming query over mode-tagged unioned
-    * sources, with a single global dropDuplicates — the Spark-native form
-    * of the reference's shared `processed_ids` across its three sequential
-    * runs (O1; SURVEY §7.4 risk 5): a patron appearing in several modes'
-    * windows is emitted exactly once. Mode priority at equal keys follows
-    * the reference's sequential order (NEW first) via min(mode_rank)
-    * pre-aggregation inside each micro-batch plus the cross-batch state.
+    * sources, filtered against one run-scoped seen-key log — the
+    * Spark-native form of the reference's shared `processed_ids` across
+    * its three sequential runs (O1; SURVEY §7.4 risk 5): a patron
+    * appearing in several modes' windows is emitted exactly once. Mode
+    * priority at equal keys follows the reference's sequential order (NEW
+    * first) via the `__mode_rank` key of each micro-batch's
+    * `dedupKeepFirst`; the log drops patrons an earlier batch emitted.
     *
     * `newStream`/`updatedStream` carry the Sierra active schema;
     * `deletedStream` the 2-column deleted schema (padded to match).
@@ -141,8 +142,9 @@ object PatronStream {
             AvroSink.write(outputs.reduce(_ union _), sink, schemaJson = schemaJson)
             // one file per batch, not one per shuffle partition: the key
             // set is bounded by the batch size, and an append-only state
-            // dir otherwise accumulates numPartitions small files per
-            // micro-batch — the classic small-files leak on long runs
+            // dir otherwise accumulates one small file per shuffle
+            // partition per micro-batch — the classic small-files leak on
+            // long runs
             best.select("patron_id_plaintext")
               .coalesce(1).write.mode("append").parquet(seenPath)
           }

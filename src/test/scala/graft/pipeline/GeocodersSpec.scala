@@ -150,7 +150,7 @@ class AvroSinkSpec extends AnyFunSuite {
     val row = Row("p1", "h1", "11111", "00111222222", "2021-01-01",
       null, "2021-06-01", 4L, null, "aa", "bb")
     val df = spark.createDataFrame(Seq(row).asJava, Schemas.output)
-    val bytes = AvroSink.encode(df).collect().map(_.getAs[Array[Byte]](0))
+    val bytes = DeliveredRecords.of(df)
     assert(bytes.length == 1)
     val rec = AvroSink.decode(bytes.head)
     assert(rec.get("patron_id").toString == "p1")
@@ -167,16 +167,17 @@ class AvroSinkSpec extends AnyFunSuite {
       Row("p2", null, null, null, null, null, null, null, null, null, null),
       Row("p3", "h3", "33333", null, "2020-12-31", null, "2021-03-04", 1L, null,
         "cc", null)).asJava, Schemas.output).repartition(2)
-    DeliveredRecords.clear()
-    AvroSink.write(df, new AvroSink.RecordSink {
-      def putRecords(records: Seq[Array[Byte]]): Unit = DeliveredRecords.add(records)
-    })
-    def byId(bytes: Seq[Array[Byte]]) =
-      bytes.map(b => AvroSink.decode(b).get("patron_id").toString -> b.toSeq).toMap
-    val encoded = AvroSink.encode(df).collect().map(_.getAs[Array[Byte]](0)).toSeq
-    assert(DeliveredRecords.get.size == 3)
-    assert(byId(DeliveredRecords.get) == byId(encoded))
-    val p3 = AvroSink.decode(byId(DeliveredRecords.get)("p3").toArray)
+    val delivered = DeliveredRecords.of(df)
+    assert(delivered.size == 3)
+    val byId = delivered.map(AvroSink.decode(_))
+      .map(r => r.get("patron_id").toString -> r).toMap
+    assert(byId.keySet == Set("p1", "p2", "p3"))
+    val p1 = byId("p1")
+    assert(Schemas.outputColumns.map(p1.get(_).toString) == Seq("p1", "h1", "11111",
+      "00111222222", "2021-01-01", "2022-02-02", "2021-06-01", "4", "7", "aa", "bb"))
+    assert(p1.get("ptype_code") == 4L && p1.get("pcode3") == 7L)
+    assert(Schemas.outputColumns.tail.forall(byId("p2").get(_) == null))
+    val p3 = byId("p3")
     assert(p3.get("creation_date_et").toString == "2020-12-31")
     assert(p3.get("deletion_date_et") == null)
     assert(p3.get("circ_active_date_et").toString == "2021-03-04")
@@ -203,10 +204,17 @@ object CollectedChunks {
   def get: Seq[Int] = chunks.asScala.toSeq
 }
 
-/** Executor-side record collector for the sink test (local mode: same JVM). */
+/** Executor-side record collector for the sink tests (local mode: same JVM). */
 object DeliveredRecords {
   private val records = new java.util.concurrent.ConcurrentLinkedQueue[Array[Byte]]()
-  def clear(): Unit = records.clear()
-  def add(rs: Seq[Array[Byte]]): Unit = rs.foreach(records.add)
-  def get: Seq[Array[Byte]] = records.asScala.toSeq
+
+  /** The records [[AvroSink.write]] delivers for `df`. */
+  def of(df: org.apache.spark.sql.DataFrame,
+         schemaJson: String = Schemas.patronInfoAvroJson): Seq[Array[Byte]] = {
+    records.clear()
+    AvroSink.write(df, new AvroSink.RecordSink {
+      def putRecords(rs: Seq[Array[Byte]]): Unit = rs.foreach(records.add)
+    }, schemaJson = schemaJson)
+    records.asScala.toSeq
+  }
 }

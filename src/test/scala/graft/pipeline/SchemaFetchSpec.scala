@@ -40,8 +40,9 @@ class SchemaFetchSpec extends AnyFunSuite {
     val df = spark.createDataFrame(Seq(org.apache.spark.sql.Row(
       "id1", "hash1", "11111", "36061000100", "2020-01-01", null, null,
       4L, 5L, "lib1", "lib1")).asJava, Schemas.output)
-    val bytes = AvroSink.encode(df, fetched).collect().head.getAs[Array[Byte]](0)
-    val rec = AvroSink.decode(bytes, fetched)
+    val bytes = DeliveredRecords.of(df, fetched)
+    assert(bytes.length == 1)
+    val rec = AvroSink.decode(bytes.head, fetched)
     assert(rec.get("patron_id").toString == "id1"
       && rec.get("geoid").toString == "36061000100"
       && rec.get("deletion_date_et") == null)

@@ -90,23 +90,6 @@ class JdbcPollClientSpec extends AnyFunSuite {
     assert(client.poll(feb2, 10).map(_.head) == Seq(3L))
   }
 
-  test("partitioned client: narrow watermark scan + disjoint range reads") {
-    initDb
-    val client = new JdbcPollClient.Active(url, "creation_date_gmt")
-    val wms = client.pollWatermarks(Long.MinValue, 10)
-    // one watermark per metadata row (narrow scan, no address fanout)
-    assert(wms.length == 3 && wms == wms.sorted)
-    // range read (lo, hi]: only patron 2 sits strictly after patron 1's
-    // creation instant and at-or-before patron 2's
-    val all = client.poll(Long.MinValue, 10)
-    val rows = client.pollRange(wms(0), wms(1))
-    assert(rows.map(_.head) == Seq(2L))
-    // ranges tile the full window
-    val tiled = client.pollRange(Long.MinValue, wms(0)) ++
-      client.pollRange(wms(0), wms(1)) ++ client.pollRange(wms(1), wms(2))
-    assert(tiled == all)
-  }
-
   test("streaming over JDBC: offsets resume across restarts, no re-delivery") {
     initDb
     PollClientRegistry.register("jdbc_updated",
@@ -137,52 +120,5 @@ class JdbcPollClientSpec extends AnyFunSuite {
     PollRunLog.reset()
     run()
     assert(PollRunLog.ids == Seq(4L))
-  }
-
-  test("executor-sharded read: numPartitions splits the batch into range partitions") {
-    initDb
-    PollClientRegistry.register("jdbc_sharded",
-      new JdbcPollClient.Active(url, "creation_date_gmt"))
-    val ckpt = java.nio.file.Files.createTempDirectory("jdbc-shard-ckpt")
-      .toFile.getAbsolutePath
-    @volatile var partsSeen = -1
-    val q = spark.readStream.format(classOf[PollingSourceProvider].getName)
-      .option("client", "jdbc_sharded").option("limit", "10")
-      .option("numPartitions", "3").load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        partsSeen = batch.rdd.getNumPartitions
-        batch.collect().foreach(r => PollRunLog.add(r.getLong(0)))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    PollRunLog.reset()
-    q.awaitTermination(60000)
-    // same delivery as the unsharded run (incl. patron 1's two addresses;
-    // patron 4 exists if the restart test ran first — accept either DB
-    // state), split across 3 range partitions
-    val ids = PollRunLog.ids.sorted
-    assert(ids == Seq(1L, 1L, 2L, 3L) || ids == Seq(1L, 1L, 2L, 3L, 4L))
-    assert(partsSeen == 3)
-
-    // restart the checkpointed query with a new row: only it is
-    // delivered — the sharded planner replays old windows from the
-    // narrow watermark scan without re-delivering them
-    exec(
-      "INSERT INTO record_metadata VALUES (7, 'p', TIMESTAMP('2021-01-09 10:00:00'), TIMESTAMP('2021-01-10 10:00:00'), NULL)",
-      "INSERT INTO patron_record_address VALUES (7, 1, 1, 'city7', 'NY', '77777', '7 AVE')",
-      "INSERT INTO patron_view VALUES (7, 7, 7, 'lib7', DATE('2020-09-01'))")
-    PollRunLog.reset()
-    val q2 = spark.readStream.format(classOf[PollingSourceProvider].getName)
-      .option("client", "jdbc_sharded").option("limit", "10")
-      .option("numPartitions", "3").load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.collect().foreach(r => PollRunLog.add(r.getLong(0)))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q2.awaitTermination(60000)
-    assert(PollRunLog.ids == Seq(7L))
   }
 }

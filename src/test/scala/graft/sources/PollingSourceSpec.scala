@@ -14,28 +14,6 @@ object PollRunLog {
   def ids: Seq[Long] = { import scala.jdk.CollectionConverters._; buf.asScala.toSeq }
 }
 
-/** Top-level (no outer ref): range partitions carry the client to
-  * executor tasks, so it must serialize cleanly.
-  */
-class PartitionedFixedClient(rows: Seq[(Long, String, Long)])
-    extends PartitionedPollClient {
-  override def schema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("updated_at", org.apache.spark.sql.types.TimestampType)))
-  override val watermarkField = "updated_at"
-  private def wm(sec: Long): Long = sec * 1000000L
-  override def poll(afterMicros: Long, limit: Int): Seq[Seq[Any]] =
-    rows.filter(r => wm(r._3) > afterMicros).sortBy(_._3).take(limit)
-      .map { case (id, p, sec) => Seq(id, p, new java.sql.Timestamp(sec * 1000L)) }
-  override def pollWatermarks(afterMicros: Long, limit: Int): Seq[Long] =
-    rows.map(r => wm(r._3)).filter(_ > afterMicros).sorted.take(limit)
-  override def pollRange(loMicros: Long, hiMicros: Long): Seq[Seq[Any]] =
-    rows.filter(r => wm(r._3) > loMicros && wm(r._3) <= hiMicros).sortBy(_._3)
-      .map { case (id, p, sec) => Seq(id, p, new java.sql.Timestamp(sec * 1000L)) }
-}
-
 /** The custom DSv2 micro-batch polling source: batch-limited incremental
   * delivery ordered by watermark, offset advance, and the stall guard —
   * the reference's poll loop semantics (SURVEY §2.9 ST1-ST6).
@@ -192,33 +170,6 @@ class PollingSourceSpec extends AnyFunSuite {
     PollRunLog.reset()
     run()
     assert(PollRunLog.ids.sorted == Seq(1L, 2L))
-  }
-
-  test("sharded partitions: skewed watermarks snap to group boundaries, no splits") {
-    // 4 rows share watermark 1001 (a skewed group), then 1002, 1003.
-    // numPartitions=3 quantile bounds land at [1001, 1001, 1003] → dedupe
-    // to 2 ranges: (min, 1001], (1001, 1003]. The group is never split
-    // and every row is delivered exactly once.
-    val rows = Seq((1L, "a", 1001L), (2L, "b", 1001L), (3L, "c", 1001L),
-      (4L, "d", 1001L), (5L, "e", 1002L), (6L, "f", 1003L))
-    PollClientRegistry.register("sharded_skew", new PartitionedFixedClient(rows))
-    @volatile var partsSeen = -1
-    val ckpt = java.nio.file.Files.createTempDirectory("shard-skew-ckpt")
-      .toFile.getAbsolutePath
-    val q = spark.readStream.format(classOf[PollingSourceProvider].getName)
-      .option("client", "sharded_skew").option("limit", "10")
-      .option("numPartitions", "3").load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        partsSeen = batch.rdd.getNumPartitions
-        batch.collect().foreach(r => PollRunLog.add(r.getLong(0)))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    PollRunLog.reset()
-    q.awaitTermination(60000)
-    assert(PollRunLog.ids.sorted == (1L to 6L))
-    assert(partsSeen == 2)
   }
 
   test("stall guard: full batch with one watermark fails the query (ST6)") {

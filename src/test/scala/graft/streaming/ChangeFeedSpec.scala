@@ -114,4 +114,27 @@ class ChangeFeedSpec extends AnyFunSuite {
     assert(v2 == Set((1L, 3L, 115L), (2L, 2L, 10L), (3L, 1L, 4L)),
       "re-merged v2 must contain no trace of the partial write")
   }
+
+  test("a batch's merge is computed once for the sink's diff and the version write") {
+    import org.apache.spark.sql.functions._
+    val tmp = Files.createTempDirectory("changefeed-once").toFile.getAbsolutePath
+    val counted = udf((v: Long) => { BuildStateRows.add(); v })
+    val batch = spark.range(1, 6).select((col("id") % 2).as("user"), col("id").as("v"))
+    BuildStateRows.reset()
+    var fed = 0L
+    ChangeFeed.processBatch(batch, 0L, s"$tmp/state", Seq("user"), Seq(("total", "sum")),
+      b => b.groupBy("user").agg(sum(counted(col("v"))).as("total"))) { df =>
+      fed = df.count()
+    }
+    assert(fed == 2)
+    assert(BuildStateRows.get == 5, "each batch row passes buildState once")
+  }
+}
+
+/** Rows seen by a counting buildState (local mode: executors share the JVM). */
+object BuildStateRows {
+  private val n = new java.util.concurrent.atomic.AtomicLong()
+  def reset(): Unit = n.set(0)
+  def add(): Unit = n.incrementAndGet()
+  def get: Long = n.get
 }

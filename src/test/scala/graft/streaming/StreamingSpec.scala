@@ -307,9 +307,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful dedup is provider-agnostic: RocksDB matches HDFS state store") {
-    // The long-running dedup states are the 100 TB streaming scale risk
-    // under the on-heap default; StateStores.configure selects RocksDB
-    // (disk-backed + changelog checkpoints). Same planted stream under
+    // A long-running stateful operator's key map is the streaming scale
+    // risk under the on-heap default provider; Spark's own
+    // `stateStore.providerClass` conf selects RocksDB (disk-backed, with
+    // changelog checkpoints) at query start. Same planted stream under
     // both providers must produce identical first-seen output, and the
     // RocksDB run must actually write RocksDB artifacts.
     import org.apache.spark.sql.types._
@@ -328,7 +329,14 @@ class StreamingSpec extends AnyFunSuite {
       spark.createDataFrame(
         Seq(Row(2L, s"$segA p q r s t u v n", t(1))).asJava, schema)
         .write.parquet(s"$tmp/src/b2")
-      StateStores.configure(spark, provider)
+      val providerConf = "spark.sql.streaming.stateStore.providerClass"
+      val changelogConf =
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+      if (provider == "rocksdb") {
+        spark.conf.set(providerConf,
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        spark.conf.set(changelogConf, "true")
+      }
       try {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*")
@@ -348,7 +356,10 @@ class StreamingSpec extends AnyFunSuite {
         }
         spark.table(s"ssdedup_$name").collect()
           .map(r => (r.getLong(0), r.getString(2))).toSet
-      } finally StateStores.configure(spark, "hdfs")
+      } finally {
+        spark.conf.unset(providerConf)
+        spark.conf.unset(changelogConf)
+      }
     }
     val hdfs = run("hdfs", "h")
     val rocks = run("rocksdb", "r")
