@@ -87,15 +87,6 @@ object ScaleRehearsal {
     "q145_dedup_sweep", "q148_dedup_quality_audit",
     "q121_containment_dedup", "q126_dup_substring_coverage",
     "q127_dup_substring_cut", "q174_sharded_dedup_cut",
-    // r19 (r18 verdict item 3): q149 moved INTO the pinned set — its
-    // old "flip completes by 10×" deferral evidence predates the r18
-    // fused conditional agg, and on the fused plan the driver's r18
-    // runs read the 2-decade bytes exponent at 1.103 (over the 1.1
-    // gate) against the UNPINNED 1× base, whose plan still broadcasts
-    // the n-gram side at toy scale while every tier shuffles it. The
-    // pinned base compares the all-shuffle plan a 100 TB run uses at
-    // every tier, like the rest of the prefix/gram family.
-    "q149_gopher_repetition",
     // r18: q179's doc-keyed score join (rawDocs ⟕ scored) is
     // data-scaled on both sides, so its auto-broadcast flip would land
     // inside the gated decade; the model/totals broadcasts are
@@ -142,15 +133,15 @@ object ScaleRehearsal {
       "at 10x for no extra evidence"),
     "q114_fuzzy_lookup" -> ("1x->10x raw 1.379 = same " +
       "flip-completes-by-10x class as q110; settled decade 1.032"),
-    "q149_gopher_repetition" -> ("r19, measured on the r18 FUSED plan " +
-      "(one doc-keyed conditional agg, pivot cascade removed): the 1x " +
-      "base is now pinned all-shuffle (NoBroadcastBase) because the " +
-      "unpinned 1x plan still broadcasts the n-gram side while every " +
-      "tier shuffles it — the stale pre-fusion deferral read 1.103 on " +
-      "the driver's r18 runs against that cross-plan base; pinned, the " +
-      "fused plan measures 1x->10x bytes exponent 1.002 and settled " +
-      "decade 1.026 (scale_rehearsal_q149_r19.json: 38.1 MB -> 382.4 MB " +
-      "-> 4.06 GB written)"),
+    "q149_gopher_repetition" -> ("per-document kernel plan " +
+      "(plans/r20: no gram explode, shuffle, aggregate or join; the " +
+      "final orderBy is the only exchange), so there is no broadcast " +
+      "flip to defer past and no pin: the 10x tier writes 1.01 MB, " +
+      "where the n-gram shuffle plan wrote 382.3 MB over the same 10x " +
+      "tables, and sf0.1 writes 0.10 MB, a 1x->10x bytes exponent of " +
+      "about 1.0; the committed 1x base (38.1 MB) is the old plan's " +
+      "until the next full Bench run re-measures it " +
+      "(scale_rehearsal_q127_q149_r20.json)"),
     "q145_dedup_sweep" -> ("unpinned 10x->100x ratio was 420x because " +
       "the 10x plan still broadcast the prefix tables (4 " +
       "BroadcastExchanges) while 100x shuffled everything (0 " +
@@ -212,10 +203,11 @@ object ScaleRehearsal {
       ("settled 10x->100x write-bytes exponent 1.000; 100x wall 39-63 s",
         "scale_rehearsal_full_r15_run2.json + run3 (2026-08-16)"),
     "q149_gopher_repetition" ->
-      ("pinned all-shuffle on the r18 fused plan: 1x->10x write-bytes " +
-        "exponent 1.002, settled 10x->100x 1.026 (38.1 MB -> 382.4 MB " +
-        "-> 4.06 GB); 100x wall 164.9 s pinned",
-        "scale_rehearsal_q149_r19.json (2026-08-19)"),
+      ("per-document kernel plan: 10x write 1.01 MB (382.3 MB on the " +
+        "n-gram shuffle plan over the same 10x tables), 0.10 MB at " +
+        "sf0.1, 1x->10x bytes exponent about 1.0; 100x not yet run on " +
+        "this plan",
+        "scale_rehearsal_q127_q149_r20.json + TimeQueries sf0.1 (2026-10-20)"),
     "q137_suffix_array" ->
       ("settled 10x->100x write-bytes exponent 1.007 (three independent " +
         "runs); 100x wall 674-842 s",

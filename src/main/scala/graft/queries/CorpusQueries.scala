@@ -2164,14 +2164,13 @@ object CorpusQueries {
     * Char-exact and offset-exact where q95 (segment rebuild) is
     * segment-quantized and q124 is within-doc only.
     *
-    * The whole text surgery is relational — no UDF: cut positions →
-    * maximal cut intervals via gaps-and-islands (q17's shape; windows
-    * within L of each other merge), complement segments via lag over
-    * islands plus a per-doc tail row, fragment extraction with a
-    * plain `substring`, and reassembly by `array_sort(collect_list)`
-    * + concat (q95's deterministic-rebuild rule). A fully-cut doc
-    * emits empty text — distinguished from an untouched doc by the
-    * cut-count row, not by absence.
+    * The cut set is relational; the text surgery is one pass per
+    * document. Each document's cut positions are collected and joined
+    * to its text, and [[cutSpans]] merges them into maximal cut
+    * intervals (windows within L of each other merge) and rebuilds the
+    * kept text in one scan. A fully-cut doc emits empty text —
+    * distinguished from an untouched doc by its cut count, not by
+    * absence.
     *
     * Scale shape: q126's position/hash pipeline (raw grams never
     * leave the map stage); the cut set comes from ONE map-side-combined
@@ -2184,10 +2183,12 @@ object CorpusQueries {
     * Like q126, the md5 pipeline is deliberately derived twice (the
     * partial agg under the exchange rules out exchange reuse; measured
     * 4.0 → 10.1 s at sf0.1) — the constant 2× map cost buys away the
-    * window's unbounded hot-key cliff. The remaining windows run per
-    * doc over CUT positions and islands only — both bounded by doc
-    * length. Only documents WITH cuts flow through the rebuild;
-    * untouched docs pass by on the left join.
+    * window's unbounded hot-key cliff. After the cut set, one doc-keyed
+    * exchange carries (doc_id, p) to a `collect_list` per document, a
+    * left join adds the text, and the kernel runs in the projection: no
+    * window, union or second aggregate. Memory per task is one
+    * document's positions and text, the bound the former per-doc
+    * windows and `collect_list` rebuild carried.
     */
   def q127(s: SparkSession, dir: String): DataFrame = {
     val L = 40
@@ -2212,41 +2213,46 @@ object CorpusQueries {
     val cuts = pos.join(canon, Seq("g"))
       .filter(!(col("doc_id") === col("f_doc") && col("p") === col("f_p")))
       .select("doc_id", "p")
-    val wOrd = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("p")
-    val isl = cuts
-      .withColumn("prev", lag(col("p"), 1).over(wOrd))
-      .withColumn("brk", when(col("prev").isNull ||
-        col("p") - col("prev") > L, 1L).otherwise(0L))
-      .withColumn("island", sum(col("brk")).over(wOrd))
-      .groupBy("doc_id", "island")
-      .agg(min("p").as("s"), (max("p") + lit(L - 1).cast("long")).as("e"))
-    val wIsl = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("s")
-    val between = isl.withColumn("pe", lag(col("e"), 1).over(wIsl))
-      .select(col("doc_id"), (coalesce(col("pe"), lit(0L)) + 1).as("ks"),
-        (col("s") - 1).as("ke"))
-    val lens = docs.select(col("doc_id"), length(col("text")).cast("long").as("len"))
-    val perDoc = isl.groupBy("doc_id")
-      .agg(max("e").as("me"), sum(col("e") - col("s") + 1).as("n_cut"))
-    val tail = perDoc.join(lens, "doc_id")
-      .select(col("doc_id"), (col("me") + 1).as("ks"), col("len").as("ke"))
-    val segs = between.union(tail).filter(col("ke") >= col("ks"))
-    val kept = segs.join(docs.select(col("doc_id"), col("text")), "doc_id")
-      .select(col("doc_id"), col("ks"),
-        expr("substring(text, ks, ke - ks + 1)").as("frag"))
-      .groupBy("doc_id")
-      .agg(array_join(expr(
-        "transform(array_sort(collect_list(struct(ks, frag))), x -> x.frag)"),
-        "").as("kept_text"))
-    docs.select(col("doc_id"), col("text"))
-      .join(perDoc.select("doc_id", "n_cut"), Seq("doc_id"), "left")
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_cut"), lit(0L)).as("n_cut_chars"),
-        when(col("n_cut").isNotNull && col("kept_text").isNull, lit(""))
-          .otherwise(coalesce(col("kept_text"), col("text"))).as("text_kept"))
+    val cut = udf { (text: String, ps: Seq[Int]) =>
+      cutSpans(text, if (ps == null) Array.emptyIntArray else ps.toArray.sorted, L)
+    }
+    val perDoc = cuts.groupBy("doc_id").agg(collect_list(col("p")).as("ps"))
+    docs.join(perDoc, Seq("doc_id"), "left")
+      .select(col("doc_id"), cut(col("text"), col("ps")).as("r"))
+      .select(col("doc_id"), col("r._1").as("n_cut_chars"), col("r._2").as("text_kept"))
       .orderBy("doc_id")
+  }
+
+  /** q127's text surgery for one document, a pure function of its text
+    * and its cut positions (`ps`, 1-based window starts, ascending).
+    * Positions whose gap is ≤ `L` merge into one island (adjacent
+    * windows overlap or touch), an island covers [first, last + L − 1],
+    * and the result is (chars cut = Σ island lengths, text outside every
+    * island). Indices count code points, as Spark's `substring` and
+    * `length` do, so a surrogate pair is never split. No positions
+    * return the text untouched; a fully cut text returns "". Memory is
+    * one document: its positions and its text.
+    */
+  def cutSpans(text: String, ps: Array[Int], L: Int): (Long, String) = {
+    if (ps.isEmpty) return (0L, text)
+    val kept = new java.lang.StringBuilder
+    var cutChars = 0L
+    var cp = 1  // first code point not yet kept or cut
+    var ch = 0  // its char offset in `text`
+    var i = 0
+    while (i < ps.length) {
+      val s = ps(i)
+      var last = s
+      i += 1
+      while (i < ps.length && ps(i) - last <= L) { last = ps(i); i += 1 }
+      val e = last + L - 1
+      val sCh = text.offsetByCodePoints(ch, s - cp)
+      kept.append(text, ch, sCh)
+      ch = text.offsetByCodePoints(sCh, e - s + 1)
+      cp = e + 1
+      cutChars += e - s + 1
+    }
+    (cutChars, kept.append(text, ch, text.length).toString)
   }
 
   val q127Sql: String =

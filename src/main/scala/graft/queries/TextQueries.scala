@@ -5,6 +5,7 @@ import graft.functions.TextFns
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis + deduplication operators over `documents` (the
   * LLM-data-pipeline extension inventory; SURVEY §7.4). Heuristics are
@@ -765,17 +766,17 @@ object TextQueries {
     * line-based signals have no analog here: this corpus has no
     * newlines — q50/q124 run the segment-level equivalent.)
     *
-    * Scale shape: ONE explode keyed (doc_id, n, gram) — all four gram
-    * sizes ride one map-side-combined shuffle — then ONE doc-keyed
-    * conditional aggregation carrying, per n, total grams, distinct
-    * grams, and the argmax gram via `min(when(n, struct(-c, gram)))`
-    * (q93's deterministic tie rule) straight to one row per doc (r18:
-    * the former (doc_id, n) rollup + pivot cascade cost a second
-    * exchange for the same values). No window, no self-join; gram
-    * cardinality per
-    * doc is ~4·|tokens|. Sub-n-word docs contribute an empty gram array
-    * (guarded — `sequence(1, size-n+1)` DESCENDS when size < n, the r10
-    * advice crash class) and emit 0.0 fractions like the oracle's empty
+    * Scale shape: one pass per document. The tokens stay SQL
+    * (`TextFns.tokens`), and [[repetition]] counts every gram size of
+    * one document in one call inside the scan's projection, so no gram
+    * leaves the task: no explode, no gram shuffle, no doc-keyed
+    * aggregate and no join back (the former (doc_id, n, gram) shuffle
+    * was all of q149's write bytes at scale, 38.1 MB → 382 MB → 4.06 GB
+    * over the rehearsal's 1×/10×/100× tiers). The final `orderBy` is the
+    * only exchange. Memory per task is one document's grams of one
+    * size, ~|tokens| entries, the doc-length bound the former per-doc
+    * aggregate carried. Sub-n-word docs have no grams of that size (null
+    * [[GramStats]]) and emit 0.0 fractions like the oracle's empty
     * ranges. Fractions are single IEEE divisions of integer-derived
     * values rounded to 4 (the q117 rule); thresholds are Gopher's where
     * given (top-3 ≤ 0.18, top-4 ≤ 0.16) and documented adaptations for
@@ -784,62 +785,64 @@ object TextQueries {
     * interval union, which q126 provides corpus-wide).
     */
   def q149(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documents(s, dir)
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("w"))
-    val grams = toks
-      .select(col("doc_id"), explode(lit(Array(3, 4, 5, 10))).as("n"), col("w"))
-      // position explode + codegen slice/array_join projection (the
-      // Apss measured form — the transform lambda was interpreted per
-      // element); the size(w) >= n guard keeps sequence() ascending
-      // (the r10 advice crash class), replacing the CASE/array() guard
-      .filter(size(col("w")) >= col("n"))
-      .select(col("doc_id"), col("n"), col("w"),
-        explode(sequence(lit(1), size(col("w")) - col("n") + 1)).as("i"))
-      .select(col("doc_id"), col("n"),
-        array_join(slice(col("w"), col("i"), col("n")), " ").as("g"))
-      .groupBy("doc_id", "n", "g").agg(count(lit(1)).as("c"))
-    // ONE conditional aggregation replaces the (doc_id, n) rollup +
-    // pivot cascade (r18: two exchanges -> one; guide §2.4). Conditional
-    // min/sum ignore the when()'s nulls, so each n's aggregates see
-    // exactly its own gram rows — same values the pivot produced; a doc
-    // with no grams of some n gets null tot (sum over no rows), which
-    // dominates the downstream fractions exactly like the pivot's null.
-    // The struct-min argmax plans SortAggregate (struct buffers are not
-    // hash-aggregate-mutable — the q101/q173 class, r19 #2). Examined
-    // for the TopKRows(k=1) conversion this round and LEFT: the
-    // same-JVM A/B (AbProbe "q149", fused-min-struct vs fused-topk)
-    // measured the ObjectHashAggregate form ~2% SLOWER at sf0.1
-    // (min 2.09 vs 2.14 s, med 2.24 vs 2.29) — SortAggregate's extra
-    // work here is two task-local parallel sorts of the gram slice,
-    // which the bounded-heap's per-row eval + copy + serialization
-    // overhead fully cancels (the r18s3 q127 canon-agg precedent, same
-    // verdict). q101/q173 converted because their win MEASURED.
-    def aggN(n: Int) = {
-      val is = col("n") === n
-      Seq(sum(when(is, col("c"))).as(s"${n}_tot"),
-        count(when(is, lit(1))).as(s"${n}_dis"),
-        min(when(is, struct((-col("c")).as("nc"), col("g")))).as(s"m$n"))
-    }
-    val aggs = Seq(3, 4, 5, 10).flatMap(aggN)
-    val wide = grams.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id") +: Seq(3, 4, 5, 10).flatMap(n => Seq(
-        col(s"${n}_tot"), col(s"${n}_dis"),
-        (-col(s"m$n.nc")).as(s"${n}_topc"),
-        length(col(s"m$n.g")).cast("long").as(s"${n}_topl"))): _*)
-    val chars = toks.select(col("doc_id"),
-      length(concat_ws(" ", col("w"))).cast("long").as("nch"))
+    val rep = udf(repetition _)
     def frac(num: Column, den: Column): Column =
       round(coalesce(num.cast("double") / den.cast("double"), lit(0.0)), 4)
-    chars.join(wide, Seq("doc_id"), "left")
+    Tables.documents(s, dir)
+      .select(col("doc_id"), rep(TextFns.tokens(col("text"))).as("r"))
       .select(col("doc_id"),
-        frac(col("3_topc") * col("3_topl"), col("nch")).as("top3_frac"),
-        frac(col("4_topc") * col("4_topl"), col("nch")).as("top4_frac"),
-        frac(col("5_tot") - col("5_dis"), col("5_tot")).as("dup5_frac"),
-        frac(col("10_tot") - col("10_dis"), col("10_tot")).as("dup10_frac"))
+        frac(col("r.g3.topc") * col("r.g3.topl"), col("r.nch")).as("top3_frac"),
+        frac(col("r.g4.topc") * col("r.g4.topl"), col("r.nch")).as("top4_frac"),
+        frac(col("r.g5.tot") - col("r.g5.dis"), col("r.g5.tot")).as("dup5_frac"),
+        frac(col("r.g10.tot") - col("r.g10.dis"), col("r.g10.tot")).as("dup10_frac"))
       .withColumn("gopher_ok",
         col("top3_frac") <= 0.18 && col("top4_frac") <= 0.16 &&
           col("dup5_frac") <= 0.30 && col("dup10_frac") <= 0.10)
       .orderBy("doc_id")
+  }
+
+  /** One gram size's counts in one document: `tot` grams, `dis` distinct
+    * grams, the top gram's count `topc` and its length `topl` in code
+    * points.
+    */
+  case class GramStats(tot: Long, dis: Long, topc: Long, topl: Long)
+
+  /** q149's signals for one document: `nch`, the code points of its
+    * tokens joined by single spaces, and [[GramStats]] for n = 3, 4, 5
+    * and 10, each null when the document has fewer than n tokens.
+    */
+  case class Repetition(nch: Long, g3: GramStats, g4: GramStats, g5: GramStats,
+                        g10: GramStats)
+
+  /** q149's per-document kernel, a pure function of the token array: the
+    * word n-grams (tokens joined by single spaces, as `array_join` forms
+    * them) of each size, counted in one hash map per size. The top gram
+    * is the most frequent; ties go to the smallest gram in UTF-8 byte
+    * order (Spark's `UTF8String.compareTo`, which differs from Java's
+    * UTF-16 `String` order above U+FFFF). A null array counts as no
+    * tokens. Memory is one document: its grams of one size at a time.
+    */
+  def repetition(w: Seq[String]): Repetition = {
+    val toks = if (w == null) IndexedSeq.empty[String] else w.toIndexedSeq
+    def points(t: String) = t.codePointCount(0, t.length).toLong
+    def stats(n: Int): GramStats =
+      if (toks.size < n) null
+      else {
+        val counts = scala.collection.mutable.HashMap.empty[String, Int]
+        toks.sliding(n).foreach { g =>
+          val k = g.mkString(" ")
+          counts(k) = counts.getOrElse(k, 0) + 1
+        }
+        var top: String = null
+        var topc = 0
+        counts.foreach { case (g, c) =>
+          if (c > topc || (c == topc && UTF8String.fromString(g)
+              .compareTo(UTF8String.fromString(top)) < 0)) { top = g; topc = c }
+        }
+        GramStats(toks.size - n + 1, counts.size, topc, points(top))
+      }
+    val nch = if (toks.isEmpty) 0L else toks.map(points).sum + toks.size - 1
+    Repetition(nch, stats(3), stats(4), stats(5), stats(10))
   }
 
   val q149Sql: String =

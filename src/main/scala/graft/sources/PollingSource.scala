@@ -108,9 +108,10 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
   // Long.MinValue, so a sentinel key would collide with a genuine batch-0
   // replay after crash recovery and silently deliver an empty window.
   @volatile private var fetched: Option[(Long, Seq[Seq[Any]])] = None
-  // ST5: AvailableNow snapshots an upper bound at query start (the
+  // ST5: AvailableNow snapshots an upper bound when the query starts (the
   // reference bounds every poll at session-start `now`,
-  // helpers/query_helper.py:22).
+  // helpers/query_helper.py:22), set by the run's first `latestOffset`.
+  @volatile private var availableNow = false
   @volatile private var availableNowBound: Option[Long] = None
 
   private def micros(v: Any): Long = v match {
@@ -125,21 +126,24 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
 
   override def initialOffset(): Offset = PollOffset(startMicros)
 
-  override def prepareForTriggerAvailableNow(): Unit = {
-    // page to the current max watermark — the drain target
-    var bound = Long.MinValue
-    var last = Long.MinValue
-    var continue = true
-    while (continue) {
-      val wms = watermarks(client.poll(last, limit))
-      if (wms.isEmpty) continue = false
-      else if (wms.max == last) continue = false // cannot advance; stall guard fires later
-      // `>=`, not `==`: clients whose limit counts parent entities (the
-      // JDBC active scan pages metadata rows, then fans out over the
-      // address join) legitimately return MORE than `limit` rows.
-      else { last = wms.max; bound = wms.max; continue = wms.size >= limit }
+  override def prepareForTriggerAvailableNow(): Unit = availableNow = true
+
+  /** The AvailableNow drain target: the max watermark after `committed`,
+    * paged from the first page `latestOffset` already holds. Rows at or
+    * before the committed offset are never read again, so a drain polls
+    * what it delivers, not the store's whole history.
+    */
+  private def drainBound(committed: Long, firstPage: Seq[Long]): Long = {
+    var bound = committed
+    var wms = firstPage
+    // `>=`, not `==`: clients whose limit counts parent entities (the
+    // JDBC active scan pages metadata rows, then fans out over the
+    // address join) legitimately return MORE than `limit` rows.
+    while (wms.nonEmpty && wms.max > bound) {
+      bound = wms.max
+      wms = if (wms.size >= limit) watermarks(client.poll(bound, limit)) else Seq.empty
     }
-    availableNowBound = Some(bound)
+    bound
   }
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(limit)
@@ -152,7 +156,8 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
 
   override def latestOffset(start: Offset, readLimit: ReadLimit): Offset = {
     val committed = start.asInstanceOf[PollOffset].micros
-    if (batchesPlanned.get() >= maxBatches) return PollOffset(committed)
+    if (batchesPlanned.get() >= maxBatches || availableNowBound.exists(committed >= _))
+      return PollOffset(committed)
     // Poll one entry PAST the page so we can tell whether the boundary
     // watermark group genuinely straddles it. The next poll is strictly
     // `>`, so advancing to wms.max while rows beyond the page share it
@@ -164,6 +169,8 @@ private class PollingMicroBatchStream(schema: StructType, clientName: String,
     // 165-174; same delivery, no replays.)
     val rows0 = client.poll(committed, limit + 1)
     val wms0 = watermarks(rows0)
+    if (availableNow && availableNowBound.isEmpty)
+      availableNowBound = Some(drainBound(committed, wms0))
     // watermarks arrive ascending, so the AvailableNow bound keeps a prefix
     val keep = availableNowBound match {
       case Some(b) => wms0.count(_ <= b)

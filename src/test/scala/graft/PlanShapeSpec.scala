@@ -54,6 +54,12 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("Window"))
   }
 
+  test("q127/q149: one pass per document — no window cascade, no gram shuffle") {
+    assert(!plan("q127_dup_substring_cut").contains("Window"))
+    val p = plan("q149_gopher_repetition")
+    assert("Exchange ".r.findAllIn(p).length == 1 && !p.contains("Aggregate"))
+  }
+
   test("q68: weighted sampling is top-k over a map-only scan (no shuffle)") {
     val p = plan("q68_weighted_sample")
     assert(p.contains("TakeOrderedAndProject"))

@@ -193,6 +193,51 @@ class CorpusQueriesSpec extends AnyFunSuite {
       (3L, a.length.toLong, "")))
   }
 
+  test("q127's cut kernel: gaps of L merge, L+1 splits, overlaps count once") {
+    val L = 4
+    val text = "abcdefghijklmnop"
+    // windows at 1 and 5 touch ([1,4] and [5,8]): one island, 8 cut
+    assert(CorpusQueries.cutSpans(text, Array(1, 5), L) == ((8L, "ijklmnop")))
+    // a gap of L+1 leaves the char between the windows ([1,4], [6,9])
+    assert(CorpusQueries.cutSpans(text, Array(1, 6), L) == ((8L, "ejklmnop")))
+    // overlapping windows ([2,5], [3,6]) cut their union once
+    assert(CorpusQueries.cutSpans(text, Array(2, 3), L) == ((5L, "aghijklmnop")))
+    // no positions: untouched; every position: empty, not untouched
+    assert(CorpusQueries.cutSpans(text, Array.emptyIntArray, L) == ((0L, text)))
+    assert(CorpusQueries.cutSpans(text, (1 to 13).toArray, L) == ((16L, "")))
+    // indices are code points: an emoji (two UTF-16 chars) before, inside
+    // and after the cut is never split
+    val e = "\uD83D\uDE00"
+    val emo = s"a$e${e}bc${e}de$e"   // a 😀 😀 b c 😀 d e 😀 (9 code points)
+    assert(CorpusQueries.cutSpans(emo, Array(3, 4), L) == ((5L, s"a${e}e$e")))
+  }
+
+  test("q127 cuts by code point around non-BMP characters") {
+    val docs = graft.Tables.documents(spark, dir)
+    val emojis = Seq("\uD83D\uDE00", "\uD83C\uDF89", "\uD800\uDF48")
+    def rand(seed: Int, n: Int): String = {
+      val r = new scala.util.Random(seed)
+      (0 until n).map(_ => if (r.nextInt(4) == 0) emojis(r.nextInt(3))
+        else ('a' + r.nextInt(26)).toChar.toString).mkString
+    }
+    val shared = rand(13, 100)
+    val a = rand(11, 60) + emojis(0) + shared + emojis(1) + rand(14, 30)
+    val b = rand(12, 45) + emojis(2) + shared + emojis(0) + rand(15, 40)
+    val rows = Seq((1L, a), (2L, b)).map { case (id, t) =>
+      org.apache.spark.sql.Row(id, t, "en", "s", t.length.toLong)
+    }
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), docs.schema)
+    val tmp = java.nio.file.Files.createTempDirectory("q127emoji").toFile.getAbsolutePath
+    df.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val got = CorpusQueries.q127(spark, tmp).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    // doc 2 loses exactly the 100 shared code points; the emoji that
+    // border the span on both sides survive whole
+    assert(got == Seq(
+      (1L, 0L, a),
+      (2L, 100L, rand(12, 45) + emojis(2) + emojis(0) + rand(15, 40))))
+  }
+
   test("q126/q127 survive a planted hot gram (1e5 occurrences, no per-gram window)") {
     // A single 40-gram duplicated ~10^5 times corpus-wide — the
     // license-header/boilerplate shape that at 100 TB lands every

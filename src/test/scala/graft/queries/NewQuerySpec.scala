@@ -365,7 +365,9 @@ class NewQuerySpec extends AnyFunSuite {
       BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     docs.foreach { case (id, text) =>
       val w = text.trim.toLowerCase.split("\\s+").toSeq
-      val nch = w.mkString(" ").length.toLong
+      // lengths in code points, as the engine's `length` counts
+      def points(s: String): Long = s.codePointCount(0, s.length).toLong
+      val nch = points(w.mkString(" "))
       def grams(n: Int): Seq[String] =
         if (w.length < n) Seq.empty else w.sliding(n).map(_.mkString(" ")).toSeq
       def topFrac(n: Int): Double = {
@@ -373,8 +375,13 @@ class NewQuerySpec extends AnyFunSuite {
         if (g.isEmpty) 0.0
         else {
           val counts = g.groupBy(identity).view.mapValues(_.size.toLong)
-          val (gram, c) = counts.toSeq.minBy { case (s, c) => (-c, s) }
-          r4(c.toDouble * gram.length / nch)
+          // ties: the smallest gram in UTF-8 byte order, the engine's
+          // string order (not Java's UTF-16 `String` order)
+          import scala.math.Ordering.Implicits.seqOrdering
+          val (gram, c) = counts.toSeq.minBy { case (s, c) =>
+            (-c, s.getBytes(java.nio.charset.StandardCharsets.UTF_8).toSeq.map(_ & 0xff))
+          }
+          r4(c.toDouble * points(gram) / nch)
         }
       }
       def dupFrac(n: Int): Double = {
@@ -388,6 +395,22 @@ class NewQuerySpec extends AnyFunSuite {
       assert(got(id) == ((want._1, want._2, want._3, want._4, ok)),
         s"doc $id: got ${got(id)}, want $want ok=$ok")
     }
+  }
+
+  test("q149: a top-gram tie goes to the smaller gram in UTF-8 order") {
+    // "｡ x y" (U+FF61) and "😀 zz w" both occur twice. UTF-16 puts the
+    // emoji's surrogate 0xD83D first; UTF-8 puts U+FF61 (EF ..) before
+    // U+1F600 (F0 ..), so the 5-code-point gram wins: 2 * 5 / 25 chars
+    val (ff61, emoji) = ("\uFF61", "\uD83D\uDE00")
+    val text = s"$ff61 x y $ff61 x y $emoji zz w $emoji zz w"
+    val g3 = TextQueries.repetition(text.split(" ").toSeq).g3
+    assert(g3 == TextQueries.GramStats(10, 8, 2, 5))
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("q149tie").toString
+    Seq((1L, text, "und", "src0", text.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    assert(TextQueries.q149(spark, tmp).head().getDouble(1) == 0.4)
   }
 
   test("q149: sub-n-word docs emit zero fractions, not a crash") {

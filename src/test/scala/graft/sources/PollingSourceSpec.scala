@@ -86,6 +86,49 @@ class PollingSourceSpec extends AnyFunSuite {
     assert(PollRunLog.ids == Seq(3L))
   }
 
+  test("an AvailableNow drain polls from its committed offset, not the whole history") {
+    // Two drains per checkpoint: the first delivers a history of h rows,
+    // the second 3 new ones. The second drain's polled rows must not grow
+    // with h — a drain pages from its committed offset, never from the
+    // start of the store.
+    def secondDrainPolled(h: Int): Long = {
+      val history = (1L to h.toLong).map(i => (i, s"row$i", 5000L + i))
+      val polled = new java.util.concurrent.atomic.AtomicLong
+      val client = new FixedClient(history) {
+        var all: Seq[(Long, String, Long)] = history
+        override def poll(afterMicros: Long, limit: Int): Seq[Seq[Any]] = {
+          val rows = all.filter(_._3 * 1000000L > afterMicros).sortBy(_._3).take(limit)
+          polled.addAndGet(rows.size.toLong)
+          rows.map { case (id, p, sec) => Seq(id, p, ts(sec)) }
+        }
+      }
+      PollClientRegistry.register(s"history$h", client)
+      val dir = java.nio.file.Files.createTempDirectory("poll-history").toFile.getAbsolutePath
+      def drain(): Unit = {
+        val q = spark.readStream.format(classOf[PollingSourceProvider].getName)
+          .option("client", s"history$h").option("limit", "4").load()
+          .writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+            batch.collect().foreach(r => PollRunLog.add(r.getLong(0)))
+          }
+          .option("checkpointLocation", dir)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination(60000)
+      }
+      PollRunLog.reset()
+      drain()
+      assert(PollRunLog.ids.sorted == history.map(_._1))
+      client.all = history ++ (1L to 3L).map(i => (h + i, s"new$i", 6000L + i))
+      PollRunLog.reset()
+      polled.set(0)
+      drain()
+      assert(PollRunLog.ids.sorted == (1L to 3L).map(h + _))
+      polled.get
+    }
+    assert(secondDrainPolled(5) == 3)
+    assert(secondDrainPolled(50) == 3)
+  }
+
   test("maxBatches caps a run (MAX_BATCHES, lib/pipeline_controller.py:121-124)") {
     val rows = (1L to 10L).map(i => (i, s"row$i", 2000L + i))
     PollClientRegistry.register("capped", new FixedClient(rows))
